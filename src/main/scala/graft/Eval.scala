@@ -518,15 +518,15 @@ object Eval {
           " (worst recall over BOTH the micro-batch and full-batch tables)" +
           s"; probe budgets (units): $budgets" + budgetNote)
 
-        // GRAFT_LATQ=<n>: the large-batch (lazy/distributed serving)
+        // GRAFT_LATQ=<n>: the large-batch (serving)
         // latency arm — n fresh queries through every engine, then the
         // per-query CPU-time distribution. TIMING ONLY: exact ground
         // truth at 10⁵ queries × 10⁷ rows is a 10¹²-pair scan, and the
         // bound for this regime is already validated by the 2000-query
-        // tables above and the 20M flagship logs. Bounded routes
-        // through its distributed fused-cogroup path here
-        // (n > eagerMaxQueries), so this measures the serving regime
-        // the micro-batch table cannot.
+        // tables above and the 20M flagship logs. Bounded takes its
+        // driver-decided rounds up to distributedMinQueries (131072)
+        // and its fully-distributed cogroup path beyond, so this
+        // measures the serving regime the micro-batch table cannot.
         //
         // serve_s is SERVING, count-only: the r14 table reused the
         // recall runners verbatim, so its serve_s included collecting

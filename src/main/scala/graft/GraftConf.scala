@@ -10,11 +10,11 @@ package graft
   *
   * | property | default | governs |
   * |---|---|---|
-  * | `graft.eager.maxQueries` | 4096 | largest bounded-search batch the eager one-scan path may collect to the driver ([[graft.search.BoundedSearch]]) |
+  * | `graft.eager.maxQueries` | 32768 | largest bounded-search batch the eager one-pass scan (levels ≤ 4) may collect to the driver; larger driver-collectable batches take the per-round driver-decided rounds ([[graft.search.BoundedSearch]]) |
   * | `graft.distributed.minQueries` | 131072 | batch size beyond which queries stay in a DataFrame end-to-end (BoundedSearch / FlatSearch / BinaryHash large-batch twins) |
   * | `graft.cogroup.maxProbes` | 8192 | per-task probe bound of the salted cogroup scan; hot lists beyond it are salted across sub-keys |
   * | `graft.join.maxProbesPerBucket` | 8 × cogroupMaxProbes | per-LIST probe bound of the fused bucket-local scan (its tasks stream one list group at a time) |
-  * | `graft.join.minProbedRows` | 28000000 | estimated probed data rows per round (probed lists × mean list size) below which the fused bucket-local arm is skipped in favor of the salted cogroup — the measured post-fix crossover (see [[fusedMinProbedRows]]); 0 forces the fused arm wherever the layout allows it |
+  * | `graft.join.minProbedRows` | 28000000 | probed data rows per round (the sum of the probed lists' sizes, from index metadata) below which the fused bucket-local arm is skipped in favor of the salted cogroup — the measured post-fix crossover (see [[fusedMinProbedRows]]); 0 forces the fused arm wherever the layout allows it |
   * | `graft.stream.statePartitions` | max(8, cores/4) | state-store partition count pinned into stateful streaming queries' checkpoints at stream start ([[streamStatePartitions]]) |
   * | `graft.components.driverMaxEdges` | 2²¹ | largest edge set [[graft.ops.Components.connectedComponents]] resolves with the one-collect driver union-find arm; 0 disables the driver arm ([[componentsDriverMaxEdges]]) |
   * | `graft.prepare.materializeMaxBytes` | 4 GiB | largest corpus input (leaf parquet bytes) for which [[graft.ops.PreparePipeline]] materializes its dedup-chain intermediates once instead of re-scanning per consumer; 0 disables ([[prepareMaterializeMaxBytes]]) |
@@ -38,21 +38,19 @@ object GraftConf {
   private def longProp(key: String, default: => Long): Long =
     sys.props.get(key).map(parsed(key, _, _.toLong)).getOrElse(default)
 
-  /** Above this query-batch size the driver-batch paths (eager
-    * one-pass, driver-staged rounds) hand off to the lazy path, which
-    * keeps all per-query decision state distributed. The 4096 default
-    * predated `searchStagedDriver` (one action per adaptive round);
-    * the r12 A/B (`tools/evidence/r12_staged_driver_ab.log`: 2M×64d,
-    * nlist=512, both arms bit-identical by construction) measured the
-    * driver arm FASTER at every size below 64k — 1.53× at 2k, 1.26×
-    * at 4k/8k, ~1.1× at 16–32k — and parity from 64k up. 32768 takes
-    * the whole measured win; past it the lazy path's zero-driver-state
-    * is free. Driver state at the cap: nq × shallow-rank depth
-    * (nlist/8+20 pairs) + one active×k collect per round — ~35 MB at
-    * 32k/nlist=512. */
+  /** Largest batch the eager one-pass bounded-search scan (levels ≤ 4)
+    * collects to the driver: it gathers every staged list's partials
+    * at once, ≤ nq × nlist/8 × k rows — at the default and k = 10 that
+    * is ≤ 2.6M (query, stage, id, dist) rows, a few hundred MB of
+    * boxed tuples. Larger driver-collectable batches (and every deep
+    * schedule) take the driver-decided rounds, whose collect is
+    * ≤ active × k rows per round; those rounds serve every batch up to
+    * [[distributedMinQueries]] (`tools/evidence/
+    * staged_driver_ab_131k.log`: parity with an executor-side control
+    * loop at 32k–131k queries). */
   def eagerMaxQueries: Int = intProp("graft.eager.maxQueries", 32768)
 
-  /** Above this batch size even the lazy path's driver-held structures
+  /** Above this batch size the driver-decided paths' driver-held structures
     * (query vectors, centroid rankings, per-round broadcast probe maps
     * — all O(nq)) stop being "collectable"; the fully-distributed paths
     * keep the queries themselves in a DataFrame. */

@@ -20,8 +20,8 @@ object BinaryHash {
     // unit-stride loads the JIT can vectorize — instead of nbits
     // separate plane-array walks (nbits pointer chases + d·nbits
     // strided loads per row). Per-bit accumulation order (i ascending,
-    // float product widened into a double sum) is exactly Kernels.dot's,
-    // so every dot — and every sign — is bit-identical.
+    // both operands widened to double before the product) is exactly
+    // Kernels.dot's, so every dot — and every sign — is bit-identical.
     @transient private lazy val d0: Int =
       if (nbits == 0) 0 else planes(0).length
     @transient private lazy val planesT: Array[Float] = {
@@ -40,10 +40,10 @@ object BinaryHash {
       val t = planesT
       var i = 0
       while (i < d0) {
-        val vi = v(i)
+        val vi = v(i).toDouble
         val base = i * nbits
         var b = 0
-        while (b < nbits) { acc(b) += t(base + b) * vi; b += 1 }
+        while (b < nbits) { acc(b) += t(base + b).toDouble * vi; b += 1 }
         i += 1
       }
       var sig = 0L
@@ -89,10 +89,10 @@ object BinaryHash {
       val t = planesT
       var i = 0
       while (i < d0) {
-        val vi = v(i)
+        val vi = v(i).toDouble
         val base = i * nbits
         var b = 0
-        while (b < nbits) { acc(b) += t(base + b) * vi; b += 1 }
+        while (b < nbits) { acc(b) += t(base + b).toDouble * vi; b += 1 }
         i += 1
       }
       val sig = new Array[Long](nWords)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * training-data pipeline needs the transitive closure (A≈B, B≈C ⇒
   * {A,B,C} is one cluster even when A,C never shared a bucket).
   *
-  * Two arms, the BoundedSearch eager/lazy contract applied to cluster
+  * Two arms, the BoundedSearch driver/distributed contract applied to cluster
   * resolution: an edge set at or below
   * [[graft.GraftConf.componentsDriverMaxEdges]] (honest footprint math
   * in that knob's scaladoc) collects once and resolves with a local

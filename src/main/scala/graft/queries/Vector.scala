@@ -744,13 +744,13 @@ object Vector {
   /** Trained traces are cached beside the IVF model — searches pay
     * trace lookup, not profile training (the reference likewise
     * persists index + profile between phases, `eval/bound.cpp:265-268`). */
-  private def cachedTraces(s: SparkSession, dir: String)
+  private def cachedTraces(s: SparkSession, dir: String, nlist: Int = 16)
       : (graft.index.IVFModel, DataFrame, Array[graft.profile.ErrorProfile.Trace]) = {
     import graft.profile.ProfileTrainer
     import graft.search.FlatSearch
     val b = base(s, dir)
-    val (model, assigned) = graft.index.IndexCache.ivf(dir, b, nlist = 16)
-    val traces = graft.index.IndexCache.profileTraces(s"$dir|16|l2|profile", s, {
+    val (model, assigned) = graft.index.IndexCache.ivf(dir, b, nlist = nlist)
+    val traces = graft.index.IndexCache.profileTraces(s"$dir|$nlist|l2|profile", s, {
       val trainQ = qs(s, dir, "vec_id >= 100 AND vec_id < 200")
       val gt = FlatSearch.knn(b, trainQ, k = 10)
       ProfileTrainer.train(assigned, model, trainQ, gt, maxTopk = 10, bs = 50)
@@ -879,20 +879,22 @@ object Vector {
        |    row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank FROM d)
        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
 
-  /** a01 routed through the LAZY distributed-control path
-    * (`forceLazy = true`): per-round decisions run in the `Ctrl`
-    * DataFrame on executors — the configuration that matters at 100 TB,
-    * where the eager small-batch collect would not. Same query set and
-    * decision-replay oracle as a01 (the two paths share `decideStep`,
-    * so decisions — and therefore the replayed probe counts — are
-    * identical by construction; this row proves it driver-side).
+  /** a01's 32 queries over the same embeddings on an nlist-128 index
+    * (5 trace levels, the deep-schedule shape): the batch routes to the
+    * DRIVER-DECIDED ROUNDS (`searchStagedDriver`) — one Spark action per
+    * adaptive round, decisions on the driver — the path every batch up
+    * to 131,072 queries takes once the eager one-pass no longer applies.
+    * Same decision-replay oracle as a01 (all paths share `decideStep`,
+    * and the replay is exact given each query's decided probe count).
+    * The row keeps its `a05_bounded_lazy` inventory key, which the
+    * Bench pins and oracle history are keyed by.
     * Ref: `Auncel/IndexIVF.cpp:504-637`. */
-  def a05BoundedLazy(s: SparkSession, dir: String): DataFrame = {
+  def a05BoundedStaged(s: SparkSession, dir: String): DataFrame = {
     import graft.search.BoundedSearch
-    val (model, assigned, traces) = cachedTraces(s, dir)
+    val (model, assigned, traces) = cachedTraces(s, dir, nlist = 128)
     val evalQ = qs(s, dir, "vec_id < 32").withColumn("required_recall", lit(0.9f))
     val res = BoundedSearch.search(assigned, model, traces, evalQ, k = 10,
-      multiplier = 4.0f, stdM = 1.0f, forceLazy = true)
+      multiplier = 4.0f, stdM = 1.0f)
     val statsDF = s.createDataFrame(res.stats)
       .select(col("qid").as("s_qid"), col("nprobeUsed").as("nprobe_used"))
     writeProbeReplayTables(s, "a05", dir, model, assigned,
@@ -1425,7 +1427,7 @@ object Vector {
     "a02_latency_search" -> a02LatencySearch _,
     "a03_bounded_exact" -> a03BoundedExact _,
     "a04_latency_exact" -> a04LatencyExact _,
-    "a05_bounded_lazy" -> a05BoundedLazy _,
+    "a05_bounded_lazy" -> a05BoundedStaged _,
     "a06_bounded_ip_exact" -> a06BoundedIpExact _,
     "a07_bounded_dist" -> a07BoundedDist _,
     "v13_ivf_range" -> v13IvfRange _,

@@ -273,11 +273,11 @@ object ScaleDemo {
     } // fullRun: codec family
 
     // ---- huge-query bounded batch ----
-    // nq > 4096 routes BoundedSearch to the lazy rounds (distributed
-    // Ctrl DataFrame); nq > 131072 routes to the fully-distributed
-    // cogroup path where even the query vectors and centroid rankings
-    // never sit on the driver. Third arg overrides the batch size
-    // (e.g. 1000000 exercises the cogroup path).
+    // nq ≤ 131072 routes BoundedSearch to the driver-decided rounds;
+    // nq > 131072 routes to the fully-distributed cogroup path where
+    // even the query vectors and centroid rankings never sit on the
+    // driver. Third arg overrides the batch size (e.g. 1000000
+    // exercises the cogroup path).
     if (n >= 1000000 && sys.env.get("SCALE_ONLY").forall(s => s == "bounded")) {
       val nHuge = if (args.length > 2) args(2).toInt else 100000
       val hugeQ = qBase.filter(col("id") % (n / nHuge) === 0).limit(nHuge)
@@ -290,8 +290,8 @@ object ScaleDemo {
       resH.results.count()
       val tH = (System.nanoTime() - t) / 1e9
       val pH = resH.stats.map(_.nprobeUsed)
-      println(f"bounded search huge batch ($nH queries, distributed" +
-        f" control state): ${tH}%.1fs = ${tH * 1000 / nH}%.2f ms/query" +
+      println(f"bounded search huge batch ($nH queries): " +
+        f"${tH}%.1fs = ${tH * 1000 / nH}%.2f ms/query" +
         f" amortized, mean nprobe ${pH.sum.toDouble / pH.size}%.1f/$nlist")
     }
 

@@ -203,37 +203,11 @@ class BoundedSearchSpec extends SparkSpec {
     }
   }
 
-  test("eager staged path is bit-identical to the lazy rounds path") {
-    import spark.implicits._
-    // nlist=32 → levels 3 → eager by default; forceLazy reruns the
-    // per-round controller for comparison
-    val b = clusteredVecs(2000, d, nClusters = 24, seed = 55)
-    val bDF = vecDF(b)
-    val m32 = IVFIndex.train(bDF, nlist = 32, seed = 42L)
-    val a32 = IVFIndex.assign(bDF, m32).cache()
-    val tq = vecDF(clusteredVecs(2100, d, nClusters = 24, seed = 55).drop(2000), "qid")
-    val gt32 = FlatSearch.knn(bDF, tq, k)
-    val tr32 = ProfileTrainer.train(a32, m32, tq, gt32, maxTopk = k, bs = 50)
-    val qdf = clusteredVecs(2130, d, nClusters = 24, seed = 55).drop(2100)
-      .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
-      .toSeq.toDF("qid", "vec", "required_recall")
-    val eager = BoundedSearch.search(a32, m32, tr32, qdf, k,
-      multiplier = 4.0f, stdM = 1.0f)
-    val lazyR = BoundedSearch.search(a32, m32, tr32, qdf, k,
-      multiplier = 4.0f, stdM = 1.0f, forceLazy = true)
-    val eRows = eager.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    val lRows = lazyR.results.select(col("qid"), col("rank"), col("id"), col("dist"))
-      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    assert(eRows.sameElements(lRows))
-    assert(eager.stats == lazyR.stats)
-  }
-
-  test("deep-schedule driver-decided path is bit-identical to the lazy rounds path") {
+  test("deep-schedule driver-decided path is bit-identical to the distributed path") {
     import spark.implicits._
     // nlist=256 → levels 6 → the searchStagedDriver route (one action
-    // per round, driver-side decisions); forceLazy reruns the cached-
-    // ctrl per-round controller on the identical inputs. Both must
+    // per round, driver-side decisions); forceDistributed reruns the
+    // executor-side CtrlD rounds on the identical inputs. Both must
     // agree on rows AND stats for every query — the decisions share
     // rankings, boundary windows, predictedRecall, and decideStep by
     // construction, and this pins the plumbing around them.
@@ -248,21 +222,21 @@ class BoundedSearchSpec extends SparkSpec {
     val qdf = clusteredVecs(5310, d, nClusters = 48, seed = 91).drop(5270)
       .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    def run(forceLazy: Boolean) = {
+    def run(forceDistributed: Boolean) = {
       val r = BoundedSearch.search(a256, m256, tr, qdf, k,
-        multiplier = 4.0f, stdM = 1.0f, forceLazy = forceLazy)
+        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed)
       (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
         .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
         r.stats.sortBy(_.qid))
     }
-    val (hRows, hStats) = run(forceLazy = false)
-    val (lRows, lStats) = run(forceLazy = true)
-    assert(hRows.sameElements(lRows),
-      "driver-decided rows differ from lazy rows")
-    assert(hStats == lStats, "driver-decided stats differ from lazy stats")
+    val (hRows, hStats) = run(forceDistributed = false)
+    val (dRows, dStats) = run(forceDistributed = true)
+    assert(hRows.sameElements(dRows),
+      "driver-decided rows differ from distributed rows")
+    assert(hStats == dStats, "driver-decided stats differ from distributed stats")
   }
 
-  test("fully-distributed (cogroup) path is bit-identical to lazy and eager") {
+  test("fully-distributed (cogroup) path is bit-identical to the eager path") {
     import spark.implicits._
     val b = clusteredVecs(2000, d, nClusters = 24, seed = 55)
     val bDF = vecDF(b)
@@ -274,22 +248,19 @@ class BoundedSearchSpec extends SparkSpec {
     val qdf = clusteredVecs(2130, d, nClusters = 24, seed = 55).drop(2100)
       .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    def run(force: (Boolean, Boolean)) = {
+    // nlist=32 → levels 3 → eager one-pass by default
+    def run(forceDistributed: Boolean) = {
       val r = BoundedSearch.search(a32, m32, tr32, qdf, k,
-        multiplier = 4.0f, stdM = 1.0f, forceLazy = force._1,
-        forceDistributed = force._2)
+        multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed)
       (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
         .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
         r.stats.sortBy(_.qid))
     }
-    val (eRows, eStats) = run((false, false))
-    val (dRows, dStats) = run((false, true))
+    val (eRows, eStats) = run(forceDistributed = false)
+    val (dRows, dStats) = run(forceDistributed = true)
     assert(eRows.sameElements(dRows),
       "distributed rows differ from eager rows")
     assert(eStats == dStats, "distributed stats differ from eager stats")
-    val (lRows, lStats) = run((true, false))
-    assert(lRows.sameElements(dRows))
-    assert(lStats == dStats)
   }
 
   test("cogroup path salts hot lists and stays bit-identical under skew") {
@@ -327,12 +298,13 @@ class BoundedSearchSpec extends SparkSpec {
     assert(eStats == sStats, "salted cogroup stats differ from eager")
   }
 
-  test("large query batches route to the distributed-state path and match chunked eager") {
+  test("batches over the eager cap take the driver rounds and match chunked eager") {
     import spark.implicits._
-    // nq > EagerMaxQueries forces the lazy path even at levels ≤ 3;
-    // per-query decisions are independent, so running the same queries
-    // through the eager path in small chunks must give identical rows
-    // and stats — proving the distributed control state changes nothing.
+    // nq > eagerMaxQueries routes to the driver-decided rounds
+    // (searchStagedDriver) even at levels ≤ 3; per-query decisions are
+    // independent, so running the same queries through the eager
+    // one-pass in small chunks must give identical rows and stats —
+    // proving the per-round scans and merges change nothing.
     val b = clusteredVecs(1500, d, nClusters = 24, seed = 77)
     val bDF = vecDF(b)
     val m32 = IVFIndex.train(bDF, nlist = 32, seed = 42L)
@@ -344,19 +316,19 @@ class BoundedSearchSpec extends SparkSpec {
     val qvecs = clusteredVecs(nq, d, nClusters = 24, seed = 78)
     val qdf = qvecs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    // the default cap moved to 32768 (r12 A/B) — pin it below nq here
-    // so this test still proves the nq-over-cap ROUTING takes the lazy
-    // path (not forceLazy, which would bypass the router under test)
+    // the default cap is 32768 — pin it below nq here so the router
+    // itself sends the whole batch to the driver-decided rounds, and
+    // each 2200-query chunk below stays under it (eager one-pass)
     System.setProperty("graft.eager.maxQueries", "4096")
-    val lazyR =
+    val roundsR =
       try BoundedSearch.search(a32, m32, tr32, qdf, k = 10,
         multiplier = 4.0f, stdM = 1.0f)
       finally System.clearProperty("graft.eager.maxQueries")
-    val lazyRows = lazyR.results
+    val roundsRows = roundsR.results
       .select(col("qid"), col("rank"), col("id"), col("dist"))
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    assert(lazyR.stats.size == nq)
-    assert(lazyRows.map(_._1).distinct.length == nq, "some query lost its rows")
+    assert(roundsR.stats.size == nq)
+    assert(roundsRows.map(_._1).distinct.length == nq, "some query lost its rows")
 
     val chunks = qvecs.zipWithIndex.grouped(2200).toSeq
     val eager = chunks.map { ch =>
@@ -370,8 +342,8 @@ class BoundedSearchSpec extends SparkSpec {
     }
     val eagerRows = eager.flatMap(_._1.toSeq).toArray.sortBy(r => (r._1, r._2))
     val eagerStats = eager.flatMap(_._2).sortBy(_.qid)
-    assert(lazyRows.sameElements(eagerRows))
-    assert(lazyR.stats.sortBy(_.qid) == eagerStats)
+    assert(roundsRows.sameElements(eagerRows))
+    assert(roundsR.stats.sortBy(_.qid) == eagerStats)
   }
 
   test("latency-bounded search respects the probe budget") {

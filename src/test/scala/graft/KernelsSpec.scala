@@ -142,6 +142,34 @@ class KernelsSpec extends SparkSpec {
     }
   }
 
+  test("LSH signature bits follow Kernels.dot's sign on a near-orthogonal pair") {
+    import graft.index.BinaryHash
+    // 1.3f × 0.7f rounds UP in float: summing float-rounded products,
+    // (1.3, 1)·(0.7, −fl(1.3 × 0.7)) is exactly 0 (bit set), while the
+    // double-product dot is a hair below 0 (bit clear)
+    val plane = Array(1.3f, 1f)
+    val v = Array(0.7f, -(1.3f * 0.7f))
+    assert((1.3f * 0.7f).toDouble > 1.3f.toDouble * 0.7f.toDouble,
+      "premise: the float product rounds up")
+    val dot = Kernels.dot(plane, v)
+    assert(dot < 0 && dot > -1e-7)
+    assert(BinaryHash.LSHModel(Array(plane)).signature(v) == 0L)
+    assert(BinaryHash.WideLSHModel(Array(plane)).signature(v).toSeq == Seq(0L))
+    // and on generic inputs every bit of both widths is dot's sign
+    val planes = randVecs(100, 16, seed = 5, normalize = false)
+    val narrow = BinaryHash.LSHModel(planes.take(63))
+    val wide = BinaryHash.WideLSHModel(planes)
+    randVecs(20, 16, seed = 6, normalize = false).foreach { x =>
+      def bit(p: Array[Float]) = if (Kernels.dot(p, x) >= 0) 1L else 0L
+      val n = narrow.signature(x)
+      val w = wide.signature(x)
+      planes.indices.foreach { b =>
+        if (b < 63) assert(((n >>> b) & 1L) == bit(planes(b)))
+        assert(((w(b >> 6) >>> (b & 63)) & 1L) == bit(planes(b)))
+      }
+    }
+  }
+
   test("l2Normalize produces unit vectors") {
     val v = randVecs(5, 32, seed = 9, normalize = false)
     v.map(Kernels.l2Normalize).foreach { u =>
