@@ -6,9 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
 import graft.index.IVFModel
-import graft.operators.TopK
 import graft.profile.ProfileTrainer
-import graft.search.FlatSearch
+import graft.search.IVFSearch
 
 /** LAET baseline (SIGMOD'20 learned early termination,
   * `LAET/IndexIVF.cpp:469-760`, `LAET/benchs/learned_termination/`):
@@ -201,7 +200,8 @@ object LAET {
     (searchPerQueryNprobe(ivfData, model, queries, k, nprobes), nprobes)
   }
 
-  /** Fixed-plan IVF search where each query has its own nprobe. */
+  /** Fixed-plan IVF search where each query has its own nprobe (1 when
+    * absent from `nprobes`) — [[IVFSearch.searchNprobes]] keyed by qid. */
   def searchPerQueryNprobe(ivfData: DataFrame, model: IVFModel,
                            queries: DataFrame, k: Int,
                            nprobes: Map[Long, Int]): DataFrame = {
@@ -209,41 +209,7 @@ object LAET {
     import spark.implicits._
     val q = queries.select(col("qid").cast("long"), col("vec"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val qn = q.map { case (qid, v) =>
-      (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v)
-    }
-    val probeMap: Map[Int, Array[Int]] = qn.indices.flatMap { qi =>
-      val np = math.min(nprobes.getOrElse(qn(qi)._1, 1), model.nlist)
-      model.rankCentroids(qn(qi)._2).take(np).map { case (l, _) => (l, qi) }
-    }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
-    val bq = spark.sparkContext.broadcast(qn)
-    val bp = spark.sparkContext.broadcast(probeMap)
-    val metric = model.metric
-    val partials = ivfData
-      .filter(col("list_no").isin(probeMap.keys.toSeq.sorted: _*))
-      .select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        val pm = bp.value
-        val qs = bq.value
-        val heaps = scala.collection.mutable.HashMap.empty[Int, TopK]
-        it.foreach { case (listNo, id, vec) =>
-          pm.get(listNo) match {
-            case Some(qis) =>
-              var i = 0
-              while (i < qis.length) {
-                val qi = qis(i)
-                heaps.getOrElseUpdate(qi, new TopK(k))
-                  .add(Kernels.distance(metric, qs(qi)._2, vec), id)
-                i += 1
-              }
-            case None =>
-          }
-        }
-        heaps.iterator.flatMap { case (qi, h) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._1, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    FlatSearch.mergeTopK(partials, k)
+    IVFSearch.searchNprobes(ivfData, model, q, k,
+      q.map { case (qid, _) => nprobes.getOrElse(qid, 1) })
   }
 }

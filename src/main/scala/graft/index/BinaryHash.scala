@@ -200,8 +200,11 @@ object BinaryHash {
     graft.search.IVFSearch.probedTopK[Array[Long]](encoded,
       df => df.select(col("list_no").cast("int"), col("id").cast("long"),
         col("sig")).as[(Int, Long, Array[Long])],
-      ivf, q, k, nprobe,
-      () => (qi, _, sig) => hammingWide(sig, bq.value(qi)).toDouble)
+      ivf, q, k, Array.fill(q.length)(nprobe),
+      () => {
+        val qs = bq.value
+        (qi, _, sig) => hammingWide(sig, qs(qi)).toDouble
+      })
   }
 
   def encode(df: DataFrame, model: LSHModel, vecCol: String = "vec"): DataFrame = {

@@ -99,30 +99,33 @@ object IVFPQ {
     graft.search.IVFSearch.probedTopK[Array[Byte]](encoded,
       df => df.select(col("list_no").cast("int"), col("id").cast("long"),
         col("code")).as[(Int, Long, Array[Byte])],
-      model, q, k, nprobe,
+      model, q, k, Array.fill(q.length)(nprobe),
       () => {
+        val codec = bpq.value
+        val qs = bq.value
+        val centroids = bm.value.centroids
+        val pt = bpt.map(_.value)
         val tables = scala.collection.mutable.HashMap.empty[(Int, Int), Array[Array[Float]]]
         val term1s = scala.collection.mutable.HashMap.empty[(Int, Int), Double]
         val qdots = scala.collection.mutable.HashMap.empty[Int, Array[Array[Float]]]
         val qcodes = scala.collection.mutable.HashMap.empty[(Int, Int), Array[Byte]]
         (qi, listNo, code) => {
-          val codec = bpq.value
           val ok = polysemousHt <= 0 || {
             val qc = qcodes.getOrElseUpdate((qi, listNo), {
-              val c = bm.value.centroids(listNo)
-              val qv = bq.value(qi)
+              val c = centroids(listNo)
+              val qv = qs(qi)
               codec.encode(Array.tabulate(qv.length)(j => qv(j) - c(j)))
             })
             graft.quantize.Polysemous.hamming(qc, code) <= polysemousHt
           }
           if (!ok) Double.NaN
-          else bpt match {
-            case Some(bt) =>
+          else pt match {
+            case Some(t) =>
               val term1 = term1s.getOrElseUpdate((qi, listNo),
-                graft.functions.Kernels.l2Sqr(bq.value(qi), bm.value.centroids(listNo)))
+                graft.functions.Kernels.l2Sqr(qs(qi), centroids(listNo)))
               val tab = tables.getOrElseUpdate((qi, listNo), {
-                val qt = qdots.getOrElseUpdate(qi, codec.ipTable(bq.value(qi)))
-                val t2 = bt.value(listNo)
+                val qt = qdots.getOrElseUpdate(qi, codec.ipTable(qs(qi)))
+                val t2 = t(listNo)
                 Array.tabulate(codec.m) { sub =>
                   val t2s = t2(sub); val qts = qt(sub)
                   Array.tabulate(codec.ksub) { j =>
@@ -133,8 +136,8 @@ object IVFPQ {
               term1 + codec.adcDistance(tab, code)
             case None =>
               val table = tables.getOrElseUpdate((qi, listNo), {
-                val c = bm.value.centroids(listNo)
-                val qv = bq.value(qi)
+                val c = centroids(listNo)
+                val qv = qs(qi)
                 codec.adcTable(Array.tabulate(qv.length)(j => qv(j) - c(j)))
               })
               codec.adcDistance(table, code)

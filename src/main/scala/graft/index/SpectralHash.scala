@@ -119,12 +119,13 @@ object SpectralHash {
     graft.search.IVFSearch.probedTopK[Array[Long]](encoded,
       df => df.select(col("list_no").cast("int"), col("id").cast("long"),
         col("sig")).as[(Int, Long, Array[Long])],
-      ivf, q, k, nprobe,
+      ivf, q, k, Array.fill(q.length)(nprobe),
       () => {
+        val qs = bq.value
+        val m = bm.value
         val qSigs = scala.collection.mutable.HashMap.empty[(Int, Int), Array[Long]]
         (qi, listNo, sig) => {
-          val qsig = qSigs.getOrElseUpdate((qi, listNo),
-            bm.value.binarize(bq.value(qi), listNo))
+          val qsig = qSigs.getOrElseUpdate((qi, listNo), m.binarize(qs(qi), listNo))
           BinaryHash.hammingWide(sig, qsig).toDouble
         }
       })

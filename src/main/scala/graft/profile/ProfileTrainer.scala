@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
 import graft.index.IVFModel
-import graft.operators.TopK
+import graft.search.IVFSearch
 import graft.profile.ErrorProfile.Trace
 
 /** Offline error-profile training (`Error_sys::sys_train`
@@ -36,13 +36,6 @@ object ProfileTrainer {
     j + 1
   }
 
-  /** @param ivfData      (id, vec, list_no)
-    * @param trainQueries (qid, vec)
-    * @param gt           exact ground truth (qid, id, dist, rank) with
-    *                     rank 1..maxTopk — e.g. FlatSearch.knn output
-    * @param maxTopk      k used for profiling (the map granularity is
-    *                     maxTopk/4 points per query per stage)
-    */
   /** The staged-capture scan shared by profile training and the LAET
     * baseline: per (query, power-of-2 stage) the sorted partial top-k
     * distance list, computed in ONE pass over the probed lists.
@@ -60,11 +53,18 @@ object ProfileTrainer {
     val qVecs = q.map { case (qid, v) =>
       (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v)
     }
-    val ranks = graft.search.IVFSearch.rankTop(spark, model, qVecs, maxRank)
-    stagedTopKImpl(ivfData, model, qVecs, ranks, maxTopk, levels, maxRank,
+    val ranks = IVFSearch.rankTop(spark, model, qVecs, maxRank)
+    stagedTopKImpl(ivfData, model, qVecs, ranks, maxTopk, levels,
       chunkQueries)
   }
 
+  /** @param ivfData      (id, vec, list_no)
+    * @param trainQueries (qid, vec)
+    * @param gt           exact ground truth (qid, id, dist, rank) with
+    *                     rank 1..maxTopk — e.g. FlatSearch.knn output
+    * @param maxTopk      k used for profiling (the map granularity is
+    *                     maxTopk/4 points per query per stage)
+    */
   def train(ivfData: DataFrame, model: IVFModel, trainQueries: DataFrame,
             gt: DataFrame, maxTopk: Int, bs: Int = 250): Array[Trace] = {
     val spark = ivfData.sparkSession
@@ -84,7 +84,7 @@ object ProfileTrainer {
     // per-query centroid rank prefix (boundary geometry reads
     // nlist/8 + 20, the staged scan nlist/8) → boundary distances;
     // ranking fans out for large training batches (rankTop)
-    val ranks: Array[Array[(Int, Float)]] = graft.search.IVFSearch.rankTop(
+    val ranks: Array[Array[(Int, Float)]] = IVFSearch.rankTop(
       spark, model, qVecs, math.max(maxRank, nlist / 8 + 20))
     val dBs: Array[Array[Float]] = ranks.map { r =>
       ErrorProfile.boundaryDistances(r.map(_._2), r.map(_._1), model.interdisAt, nlist)
@@ -93,7 +93,7 @@ object ProfileTrainer {
     val metric = model.metric
     val k = maxTopk
     val stageTopk = stagedTopKImpl(ivfData, model, qVecs, ranks, maxTopk,
-      levels, maxRank)
+      levels)
 
     // (φ, U) point generation against ground truth
     val gtByQid: Map[Long, Array[Float]] = gt
@@ -122,64 +122,31 @@ object ProfileTrainer {
     }.toArray
   }
 
-  /** One scan: per-partition, per (query, first-probed-stage) bounded
-    * heaps; stage s top-k = window top-k over partials with j0 ≤ s.
-    * Per-partition heap state is O(nq · levels · k), so training
+  /** One scan ([[IVFSearch.stagedProbeMap]] slots through the shared
+    * probed-list kernel): per-partition, per (query, first-probed-stage)
+    * bounded heaps; stage s top-k = window top-k over partials with
+    * j0 ≤ s. Per-partition heap state is O(nq · levels · k), so training
     * batches beyond `chunkQueries` are processed in chunks (bounded
     * memory, one extra scan per chunk) and unioned. */
   private def stagedTopKImpl(ivfData: DataFrame, model: IVFModel,
                              qVecs: Array[(Long, Array[Float])],
                              ranks: Array[Array[(Int, Float)]], maxTopk: Int,
-                             levels: Int, maxRank: Int,
-                             chunkQueries: Int = 8192): DataFrame = {
+                             levels: Int, chunkQueries: Int = 8192): DataFrame = {
     val spark = ivfData.sparkSession
     import spark.implicits._
     if (qVecs.length > chunkQueries) {
       return qVecs.indices.grouped(chunkQueries).map { idxs =>
         stagedTopKImpl(ivfData, model, idxs.map(qVecs).toArray,
-          idxs.map(ranks).toArray, maxTopk, levels, maxRank, chunkQueries)
+          idxs.map(ranks).toArray, maxTopk, levels, chunkQueries)
       }.reduce(_ unionByName _)
     }
     val k = maxTopk
-    val metric = model.metric
-    // list_no → [(query index, first stage level j0 at which it's probed)]
-    val byList: Map[Int, Array[(Int, Int)]] = ranks.zipWithIndex.flatMap {
-      case (r, qi) =>
-        r.take(maxRank).zipWithIndex.map { case ((listNo, _), rankIdx) =>
-          val rank1 = rankIdx + 1
-          var j0 = 0
-          while ((1 << j0) < rank1) j0 += 1
-          (listNo, (qi, j0))
-        }
-    }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2)) }
-
-    val bByList = spark.sparkContext.broadcast(byList)
-    val bQ = spark.sparkContext.broadcast(qVecs)
-
-    val partials = ivfData
-      .filter(col("list_no").isin(byList.keys.toSeq.sorted: _*))
-      .select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
-      .as[(Int, Long, Array[Float])]
+    val bqids = spark.sparkContext.broadcast(qVecs.map(_._1))
+    val partials = IVFSearch.scanVectors(ivfData, model.metric,
+      qVecs.map(_._2), IVFSearch.stagedProbeMap(ranks, levels), k, levels)
       .mapPartitions { it =>
-        val lists = bByList.value
-        val qs = bQ.value
-        val heaps = scala.collection.mutable.HashMap.empty[(Int, Int), TopK]
-        it.foreach { case (listNo, id, vec) =>
-          lists.get(listNo) match {
-            case Some(entries) =>
-              var i = 0
-              while (i < entries.length) {
-                val (qi, j0) = entries(i)
-                heaps.getOrElseUpdate((qi, j0), new TopK(k))
-                  .add(Kernels.distance(metric, qs(qi)._2, vec), id)
-                i += 1
-              }
-            case None =>
-          }
-        }
-        heaps.iterator.flatMap { case ((qi, j0), h) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._1, j0, id, d) }
-        }
+        val qids = bqids.value
+        it.map { case (slot, id, d) => (qids(slot / levels), slot % levels, id, d) }
       }
       .toDF("qid", "j0", "id", "dist")
 

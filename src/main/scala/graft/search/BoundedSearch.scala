@@ -28,9 +28,11 @@ import graft.profile.ErrorProfile.Trace
   *    worst distance counts as that round's probe count.
   *
   * Scale shape: each round reads ONLY the newly probed lists (partition
-  * pruning), per-partition bounded heaps shuffle `parts × nq_active × k`
-  * rows, and the carried top-k state is a DataFrame of `nq × k` rows —
-  * nothing per-vector ever sits on the driver.
+  * pruning) and per-partition bounded heaps shuffle `parts × nq_active × k`
+  * rows. The carried top-k (≤ k per query) lives in the [[Decider]]'s
+  * driver arrays on the driver-decided paths and in the [[CtrlD]] rows on
+  * the fully-distributed path — nothing per-vector ever sits on the
+  * driver.
   */
 object BoundedSearch {
 
@@ -161,7 +163,8 @@ object BoundedSearch {
     val decider = new Decider(nq, k, model.metric, traces, dBs,
       qVecs.map(_._3), multiplier, stdM, levels)
     if (levels <= 4 && nq <= EagerMaxQueries)
-      searchEagerStaged(ivfData, model, qVecs, ranks, decider, k)
+      searchEagerStaged(ivfData, model, qVecs, ranks, decider, k,
+        shallowDepth)
     else
       searchStagedDriver(ivfData, model, qVecs, ranks, decider, k,
         shallowDepth)
@@ -430,9 +433,9 @@ object BoundedSearch {
 
   /** List-keyed cogroup scan: for each probed list, stream its vectors
     * against the (qid, qvec) probe rows for that list with per-query
-    * bounded heaps — the distributed twin of [[scanLists]] (which
-    * broadcasts a driver-built probe map instead). Emits ≤ k rows per
-    * (list, query).
+    * bounded heaps ([[listGroupTopK]]) — the probe rows travel as a
+    * shuffled DataFrame, never as a driver-built broadcast probe map.
+    * Emits ≤ k rows per (list, query).
     *
     * Skew guard: per-list probe counts (≤ nlist scalars) are collected
     * first; a list with more than [[maxProbesPerTask]] probes is SALTED
@@ -464,32 +467,47 @@ object BoundedSearch {
       .filter(col("list_no").isin(listCounts.keys.toSeq.sorted: _*))
       .select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
       .as[(Int, Long, Array[Float])]
-      .flatMap { case (l, id, vec) =>
-        val s = bSalts.value.getOrElse(l, 1)
-        (0 until s).iterator.map(si => (key(l, si), id, vec))
+      .mapPartitions { it =>
+        val salts = bSalts.value
+        it.flatMap { case (l, id, vec) =>
+          (0 until salts.getOrElse(l, 1)).iterator.map(si => (key(l, si), id, vec))
+        }
       }
       .groupByKey(_._1)
-    val probeG = probes.map { case (l, qid, vec) =>
-      val s = bSalts.value.getOrElse(l, 1)
-      (key(l, math.floorMod(qid, s.toLong).toInt), qid, vec)
+    val probeG = probes.mapPartitions { it =>
+      val salts = bSalts.value
+      it.map { case (l, qid, vec) =>
+        (key(l, math.floorMod(qid, salts.getOrElse(l, 1).toLong).toInt), qid, vec)
+      }
     }.groupByKey(_._1)
     dataG.cogroup(probeG) { (_, dataIt, probeIt) =>
-      val ps = probeIt.toArray
-      if (ps.isEmpty) Iterator.empty
-      else {
-        val heaps = ps.map(_ => new TopK(k))
-        dataIt.foreach { case (_, id, vec) =>
-          var i = 0
-          while (i < ps.length) {
-            heaps(i).add(Kernels.distance(metric, ps(i)._3, vec), id)
-            i += 1
-          }
-        }
-        ps.iterator.zip(heaps.iterator).flatMap { case (p, h) =>
-          h.sorted.iterator.map { case (d, id) => (p._2, id, d) }
+      BoundedSearch.listGroupTopK(metric, k, dataIt, probeIt)
+    }.toDF("qid", "id", "dist")
+  }
+
+  /** The list-group kernel of both distributed scan routes
+    * ([[scanListsCogroup]], [[scanListsJoin]]): one (list, salt) group's
+    * probes (qid, query vector), one bounded [[TopK]] each, against ONE
+    * streamed pass over the list's rows; ≤ k (qid, id, dist) rows out per
+    * probe. */
+  private def listGroupTopK[K](metric: String, k: Int,
+      dataIt: Iterator[(K, Long, Array[Float])],
+      probeIt: Iterator[(K, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
+    val ps = probeIt.toArray
+    if (ps.isEmpty) Iterator.empty
+    else {
+      val heaps = ps.map(_ => new TopK(k))
+      dataIt.foreach { case (_, id, vec) =>
+        var i = 0
+        while (i < ps.length) {
+          heaps(i).add(Kernels.distance(metric, ps(i)._3, vec), id)
+          i += 1
         }
       }
-    }.toDF("qid", "id", "dist")
+      ps.iterator.zip(heaps.iterator).flatMap { case (p, h) =>
+        h.sorted.iterator.map { case (d, id) => (p._2, id, d) }
+      }
+    }
   }
 
   /** If `df`'s data will come out of its source already hash-partitioned
@@ -532,10 +550,8 @@ object BoundedSearch {
     * satisfies the cogroup's ClusteredDistribution, so the probe side
     * (the small one) is the only Exchange, and both layouts' existing
     * sort-by-list_no satisfies the required ordering without a
-    * per-round sort. Inside each list group runs the SAME fused
-    * kernel as the salted cogroup (probe array + one bounded [[TopK]]
-    * per probe, one streamed pass over the list's rows), emitting
-    * ≤ k rows per (list, query).
+    * per-round sort. Inside each list group runs the salted cogroup's
+    * kernel, [[listGroupTopK]], emitting ≤ k rows per (list, query).
     *
     * History: the first version of this path was a sort-merge JOIN on
     * `list_no` feeding a codegen'd distance column into a per-partition
@@ -600,56 +616,54 @@ object BoundedSearch {
       .groupBy(col("list_no"))
       .as[Int, (Int, Long, Array[Float])]
     dataG.cogroup(probeG) { (_, dataIt, probeIt) =>
-      val ps = probeIt.toArray
-      if (ps.isEmpty) Iterator.empty
-      else {
-        val heaps = ps.map(_ => new TopK(k))
-        dataIt.foreach { case (_, id, vec) =>
-          var i = 0
-          while (i < ps.length) {
-            heaps(i).add(Kernels.distance(metric, ps(i)._3, vec), id)
-            i += 1
-          }
-        }
-        ps.iterator.zip(heaps.iterator).flatMap { case (p, h) =>
-          h.sorted.iterator.map { case (d, id) => (p._2, id, d) }
-        }
-      }
+      BoundedSearch.listGroupTopK(metric, k, dataIt, probeIt)
     }.toDF("qid", "id", "dist")
   }
 
   /** The per-stage termination decision (`IndexIVF.cpp:504-637`) of
     * the driver-decided paths (eager one-pass and per-round): holds the
-    * O(nq) control state and advances it through [[decideStep]], the
-    * transition the distributed path runs on executors. */
+    * O(nq) control state and each query's cumulative top-k, and advances
+    * them through [[decideStep]], the transition the distributed path
+    * runs on executors. */
   private final class Decider(nq: Int, k: Int, metric: String,
       traces: Array[Trace], dBs: Array[Array[Float]], requires: Array[Float],
-      multiplier: Float, stdM: Float, levels: Int) extends Serializable {
+      multiplier: Float, stdM: Float, levels: Int) {
     def nLevels: Int = levels
     val myNprobe = new Array[Int](nq)
     val stoped = new Array[Int](nq)
     val preVal = Array.fill(nq)(Double.NaN)
     val predicted = new Array[Float](nq)
     val decidedStage = new Array[Int](nq)
+    /** Cumulative top-k per query, ascending by (dist, id). It stops
+      * growing once the query leaves the active set — exactly the top-k a
+      * [[CtrlD]] row carries for it on the distributed path. */
+    val topK: Array[Array[(Double, Long)]] = Array.fill(nq)(Array.empty)
 
-    /** Evaluate query qi at stage 2^j given its current sorted top-k
-      * raw distances: recall prediction, stagnation bookkeeping and
-      * termination decision. Callers only invoke this for active
-      * queries. */
-    def evaluate(qi: Int, j: Int, dRaw: Array[Double]): Unit = {
-      val recall = BoundedSearch.predictedRecall(
-        dRaw, dBs(qi), traces(j), j, k, stdM, metric)
-      val maxVal = if (dRaw.isEmpty) Double.NaN else dRaw.max
-      val next = BoundedSearch.decideStep(
-        Ctrl(0L, requires(qi), myNprobe(qi), stoped(qi), preVal(qi),
-          predicted(qi), decidedStage(qi)),
-        j, levels, k, multiplier, recall, dRaw.length, maxVal)
-      myNprobe(qi) = next.myNprobe
-      stoped(qi) = next.stoped
-      preVal(qi) = next.preVal
-      predicted(qi) = next.predicted
-      decidedStage(qi) = next.decidedStage
-    }
+    /** One stage step for query qi at stage 2^j: merge the stage's new
+      * (slot, id, dist) scan rows into its top-k under (dist, id), keep k,
+      * then predict recall, update the stagnation bookkeeping and decide —
+      * only while the query is active and its top-k is non-empty, the same
+      * gate the distributed path applies. */
+    def advance(qi: Int, j: Int, rows: Array[(Int, Long, Double)]): Unit =
+      if (myNprobe(qi) == 0) {
+        if (rows.nonEmpty)
+          topK(qi) = (topK(qi) ++ rows.map(r => (r._3, r._2)))
+            .sortBy { case (d, id) => (d, id) }.take(k)
+        if (topK(qi).nonEmpty) {
+          val dRaw = topK(qi).map(_._1)
+          val recall = BoundedSearch.predictedRecall(
+            dRaw, dBs(qi), traces(j), j, k, stdM, metric)
+          val next = BoundedSearch.decideStep(
+            Ctrl(0L, requires(qi), myNprobe(qi), stoped(qi), preVal(qi),
+              predicted(qi), decidedStage(qi)),
+            j, levels, k, multiplier, recall, dRaw.length, dRaw.max)
+          myNprobe(qi) = next.myNprobe
+          stoped(qi) = next.stoped
+          preVal(qi) = next.preVal
+          predicted(qi) = next.predicted
+          decidedStage(qi) = next.decidedStage
+        }
+      }
   }
 
   /** Pure per-query recall prediction — the executor-side piece of the
@@ -669,107 +683,26 @@ object BoundedSearch {
   /** Eager variant for shallow schedules (levels ≤ 4, i.e. nlist ≤ 64)
     * and batches up to [[EagerMaxQueries]]: ALL staged lists (≤ nlist/8
     * = 8 per query) are scanned in ONE pass with per-(query,
-    * first-probed-stage) heaps; stage top-ks and every decision then
-    * run driver-side on the collected partials (≤ nq·8·k rows),
-    * eliminating the per-round job latency. Decisions are bit-identical
-    * to the per-round paths (same Decider transition, same staged
-    * top-ks); deep schedules take [[searchStagedDriver]] instead —
-    * eager would probe nlist/8 lists per query where adaptive stops far
-    * earlier. */
+    * first-probed-stage) heaps ([[IVFSearch.stagedProbeMap]]); every
+    * stage step then runs driver-side on the collected partials
+    * (≤ nq·8·k rows), eliminating the per-round job latency. Decisions
+    * are bit-identical to the per-round paths (same [[Decider.advance]]
+    * on the same stage rows); deep schedules take [[searchStagedDriver]]
+    * instead — eager would probe nlist/8 lists per query where adaptive
+    * stops far earlier. */
   private def searchEagerStaged(ivfData: DataFrame, model: IVFModel,
       qVecs: Array[(Long, Array[Float], Float)],
-      ranks: Array[Array[(Int, Float)]], decider: Decider,
-      k: Int): Result = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val nq = qVecs.length
-    val nlist = model.nlist
+      ranks: Array[Array[(Int, Float)]], decider: Decider, k: Int,
+      shallowDepth: Int): Result = {
     val levels = decider.nLevels
-    val maxRank = 1 << (levels - 1)
-
-    val byList: Map[Int, Array[(Int, Int)]] = ranks.zipWithIndex.flatMap {
-      case (r, qi) =>
-        r.take(maxRank).zipWithIndex.map { case ((listNo, _), rankIdx) =>
-          var j0 = 0
-          while ((1 << j0) < rankIdx + 1) j0 += 1
-          (listNo, (qi, j0))
-        }
-    }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2)) }
-    val bByList = spark.sparkContext.broadcast(byList)
-    val bQ = spark.sparkContext.broadcast(qVecs.map(v => (v._1, v._2)))
-    val metric = model.metric
-
-    val partials: Array[(Int, Int, Long, Double)] = ivfData
-      .filter(col("list_no").isin(byList.keys.toSeq.sorted: _*))
-      .select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        val lists = bByList.value
-        val qs = bQ.value
-        val heaps = scala.collection.mutable.HashMap.empty[(Int, Int), TopK]
-        it.foreach { case (listNo, id, vec) =>
-          lists.get(listNo) match {
-            case Some(entries) =>
-              var i = 0
-              while (i < entries.length) {
-                val (qi, j0) = entries(i)
-                heaps.getOrElseUpdate((qi, j0), new TopK(k))
-                  .add(Kernels.distance(metric, qs(qi)._2, vec), id)
-                i += 1
-              }
-            case None =>
-          }
-        }
-        heaps.iterator.flatMap { case ((qi, j0), h) =>
-          h.sorted.iterator.map { case (d, id) => (qi, j0, id, d) }
-        }
-      }.collect()
-
-    // driver-side: per query, cumulative stage top-ks drive the decisions
-    val byQuery = partials.groupBy(_._1)
-    val finalRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var qi = 0
-    while (qi < nq) {
-      byQuery.get(qi) match {
-        case Some(rows) =>
-          val byStage = rows.groupBy(_._2)
-          var cum = Array.empty[(Double, Long)]
-          var decidedTopk = Array.empty[(Double, Long)]
-          var j = 0
-          while (j < levels) {
-            val add = byStage.getOrElse(j, Array.empty)
-              .map(r => (r._4, r._3))
-            cum = (cum ++ add).sortBy { case (d, id) => (d, id) }.take(k)
-            if (decider.myNprobe(qi) == 0) {
-              decider.evaluate(qi, j, cum.map(_._1))
-              if (decider.myNprobe(qi) != 0) decidedTopk = cum
-            }
-            j += 1
-          }
-          decidedTopk.foreach { case (d, id) =>
-            finalRows += ((qVecs(qi)._1, id, d))
-          }
-        case None =>
-      }
-      qi += 1
-    }
-
-    var state = finalRows.toSeq.toDF("qid", "id", "dist")
-
-    // finishing pass: probe on from each query's decision stage
-    val extraMap = finishingProbeMap(spark, model, qVecs.map(v => (v._1, v._2)),
-      ranks, math.min(nlist, nlist / 8 + 20),
-      qi2 => (decider.decidedStage(qi2), math.min(decider.myNprobe(qi2), nlist)))
-    if (extraMap.nonEmpty) {
-      val extra = scanLists(ivfData, metric, extraMap,
-        qVecs.map(v => (v._1, v._2)), k)
-      state = state.unionByName(extra)
-    }
-    val stats = (0 until nq).map { qi2 =>
-      QueryStats(qVecs(qi2)._1, math.min(decider.myNprobe(qi2), nlist),
-        decider.predicted(qi2), decider.decidedStage(qi2))
-    }
-    Result(FlatSearch.mergeTopK(state, k), stats)
+    val partials = IVFSearch.scanVectors(ivfData, model.metric,
+      qVecs.map(_._2), IVFSearch.stagedProbeMap(ranks, levels), k, levels)
+      .collect()
+    // slot qi·levels + j0 holds the rows query qi first probes at stage j0
+    val bySlot = partials.groupBy(_._1)
+    for (qi <- qVecs.indices; j <- 0 until levels)
+      decider.advance(qi, j, bySlot.getOrElse(qi * levels + j, Array.empty))
+    finish(ivfData, model, qVecs, ranks, decider, k, shallowDepth)
   }
 
   /** Driver-decided rounds for every driver-collectable batch the
@@ -779,72 +712,64 @@ object BoundedSearch {
     * lives in the shared [[Decider]]'s O(nq) driver arrays. Each round
     * is exactly ONE Spark action: the probed-list partial scan merged
     * to per-query round top-k (bounded collect of ≤ active × k rows);
-    * the cumulative top-k merge, recall prediction, and [[decideStep]]
-    * transition run on the driver. Decisions are bit-identical to the
-    * distributed path by construction: same rankings, same boundary
-    * windows, same [[predictedRecall]] on the same cumulative sorted
-    * distances, same transition — pinned by BoundedSearchSpec's
-    * cross-path equivalence tests. */
+    * the [[Decider.advance]] stage step runs on the driver. Decisions
+    * are bit-identical to the distributed path by construction: same
+    * rankings, same boundary windows, same [[predictedRecall]] on the
+    * same cumulative sorted distances, same transition — pinned by
+    * BoundedSearchSpec's cross-path equivalence tests. */
   private def searchStagedDriver(ivfData: DataFrame, model: IVFModel,
       qVecs: Array[(Long, Array[Float], Float)],
       ranks: Array[Array[(Int, Float)]], decider: Decider, k: Int,
       shallowDepth: Int): Result = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-    val nq = qVecs.length
-    val nlist = model.nlist
     val levels = decider.nLevels
-    val qv = qVecs.map(v => (v._1, v._2))
-    val qidToIdx: Map[Long, Int] = qv.map(_._1).zipWithIndex.toMap
-    // cumulative decision-time top-k per query; stops growing once the
-    // query leaves the active set — exactly the top-k a CtrlD row
-    // carries for it on the distributed path
-    val cum = Array.fill(nq)(Array.empty[(Double, Long)])
+    val qv = qVecs.map(_._2)
+    var active: Seq[Int] = qVecs.indices
     var j = 0
-    var allDecided = false
-    while (j < levels && !allDecided) {
+    while (j < levels && active.nonEmpty) {
       val lo = if (j == 0) 0 else 1 << (j - 1)
       val hi = 1 << j
-      val active = (0 until nq).filter(decider.myNprobe(_) == 0)
-      if (active.isEmpty) allDecided = true
-      else {
-        val probeMap: Map[Int, Array[Int]] = active.flatMap { qi =>
-          ranks(qi).slice(lo, hi).map { case (l, _) => (l, qi) }
-        }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
-        // merge partials to per-query top-k INSIDE the job so the
-        // collect is ≤ active × k rows whatever the round's fan-out
-        val roundTopK = FlatSearch.mergeTopK(
-          scanLists(ivfData, model.metric, probeMap, qv, k), k)
-          .select(col("qid").cast("long"), col("id").cast("long"),
-            col("dist"))
-          .as[(Long, Long, Double)].collect()
-        val byQi = roundTopK.groupBy(r => qidToIdx(r._1))
-        active.foreach { qi =>
-          byQi.get(qi).foreach { rows =>
-            val add = rows.map(r => (r._3, r._2))
-            cum(qi) = (cum(qi) ++ add)
-              .sortBy { case (d, id) => (d, id) }.take(k)
-          }
-          // like the distributed path, only queries with at least one
-          // scanned row ever reach the decision transition
-          if (cum(qi).nonEmpty) decider.evaluate(qi, j, cum(qi).map(_._1))
-        }
-      }
+      val probeMap = IVFSearch.byList(active.flatMap { qi =>
+        ranks(qi).slice(lo, hi).map { case (l, _) => (l, qi) }
+      })
+      // merge partials to per-query top-k INSIDE the job so the collect
+      // is ≤ active × k rows whatever the round's fan-out; rows stay
+      // keyed by query index (the scan's slot)
+      val roundTopK = FlatSearch.mergeTopK(
+        IVFSearch.scanVectors(ivfData, model.metric, qv, probeMap, k)
+          .toDF("qid", "id", "dist"), k)
+        .select(col("qid"), col("id"), col("dist"))
+        .as[(Int, Long, Double)].collect()
+      val byQi = roundTopK.groupBy(_._1)
+      active.foreach(qi => decider.advance(qi, j, byQi.getOrElse(qi, Array.empty)))
+      active = active.filter(decider.myNprobe(_) == 0)
       j += 1
     }
+    finish(ivfData, model, qVecs, ranks, decider, k, shallowDepth)
+  }
 
-    var state = (0 until nq).flatMap { qi =>
-      cum(qi).map { case (d, id) => (qv(qi)._1, id, d) }
+  /** The tail both driver-decided paths share: the decided top-ks become
+    * state rows, the finishing pass probes on from each query's decision
+    * stage to stage × multiplier, and the stats come straight out of the
+    * [[Decider]]. */
+  private def finish(ivfData: DataFrame, model: IVFModel,
+      qVecs: Array[(Long, Array[Float], Float)],
+      ranks: Array[Array[(Int, Float)]], decider: Decider, k: Int,
+      shallowDepth: Int): Result = {
+    val spark = ivfData.sparkSession
+    import spark.implicits._
+    val nlist = model.nlist
+    val qv = qVecs.map(v => (v._1, v._2))
+    var state = qv.indices.flatMap { qi =>
+      decider.topK(qi).map { case (d, id) => (qv(qi)._1, id, d) }
     }.toDF("qid", "id", "dist")
-
-    // finishing pass: decisionStage → stage × multiplier, shared with
-    // the other driver-decided path
     val extraMap = finishingProbeMap(spark, model, qv, ranks, shallowDepth,
       qi => (decider.decidedStage(qi), math.min(decider.myNprobe(qi), nlist)))
     if (extraMap.nonEmpty)
-      state = state.unionByName(scanLists(ivfData, model.metric, extraMap,
-        qv, k))
-    val stats = (0 until nq).map { qi =>
+      state = state.unionByName(IVFSearch.keyByQid(IVFSearch.scanVectors(
+        ivfData, model.metric, qv.map(_._2), extraMap, k), qv.map(_._1)))
+    val stats = qv.indices.map { qi =>
       QueryStats(qv(qi)._1, math.min(decider.myNprobe(qi), nlist),
         decider.predicted(qi), decider.decidedStage(qi))
     }
@@ -872,19 +797,20 @@ object BoundedSearch {
           deepIdx.map(qi => qVecs(qi)).toArray, maxDeep)
         deepIdx.zip(dr).toMap
       }
-    (0 until nq).flatMap { qi =>
+    IVFSearch.byList((0 until nq).flatMap { qi =>
       val (from, upto) = bounds(qi)
       if (upto > from)
         deepRanks.getOrElse(qi, ranks(qi)).slice(from, upto)
           .map { case (l, _) => (l, qi) }
       else Nil
-    }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
+    })
   }
 
   /** Latency-bounded mode (`Auncel/IndexIVF.cpp:545-549`,
     * `profile.cpp:229-244`): the wall-clock budget becomes a
     * deterministic per-query probe budget via a calibrated per-list cost
-    * — reproducible, unlike in-executor clock checks. */
+    * — reproducible, unlike in-executor clock checks — and the batch runs
+    * as one per-query-nprobe search ([[IVFSearch.searchNprobes]]). */
   def timeSearch(ivfData: DataFrame, model: IVFModel, queries: DataFrame,
                  k: Int, costPerProbeMs: Double): Result = {
     val spark = ivfData.sparkSession
@@ -892,60 +818,15 @@ object BoundedSearch {
     val qRows = queries
       .select(col("qid").cast("long"), col("vec"), col("budget_ms").cast("double"))
       .as[(Long, Array[Float], Double)].collect().sortBy(_._1)
-    val qVecs = qRows.map { case (qid, v, _) =>
-      (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v)
-    }
     val budgets = qRows.map { case (_, _, b) =>
       math.max(1, math.min(model.nlist,
         (b * 0.95 / costPerProbeMs).toInt))
     }
-    val ranks = IVFSearch.rankTop(spark, model, qVecs, budgets.max)
-    val probeMap: Map[Int, Array[Int]] = qVecs.indices.flatMap { qi =>
-      ranks(qi).take(budgets(qi)).map { case (l, _) => (l, qi) }
-    }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
-    val partials = scanLists(ivfData, model.metric, probeMap, qVecs, k)
-    val stats = qVecs.indices.map { qi =>
-      QueryStats(qVecs(qi)._1, budgets(qi), -1f, budgets(qi))
+    val results = IVFSearch.searchNprobes(ivfData, model,
+      qRows.map { case (qid, v, _) => (qid, v) }, k, budgets)
+    val stats = qRows.indices.map { qi =>
+      QueryStats(qRows(qi)._1, budgets(qi), -1f, budgets(qi))
     }
-    Result(FlatSearch.mergeTopK(partials, k), stats)
-  }
-
-  /** Scan the given lists, computing per-partition bounded top-k only
-    * for the queries probing each list. */
-  private def scanLists(ivfData: DataFrame, metric: String,
-                        probeMap: Map[Int, Array[Int]],
-                        qVecs: Array[(Long, Array[Float])], k: Int): DataFrame = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    if (probeMap.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "id", "dist")
-    val bq = spark.sparkContext.broadcast(qVecs)
-    val bp = spark.sparkContext.broadcast(probeMap)
-    ivfData
-      .filter(col("list_no").isin(probeMap.keys.toSeq.sorted: _*))
-      .select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        val pm = bp.value
-        val qs = bq.value
-        val heaps = scala.collection.mutable.HashMap.empty[Int, TopK]
-        it.foreach { case (listNo, id, vec) =>
-          pm.get(listNo) match {
-            case Some(qis) =>
-              var i = 0
-              while (i < qis.length) {
-                val qi = qis(i)
-                heaps.getOrElseUpdate(qi, new TopK(k))
-                  .add(Kernels.distance(metric, qs(qi)._2, vec), id)
-                i += 1
-              }
-            case None =>
-          }
-        }
-        heaps.iterator.flatMap { case (qi, h) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._1, id, d) }
-        }
-      }
-      .toDF("qid", "id", "dist")
+    Result(results, stats)
   }
 }

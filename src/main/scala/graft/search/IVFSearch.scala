@@ -45,6 +45,21 @@ object IVFSearch {
     }
   }
 
+  /** Per-pair scorer of [[scanProbed]]: (probe slot, list_no, payload) →
+    * distance, NaN REJECTS the row. A dedicated single-method trait rather
+    * than `Function3`, which Scala 2.13 does not specialize: the slot and
+    * list number go in and the distance comes out unboxed on every scored
+    * pair. */
+  trait PairScore[-R] { def apply(slot: Int, listNo: Int, payload: R): Double }
+
+  /** (list_no, id, vec) rows of a raw-vector IVF table. */
+  private def vectorRows(df: DataFrame): Dataset[(Int, Long, Array[Float])] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
+      .as[(Int, Long, Array[Float])]
+  }
+
   /** @param ivfData (id LONG, vec ARRAY<FLOAT>, list_no INT) — ideally
     *                read from a `partitionBy("list_no")` Parquet table
     * @param queries (qid LONG, vec ARRAY<FLOAT>)
@@ -54,77 +69,152 @@ object IVFSearch {
              k: Int, nprobe: Int): DataFrame = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-
     val q: Array[(Long, Array[Float])] = queries
       .select(col("qid").cast("long"), col("vec"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    // the scan distance uses the SAME normalized vector the ranking
-    // does for ip (scores are -dot of unit vectors there)
-    val qScan = if (model.metric == "ip")
-      q.map { case (qid, v) => (qid, Kernels.l2Normalize(v)) } else q
-    val bqv = spark.sparkContext.broadcast(qScan.map(_._2))
-    val m = model.metric
-    probedTopK[Array[Float]](ivfData,
-      df => df.select(col("list_no").cast("int"), col("id").cast("long"),
-        col("vec")).as[(Int, Long, Array[Float])],
-      model, q, k, nprobe,
-      () => (qi, _, vec) => Kernels.distance(m, bqv.value(qi), vec))
+    searchNprobes(ivfData, model, q, k, Array.fill(q.length)(nprobe))
   }
 
-  /** Shared probed-list partial-heap scan scaffold for code-based
-    * indexes (binary Hamming, spectral hash — the float path above
-    * keeps its specialized qvec-broadcast shape): metric-correct
-    * coarse ranking (rankTop fan-out), probed-list partition pruning,
-    * per-partition bounded heaps scored by `mkScore()(qi, listNo,
-    * payload)`, global top-k merge. `mkScore` is invoked once per
-    * partition so a scorer can keep lazy per-(query, list) state (e.g.
-    * per-list query binarization) without cross-partition sharing.
-    * A scorer may return NaN to REJECT a row (the polysemous Hamming
-    * filter inside the IVFPQ scan) — rejected rows never enter the
-    * heaps, matching the reference's filtered list scan. */
+  /** Fixed-plan float IVF search in which query `q(i)` probes its own
+    * `nprobes(i)` nearest lists — LAET's learned budgets,
+    * [[BoundedSearch.timeSearch]]'s latency budgets; a uniform nprobe is
+    * [[search]].
+    * @param q (qid, vec) sorted by qid */
+  def searchNprobes(ivfData: DataFrame, model: IVFModel,
+                    q: Array[(Long, Array[Float])], k: Int,
+                    nprobes: Array[Int]): DataFrame = {
+    // the scan distance uses the SAME normalized vector the ranking
+    // does for ip (scores are -dot of unit vectors there)
+    val qScan = if (model.metric == "ip") q.map(v => Kernels.l2Normalize(v._2))
+      else q.map(_._2)
+    probedTopK[Array[Float]](ivfData, vectorRows, model, q, k, nprobes,
+      vectorScore(ivfData.sparkSession, model.metric, qScan, 1))
+  }
+
+  /** Probed-list top-k search for every IVF payload — raw vectors
+    * ([[searchNprobes]]) and the code-based indexes (binary Hamming,
+    * spectral hash, IVFPQ ADC): metric-correct coarse ranking (rankTop
+    * fan-out), query `q(i)` probing its `nprobes(i)` nearest lists
+    * through [[scanProbed]] (slot = query index), global top-k merge.
+    * @param q (qid, vec) — `mkScore` scores slot i against `q(i)` */
   def probedTopK[R](encoded: DataFrame,
                     toRows: DataFrame => Dataset[(Int, Long, R)],
                     model: IVFModel, q: Array[(Long, Array[Float])],
-                    k: Int, nprobe: Int,
-                    mkScore: () => (Int, Int, R) => Double): DataFrame = {
+                    k: Int, nprobes: Array[Int],
+                    mkScore: () => PairScore[R]): DataFrame = {
     val spark = encoded.sparkSession
-    import spark.implicits._
-    val np = math.min(nprobe, model.nlist)
+    val np = nprobes.map(math.min(_, model.nlist))
     val qRank = q.map { case (qid, v) =>
       (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v)
     }
-    val ranks = rankTop(spark, model, qRank, np)
-    val probesByList: Map[Int, Array[Int]] = q.indices.flatMap { qi =>
-      ranks(qi).map { case (l, _) => (l, qi) }
-    }.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
-    val bp = spark.sparkContext.broadcast(probesByList)
-    val bqids = spark.sparkContext.broadcast(q.map(_._1))
-    val partials = toRows(
-      encoded.filter(col("list_no").isin(probesByList.keys.toSeq.sorted: _*)))
+    val ranks = rankTop(spark, model, qRank, np.foldLeft(0)(math.max))
+    val probeMap = byList(q.indices.flatMap { qi =>
+      ranks(qi).iterator.take(np(qi)).map { case (l, _) => (l, qi) }
+    })
+    FlatSearch.mergeTopK(
+      keyByQid(scanProbed(encoded, toRows, probeMap, k, mkScore), q.map(_._1)), k)
+  }
+
+  /** The probed-list scan kernel — the list loop of
+    * `IndexIVF::search_preassigned` (`Auncel/IndexIVF.cpp:382-760`) as
+    * ONE partition-pruned pass: only the probed lists are read
+    * (`list_no IN (...)` → Parquet partition pruning), and each partition
+    * keeps one bounded [[TopK]] per probe SLOT, fed by every row of every
+    * list that slot probes (map-side combine: ≤ k rows per slot per
+    * partition leave the task). A slot is whatever the caller keys a heap
+    * by: the query index for plain scans, one (query, first-probed stage)
+    * pair for the staged capture ([[stagedProbeMap]]). `mkScore` runs once
+    * per partition, so a scorer reads its broadcasts once and may keep
+    * per-(query, list) state (per-list query binarization, ADC tables)
+    * without cross-partition sharing; a NaN score rejects the row (the
+    * polysemous Hamming filter inside the IVFPQ scan), matching the
+    * reference's filtered list scan.
+    * @param probeMap list_no → the slots probing that list
+    * @return (slot, id, dist) partial rows, not yet merged across
+    *         partitions */
+  private def scanProbed[R](encoded: DataFrame,
+      toRows: DataFrame => Dataset[(Int, Long, R)],
+      probeMap: Map[Int, Array[Int]], k: Int,
+      mkScore: () => PairScore[R]): Dataset[(Int, Long, Double)] = {
+    val spark = encoded.sparkSession
+    import spark.implicits._
+    if (probeMap.isEmpty) return spark.emptyDataset[(Int, Long, Double)]
+    val bp = spark.sparkContext.broadcast(probeMap)
+    toRows(encoded.filter(col("list_no").isin(probeMap.keys.toSeq.sorted: _*)))
       .mapPartitions { it =>
         val pm = bp.value
-        val qids = bqids.value
         val score = mkScore()
         val heaps = scala.collection.mutable.HashMap.empty[Int, TopK]
         it.foreach { case (listNo, id, payload) =>
           pm.get(listNo) match {
-            case Some(qis) =>
+            case Some(slots) =>
               var i = 0
-              while (i < qis.length) {
-                val qi = qis(i)
-                val s = score(qi, listNo, payload)
+              while (i < slots.length) {
+                val slot = slots(i)
+                val s = score(slot, listNo, payload)
                 if (!java.lang.Double.isNaN(s))
-                  heaps.getOrElseUpdate(qi, new TopK(k)).add(s, id)
+                  heaps.getOrElseUpdate(slot, new TopK(k)).add(s, id)
                 i += 1
               }
             case None =>
           }
         }
-        heaps.iterator.flatMap { case (qi, h) =>
-          h.sorted.iterator.map { case (d, id) => (qids(qi), id, d) }
+        heaps.iterator.flatMap { case (slot, h) =>
+          h.sorted.iterator.map { case (d, id) => (slot, id, d) }
         }
-      }.toDF("qid", "id", "dist")
-    FlatSearch.mergeTopK(partials, k)
+      }
+  }
+
+  /** [[scanProbed]] over raw vectors scored by the metric distance: slot
+    * s scores `qVecs(s / slotsPerQuery)` (metric-normalized vectors). */
+  private[graft] def scanVectors(ivfData: DataFrame, metric: String,
+      qVecs: Array[Array[Float]], probeMap: Map[Int, Array[Int]], k: Int,
+      slotsPerQuery: Int = 1): Dataset[(Int, Long, Double)] =
+    scanProbed[Array[Float]](ivfData, vectorRows, probeMap, k,
+      vectorScore(ivfData.sparkSession, metric, qVecs, slotsPerQuery))
+
+  private def vectorScore(spark: org.apache.spark.sql.SparkSession,
+      metric: String, qVecs: Array[Array[Float]],
+      slotsPerQuery: Int): () => PairScore[Array[Float]] = {
+    val bq = spark.sparkContext.broadcast(qVecs)
+    () => {
+      val qs = bq.value
+      (slot, _, vec) => Kernels.distance(metric, qs(slot / slotsPerQuery), vec)
+    }
+  }
+
+  /** Re-key a plain scan's partial rows (slot = index into `qids`) as
+    * (qid, id, dist). */
+  private[graft] def keyByQid(partials: Dataset[(Int, Long, Double)],
+                              qids: Array[Long]): DataFrame = {
+    val spark = partials.sparkSession
+    import spark.implicits._
+    val bqids = spark.sparkContext.broadcast(qids)
+    partials.mapPartitions { it =>
+      val ids = bqids.value
+      it.map { case (qi, id, d) => (ids(qi), id, d) }
+    }.toDF("qid", "id", "dist")
+  }
+
+  /** list_no → the slots probing it, from (list_no, slot) pairs. */
+  private[graft] def byList(pairs: Seq[(Int, Int)]): Map[Int, Array[Int]] =
+    pairs.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
+
+  /** The staged probe map shared by the eager bounded search and the
+    * error-profile capture: each query's first 2^(levels−1) ranked lists,
+    * the list at 0-based rank ri entering the slot of the stage at which
+    * it is first probed, j0 = ⌈log2(ri + 1)⌉ — slot `qi · levels + j0`.
+    * Stage s's top-k is then the merge of a query's slots j0 ≤ s. */
+  private[graft] def stagedProbeMap(ranks: Array[Array[(Int, Float)]],
+                                    levels: Int): Map[Int, Array[Int]] = {
+    val maxRank = 1 << (levels - 1)
+    byList(ranks.indices.flatMap { qi =>
+      ranks(qi).iterator.take(maxRank).zipWithIndex.map { case ((l, _), ri) =>
+        var j0 = 0
+        while ((1 << j0) < ri + 1) j0 += 1
+        (l, qi * levels + j0)
+      }
+    })
   }
 
   /** IVF range search (`IndexIVF::range_search` semantics over probed
@@ -151,13 +241,16 @@ object IVFSearch {
       .filter(col("list_no").isin(probesByList.keys.toSeq.sorted: _*))
       .select(col("list_no").cast("int"), col("id").cast("long"), col("vec"))
       .as[(Int, Long, Array[Float])]
-      .flatMap { case (listNo, id, vec) =>
-        bq.value.get(listNo) match {
-          case Some(qs) => qs.iterator.flatMap { case (qid, qv) =>
-            val d = Kernels.distance(m, qv, vec)
-            if (d < radius) Some((qid, id, d)) else None
+      .mapPartitions { it =>
+        val pm = bq.value
+        it.flatMap { case (listNo, id, vec) =>
+          pm.get(listNo) match {
+            case Some(qs) => qs.iterator.flatMap { case (qid, qv) =>
+              val d = Kernels.distance(m, qv, vec)
+              if (d < radius) Some((qid, id, d)) else None
+            }
+            case None => Iterator.empty
           }
-          case None => Iterator.empty
         }
       }.toDF("qid", "id", "dist")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.baselines.LAET
 import graft.index.{BinaryHash, IVFIndex}
 import graft.profile.Calibration
-import graft.search.FlatSearch
+import graft.search.{BoundedSearch, FlatSearch, IVFSearch}
 
 class BaselinesSpec extends SparkSpec {
 
@@ -106,6 +106,31 @@ class BaselinesSpec extends SparkSpec {
     val recRich = recallVsExact(LAET.search(assigned, model, richM, eq, k)._1,
       evalQ, k)
     assert(recRich > 0.75, s"rich LAET recall $recRich")
+  }
+
+  test("per-query-nprobe search: uniform budgets ≡ IVFSearch.search, timeSearch ≡ its budgets") {
+    import spark.implicits._
+    val k = 10
+    val qs = evalQ.take(40)
+    val eq = vecDF(qs, "qid")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("qid").cast("long"), col("rank"), col("id"), col("dist"))
+        .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
+    for (n <- Seq(1, 5)) {
+      val uniform = LAET.searchPerQueryNprobe(assigned, model, eq, k,
+        qs.indices.map(i => (i.toLong, n)).toMap)
+      assert(rows(uniform).sameElements(rows(IVFSearch.search(assigned, model, eq, k, n))),
+        s"uniform nprobe $n differs from IVFSearch.search")
+    }
+    // latency budgets 1.0 .. 10.0 ms at 1 ms per list → 1 .. 9 probes
+    val tq = qs.zipWithIndex.map { case (v, i) => (i.toLong, v, 1.0 + (i % 7) * 1.5) }
+      .toSeq.toDF("qid", "vec", "budget_ms")
+    val timed = BoundedSearch.timeSearch(assigned, model, tq, k, costPerProbeMs = 1.0)
+    val budgets = timed.stats.map(s => (s.qid, s.nprobeUsed)).toMap
+    assert(budgets.values.toSet.size > 1, "budgets do not vary per query")
+    assert(rows(timed.results).sameElements(
+      rows(LAET.searchPerQueryNprobe(assigned, model, eq, k, budgets))),
+      "timeSearch differs from the per-query search at its budgets")
   }
 
   test("LSH hamming search + exact rerank recovers most true neighbors") {

@@ -346,6 +346,52 @@ class BoundedSearchSpec extends SparkSpec {
     assert(roundsR.stats.sortBy(_.qid) == eagerStats)
   }
 
+  test("an empty first-ranked list: eager ≡ driver rounds ≡ distributed, staged capture runs") {
+    import spark.implicits._
+    // one extra centroid placed AT a group of queries, with no rows
+    // assigned to it (`assigned` keeps the 64-list assignment): those
+    // queries rank the empty list first, so their stage-1 top-k is empty
+    val anchor = evalQ(0)
+    val rnd = new scala.util.Random(5)
+    val near = Array.fill(6)(anchor.map(x => (x + 0.01 * rnd.nextGaussian()).toFloat))
+    val m65 = graft.index.IVFModel(model.metric, model.centroids :+ anchor)
+    assert(near.forall(v => m65.rankCentroids(v).head._1 == model.nlist))
+    val tq = vecDF(trainQ, "qid")
+    val tr = ProfileTrainer.train(assigned, m65, tq, FlatSearch.knn(baseDF, tq, k),
+      maxTopk = k, bs = 100)
+    assert(tr.length == 4, "config must take the eager route by default")
+    val qs = near ++ evalQ.slice(1, 21)
+    // required recall 0 on the anchored queries: an empty top-k predicts
+    // recall 0, which already meets it, so only the empty-top-k gate keeps
+    // stage 1 from deciding them on no rows at all
+    val qdf = qs.zipWithIndex
+      .map { case (v, i) => (i.toLong, v, if (i < near.length) 0f else 0.8f) }
+      .toSeq.toDF("qid", "vec", "required_recall")
+    def run(eagerCap: Option[String], distributed: Boolean) = {
+      eagerCap.foreach(System.setProperty("graft.eager.maxQueries", _))
+      val r =
+        try BoundedSearch.search(assigned, m65, tr, qdf, k, multiplier = 4.0f,
+          stdM = 1.0f, forceDistributed = distributed)
+        finally System.clearProperty("graft.eager.maxQueries")
+      (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
+        .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
+        r.stats.sortBy(_.qid))
+    }
+    val (eRows, eStats) = run(None, distributed = false)
+    val (rRows, rStats) = run(Some("1"), distributed = false) // nq > cap: rounds
+    val (dRows, dStats) = run(None, distributed = true)
+    assert(eRows.map(_._1).distinct.length == qs.length, "some query lost its rows")
+    assert(eRows.sameElements(rRows), "driver-round rows differ from eager rows")
+    assert(eStats == rStats, "driver-round stats differ from eager stats")
+    assert(eRows.sameElements(dRows), "distributed rows differ from eager rows")
+    assert(eStats == dStats, "distributed stats differ from eager stats")
+    val staged = ProfileTrainer.stagedTopK(assigned, m65, vecDF(qs, "qid"), maxTopk = k)
+      .select(col("qid").cast("long"), col("stage")).as[(Long, Int)].collect()
+    // the anchored queries' stage-0 capture is empty; later stages are not
+    assert(!staged.exists { case (q, s) => q < near.length && s == 0 })
+    assert(staged.count(_._2 == 3) == qs.length)
+  }
+
   test("latency-bounded search respects the probe budget") {
     import spark.implicits._
     val qdf = evalQ.take(10).zipWithIndex
