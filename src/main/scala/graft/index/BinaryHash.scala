@@ -153,24 +153,14 @@ object BinaryHash {
     if (qRaw.length > DistributedMinQueries)
       return knnHammingWideLarge(sigs, querySigs, k)
     val q = qRaw.sortBy(_._1)
-    val bq = spark.sparkContext.broadcast(q)
-    val partials = sigs.select(col("id").cast("long"), col("sig"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { it =>
+    val bq = spark.sparkContext.broadcast(q.map(_._2))
+    graft.search.FlatSearch.flatTopK[Array[Long]](
+      sigs.select(col("id").cast("long"), col("sig")).as[(Long, Array[Long])],
+      q.map(_._1), k,
+      () => {
         val qs = bq.value
-        val heaps = qs.map(_ => new graft.operators.TopK(k))
-        it.foreach { case (id, sig) =>
-          var i = 0
-          while (i < qs.length) {
-            heaps(i).add(hammingWide(sig, qs(i)._2).toDouble, id)
-            i += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sorted.iterator.map { case (d, id) => (qs(i)._1, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    graft.search.FlatSearch.mergeTopK(partials, k)
+        (i, _, sig) => hammingWide(sig, qs(i)).toDouble
+      })
   }
 
   /** `Auncel/IndexBinaryIVF.cpp` — IVF-bucketed binary codes: vectors
@@ -259,24 +249,14 @@ object BinaryHash {
                               k: Int): DataFrame = {
     val spark = sigs.sparkSession
     import spark.implicits._
-    val bq = spark.sparkContext.broadcast(q)
-    val partials = sigs.select(col("id").cast("long"), col("sig").cast("long"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
+    val bq = spark.sparkContext.broadcast(q.map(_._2))
+    graft.search.FlatSearch.flatTopK[Long](
+      sigs.select(col("id").cast("long"), col("sig").cast("long")).as[(Long, Long)],
+      q.map(_._1), k,
+      () => {
         val qs = bq.value
-        val heaps = qs.map(_ => new graft.operators.TopK(k))
-        it.foreach { case (id, sig) =>
-          var i = 0
-          while (i < qs.length) {
-            heaps(i).add(java.lang.Long.bitCount(sig ^ qs(i)._2).toDouble, id)
-            i += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sorted.iterator.map { case (d, id) => (qs(i)._1, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    graft.search.FlatSearch.mergeTopK(partials, k)
+        (i, _, sig) => java.lang.Long.bitCount(sig ^ qs(i)).toDouble
+      })
   }
 
   /** End-to-end: encode base + queries, Hamming search, then exact

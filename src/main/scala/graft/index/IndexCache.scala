@@ -20,8 +20,10 @@ object IndexCache {
     * a fresh session pays model LOAD, not k-means/profile training.
     * Override with GRAFT_MODEL_DIR (or the graft.model.dir system
     * property, which wins — specs isolate a temp dir through it);
-    * delete the directory to retrain. */
-  private def diskRoot: String =
+    * delete the directory to retrain. Its parent is also the base of
+    * the oracle side-table and stream staging roots
+    * (`graft.queries.Vector.odir` / `sdir`). */
+  private[graft] def diskRoot: String =
     sys.props.get("graft.model.dir")
       .orElse(sys.env.get("GRAFT_MODEL_DIR"))
       .getOrElse("/tmp/graft_models")

@@ -108,7 +108,8 @@ object EmbeddingDedup {
     // frames pay one groupBy job on first call per session (memoized
     // by plan). Staleness follows the standing IndexCache contract —
     // data rewritten in place under a live plan needs invalidate() —
-    // and HERE staleness is sharper than for rowCount routing: an
+    // and HERE staleness is sharper than for the bounded search's
+    // fused/cogroup routing, which reads the same sizes: an
     // under-reading doesn't just misroute, it can leave the guard
     // inactive and send a skewed list into a quadratic task, so a
     // rewrite-without-invalidate voids the blowup protection, not just

@@ -3,7 +3,6 @@ package graft.quantize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
-import graft.operators.TopK
 
 /** Polysemous codes (Douze, Jégou & Perronnin, ECCV 2016; the
   * reference's `PolysemousTraining.cpp` + the polysemous search path in
@@ -303,31 +302,25 @@ object Polysemous {
     val q = queries.select(col("qid").cast("long"), col("vec"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val bm = spark.sparkContext.broadcast(model)
-    val bq = spark.sparkContext.broadcast(q)
+    val bq = spark.sparkContext.broadcast(q.map(_._2))
     val bqCodes = spark.sparkContext.broadcast(q.map { case (_, v) => model.encode(v) })
     val threshold = ht
-    val partials = codes.select(col("id").cast("long"), col("code"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
+    graft.search.FlatSearch.flatTopK[Array[Byte]](
+      codes.select(col("id").cast("long"), col("code")).as[(Long, Array[Byte])],
+      q.map(_._1), k,
+      () => {
         val pq = bm.value
         val qs = bq.value
         val qCodes = bqCodes.value
-        val heaps = qs.map(_ => new TopK(k))
-        it.foreach { case (id, code) =>
-          var i = 0
-          var decoded: Array[Float] = null // decode at most once per row
-          while (i < qs.length) {
-            if (hamming(qCodes(i), code) <= threshold) {
-              if (decoded == null) decoded = pq.decode(code)
-              heaps(i).add(Kernels.l2Sqr(qs(i)._2, decoded), id)
-            }
-            i += 1
+        var last: Array[Byte] = null
+        var decoded: Array[Float] = null
+        (i, _, code) =>
+          if (hamming(qCodes(i), code) > threshold) Double.NaN
+          else {
+            // decode at most once per row, on its first surviving query
+            if (code ne last) { decoded = pq.decode(code); last = code }
+            Kernels.l2Sqr(qs(i), decoded)
           }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sorted.iterator.map { case (d, id) => (qs(i)._1, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    graft.search.FlatSearch.mergeTopK(partials, k)
+      })
   }
 }

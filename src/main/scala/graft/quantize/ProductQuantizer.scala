@@ -1,11 +1,8 @@
 package graft.quantize
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
-import graft.operators.TopK
 
 /** Product quantizer (`Auncel/ProductQuantizer.h:23-175`, .cpp): the
   * vector is split into M subvectors, each encoded by a 2^nbits-entry
@@ -187,27 +184,15 @@ object ProductQuantizer {
     val q = queries.select(col("qid").cast("long"), col("vec"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val bm = spark.sparkContext.broadcast(model)
-    val bq = spark.sparkContext.broadcast(q.map(_._1))
     val bTables = spark.sparkContext.broadcast(q.map { case (_, v) => model.adcTable(v) })
-    val partials = codes.select(col("id").cast("long"), col("code"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
+    graft.search.FlatSearch.flatTopK[Array[Byte]](
+      codes.select(col("id").cast("long"), col("code")).as[(Long, Array[Byte])],
+      q.map(_._1), k,
+      () => {
         val tables = bTables.value
-        val qids = bq.value
         val pq = bm.value
-        val heaps = qids.map(_ => new TopK(k))
-        it.foreach { case (id, code) =>
-          var i = 0
-          while (i < qids.length) {
-            heaps(i).add(pq.adcDistance(tables(i), code), id)
-            i += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sorted.iterator.map { case (dd, id) => (qids(i), id, dd) }
-        }
-      }.toDF("qid", "id", "dist")
-    graft.search.FlatSearch.mergeTopK(partials, k)
+        (i, _, code) => pq.adcDistance(tables(i), code)
+      })
   }
 }
 
@@ -266,26 +251,22 @@ object ScalarQuantizer {
     val q = queries.select(col("qid").cast("long"), col("vec"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val bm = spark.sparkContext.broadcast(model)
-    val bq = spark.sparkContext.broadcast(q)
+    val bq = spark.sparkContext.broadcast(q.map(_._2))
     val m = metric
-    val partials = codes.select(col("id").cast("long"), col("code"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
+    graft.search.FlatSearch.flatTopK[Array[Byte]](
+      codes.select(col("id").cast("long"), col("code")).as[(Long, Array[Byte])],
+      q.map(_._1), k,
+      () => {
         val qs = bq.value
         val sq = bm.value
-        val heaps = qs.map(_ => new TopK(k))
-        it.foreach { case (id, code) =>
-          val v = sq.decode(code)
-          var i = 0
-          while (i < qs.length) {
-            heaps(i).add(Kernels.distance(m, qs(i)._2, v), id)
-            i += 1
-          }
+        var last: Array[Byte] = null
+        var v: Array[Float] = null
+        (i, _, code) => {
+          // decode each row once: the loop scores it against every query
+          // before the next row arrives
+          if (code ne last) { v = sq.decode(code); last = code }
+          Kernels.distance(m, qs(i), v)
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sorted.iterator.map { case (d, id) => (qs(i)._1, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    graft.search.FlatSearch.mergeTopK(partials, k)
+      })
   }
 }

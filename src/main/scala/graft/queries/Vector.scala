@@ -25,18 +25,23 @@ object Vector {
     * leaf (e.g. /a/sf0.01 and /b/sf0.01) can never read each other's
     * tables (same collision class IndexCache.diskPath guards against).
     * Used by BOTH the query-side writers and the SQL builders. */
-  private[queries] def odir(dir: String): String = {
-    val h = f"${scala.util.hashing.MurmurHash3.stringHash(dir)}%08x"
-    s"/tmp/graft_oracle/${new java.io.File(dir).getName}_$h"
-  }
+  private[graft] def odir(dir: String): String = underRoot("graft_oracle", dir)
 
   /** Streaming staging root for a dataset dir — same leaf+full-path-hash
     * scheme as [[odir]], so two dataset dirs sharing a leaf name (or two
     * concurrent runs over different fixtures) can never stage into, or
     * delete, each other's stream directories. */
-  private[queries] def sdir(dir: String): String = {
+  private[graft] def sdir(dir: String): String = underRoot("graft_stream", dir)
+
+  /** `<base>/<root>/<basename(dir)>_<fullPathHash>`, where base is the
+    * parent of [[graft.index.IndexCache]]'s model root, so
+    * `graft.model.dir` / `GRAFT_MODEL_DIR` moves the oracle and stream
+    * roots along with the models (default base: /tmp). */
+  private def underRoot(root: String, dir: String): String = {
     val h = f"${scala.util.hashing.MurmurHash3.stringHash(dir)}%08x"
-    s"/tmp/graft_stream/${new java.io.File(dir).getName}_$h"
+    val base = Option(new java.io.File(graft.index.IndexCache.diskRoot)
+      .getAbsoluteFile.getParent).getOrElse("/")
+    s"$base/$root/${new java.io.File(dir).getName}_$h"
   }
 
   private def base(s: SparkSession, dir: String): DataFrame =
@@ -1465,7 +1470,8 @@ object Vector {
     "v31_staged_capture" -> v31StagedCapture _)
 
   /** Side-table oracles (a01/a02/v06/v17/v18/v19) read
-    * /tmp/graft_oracle/<basename(dir)>_<fullPathHash> — derived from the
+    * <base>/graft_oracle/<basename(dir)>_<fullPathHash> ([[odir]]; base is
+    * the parent of the model root, /tmp by default) — derived from the
     * SAME dir the query ran with, so verifying at any scale factor (or
     * either of two dirs sharing a leaf name) reads that run's tables,
     * never a stale copy. */

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
 import graft.index.IVFModel
-import graft.operators.TopK
 import graft.profile.ErrorProfile
 import graft.profile.ErrorProfile.Trace
 
@@ -339,19 +338,12 @@ object BoundedSearch {
                   dists(x) = d2(order(x)); ids(x) = i2(order(x)); x += 1
                 }
               }
-              // only still-active queries with ANY accumulated top-k
-              // advance — the same (np != 0 || no summary) gate the
-              // joined shape applied
-              if (c.myNprobe != 0 || ids.isEmpty)
-                c.copy(topIds = ids, topDists = dists)
+              if (c.myNprobe != 0) c.copy(topIds = ids, topDists = dists)
               else {
-                val recall = BoundedSearch.predictedRecall(
-                  dists, c.dB, bTrace.value, jj, kk, sm, met)
-                val maxVal = dists(dists.length - 1)
-                val next = BoundedSearch.decideStep(
+                val next = BoundedSearch.stageStep(
                   Ctrl(c.qid, c.require, c.myNprobe, c.stoped, c.preVal,
                     c.predicted, c.decidedStage),
-                  jj, lv, kk, mult, recall, dists.length, maxVal)
+                  dists, c.dB, bTrace.value, jj, lv, kk, mult, sm, met)
                 c.copy(myNprobe = next.myNprobe, stoped = next.stoped,
                   preVal = next.preVal, predicted = next.predicted,
                   decidedStage = next.decidedStage,
@@ -487,27 +479,17 @@ object BoundedSearch {
 
   /** The list-group kernel of both distributed scan routes
     * ([[scanListsCogroup]], [[scanListsJoin]]): one (list, salt) group's
-    * probes (qid, query vector), one bounded [[TopK]] each, against ONE
-    * streamed pass over the list's rows; ≤ k (qid, id, dist) rows out per
-    * probe. */
+    * probes (qid, query vector) become the slots of [[IVFSearch.slotTopK]]
+    * over ONE streamed pass of the list's rows; ≤ k (qid, id, dist) rows
+    * out per probe. */
   private def listGroupTopK[K](metric: String, k: Int,
       dataIt: Iterator[(K, Long, Array[Float])],
       probeIt: Iterator[(K, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
     val ps = probeIt.toArray
-    if (ps.isEmpty) Iterator.empty
-    else {
-      val heaps = ps.map(_ => new TopK(k))
-      dataIt.foreach { case (_, id, vec) =>
-        var i = 0
-        while (i < ps.length) {
-          heaps(i).add(Kernels.distance(metric, ps(i)._3, vec), id)
-          i += 1
-        }
-      }
-      ps.iterator.zip(heaps.iterator).flatMap { case (p, h) =>
-        h.sorted.iterator.map { case (d, id) => (p._2, id, d) }
-      }
-    }
+    IVFSearch.allSlotsTopK[Array[Float]](dataIt.map(r => (r._2, r._3)),
+      ps.length, k,
+      () => (slot, _, vec) => Kernels.distance(metric, ps(slot)._3, vec))
+      .map { case (slot, id, d) => (ps(slot)._2, id, d) }
   }
 
   /** If `df`'s data will come out of its source already hash-partitioned
@@ -641,30 +623,39 @@ object BoundedSearch {
 
     /** One stage step for query qi at stage 2^j: merge the stage's new
       * (slot, id, dist) scan rows into its top-k under (dist, id), keep k,
-      * then predict recall, update the stagnation bookkeeping and decide —
-      * only while the query is active and its top-k is non-empty, the same
-      * gate the distributed path applies. */
+      * then, while the query is active, [[stageStep]] — the step the
+      * distributed path runs. */
     def advance(qi: Int, j: Int, rows: Array[(Int, Long, Double)]): Unit =
       if (myNprobe(qi) == 0) {
         if (rows.nonEmpty)
           topK(qi) = (topK(qi) ++ rows.map(r => (r._3, r._2)))
             .sortBy { case (d, id) => (d, id) }.take(k)
-        if (topK(qi).nonEmpty) {
-          val dRaw = topK(qi).map(_._1)
-          val recall = BoundedSearch.predictedRecall(
-            dRaw, dBs(qi), traces(j), j, k, stdM, metric)
-          val next = BoundedSearch.decideStep(
-            Ctrl(0L, requires(qi), myNprobe(qi), stoped(qi), preVal(qi),
-              predicted(qi), decidedStage(qi)),
-            j, levels, k, multiplier, recall, dRaw.length, dRaw.max)
-          myNprobe(qi) = next.myNprobe
-          stoped(qi) = next.stoped
-          preVal(qi) = next.preVal
-          predicted(qi) = next.predicted
-          decidedStage(qi) = next.decidedStage
-        }
+        val next = BoundedSearch.stageStep(
+          Ctrl(0L, requires(qi), myNprobe(qi), stoped(qi), preVal(qi),
+            predicted(qi), decidedStage(qi)),
+          topK(qi).map(_._1), dBs(qi), traces(j), j, levels, k, multiplier,
+          stdM, metric)
+        myNprobe(qi) = next.myNprobe
+        stoped(qi) = next.stoped
+        preVal(qi) = next.preVal
+        predicted(qi) = next.predicted
+        decidedStage(qi) = next.decidedStage
       }
   }
+
+  /** One active query's stage step on its cumulative top-k distances
+    * (ascending): [[predictedRecall]], then [[decideStep]]. An empty top-k
+    * is evaluated only at the cap stage (j = levels − 1), where it decides
+    * with predicted recall 0, so a query whose staged lists are all empty
+    * still gets its finishing probes; before the cap it waits. Shared by
+    * the [[Decider]] and the distributed cogroup. */
+  private def stageStep(st: Ctrl, dists: Array[Double],
+      dB: Array[Float], trace: Trace, j: Int, levels: Int, k: Int,
+      multiplier: Float, stdM: Float, metric: String): Ctrl =
+    if (dists.isEmpty && j < levels - 1) st
+    else decideStep(st, j, levels, k, multiplier,
+      predictedRecall(dists, dB, trace, j, k, stdM, metric), dists.length,
+      if (dists.isEmpty) Double.NaN else dists(dists.length - 1))
 
   /** Pure per-query recall prediction — the executor-side piece of the
     * decision (the `IndexIVF.cpp:504-637` tune block minus the

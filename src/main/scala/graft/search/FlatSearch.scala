@@ -42,29 +42,27 @@ object FlatSearch {
     if (qRaw.length > DistributedMinQueries)
       return knnLarge(base, queries, k, metric)
     val q = qRaw.sortBy(_._1)
-    val bq = spark.sparkContext.broadcast(q)
+    val bq = spark.sparkContext.broadcast(q.map(_._2))
     val m = metric
-
-    val partials: Dataset[(Long, Long, Double)] = base
-      .select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
+    flatTopK[Array[Float]](
+      base.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])],
+      q.map(_._1), k,
+      () => {
         val qs = bq.value
-        val heaps = qs.map(_ => new TopK(k))
-        it.foreach { case (id, vec) =>
-          var i = 0
-          while (i < qs.length) {
-            val d = Kernels.distance(m, qs(i)._2, vec)
-            heaps(i).add(d, id)
-            i += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sorted.iterator.map { case (d, id) => (qs(i)._1, id, d) }
-        }
-      }
+        (i, _, vec) => Kernels.distance(m, qs(i), vec)
+      })
+  }
 
-    mergeTopK(partials.toDF("qid", "id", "dist"), k)
+  /** The flat scan of every broadcast-query brute force (float, Hamming,
+    * ADC, SQ, polysemous): [[IVFSearch.allSlotsTopK]] per partition, then
+    * the global merge. `mkScore` scores slot i against query `qids(i)`. */
+  private[graft] def flatTopK[R](rows: Dataset[(Long, R)], qids: Array[Long],
+      k: Int, mkScore: () => IVFSearch.PairScore[R]): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val nq = qids.length
+    mergeTopK(IVFSearch.keyByQid(rows.mapPartitions(it =>
+      IVFSearch.allSlotsTopK(it, nq, k, mkScore)), qids), k)
   }
 
   /** The reference's own driver contract holds all queries in RAM

@@ -45,7 +45,7 @@ object IVFSearch {
     }
   }
 
-  /** Per-pair scorer of [[scanProbed]]: (probe slot, list_no, payload) →
+  /** Per-pair scorer of [[slotTopK]]: (probe slot, list_no, payload) →
     * distance, NaN REJECTS the row. A dedicated single-method trait rather
     * than `Function3`, which Scala 2.13 does not specialize: the slot and
     * list number go in and the distance comes out unboxed on every scored
@@ -119,16 +119,12 @@ object IVFSearch {
     * `IndexIVF::search_preassigned` (`Auncel/IndexIVF.cpp:382-760`) as
     * ONE partition-pruned pass: only the probed lists are read
     * (`list_no IN (...)` → Parquet partition pruning), and each partition
-    * keeps one bounded [[TopK]] per probe SLOT, fed by every row of every
-    * list that slot probes (map-side combine: ≤ k rows per slot per
+    * runs [[slotTopK]] over them (map-side combine: ≤ k rows per slot per
     * partition leave the task). A slot is whatever the caller keys a heap
     * by: the query index for plain scans, one (query, first-probed stage)
-    * pair for the staged capture ([[stagedProbeMap]]). `mkScore` runs once
-    * per partition, so a scorer reads its broadcasts once and may keep
-    * per-(query, list) state (per-list query binarization, ADC tables)
-    * without cross-partition sharing; a NaN score rejects the row (the
-    * polysemous Hamming filter inside the IVFPQ scan), matching the
-    * reference's filtered list scan.
+    * pair for the staged capture ([[stagedProbeMap]]). A NaN score rejects
+    * the row (the polysemous Hamming filter inside the IVFPQ scan),
+    * matching the reference's filtered list scan.
     * @param probeMap list_no → the slots probing that list
     * @return (slot, id, dist) partial rows, not yet merged across
     *         partitions */
@@ -140,30 +136,62 @@ object IVFSearch {
     import spark.implicits._
     if (probeMap.isEmpty) return spark.emptyDataset[(Int, Long, Double)]
     val bp = spark.sparkContext.broadcast(probeMap)
+    val nSlots = probeMap.valuesIterator.map(_.max).max + 1
     toRows(encoded.filter(col("list_no").isin(probeMap.keys.toSeq.sorted: _*)))
-      .mapPartitions { it =>
-        val pm = bp.value
-        val score = mkScore()
-        val heaps = scala.collection.mutable.HashMap.empty[Int, TopK]
-        it.foreach { case (listNo, id, payload) =>
-          pm.get(listNo) match {
-            case Some(slots) =>
-              var i = 0
-              while (i < slots.length) {
-                val slot = slots(i)
-                val s = score(slot, listNo, payload)
-                if (!java.lang.Double.isNaN(s))
-                  heaps.getOrElseUpdate(slot, new TopK(k)).add(s, id)
-                i += 1
-              }
-            case None =>
-          }
-        }
-        heaps.iterator.flatMap { case (slot, h) =>
-          h.sorted.iterator.map { case (d, id) => (slot, id, d) }
-        }
-      }
+      .mapPartitions(it => slotTopK(it, bp.value, nSlots, k, mkScore))
   }
+
+  /** The one top-k scan loop every flat, probed-list and list-group scan
+    * feeds its heaps through (`scan_one_list`, `Auncel/IndexIVF.cpp:439-475`;
+    * flat `knn_L2sqr`, `utils.cpp:417-492`). Each (list_no, id, payload)
+    * row is scored against every slot probing its list; slot s keeps one
+    * bounded [[TopK]], `heaps(s)`, allocated on first use. `mkScore` runs
+    * once per call (per partition or list group): a scorer reads its
+    * broadcasts once and may cache per-(slot, list) state, or per-row
+    * state keyed by payload identity — a row meets all its slots before
+    * the next row arrives. A NaN score rejects the row.
+    * @param slotsOf list_no → the slots probing that list
+    * @return ≤ k (slot, id, dist) rows per slot, slots 0 until nSlots */
+  private[graft] def slotTopK[R](rows: Iterator[(Int, Long, R)],
+      slotsOf: Map[Int, Array[Int]], nSlots: Int, k: Int,
+      mkScore: () => PairScore[R]): Iterator[(Int, Long, Double)] = {
+    if (nSlots == 0) return Iterator.empty
+    val score = mkScore()
+    val heaps = new Array[TopK](nSlots)
+    var slots: Array[Int] = null
+    var slotsList = 0
+    while (rows.hasNext) {
+      val row = rows.next()
+      val listNo = row._1
+      val id = row._2
+      val payload = row._3
+      // rows arrive grouped by list: one map lookup per run of a list
+      if (slots == null || listNo != slotsList) {
+        slots = slotsOf.getOrElse(listNo, Array.emptyIntArray)
+        slotsList = listNo
+      }
+      var i = 0
+      while (i < slots.length) {
+        val slot = slots(i)
+        val s = score(slot, listNo, payload)
+        if (!java.lang.Double.isNaN(s)) {
+          if (heaps(slot) == null) heaps(slot) = new TopK(k)
+          heaps(slot).add(s, id)
+        }
+        i += 1
+      }
+    }
+    Iterator.range(0, nSlots).filter(heaps(_) != null).flatMap { slot =>
+      heaps(slot).sorted.iterator.map { case (d, id) => (slot, id, d) }
+    }
+  }
+
+  /** [[slotTopK]]'s one-list case, the flat scan: every (id, payload) row
+    * is scored against every one of `nSlots` slots. */
+  private[graft] def allSlotsTopK[R](rows: Iterator[(Long, R)], nSlots: Int,
+      k: Int, mkScore: () => PairScore[R]): Iterator[(Int, Long, Double)] =
+    slotTopK[R](rows.map { case (id, p) => (0, id, p) },
+      Map(0 -> Array.range(0, nSlots)), nSlots, k, mkScore)
 
   /** [[scanProbed]] over raw vectors scored by the metric distance: slot
     * s scores `qVecs(s / slotsPerQuery)` (metric-normalized vectors). */

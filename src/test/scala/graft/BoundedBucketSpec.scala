@@ -159,7 +159,7 @@ class BoundedBucketSpec extends SparkSpec {
     } finally System.clearProperty("graft.join.minProbedRows")
   }
 
-  test("meanListSize is layout metadata: repeat searches run no count job") {
+  test("list sizes are layout metadata: repeat searches run no count job") {
     import spark.implicits._
     val qdf = pool.slice(3150, 3166).zipWithIndex
       .map { case (v, i) => (i.toLong, v, 0.85f) }

@@ -392,6 +392,52 @@ class BoundedSearchSpec extends SparkSpec {
     assert(staged.count(_._2 == 3) == qs.length)
   }
 
+  test("a query whose staged lists are all empty decides at the cap on every path") {
+    import spark.implicits._
+    // an nlist-8 index plus a 9th centroid, with no rows, placed AT a
+    // query: nlist 9 stages one list, so that query's whole staged prefix
+    // is the empty list, and only the cap stage can decide it
+    val b = clusteredVecs(2000, d, nClusters = 8, seed = 91)
+    val bDF = vecDF(b)
+    val m8 = IVFIndex.train(bDF, nlist = 8, seed = 42L)
+    val a8 = IVFIndex.assign(bDF, m8).cache()
+    val qv = clusteredVecs(2120, d, nClusters = 8, seed = 92).drop(2000)
+    val m9 = graft.index.IVFModel(m8.metric, m8.centroids :+ qv(0))
+    val tq = vecDF(qv.drop(20), "qid")
+    val tr = ProfileTrainer.train(a8, m9, tq, FlatSearch.knn(bDF, tq, k),
+      maxTopk = k, bs = 50)
+    assert(tr.length == 1, "nlist 9 must stage exactly one list")
+    val qs = qv.take(20)
+    val empty = qs.indices.filter(i => m9.rankCentroids(qs(i)).head._1 == 8)
+    assert(empty.contains(0))
+    val qdf = qs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
+      .toSeq.toDF("qid", "vec", "required_recall")
+    def run(eagerCap: Option[String], distributed: Boolean) = {
+      eagerCap.foreach(System.setProperty("graft.eager.maxQueries", _))
+      val r =
+        try BoundedSearch.search(a8, m9, tr, qdf, k, multiplier = 2.0f,
+          stdM = 1.0f, forceDistributed = distributed)
+        finally System.clearProperty("graft.eager.maxQueries")
+      (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
+        .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
+        r.stats.sortBy(_.qid))
+    }
+    val (eRows, eStats) = run(None, distributed = false)
+    val (rRows, rStats) = run(Some("1"), distributed = false) // nq > cap: rounds
+    val (dRows, dStats) = run(None, distributed = true)
+    // decided at the cap (stage 1) on an empty top-k: predicted recall 0,
+    // nprobe 1 × multiplier 2, so the finishing pass probes the next
+    // ranked (non-empty) list and fills the top-k from it
+    empty.foreach { qi =>
+      assert(eStats(qi) == BoundedSearch.QueryStats(qi.toLong, 2, 0f, 1))
+      assert(eRows.count(_._1 == qi) == k, s"query $qi got no full top-k")
+    }
+    assert(eRows.sameElements(rRows), "driver-round rows differ from eager rows")
+    assert(eStats == rStats, "driver-round stats differ from eager stats")
+    assert(eRows.sameElements(dRows), "distributed rows differ from eager rows")
+    assert(eStats == dStats, "distributed stats differ from eager stats")
+  }
+
   test("latency-bounded search respects the probe budget") {
     import spark.implicits._
     val qdf = evalQ.take(10).zipWithIndex

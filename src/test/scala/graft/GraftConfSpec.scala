@@ -57,4 +57,17 @@ class GraftConfSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("oracle and stream roots sit beside the model root") {
+    import graft.queries.Vector.{odir, sdir}
+    val h = f"${scala.util.hashing.MurmurHash3.stringHash("/data/sf0.01")}%08x"
+    if (sys.env.get("GRAFT_MODEL_DIR").isEmpty) {
+      assert(odir("/data/sf0.01") == s"/tmp/graft_oracle/sf0.01_$h")
+      assert(sdir("/data/sf0.01") == s"/tmp/graft_stream/sf0.01_$h")
+    }
+    withProp("graft.model.dir", "/srv/graft/models") {
+      assert(odir("/data/sf0.01") == s"/srv/graft/graft_oracle/sf0.01_$h")
+      assert(sdir("/data/sf0.01") == s"/srv/graft/graft_stream/sf0.01_$h")
+    }
+  }
 }

@@ -180,4 +180,35 @@ class QuantizerSpec extends SparkSpec {
     val r = recallOf(ScalarQuantizer.knn(codes, sq, qDF, k = 10))
     assert(r > 0.95, s"SQ8 recall $r")
   }
+
+  test("flat ADC and SQ scans return exactly the scalar loop's rows") {
+    import spark.implicits._
+    val k = 10
+    val qs = qDF.select(col("qid"), col("vec")).as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
+    // expected rows: every code scored against every query by a plain
+    // loop, ordered by (dist, id), ranked 1..k
+    def check(name: String, res: org.apache.spark.sql.DataFrame,
+              codes: org.apache.spark.sql.DataFrame,
+              dist: (Array[Float], Array[Byte]) => Double): Unit = {
+      val cs = codes.select(col("id"), col("code")).as[(Long, Array[Byte])]
+        .collect()
+      val want = qs.flatMap { case (qid, qv) =>
+        cs.map { case (id, c) => (dist(qv, c), id) }.sorted.take(k)
+          .zipWithIndex.map { case ((d, id), r) => (qid, id, d, r + 1) }
+      }
+      val got = res.select(col("qid"), col("id"), col("dist"), col("rank"))
+        .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
+      assert(got.sameElements(want), s"$name rows differ from the scalar loop")
+    }
+    val pq = ProductQuantizer.train(baseDF, m = 8, nbits = 8, seed = 1L)
+    val pqCodes = ProductQuantizer.encode(baseDF, pq).drop("vec")
+    check("ADC", ProductQuantizer.knnADC(pqCodes, pq, qDF, k), pqCodes,
+      (qv, c) => pq.adcDistance(pq.adcTable(qv), c))
+    val sq = ScalarQuantizer.train(baseDF)
+    val sqCodes = ScalarQuantizer.encode(baseDF, sq).drop("vec")
+    for (metric <- Seq("l2", "ip"))
+      check(s"SQ8 $metric", ScalarQuantizer.knn(sqCodes, sq, qDF, k, metric),
+        sqCodes, (qv, c) => Kernels.distance(metric, qv, sq.decode(c)))
+  }
 }
