@@ -10,7 +10,6 @@ package graft
   *
   * | property | default | governs |
   * |---|---|---|
-  * | `graft.eager.maxQueries` | 32768 | largest bounded-search batch the eager one-pass scan (levels ≤ 4) may collect to the driver; larger driver-collectable batches take the per-round driver-decided rounds ([[graft.search.BoundedSearch]]) |
   * | `graft.distributed.minQueries` | 131072 | batch size beyond which queries stay in a DataFrame end-to-end (BoundedSearch / FlatSearch / BinaryHash large-batch twins) |
   * | `graft.cogroup.maxProbes` | 8192 | per-task probe bound of the salted cogroup scan; hot lists beyond it are salted across sub-keys |
   * | `graft.join.maxProbesPerBucket` | 8 × cogroupMaxProbes | per-LIST probe bound of the fused bucket-local scan (its tasks stream one list group at a time) |
@@ -38,22 +37,14 @@ object GraftConf {
   private def longProp(key: String, default: => Long): Long =
     sys.props.get(key).map(parsed(key, _, _.toLong)).getOrElse(default)
 
-  /** Largest batch the eager one-pass bounded-search scan (levels ≤ 4)
-    * collects to the driver: it gathers every staged list's partials
-    * at once, ≤ nq × nlist/8 × k rows — at the default and k = 10 that
-    * is ≤ 2.6M (query, stage, id, dist) rows, a few hundred MB of
-    * boxed tuples. Larger driver-collectable batches (and every deep
-    * schedule) take the driver-decided rounds, whose collect is
-    * ≤ active × k rows per round; those rounds serve every batch up to
-    * [[distributedMinQueries]] (`tools/evidence/
-    * staged_driver_ab_131k.log`: parity with an executor-side control
-    * loop at 32k–131k queries). */
-  def eagerMaxQueries: Int = intProp("graft.eager.maxQueries", 32768)
-
   /** Above this batch size the driver-decided paths' driver-held structures
     * (query vectors, centroid rankings, per-round broadcast probe maps
     * — all O(nq)) stop being "collectable"; the fully-distributed paths
-    * keep the queries themselves in a DataFrame. */
+    * keep the queries themselves in a DataFrame. Every bounded-search
+    * batch up to it takes the driver-decided rounds, whose collect is
+    * ≤ active × k rows per round (`tools/evidence/
+    * staged_driver_ab_131k.log`: parity with an executor-side control
+    * loop at 32k–131k queries). */
   def distributedMinQueries: Int =
     intProp("graft.distributed.minQueries", 131072)
 
@@ -121,7 +112,7 @@ object GraftConf {
 
   /** Largest edge count [[graft.ops.Components.connectedComponents]]
     * may collect for its driver union-find arm (the BoundedSearch
-    * `eagerMaxQueries` contract applied to cluster resolution): a
+    * `distributedMinQueries` contract applied to cluster resolution): a
     * near-dup candidate graph at or below this size resolves in ONE
     * collect-and-union-find job instead of O(log diameter) rounds of
     * join+aggregate+checkpoint (each round ~5 jobs; d08's loop at

@@ -80,63 +80,36 @@ object IndexCache {
       (model, assigned)
     })
 
-  /** The corpus row count AND the per-list sizes are LAYOUT metadata
-    * (they size the bounded search's fused/cogroup routing and the
-    * semantic-dedup oversized-list guard), so they persist beside the
-    * model: a build pays ONE `groupBy(list_no).count()` job (which
-    * also materializes the cache) yielding both — sizes directly,
-    * corpus rows as their sum — and writes the `_list_sizes` +
-    * `_corpus_rows` sidecars; a fresh session's reload reads the
-    * sidecars and SEEDS the memos, so its first distributed search or
-    * [[graft.ops.EmbeddingDedup.ivfPairs]] call runs zero metadata
-    * jobs before real work. A pre-`_list_sizes` model directory
-    * (legacy), or one whose sizes sidecar fails trailer verification,
-    * seeds the row count from `_corpus_rows` and leaves sizes lazy —
-    * the first [[listSizes]] caller pays the job once, memoizes, AND
-    * persists the verified sidecar (self-upgrade: later sessions seed
-    * for free). The underscore prefix keeps the parquet reader from
-    * treating the sidecars as data files (the `_SUCCESS` convention). */
+  /** The per-list sizes are LAYOUT metadata (they size the bounded
+    * search's fused/cogroup routing and the semantic-dedup oversized-list
+    * guard), so they persist beside the model. A reload whose
+    * `_list_sizes` sidecar passes trailer verification SEEDS the
+    * [[listSizes]] memo, so its first distributed search or
+    * [[graft.ops.EmbeddingDedup.ivfPairs]] call runs zero metadata jobs
+    * before real work. Every other build or reload — a fresh build, a
+    * directory without the sidecar, or one whose sidecar fails
+    * verification — pays ONE `groupBy(list_no).count()` job (which also
+    * materializes the cache) and writes the verified sidecar, so later
+    * sessions seed for free. The underscore prefix keeps the parquet
+    * reader from treating the sidecar as a data file (the `_SUCCESS`
+    * convention). */
   private def countOrSeed(assigned: DataFrame, modelPath: String,
                           loaded: Boolean): Unit = {
-    val szSidecar = new java.io.File(modelPath, "_list_sizes")
-    val rcSidecar = new java.io.File(modelPath, "_corpus_rows")
-    val persistedSizes: Option[Map[Long, Long]] =
-      if (loaded && szSidecar.exists()) readSizesSidecar(szSidecar.toPath)
+    val sidecar = new java.io.File(modelPath, "_list_sizes")
+    val persisted: Option[Map[Long, Long]] =
+      if (loaded && sidecar.exists()) readSizesSidecar(sidecar.toPath)
       else None
-    persistedSizes match {
-      case Some(m) =>
-        seedListSizes(assigned, m)
-        seedRowCount(assigned, m.valuesIterator.sum)
-      case None =>
-        val persistedRows =
-          if (loaded && rcSidecar.exists())
-            scala.util.Try(java.nio.file.Files.readString(rcSidecar.toPath)
-              .trim.toLong).toOption
-          else None
-        persistedRows match {
-          case Some(n) =>
-            // legacy / unverifiable-sidecar dir: sizes stay lazy, but
-            // REGISTER the sidecar path so the first listSizes compute
-            // persists it (self-upgrade — later sessions seed for free)
-            seedRowCount(assigned, n)
-            val plan = assigned.queryExecution.analyzed
-            pendingSizeSidecars.put(Integer.valueOf(plan.semanticHash()),
-              (plan, szSidecar.getPath))
-          case None =>
-            // one job, both metadata; materializes the cache too
-            val m = listSizes(assigned)
-            seedRowCount(assigned, m.valuesIterator.sum)
-            writeSizesSidecar(szSidecar.toPath, m)
-            writeAtomic(rcSidecar.toPath, m.valuesIterator.sum.toString)
-        }
+    persisted match {
+      case Some(m) => seedListSizes(assigned, m)
+      case None => writeSizesSidecar(sidecar.toPath, listSizes(assigned))
     }
-    // remember where this plan's metadata is persisted so invalidate()
-    // can retire the sidecars along with the in-memory memos (plan kept
-    // for the same sameResult collision guard rowCounts uses — a
-    // colliding hash must never delete some OTHER model's sidecars)
+    // remember where this plan's sizes are persisted so invalidate() can
+    // retire the sidecar along with the in-memory memo (plan kept for the
+    // sameResult collision guard — a colliding hash must never delete
+    // some OTHER model's sidecar)
     val plan = assigned.queryExecution.analyzed
-    rowCountSidecars.put(Integer.valueOf(plan.semanticHash()),
-      (plan, Seq(rcSidecar.getPath, szSidecar.getPath)))
+    sizeSidecars.put(Integer.valueOf(plan.semanticHash()),
+      (plan, sidecar.getPath))
     ()
   }
 
@@ -287,57 +260,25 @@ object IndexCache {
 
   private val objects = new ConcurrentHashMap[String, AnyRef]()
 
-  /** Memoized corpus row count, keyed by the frame's ANALYZED plan
-    * (semantic equality, so re-reads of the same parquet path share an
-    * entry): the bounded-search crossover guard needs mean list size on
-    * every call, but corpus size is LAYOUT metadata — pay the count job
-    * once per distinct table per session, not per search (VERDICT r10
-    * note 1). A hash collision only re-counts (sameResult re-check), it
-    * can never return a wrong value.
+  /** Memoized per-list sizes of an assigned (`list_no`-carrying) frame,
+    * keyed by the frame's ANALYZED plan (semantic equality, so re-reads
+    * of the same parquet path share an entry; a hash collision only
+    * re-counts — the sameResult re-check — it can never return a wrong
+    * value). One `groupBy(list_no).count()` job per distinct table per
+    * session; frames assigned through [[ivf]]/[[imi]] pay it at most once
+    * per model directory — the build writes a `_list_sizes` sidecar
+    * beside the model and reloads seed this memo from it. Consumers: the
+    * semantic-dedup oversized-list guard
+    * ([[graft.ops.EmbeddingDedup.ivfPairs]], which otherwise re-audited
+    * the corpus per call) and the bounded-search fused/cogroup
+    * crossover's probed-volume estimate. The map is nlist-sized
+    * (≤ ~10⁵ entries) — driver-trivial.
     *
-    * Contract: counts are LAYOUT metadata, like every artifact in this
+    * Contract: sizes are LAYOUT metadata, like every artifact in this
     * cache — rewriting the data under the same path in a live session
-    * (re-ingest, delete-and-overwrite) requires [[clear]]`()`, exactly
-    * as it would for the cached model/assignment entries above. A stale
-    * count can only misroute the fused/cogroup arm choice (both arms
-    * are result-identical); it can never change results. The map holds
-    * one entry per distinct corpus table (a handful per session). */
-  def rowCount(df: DataFrame): Long = {
-    val plan = df.queryExecution.analyzed
-    val h = Integer.valueOf(plan.semanticHash())
-    val cached = rowCounts.get(h)
-    if (cached != null && cached._1.sameResult(plan)) cached._2
-    else {
-      rowCountComputes.incrementAndGet()
-      val c = df.count()
-      rowCounts.put(h, (plan, c))
-      c
-    }
-  }
-
-  private val rowCounts = new ConcurrentHashMap[
-    Integer, (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long)]()
-
-  /** Seed [[rowCount]]'s memo from persisted layout metadata (the model
-    * reload path) without running a count job. */
-  private[graft] def seedRowCount(df: DataFrame, n: Long): Unit = {
-    val plan = df.queryExecution.analyzed
-    rowCounts.put(Integer.valueOf(plan.semanticHash()), (plan, n))
-    ()
-  }
-
-  /** Memoized per-list sizes of an assigned (`list_no`-carrying) frame
-    * — the per-list refinement of [[rowCount]], same plan-keyed memo,
-    * same layout-metadata staleness contract (rewriting the data under
-    * a live plan requires [[invalidate]]/[[clear]], exactly as for the
-    * count). One `groupBy(list_no).count()` job per distinct table per
-    * session; frames assigned through [[ivf]]/[[imi]] never pay even
-    * that — the build writes a `_list_sizes` sidecar beside the model
-    * and reloads seed this memo from it. Consumers: the semantic-dedup
-    * oversized-list guard ([[graft.ops.EmbeddingDedup.ivfPairs]], which
-    * otherwise re-audited the corpus per call) and the bounded-search
-    * fused/cogroup crossover's probed-volume estimate. The map is
-    * nlist-sized (≤ ~10⁵ entries) — driver-trivial. */
+    * (re-ingest, delete-and-overwrite) requires [[invalidate]] or
+    * [[clear]]`()`, exactly as it would for the cached model/assignment
+    * entries above. */
   def listSizes(df: DataFrame): Map[Long, Long] = {
     val plan = df.queryExecution.analyzed
     val h = Integer.valueOf(plan.semanticHash())
@@ -351,24 +292,9 @@ object IndexCache {
         .select(col("list_no").cast("long"), col("lsize"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       listSizeMemo.put(h, (plan, m))
-      // self-upgrade: a legacy (or torn) model dir registered its sidecar
-      // path at reload — persist the freshly-computed sizes there so
-      // every LATER session seeds without this job (mirrors the old
-      // _corpus_rows upgrade behavior)
-      val pend = pendingSizeSidecars.get(h)
-      if (pend != null && pend._1.sameResult(plan) &&
-          pendingSizeSidecars.remove(h, pend))
-        writeSizesSidecar(java.nio.file.Paths.get(pend._2), m)
       m
     }
   }
-
-  /** Model-dir sidecar paths awaiting a first [[listSizes]] compute (the
-    * legacy-dir self-upgrade), by plan hash; plan kept for the standard
-    * sameResult collision guard. */
-  private val pendingSizeSidecars = new ConcurrentHashMap[
-    Integer, (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-              String)]()
 
   private[graft] def seedListSizes(df: DataFrame, m: Map[Long, Long]): Unit = {
     val plan = df.queryExecution.analyzed
@@ -385,61 +311,44 @@ object IndexCache {
   private[graft] val listSizeComputes =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Drop one memoized count — the targeted form of [[clear]] for when
-    * the corpus is rewritten under the same path mid-session (re-ingest,
-    * delete-and-overwrite) and only the count must refresh. If the count
-    * was persisted beside a saved model (the `_corpus_rows` sidecar),
-    * the sidecar is deleted too, so the recompute is not undone by a
-    * later session re-seeding the stale value on reload. The MODEL in
-    * that directory is equally stale after a corpus rewrite — a
+  /** Drop one memoized size map — the targeted form of [[clear]] for
+    * when the corpus is rewritten under the same path mid-session
+    * (re-ingest, delete-and-overwrite) and only the sizes must refresh.
+    * If the sizes were persisted beside a saved model (the `_list_sizes`
+    * sidecar), the sidecar is deleted too, so the recompute is not undone
+    * by a later session re-seeding the stale value on reload. The MODEL
+    * in that directory is equally stale after a corpus rewrite — a
     * cross-session fix for the index itself still means deleting the
     * model directory (retrain), which also removes the sidecar. */
   def invalidate(df: DataFrame): Unit = {
     val plan = df.queryExecution.analyzed
     val h = Integer.valueOf(plan.semanticHash())
-    rowCounts.remove(h)
     listSizeMemo.remove(h)
-    // a pending self-upgrade must not later persist sizes computed for
-    // data the caller just declared rewritten
-    val pend = pendingSizeSidecars.get(h)
-    if (pend != null && pend._1.sameResult(plan))
-      pendingSizeSidecars.remove(h, pend)
-    // sameResult guard (the rowCounts discipline): on a hash collision
-    // the stored entry may belong to a DIFFERENT plan — deleting that
-    // plan's sidecar would orphan its persisted count while leaving
-    // this plan's stale one alive. Only delete what provably matches,
-    // and evict with the atomic two-arg remove so a concurrent
-    // countOrSeed registering a colliding plan between the get and the
-    // remove cannot have ITS fresh entry evicted (which would leave
-    // that sidecar un-invalidatable).
-    val cached = rowCountSidecars.get(h)
+    // sameResult guard: on a hash collision the stored entry may belong
+    // to a DIFFERENT plan — deleting that plan's sidecar would orphan its
+    // persisted sizes while leaving this plan's stale ones alive. Only
+    // delete what provably matches, and evict with the atomic two-arg
+    // remove so a concurrent countOrSeed registering a colliding plan
+    // between the get and the remove cannot have ITS fresh entry evicted
+    // (which would leave that sidecar un-invalidatable).
+    val cached = sizeSidecars.get(h)
     if (cached != null && cached._1.sameResult(plan) &&
-        rowCountSidecars.remove(h, cached)) {
-      cached._2.foreach { p =>
-        scala.util.Try(java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(p)))
-      }
-    }
+        sizeSidecars.remove(h, cached))
+      scala.util.Try(java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(cached._2)))
     ()
   }
 
-  /** Sidecar files backing each persisted metadata set (`_corpus_rows`
-    * + `_list_sizes`), by plan hash (plan retained for the sameResult
-    * collision guard) — lets [[invalidate]] retire the on-disk copies
-    * with the memos. */
-  private val rowCountSidecars = new ConcurrentHashMap[
+  /** The `_list_sizes` sidecar backing each persisted size map, by plan
+    * hash (plan retained for the sameResult collision guard) — lets
+    * [[invalidate]] retire the on-disk copy with the memo. */
+  private val sizeSidecars = new ConcurrentHashMap[
     Integer, (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-              Seq[String])]()
-
-  /** Count JOBS actually run by [[rowCount]] — spec hook proving the
-    * per-search-call count job is gone (misses don't reset it). */
-  private[graft] val rowCountComputes =
-    new java.util.concurrent.atomic.AtomicLong(0)
+              String)]()
 
   def clear(): Unit = {
     models.clear(); graphs.clear(); traces.clear(); frames.clear()
-    pqModels.clear(); objects.clear(); rowCounts.clear()
-    rowCountSidecars.clear(); listSizeMemo.clear()
-    pendingSizeSidecars.clear()
+    pqModels.clear(); objects.clear(); sizeSidecars.clear()
+    listSizeMemo.clear()
   }
 }

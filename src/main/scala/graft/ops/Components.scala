@@ -95,7 +95,7 @@ object Components {
     val e = edges
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
-    // driver union-find arm (the BoundedSearch eagerMaxQueries
+    // driver union-find arm (the BoundedSearch distributedMinQueries
     // contract): an edge set at or below the cap resolves in ONE
     // collect + local union-find — labels identical by definition
     // (min node id per component), rounds = 0, no checkpoint needed

@@ -122,7 +122,7 @@ object ProfileTrainer {
     }.toArray
   }
 
-  /** One scan ([[IVFSearch.stagedProbeMap]] slots through the shared
+  /** One scan ([[stagedProbeMap]] slots through the shared
     * probed-list kernel): per-partition, per (query, first-probed-stage)
     * bounded heaps; stage s top-k = window top-k over partials with
     * j0 ≤ s. Per-partition heap state is O(nq · levels · k), so training
@@ -143,7 +143,7 @@ object ProfileTrainer {
     val k = maxTopk
     val bqids = spark.sparkContext.broadcast(qVecs.map(_._1))
     val partials = IVFSearch.scanVectors(ivfData, model.metric,
-      qVecs.map(_._2), IVFSearch.stagedProbeMap(ranks, levels), k, levels)
+      qVecs.map(_._2), stagedProbeMap(ranks, levels), k, levels)
       .mapPartitions { it =>
         val qids = bqids.value
         it.map { case (slot, id, d) => (qids(slot / levels), slot % levels, id, d) }
@@ -159,6 +159,23 @@ object ProfileTrainer {
       .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .groupBy(col("qid"), col("stage"))
       .agg(sort_array(collect_list(col("dist"))).as("dists"))
+  }
+
+  /** The staged probe map of the capture: each query's first
+    * 2^(levels−1) ranked lists, the list at 0-based rank ri entering the
+    * slot of the stage at which it is first probed, j0 = ⌈log2(ri + 1)⌉ —
+    * slot `qi · levels + j0`. Stage s's top-k is then the merge of a
+    * query's slots j0 ≤ s. */
+  private def stagedProbeMap(ranks: Array[Array[(Int, Float)]],
+                             levels: Int): Map[Int, Array[Int]] = {
+    val maxRank = 1 << (levels - 1)
+    IVFSearch.byList(ranks.indices.flatMap { qi =>
+      ranks(qi).iterator.take(maxRank).zipWithIndex.map { case ((l, _), ri) =>
+        var j0 = 0
+        while ((1 << j0) < ri + 1) j0 += 1
+        (l, qi * levels + j0)
+      }
+    })
   }
 
   /** Persist traces as a small Parquet model table — a model artifact

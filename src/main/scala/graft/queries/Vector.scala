@@ -739,13 +739,6 @@ object Vector {
        |    row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank FROM d)
        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
 
-  /** Auncel's flagship operator end-to-end: train the error profile on
-    * the collection, then run bounded-error adaptive search
-    * (required recall 0.9). Output includes per-query nprobe_used.
-    * The adaptive DECISION isn't SQL-replayable, but the result given
-    * the decision is: the persisted per-query probe counts drive a
-    * DuckDB decision-replay oracle (hash-exact); the bound guarantee
-    * itself is asserted in BoundedSearchSpec. */
   /** Trained traces are cached beside the IVF model — searches pay
     * trace lookup, not profile training (the reference likewise
     * persists index + profile between phases, `eval/bound.cpp:265-268`). */
@@ -763,6 +756,14 @@ object Vector {
     (model, assigned, traces)
   }
 
+  /** Auncel's flagship operator end-to-end: train the error profile on
+    * the collection, then run bounded-error adaptive search
+    * (required recall 0.9) on an nlist-16 index (2 trace levels),
+    * through the driver-decided rounds. Output includes per-query
+    * nprobe_used. The adaptive DECISION isn't SQL-replayable, but the
+    * result given the decision is: the persisted per-query probe counts
+    * drive a DuckDB decision-replay oracle (hash-exact); the bound
+    * guarantee itself is asserted in BoundedSearchSpec. */
   def a01BoundedSearch(s: SparkSession, dir: String): DataFrame = {
     import graft.search.BoundedSearch
     val (model, assigned, traces) = cachedTraces(s, dir)
@@ -885,12 +886,13 @@ object Vector {
        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
 
   /** a01's 32 queries over the same embeddings on an nlist-128 index
-    * (5 trace levels, the deep-schedule shape): the batch routes to the
-    * DRIVER-DECIDED ROUNDS (`searchStagedDriver`) — one Spark action per
-    * adaptive round, decisions on the driver — the path every batch up
-    * to 131,072 queries takes once the eager one-pass no longer applies.
-    * Same decision-replay oracle as a01 (all paths share `decideStep`,
-    * and the replay is exact given each query's decided probe count).
+    * (5 trace levels, the deep-schedule shape): like a01 (2 levels), the
+    * batch routes to the DRIVER-DECIDED ROUNDS (`searchStagedDriver`) —
+    * one Spark action per adaptive round, decisions on the driver — the
+    * path every batch up to 131,072 queries takes; this row exercises
+    * its deeper schedule. Same decision-replay oracle as a01 (both
+    * control paths share `mergeKeep` and `decideStep`, and the replay is
+    * exact given each query's decided probe count).
     * The row keeps its `a05_bounded_lazy` inventory key, which the
     * Bench pins and oracle history are keyed by.
     * Ref: `Auncel/IndexIVF.cpp:504-637`. */
@@ -920,9 +922,10 @@ object Vector {
     * hot-list salting — the >131k-query configuration, where the
     * driver holds NO per-query structure. Until this row the path was
     * covered only by specs and the ScaleDemo rehearsal; the same
-    * decision-replay oracle as a01/a05 proves it driver-side (all
-    * three paths share `decideStep` and the ranking geometry, so the
-    * replayed probe counts are identical by construction).
+    * decision-replay oracle as a01/a05 proves it driver-side (both
+    * control paths share `mergeKeep`, `decideStep` and the ranking
+    * geometry, so the replayed probe counts are identical by
+    * construction).
     * Ref: `Auncel/IndexIVF.cpp:504-637`. */
   def a07BoundedDist(s: SparkSession, dir: String): DataFrame = {
     import graft.search.BoundedSearch

@@ -29,9 +29,15 @@ import graft.profile.ErrorProfile.Trace
   * Scale shape: each round reads ONLY the newly probed lists (partition
   * pruning) and per-partition bounded heaps shuffle `parts × nq_active × k`
   * rows. The carried top-k (≤ k per query) lives in the [[Decider]]'s
-  * driver arrays on the driver-decided paths and in the [[CtrlD]] rows on
+  * driver arrays on the driver-decided rounds and in the [[CtrlD]] rows on
   * the fully-distributed path — nothing per-vector ever sits on the
   * driver.
+  *
+  * Two control paths, routed on one batch-size test in [[search]]:
+  * every batch of up to [[DistributedMinQueries]] queries takes the
+  * driver-decided rounds ([[searchStagedDriver]]), larger ones the
+  * fully-distributed rounds ([[searchDistributed]]). Both merge each
+  * stage through [[mergeKeep]] and decide through [[stageStep]].
   */
 object BoundedSearch {
 
@@ -43,7 +49,7 @@ object BoundedSearch {
   final case class Result(results: DataFrame, stats: Seq[QueryStats])
 
   /** Per-query decision state of the staged rounds: the [[Decider]]'s
-    * O(nq) driver arrays hold it on the driver-decided paths, and each
+    * O(nq) driver arrays hold it on the driver-decided rounds, and each
     * [[CtrlD]] row carries it on the fully-distributed path; both
     * advance it through [[decideStep]]. */
   final case class Ctrl(qid: Long, require: Float, myNprobe: Int,
@@ -73,13 +79,7 @@ object BoundedSearch {
     else st.copy(stoped = stoped, preVal = maxVal)
   }
 
-  /** Largest batch the eager one-pass scan collects to the driver
-    * (≤ nq × nlist/8 × k partial rows); larger driver-collectable
-    * batches take the per-round [[searchStagedDriver]]
-    * ([[graft.GraftConf.eagerMaxQueries]]). */
-  private def EagerMaxQueries = graft.GraftConf.eagerMaxQueries
-
-  /** Above this batch size the driver-decided paths' driver-held
+  /** Above this batch size the driver-decided rounds' driver-held
     * structures (query vectors, centroid rankings, per-round broadcast
     * probe maps — all O(nq)) stop being "collectable"; the
     * fully-distributed path keeps the queries themselves in a DataFrame
@@ -114,10 +114,6 @@ object BoundedSearch {
              stdM: Float = 1.0f, forceDistributed: Boolean = false): Result = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-
-    val nlist = model.nlist
-    val levels = traces.length
-
     if (forceDistributed) return searchDistributed(ivfData, model, traces,
       queries, k, multiplier, stdM)
     // one bounded collect both routes the batch and, when it fits, IS
@@ -130,43 +126,9 @@ object BoundedSearch {
       .limit(DistributedMinQueries + 1)
       .as[(Long, Array[Float], Float)].collect()
     if (qRows.length > DistributedMinQueries)
-      return searchDistributed(ivfData, model, traces, queries, k,
-        multiplier, stdM)
-    val nq = qRows.length
-    val qVecs = qRows.sortBy(_._1).map { case (qid, v, r) =>
-      (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v, r)
-    }
-    // rank only as deep as the ROUNDS need (decision cap nlist/8 plus
-    // the boundary geometry's nlist/8 + 20 window). The finishing pass
-    // can probe out to stage × multiplier — but only for the few
-    // queries that cap out, so those re-rank deeper individually
-    // (finishingProbeMap) instead of paying nq × full-depth rankings up
-    // front (at 100k queries × nlist=1024 the eager form shipped
-    // >1 GiB of rankings to the driver; the shallow form is ~4×
-    // smaller and the deep re-rank touches only the capped tail)
-    val shallowDepth = math.min(nlist, nlist / 8 + 20)
-    val ranks = IVFSearch.rankTop(spark, model,
-      qVecs.map(v => (v._1, v._2)), shallowDepth)
-    val dBs = ranks.map { r =>
-      ErrorProfile.boundaryDistances(r.map(_._2), r.map(_._1), model.interdisAt, nlist)
-    }
-
-    // driver-collectable batches decide DRIVER-side (shared Decider,
-    // bit-identical to the distributed path's executor-side decisions):
-    //  - levels ≤ 4 (nlist ≤ 64) and nq ≤ eagerMaxQueries: eager
-    //    one-pass scan of all staged lists (≤ nlist/8 = 8 per query) —
-    //    over-probing vs adaptive stop is bounded by that cap, and one
-    //    job beats per-round round-trips
-    //  - otherwise: adaptive per-round scans, ONE action per round
-    //    (scan + top-k merge, collected to ≤ active × k rows)
-    val decider = new Decider(nq, k, model.metric, traces, dBs,
-      qVecs.map(_._3), multiplier, stdM, levels)
-    if (levels <= 4 && nq <= EagerMaxQueries)
-      searchEagerStaged(ivfData, model, qVecs, ranks, decider, k,
-        shallowDepth)
+      searchDistributed(ivfData, model, traces, queries, k, multiplier, stdM)
     else
-      searchStagedDriver(ivfData, model, qVecs, ranks, decider, k,
-        shallowDepth)
+      searchStagedDriver(ivfData, model, traces, qRows, k, multiplier, stdM)
   }
 
   /** Fully-distributed staged rounds for query batches past the
@@ -180,10 +142,10 @@ object BoundedSearch {
     * moment is the final O(nq) stats collect, matching the reference's
     * own per-query result arrays.
     *
-    * Decisions are identical to the driver-decided paths by construction:
+    * Decisions are identical to the driver-decided rounds by construction:
     * same [[IVFModel.rankCentroids]] coarse ranking, same
-    * [[ErrorProfile.boundaryDistances]] window, same [[predictedRecall]]
-    * and [[decideStep]] transition on the same sorted state distances.
+    * [[ErrorProfile.boundaryDistances]] window, same [[mergeKeep]] and
+    * [[stageStep]] on the same cumulative top-k.
     *
     * Scale shape: per round the big side carries only the PROBED lists'
     * rows (partition/bucket-pruned), and the probe side carries
@@ -312,32 +274,16 @@ object BoundedSearch {
         // only per-query state movement is the scan output — the old
         // shape's separate state cache (window shuffle to re-rank it,
         // sort_array summaries aggregation, left join back onto ctrl,
-        // per-late-round eager localCheckpoint) is gone. Merged arrays
-        // are identical to mergeTopK's rows by construction: both take
-        // the k smallest of the union under the same total order
-        // (dist, id), and ids are unique per query across rounds (each
-        // list is probed at most once — rank ranges are disjoint).
+        // per-late-round eager localCheckpoint) is gone. The merge is
+        // the Decider's own [[mergeKeep]], so both paths keep the same
+        // top-k by construction; ids are unique per query across rounds
+        // (each list is probed at most once — rank ranges are disjoint).
         ctrl = ctrl.groupByKey(_.qid)
           .cogroup(newPartials.groupByKey(_._1)) { (_, cIt, pIt) =>
             cIt.map { c =>
               val cand = pIt.toArray
-              var ids = c.topIds
-              var dists = c.topDists
-              if (cand.nonEmpty) {
-                val n = ids.length + cand.length
-                val d2 = new Array[Double](n); val i2 = new Array[Long](n)
-                System.arraycopy(dists, 0, d2, 0, dists.length)
-                System.arraycopy(ids, 0, i2, 0, ids.length)
-                var x = ids.length
-                cand.foreach { p => d2(x) = p._3; i2(x) = p._2; x += 1 }
-                val order = Array.range(0, n).sortBy(ix => (d2(ix), i2(ix)))
-                val keep = math.min(kk, n)
-                dists = new Array[Double](keep); ids = new Array[Long](keep)
-                x = 0
-                while (x < keep) {
-                  dists(x) = d2(order(x)); ids(x) = i2(order(x)); x += 1
-                }
-              }
+              val (ids, dists) = BoundedSearch.mergeKeep(c.topIds, c.topDists,
+                cand.map(_._2), cand.map(_._3), kk)
               if (c.myNprobe != 0) c.copy(topIds = ids, topDists = dists)
               else {
                 val next = BoundedSearch.stageStep(
@@ -603,44 +549,71 @@ object BoundedSearch {
   }
 
   /** The per-stage termination decision (`IndexIVF.cpp:504-637`) of
-    * the driver-decided paths (eager one-pass and per-round): holds the
-    * O(nq) control state and each query's cumulative top-k, and advances
-    * them through [[decideStep]], the transition the distributed path
-    * runs on executors. */
+    * the driver-decided rounds: holds the O(nq) control state and each
+    * query's cumulative top-k, and advances them through [[decideStep]],
+    * the transition the distributed path runs on executors. */
   private final class Decider(nq: Int, k: Int, metric: String,
       traces: Array[Trace], dBs: Array[Array[Float]], requires: Array[Float],
       multiplier: Float, stdM: Float, levels: Int) {
-    def nLevels: Int = levels
     val myNprobe = new Array[Int](nq)
     val stoped = new Array[Int](nq)
     val preVal = Array.fill(nq)(Double.NaN)
     val predicted = new Array[Float](nq)
     val decidedStage = new Array[Int](nq)
     /** Cumulative top-k per query, ascending by (dist, id). It stops
-      * growing once the query leaves the active set — exactly the top-k a
-      * [[CtrlD]] row carries for it on the distributed path. */
-    val topK: Array[Array[(Double, Long)]] = Array.fill(nq)(Array.empty)
+      * growing once the query leaves the active set — exactly the
+      * `topIds`/`topDists` a [[CtrlD]] row carries for it on the
+      * distributed path. */
+    val topIds: Array[Array[Long]] = Array.fill(nq)(Array.emptyLongArray)
+    val topDists: Array[Array[Double]] = Array.fill(nq)(Array.emptyDoubleArray)
 
-    /** One stage step for query qi at stage 2^j: merge the stage's new
-      * (slot, id, dist) scan rows into its top-k under (dist, id), keep k,
-      * then, while the query is active, [[stageStep]] — the step the
-      * distributed path runs. */
-    def advance(qi: Int, j: Int, rows: Array[(Int, Long, Double)]): Unit =
+    /** One stage step for query qi at stage 2^j: [[mergeKeep]] the
+      * stage's new (id, dist) scan rows into its top-k, then
+      * [[stageStep]] — the step the distributed path runs. A no-op once
+      * the query has decided. */
+    def advance(qi: Int, j: Int, candIds: Array[Long],
+                candDists: Array[Double]): Unit =
       if (myNprobe(qi) == 0) {
-        if (rows.nonEmpty)
-          topK(qi) = (topK(qi) ++ rows.map(r => (r._3, r._2)))
-            .sortBy { case (d, id) => (d, id) }.take(k)
+        val (ids, dists) = mergeKeep(topIds(qi), topDists(qi), candIds,
+          candDists, k)
+        topIds(qi) = ids
+        topDists(qi) = dists
         val next = BoundedSearch.stageStep(
           Ctrl(0L, requires(qi), myNprobe(qi), stoped(qi), preVal(qi),
             predicted(qi), decidedStage(qi)),
-          topK(qi).map(_._1), dBs(qi), traces(j), j, levels, k, multiplier,
-          stdM, metric)
+          dists, dBs(qi), traces(j), j, levels, k, multiplier, stdM, metric)
         myNprobe(qi) = next.myNprobe
         stoped(qi) = next.stoped
         preVal(qi) = next.preVal
         predicted(qi) = next.predicted
         decidedStage(qi) = next.decidedStage
       }
+  }
+
+  /** The one top-k merge of the staged rounds, shared by the [[Decider]]
+    * and the distributed cogroup: the k smallest of the union of a
+    * query's kept (ids, dists) and a stage's candidates, ascending under
+    * the total order (dist, id) — `java.lang.Double.compare` on the
+    * distance (so −0.0 sorts before 0.0), then the id. Neither side
+    * needs to be sorted; equal (dist, id) pairs keep their input order,
+    * the left side first. */
+  private[graft] def mergeKeep(ids: Array[Long], dists: Array[Double],
+      candIds: Array[Long], candDists: Array[Double],
+      k: Int): (Array[Long], Array[Double]) = {
+    val n = ids.length + candIds.length
+    val allIds = new Array[Long](n)
+    val allDists = new Array[Double](n)
+    System.arraycopy(ids, 0, allIds, 0, ids.length)
+    System.arraycopy(candIds, 0, allIds, ids.length, candIds.length)
+    System.arraycopy(dists, 0, allDists, 0, dists.length)
+    System.arraycopy(candDists, 0, allDists, dists.length, candDists.length)
+    val order = Array.range(0, n).sortWith { (a, b) =>
+      val c = java.lang.Double.compare(allDists(a), allDists(b))
+      c < 0 || (c == 0 && allIds(a) < allIds(b))
+    }
+    val keep = math.min(k, n)
+    (Array.tabulate(keep)(x => allIds(order(x))),
+      Array.tabulate(keep)(x => allDists(order(x))))
   }
 
   /** One active query's stage step on its cumulative top-k distances
@@ -671,51 +644,48 @@ object BoundedSearch {
     else ErrorProfile.curNum(dists, dB, trace, j, k, stdM).toFloat / k
   }
 
-  /** Eager variant for shallow schedules (levels ≤ 4, i.e. nlist ≤ 64)
-    * and batches up to [[EagerMaxQueries]]: ALL staged lists (≤ nlist/8
-    * = 8 per query) are scanned in ONE pass with per-(query,
-    * first-probed-stage) heaps ([[IVFSearch.stagedProbeMap]]); every
-    * stage step then runs driver-side on the collected partials
-    * (≤ nq·8·k rows), eliminating the per-round job latency. Decisions
-    * are bit-identical to the per-round paths (same [[Decider.advance]]
-    * on the same stage rows); deep schedules take [[searchStagedDriver]]
-    * instead — eager would probe nlist/8 lists per query where adaptive
-    * stops far earlier. */
-  private def searchEagerStaged(ivfData: DataFrame, model: IVFModel,
-      qVecs: Array[(Long, Array[Float], Float)],
-      ranks: Array[Array[(Int, Float)]], decider: Decider, k: Int,
-      shallowDepth: Int): Result = {
-    val levels = decider.nLevels
-    val partials = IVFSearch.scanVectors(ivfData, model.metric,
-      qVecs.map(_._2), IVFSearch.stagedProbeMap(ranks, levels), k, levels)
-      .collect()
-    // slot qi·levels + j0 holds the rows query qi first probes at stage j0
-    val bySlot = partials.groupBy(_._1)
-    for (qi <- qVecs.indices; j <- 0 until levels)
-      decider.advance(qi, j, bySlot.getOrElse(qi * levels + j, Array.empty))
-    finish(ivfData, model, qVecs, ranks, decider, k, shallowDepth)
-  }
-
-  /** Driver-decided rounds for every driver-collectable batch the
-    * eager one-pass does not take (levels > 4, or nq >
-    * [[EagerMaxQueries]]): round j scans centroid ranks (2^(j−1), 2^j]
-    * for still-active queries only, and the per-query decision state
-    * lives in the shared [[Decider]]'s O(nq) driver arrays. Each round
-    * is exactly ONE Spark action: the probed-list partial scan merged
-    * to per-query round top-k (bounded collect of ≤ active × k rows);
-    * the [[Decider.advance]] stage step runs on the driver. Decisions
-    * are bit-identical to the distributed path by construction: same
-    * rankings, same boundary windows, same [[predictedRecall]] on the
-    * same cumulative sorted distances, same transition — pinned by
-    * BoundedSearchSpec's cross-path equivalence tests. */
+  /** Driver-decided rounds for every driver-collectable batch
+    * (nq ≤ [[DistributedMinQueries]]): round j scans centroid ranks
+    * (2^(j−1), 2^j] for still-active queries only, and the per-query
+    * decision state lives in the [[Decider]]'s O(nq) driver arrays. Each
+    * round is exactly ONE Spark action: the probed-list partial scan
+    * merged to per-query round top-k (bounded collect of ≤ active × k
+    * rows); the [[Decider.advance]] stage step runs on the driver. The
+    * decided top-ks then become state rows, the finishing pass probes on
+    * from each query's decision stage to stage × multiplier, and the
+    * stats come straight out of the [[Decider]]. Decisions are
+    * bit-identical to the distributed path by construction: same
+    * rankings, same boundary windows, same [[mergeKeep]] and
+    * [[stageStep]] on the same cumulative top-k — pinned by
+    * BoundedSearchSpec's cross-path equivalence tests.
+    * @param qRows (qid, vec, required_recall), collected */
   private def searchStagedDriver(ivfData: DataFrame, model: IVFModel,
-      qVecs: Array[(Long, Array[Float], Float)],
-      ranks: Array[Array[(Int, Float)]], decider: Decider, k: Int,
-      shallowDepth: Int): Result = {
+      traces: Array[Trace], qRows: Array[(Long, Array[Float], Float)],
+      k: Int, multiplier: Float, stdM: Float): Result = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-    val levels = decider.nLevels
-    val qv = qVecs.map(_._2)
+    val nlist = model.nlist
+    val levels = traces.length
+    val qVecs = qRows.sortBy(_._1).map { case (qid, v, r) =>
+      (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v, r)
+    }
+    val qv = qVecs.map(v => (v._1, v._2))
+    // rank only as deep as the ROUNDS need (decision cap nlist/8 plus
+    // the boundary geometry's nlist/8 + 20 window). The finishing pass
+    // can probe out to stage × multiplier — but only for the few
+    // queries that cap out, so those re-rank deeper individually
+    // (finishingProbeMap) instead of paying nq × full-depth rankings up
+    // front (at 100k queries × nlist=1024 the full-depth form shipped
+    // >1 GiB of rankings to the driver; the shallow form is ~4×
+    // smaller and the deep re-rank touches only the capped tail)
+    val shallowDepth = math.min(nlist, nlist / 8 + 20)
+    val ranks = IVFSearch.rankTop(spark, model, qv, shallowDepth)
+    val dBs = ranks.map { r =>
+      ErrorProfile.boundaryDistances(r.map(_._2), r.map(_._1), model.interdisAt, nlist)
+    }
+    val decider = new Decider(qVecs.length, k, model.metric, traces, dBs,
+      qVecs.map(_._3), multiplier, stdM, levels)
+    val qScan = qv.map(_._2)
     var active: Seq[Int] = qVecs.indices
     var j = 0
     while (j < levels && active.nonEmpty) {
@@ -728,38 +698,29 @@ object BoundedSearch {
       // is ≤ active × k rows whatever the round's fan-out; rows stay
       // keyed by query index (the scan's slot)
       val roundTopK = FlatSearch.mergeTopK(
-        IVFSearch.scanVectors(ivfData, model.metric, qv, probeMap, k)
+        IVFSearch.scanVectors(ivfData, model.metric, qScan, probeMap, k)
           .toDF("qid", "id", "dist"), k)
         .select(col("qid"), col("id"), col("dist"))
         .as[(Int, Long, Double)].collect()
       val byQi = roundTopK.groupBy(_._1)
-      active.foreach(qi => decider.advance(qi, j, byQi.getOrElse(qi, Array.empty)))
+      active.foreach { qi =>
+        val rows = byQi.getOrElse(qi, Array.empty[(Int, Long, Double)])
+        decider.advance(qi, j, rows.map(_._2), rows.map(_._3))
+      }
       active = active.filter(decider.myNprobe(_) == 0)
       j += 1
     }
-    finish(ivfData, model, qVecs, ranks, decider, k, shallowDepth)
-  }
 
-  /** The tail both driver-decided paths share: the decided top-ks become
-    * state rows, the finishing pass probes on from each query's decision
-    * stage to stage × multiplier, and the stats come straight out of the
-    * [[Decider]]. */
-  private def finish(ivfData: DataFrame, model: IVFModel,
-      qVecs: Array[(Long, Array[Float], Float)],
-      ranks: Array[Array[(Int, Float)]], decider: Decider, k: Int,
-      shallowDepth: Int): Result = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val nlist = model.nlist
-    val qv = qVecs.map(v => (v._1, v._2))
     var state = qv.indices.flatMap { qi =>
-      decider.topK(qi).map { case (d, id) => (qv(qi)._1, id, d) }
+      decider.topIds(qi).indices.map { x =>
+        (qv(qi)._1, decider.topIds(qi)(x), decider.topDists(qi)(x))
+      }
     }.toDF("qid", "id", "dist")
     val extraMap = finishingProbeMap(spark, model, qv, ranks, shallowDepth,
       qi => (decider.decidedStage(qi), math.min(decider.myNprobe(qi), nlist)))
     if (extraMap.nonEmpty)
       state = state.unionByName(IVFSearch.keyByQid(IVFSearch.scanVectors(
-        ivfData, model.metric, qv.map(_._2), extraMap, k), qv.map(_._1)))
+        ivfData, model.metric, qScan, extraMap, k), qv.map(_._1)))
     val stats = qv.indices.map { qi =>
       QueryStats(qv(qi)._1, math.min(decider.myNprobe(qi), nlist),
         decider.predicted(qi), decider.decidedStage(qi))

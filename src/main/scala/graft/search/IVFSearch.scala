@@ -122,7 +122,8 @@ object IVFSearch {
     * runs [[slotTopK]] over them (map-side combine: ≤ k rows per slot per
     * partition leave the task). A slot is whatever the caller keys a heap
     * by: the query index for plain scans, one (query, first-probed stage)
-    * pair for the staged capture ([[stagedProbeMap]]). A NaN score rejects
+    * pair for the error-profile capture
+    * ([[graft.profile.ProfileTrainer]]). A NaN score rejects
     * the row (the polysemous Hamming filter inside the IVFPQ scan),
     * matching the reference's filtered list scan.
     * @param probeMap list_no → the slots probing that list
@@ -227,23 +228,6 @@ object IVFSearch {
   /** list_no → the slots probing it, from (list_no, slot) pairs. */
   private[graft] def byList(pairs: Seq[(Int, Int)]): Map[Int, Array[Int]] =
     pairs.groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2).toArray) }
-
-  /** The staged probe map shared by the eager bounded search and the
-    * error-profile capture: each query's first 2^(levels−1) ranked lists,
-    * the list at 0-based rank ri entering the slot of the stage at which
-    * it is first probed, j0 = ⌈log2(ri + 1)⌉ — slot `qi · levels + j0`.
-    * Stage s's top-k is then the merge of a query's slots j0 ≤ s. */
-  private[graft] def stagedProbeMap(ranks: Array[Array[(Int, Float)]],
-                                    levels: Int): Map[Int, Array[Int]] = {
-    val maxRank = 1 << (levels - 1)
-    byList(ranks.indices.flatMap { qi =>
-      ranks(qi).iterator.take(maxRank).zipWithIndex.map { case ((l, _), ri) =>
-        var j0 = 0
-        while ((1 << j0) < ri + 1) j0 += 1
-        (l, qi * levels + j0)
-      }
-    })
-  }
 
   /** IVF range search (`IndexIVF::range_search` semantics over probed
     * lists): all ids within `radius` among the nprobe nearest lists —

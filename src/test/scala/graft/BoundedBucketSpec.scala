@@ -169,8 +169,8 @@ class BoundedBucketSpec extends SparkSpec {
       BoundedSearch.search(tbl, model, traces, qdf, k,
         multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
         .results.count()
-    go() // may pay the memo's one count job
-    val before = graft.index.IndexCache.rowCountComputes.get()
+    go() // may pay the memo's one size job
+    val before = graft.index.IndexCache.listSizeComputes.get()
     // QueryExecutionListener-level proof on top of the memo counter: no
     // Dataset.count ACTION on the corpus table during repeat searches.
     // (The search itself counts its small ctrl dataset — we match on
@@ -205,71 +205,14 @@ class BoundedBucketSpec extends SparkSpec {
       while (counted.get() == 0 && System.nanoTime() < deadline)
         Thread.sleep(50)
     } finally spark.listenerManager.unregister(listener)
-    assert(graft.index.IndexCache.rowCountComputes.get() == before,
-      "repeat search must reuse the memoized corpus count")
+    assert(graft.index.IndexCache.listSizeComputes.get() == before,
+      "repeat search must reuse the memoized list sizes")
     // ≥ 1, not == 1: the sentinel must have arrived, but an unrelated
     // future count over the same relation (or duplicated listener
     // delivery) must make the MEMO assertion above pinpoint a
     // regression, not turn this sentinel check into a flake
     assert(counted.get() >= 1,
       "sentinel count action never observed by the listener")
-  }
-
-  test("persisted corpus count: model reload serves the first search with zero count jobs") {
-    import spark.implicits._
-    import graft.index.IndexCache
-    // the fresh-session flow: a build session pays the one count job and
-    // persists it beside the model; a reload session seeds the memo from
-    // the sidecar, so even its FIRST distributed search runs no count job
-    val modelDir =
-      java.nio.file.Files.createTempDirectory("graft_models_spec").toString
-    val corpusDir =
-      java.nio.file.Files.createTempDirectory("ivf_reload").toString + "/corpus"
-    baseDF.write.mode("overwrite").parquet(corpusDir)
-    System.setProperty("graft.model.dir", modelDir)
-    try {
-      def corpus = spark.read.parquet(corpusDir)
-      // session 1: trains, saves the model AND the corpus_rows sidecar
-      val (m1, a1) = IndexCache.ivf("reload_spec", corpus, nlist)
-      val tq = vecDF(pool.slice(3000, 3150), "qid")
-      val gt1 = FlatSearch.knn(corpus, tq, k)
-      val tr1 = ProfileTrainer.train(a1, m1, tq, gt1, maxTopk = k, bs = 100)
-      // session 2 (simulated): every in-memory memo gone, disk intact
-      IndexCache.clear()
-      val before = IndexCache.rowCountComputes.get()
-      val (m2, a2) = IndexCache.ivf("reload_spec", corpus, nlist)
-      assert(m2.centroids.map(_.toSeq).toSeq ==
-        m1.centroids.map(_.toSeq).toSeq, "reload must return the saved model")
-      val qdf = pool.slice(3150, 3166).zipWithIndex
-        .map { case (v, i) => (i.toLong, v, 0.85f) }
-        .toSeq.toDF("qid", "vec", "required_recall")
-      val res = BoundedSearch.search(a2, m2, tr1, qdf, k,
-        multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-      assert(res.results.count() > 0)
-      assert(IndexCache.rowCountComputes.get() == before,
-        "reload + first distributed search must run ZERO count jobs " +
-          "(corpus_rows sidecar seeds the memo)")
-      // same-path corpus rewrite: invalidate must retire BOTH the memo
-      // and the persisted sidecar — otherwise a later session's reload
-      // re-seeds the stale count that invalidate just discarded
-      val sidecar = new java.io.File(modelDir).listFiles()
-        .filter(_.isDirectory)
-        .map(d => new java.io.File(d, "_corpus_rows"))
-        .find(_.exists())
-        .getOrElse(fail("no _corpus_rows sidecar found under the model dir"))
-      IndexCache.invalidate(a2)
-      assert(!sidecar.exists(),
-        "invalidate must delete the persisted _corpus_rows sidecar")
-      val afterInval = IndexCache.rowCountComputes.get()
-      assert(IndexCache.rowCount(a2) == base.length,
-        "post-invalidate recount must see the corpus")
-      assert(IndexCache.rowCountComputes.get() == afterInval + 1,
-        "invalidate must force exactly one fresh count job")
-    } finally {
-      System.clearProperty("graft.model.dir")
-      // temp-dir-backed cache entries must not leak into later suites
-      IndexCache.clear()
-    }
   }
 
   test("persisted list sizes: metadata ≡ counted sizes, reload serves dedup/search with zero size jobs") {
@@ -302,8 +245,9 @@ class BoundedBucketSpec extends SparkSpec {
       // FIRST distributed search's crossover estimate run zero jobs
       IndexCache.clear()
       val beforeSz = IndexCache.listSizeComputes.get()
-      val beforeRc = IndexCache.rowCountComputes.get()
-      val (_, a2) = IndexCache.ivf("lsizes_spec", corpus, nlist)
+      val (m2, a2) = IndexCache.ivf("lsizes_spec", corpus, nlist)
+      assert(m2.centroids.map(_.toSeq).toSeq ==
+        m1.centroids.map(_.toSeq).toSeq, "reload must return the saved model")
       assert(IndexCache.listSizes(a2) == counted,
         "sidecar-seeded sizes must equal the build session's count")
       val pairs = graft.ops.EmbeddingDedup.ivfPairs(a2, threshold = 0.999)
@@ -311,10 +255,19 @@ class BoundedBucketSpec extends SparkSpec {
       assert(IndexCache.listSizeComputes.get() == beforeSz,
         "reload + first ivfPairs must run ZERO size jobs " +
           "(_list_sizes sidecar seeds the memo)")
-      assert(IndexCache.rowCountComputes.get() == beforeRc,
-        "the sidecar's size sum must also seed the row-count memo")
-      // invalidate retires the size memo and the on-disk sidecar with
-      // the count, so a corpus rewrite can't be served stale sizes
+      // and the reload's first distributed search runs none either
+      val tq = vecDF(pool.slice(3000, 3150), "qid")
+      val tr1 = ProfileTrainer.train(a1, m1, tq, FlatSearch.knn(corpus, tq, k),
+        maxTopk = k, bs = 100)
+      val qdf = pool.slice(3150, 3166).zipWithIndex
+        .map { case (v, i) => (i.toLong, v, 0.85f) }
+        .toSeq.toDF("qid", "vec", "required_recall")
+      assert(BoundedSearch.search(a2, m2, tr1, qdf, k, multiplier = 8.0f,
+        stdM = 1.5f, forceDistributed = true).results.count() > 0)
+      assert(IndexCache.listSizeComputes.get() == beforeSz,
+        "reload + first distributed search must run ZERO size jobs")
+      // invalidate retires the size memo and the on-disk sidecar, so a
+      // corpus rewrite can't be served stale sizes
       IndexCache.invalidate(a2)
       assert(!sidecar.exists(),
         "invalidate must delete the persisted _list_sizes sidecar")
@@ -373,21 +326,18 @@ class BoundedBucketSpec extends SparkSpec {
       assert(IndexCache.listSizes(a3) == truth)
       assert(IndexCache.listSizeComputes.get() == afterHeal,
         "the healed sidecar must seed the reload with zero size jobs")
-      // legacy dir (pre-_list_sizes): only _corpus_rows on disk — reload
-      // seeds the row count, the first listSizes pays ONE job and writes
-      // the missing sidecar (self-upgrade), later sessions seed for free
+      // a dir with no _list_sizes (a legacy or hand-copied model dir):
+      // the reload pays ONE size job and writes the missing sidecar, and
+      // later sessions seed for free
       java.nio.file.Files.delete(sidecar.toPath)
       IndexCache.clear()
       val beforeLegacy = IndexCache.listSizeComputes.get()
-      val rcBefore = IndexCache.rowCountComputes.get()
       val (_, a4) = IndexCache.ivf("torn_spec", corpus, nlist)
-      assert(IndexCache.rowCount(a4) == base.length &&
-        IndexCache.rowCountComputes.get() == rcBefore,
-        "legacy reload must still seed the row count from _corpus_rows")
       assert(IndexCache.listSizes(a4) == truth)
-      assert(IndexCache.listSizeComputes.get() == beforeLegacy + 1)
+      assert(IndexCache.listSizeComputes.get() == beforeLegacy + 1,
+        "a dir without the sidecar computes its sizes exactly once")
       assert(sidecar.exists(),
-        "legacy dir must gain a _list_sizes sidecar on first compute")
+        "a dir without the sidecar must gain a _list_sizes sidecar")
       IndexCache.clear()
       val afterUp = IndexCache.listSizeComputes.get()
       val (_, a5) = IndexCache.ivf("torn_spec", corpus, nlist)

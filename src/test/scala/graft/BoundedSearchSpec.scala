@@ -181,6 +181,38 @@ class BoundedSearchSpec extends SparkSpec {
     assert(res.stats.map(_.nprobeUsed).max <= nlist)
   }
 
+  test("mergeKeep keeps the k smallest of the union under (dist, id)") {
+    // the oracle is the plain sort of the union; distances compare by
+    // bit pattern, since −0.0 == 0.0 would hide a sign mix-up
+    def check(a: Seq[(Double, Long)], b: Seq[(Double, Long)], k: Int): Unit = {
+      val (ids, dists) = BoundedSearch.mergeKeep(a.map(_._2).toArray,
+        a.map(_._1).toArray, b.map(_._2).toArray, b.map(_._1).toArray, k)
+      val want = (a ++ b).sortBy { case (d, id) => (d, id) }.take(k)
+      val got = dists.toSeq.zip(ids.toSeq)
+      def bits(xs: Seq[(Double, Long)]) =
+        xs.map { case (d, id) => (java.lang.Double.doubleToRawLongBits(d), id) }
+      assert(bits(got) == bits(want), s"a=$a b=$b k=$k")
+    }
+    // equal distances that only the id can order
+    check(Seq((1.0, 5L), (1.0, 9L)), Seq((1.0, 7L), (1.0, 2L), (0.5, 11L)), 3)
+    // −0.0 sorts before 0.0 whatever the ids
+    check(Seq((0.0, 1L), (2.0, 3L)), Seq((-0.0, 2L)), 1)
+    check(Seq((-0.0, 4L)), Seq((0.0, 1L), (0.0, 0L)), 2)
+    // k larger than the union, and an empty side on either hand
+    check(Seq((3.0, 1L), (1.0, 2L)), Seq((2.0, 3L)), 10)
+    check(Seq.empty, Seq((2.0, 3L), (1.0, 4L)), 1)
+    check(Seq((2.0, 3L), (1.0, 4L)), Seq.empty, 1)
+    check(Seq.empty, Seq.empty, 5)
+    // seeded mixes of the above
+    val rnd = new scala.util.Random(17)
+    val pool = Array(-0.0, 0.0, 0.5, 1.0, 1.0, 2.5)
+    (1 to 200).foreach { _ =>
+      def side() = Seq.fill(rnd.nextInt(6))(
+        (pool(rnd.nextInt(pool.length)), rnd.nextInt(8).toLong))
+      check(side(), side(), 1 + rnd.nextInt(8))
+    }
+  }
+
   test("traces persist and reload as a parquet model table") {
     val dir = java.nio.file.Files.createTempDirectory("traces").toString
     ProfileTrainer.saveTraces(traces, s"$dir/t", spark)
@@ -236,7 +268,7 @@ class BoundedSearchSpec extends SparkSpec {
     assert(hStats == dStats, "driver-decided stats differ from distributed stats")
   }
 
-  test("fully-distributed (cogroup) path is bit-identical to the eager path") {
+  test("driver rounds ≡ fully-distributed (cogroup) path at levels 3") {
     import spark.implicits._
     val b = clusteredVecs(2000, d, nClusters = 24, seed = 55)
     val bDF = vecDF(b)
@@ -248,7 +280,8 @@ class BoundedSearchSpec extends SparkSpec {
     val qdf = clusteredVecs(2130, d, nClusters = 24, seed = 55).drop(2100)
       .zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    // nlist=32 → levels 3 → eager one-pass by default
+    // nlist=32 → levels 3, the shallow schedule: driver rounds by default
+    assert(tr32.length == 3)
     def run(forceDistributed: Boolean) = {
       val r = BoundedSearch.search(a32, m32, tr32, qdf, k,
         multiplier = 4.0f, stdM = 1.0f, forceDistributed = forceDistributed)
@@ -256,11 +289,11 @@ class BoundedSearchSpec extends SparkSpec {
         .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
         r.stats.sortBy(_.qid))
     }
-    val (eRows, eStats) = run(forceDistributed = false)
+    val (rRows, rStats) = run(forceDistributed = false)
     val (dRows, dStats) = run(forceDistributed = true)
-    assert(eRows.sameElements(dRows),
-      "distributed rows differ from eager rows")
-    assert(eStats == dStats, "distributed stats differ from eager stats")
+    assert(rRows.sameElements(dRows),
+      "distributed rows differ from driver-round rows")
+    assert(rStats == dStats, "distributed stats differ from driver-round stats")
   }
 
   test("cogroup path salts hot lists and stays bit-identical under skew") {
@@ -292,19 +325,18 @@ class BoundedSearchSpec extends SparkSpec {
           r.stats.sortBy(_.qid))
       } finally if (salted) sys.props.remove("graft.cogroup.maxProbes")
     }
-    val (eRows, eStats) = run(salted = false, distributed = false)
+    val (rRows, rStats) = run(salted = false, distributed = false)
     val (sRows, sStats) = run(salted = true, distributed = true)
-    assert(eRows.sameElements(sRows), "salted cogroup rows differ from eager")
-    assert(eStats == sStats, "salted cogroup stats differ from eager")
+    assert(rRows.sameElements(sRows), "salted cogroup rows differ from driver rounds")
+    assert(rStats == sStats, "salted cogroup stats differ from driver rounds")
   }
 
-  test("batches over the eager cap take the driver rounds and match chunked eager") {
+  test("one 4,400-query batch ≡ two 2,200-query chunks on the driver rounds") {
     import spark.implicits._
-    // nq > eagerMaxQueries routes to the driver-decided rounds
-    // (searchStagedDriver) even at levels ≤ 3; per-query decisions are
-    // independent, so running the same queries through the eager
-    // one-pass in small chunks must give identical rows and stats —
-    // proving the per-round scans and merges change nothing.
+    // per-query decisions are independent of the batch they ride in, so
+    // running the same queries through the driver-decided rounds in two
+    // chunks must give identical rows and stats — proving the per-round
+    // scans, merges and active-set filtering change nothing with nq.
     val b = clusteredVecs(1500, d, nClusters = 24, seed = 77)
     val bDF = vecDF(b)
     val m32 = IVFIndex.train(bDF, nlist = 32, seed = 42L)
@@ -316,14 +348,8 @@ class BoundedSearchSpec extends SparkSpec {
     val qvecs = clusteredVecs(nq, d, nClusters = 24, seed = 78)
     val qdf = qvecs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    // the default cap is 32768 — pin it below nq here so the router
-    // itself sends the whole batch to the driver-decided rounds, and
-    // each 2200-query chunk below stays under it (eager one-pass)
-    System.setProperty("graft.eager.maxQueries", "4096")
-    val roundsR =
-      try BoundedSearch.search(a32, m32, tr32, qdf, k = 10,
-        multiplier = 4.0f, stdM = 1.0f)
-      finally System.clearProperty("graft.eager.maxQueries")
+    val roundsR = BoundedSearch.search(a32, m32, tr32, qdf, k = 10,
+      multiplier = 4.0f, stdM = 1.0f)
     val roundsRows = roundsR.results
       .select(col("qid"), col("rank"), col("id"), col("dist"))
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
@@ -331,7 +357,7 @@ class BoundedSearchSpec extends SparkSpec {
     assert(roundsRows.map(_._1).distinct.length == nq, "some query lost its rows")
 
     val chunks = qvecs.zipWithIndex.grouped(2200).toSeq
-    val eager = chunks.map { ch =>
+    val chunked = chunks.map { ch =>
       val cdf = ch.map { case (v, i) => (i.toLong, v, 0.8f) }
         .toSeq.toDF("qid", "vec", "required_recall")
       val r = BoundedSearch.search(a32, m32, tr32, cdf, k = 10,
@@ -340,13 +366,13 @@ class BoundedSearchSpec extends SparkSpec {
         .as[(Long, Int, Long, Double)].collect()
       (rows, r.stats)
     }
-    val eagerRows = eager.flatMap(_._1.toSeq).toArray.sortBy(r => (r._1, r._2))
-    val eagerStats = eager.flatMap(_._2).sortBy(_.qid)
-    assert(roundsRows.sameElements(eagerRows))
-    assert(roundsR.stats.sortBy(_.qid) == eagerStats)
+    val chunkedRows = chunked.flatMap(_._1.toSeq).toArray.sortBy(r => (r._1, r._2))
+    val chunkedStats = chunked.flatMap(_._2).sortBy(_.qid)
+    assert(roundsRows.sameElements(chunkedRows))
+    assert(roundsR.stats.sortBy(_.qid) == chunkedStats)
   }
 
-  test("an empty first-ranked list: eager ≡ driver rounds ≡ distributed, staged capture runs") {
+  test("an empty first-ranked list: rounds ≡ distributed, staged capture runs") {
     import spark.implicits._
     // one extra centroid placed AT a group of queries, with no rows
     // assigned to it (`assigned` keeps the 64-list assignment): those
@@ -359,7 +385,7 @@ class BoundedSearchSpec extends SparkSpec {
     val tq = vecDF(trainQ, "qid")
     val tr = ProfileTrainer.train(assigned, m65, tq, FlatSearch.knn(baseDF, tq, k),
       maxTopk = k, bs = 100)
-    assert(tr.length == 4, "config must take the eager route by default")
+    assert(tr.length == 4, "config must stage 4 levels (nlist 65)")
     val qs = near ++ evalQ.slice(1, 21)
     // required recall 0 on the anchored queries: an empty top-k predicts
     // recall 0, which already meets it, so only the empty-top-k gate keeps
@@ -367,24 +393,18 @@ class BoundedSearchSpec extends SparkSpec {
     val qdf = qs.zipWithIndex
       .map { case (v, i) => (i.toLong, v, if (i < near.length) 0f else 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    def run(eagerCap: Option[String], distributed: Boolean) = {
-      eagerCap.foreach(System.setProperty("graft.eager.maxQueries", _))
-      val r =
-        try BoundedSearch.search(assigned, m65, tr, qdf, k, multiplier = 4.0f,
-          stdM = 1.0f, forceDistributed = distributed)
-        finally System.clearProperty("graft.eager.maxQueries")
+    def run(distributed: Boolean) = {
+      val r = BoundedSearch.search(assigned, m65, tr, qdf, k, multiplier = 4.0f,
+        stdM = 1.0f, forceDistributed = distributed)
       (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
         .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
         r.stats.sortBy(_.qid))
     }
-    val (eRows, eStats) = run(None, distributed = false)
-    val (rRows, rStats) = run(Some("1"), distributed = false) // nq > cap: rounds
-    val (dRows, dStats) = run(None, distributed = true)
-    assert(eRows.map(_._1).distinct.length == qs.length, "some query lost its rows")
-    assert(eRows.sameElements(rRows), "driver-round rows differ from eager rows")
-    assert(eStats == rStats, "driver-round stats differ from eager stats")
-    assert(eRows.sameElements(dRows), "distributed rows differ from eager rows")
-    assert(eStats == dStats, "distributed stats differ from eager stats")
+    val (rRows, rStats) = run(distributed = false)
+    val (dRows, dStats) = run(distributed = true)
+    assert(rRows.map(_._1).distinct.length == qs.length, "some query lost its rows")
+    assert(rRows.sameElements(dRows), "distributed rows differ from driver-round rows")
+    assert(rStats == dStats, "distributed stats differ from driver-round stats")
     val staged = ProfileTrainer.stagedTopK(assigned, m65, vecDF(qs, "qid"), maxTopk = k)
       .select(col("qid").cast("long"), col("stage")).as[(Long, Int)].collect()
     // the anchored queries' stage-0 capture is empty; later stages are not
@@ -412,30 +432,24 @@ class BoundedSearchSpec extends SparkSpec {
     assert(empty.contains(0))
     val qdf = qs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0.8f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-    def run(eagerCap: Option[String], distributed: Boolean) = {
-      eagerCap.foreach(System.setProperty("graft.eager.maxQueries", _))
-      val r =
-        try BoundedSearch.search(a8, m9, tr, qdf, k, multiplier = 2.0f,
-          stdM = 1.0f, forceDistributed = distributed)
-        finally System.clearProperty("graft.eager.maxQueries")
+    def run(distributed: Boolean) = {
+      val r = BoundedSearch.search(a8, m9, tr, qdf, k, multiplier = 2.0f,
+        stdM = 1.0f, forceDistributed = distributed)
       (r.results.select(col("qid"), col("rank"), col("id"), col("dist"))
         .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)),
         r.stats.sortBy(_.qid))
     }
-    val (eRows, eStats) = run(None, distributed = false)
-    val (rRows, rStats) = run(Some("1"), distributed = false) // nq > cap: rounds
-    val (dRows, dStats) = run(None, distributed = true)
+    val (rRows, rStats) = run(distributed = false)
+    val (dRows, dStats) = run(distributed = true)
     // decided at the cap (stage 1) on an empty top-k: predicted recall 0,
     // nprobe 1 × multiplier 2, so the finishing pass probes the next
     // ranked (non-empty) list and fills the top-k from it
     empty.foreach { qi =>
-      assert(eStats(qi) == BoundedSearch.QueryStats(qi.toLong, 2, 0f, 1))
-      assert(eRows.count(_._1 == qi) == k, s"query $qi got no full top-k")
+      assert(rStats(qi) == BoundedSearch.QueryStats(qi.toLong, 2, 0f, 1))
+      assert(rRows.count(_._1 == qi) == k, s"query $qi got no full top-k")
     }
-    assert(eRows.sameElements(rRows), "driver-round rows differ from eager rows")
-    assert(eStats == rStats, "driver-round stats differ from eager stats")
-    assert(eRows.sameElements(dRows), "distributed rows differ from eager rows")
-    assert(eStats == dStats, "distributed stats differ from eager stats")
+    assert(rRows.sameElements(dRows), "distributed rows differ from driver-round rows")
+    assert(rStats == dStats, "distributed stats differ from driver-round stats")
   }
 
   test("latency-bounded search respects the probe budget") {

@@ -15,10 +15,6 @@ class GraftConfSpec extends AnyFunSuite {
   }
 
   test("documented defaults") {
-    // 32768 from the r12 driver-staged/lazy A/B
-    // (tools/evidence/r12_staged_driver_ab.log): driver arm faster at
-    // every size below 64k, parity above — the cap takes the whole win
-    assert(GraftConf.eagerMaxQueries == 32768)
     assert(GraftConf.distributedMinQueries == 131072)
     assert(GraftConf.cogroupMaxProbes == 8192)
     assert(GraftConf.joinMaxProbesPerBucket == 8 * 8192)
@@ -26,10 +22,10 @@ class GraftConfSpec extends AnyFunSuite {
   }
 
   test("overrides are read at use time and revert on clear") {
-    withProp("graft.eager.maxQueries", "16") {
-      assert(GraftConf.eagerMaxQueries == 16)
+    withProp("graft.distributed.minQueries", "16") {
+      assert(GraftConf.distributedMinQueries == 16)
     }
-    assert(GraftConf.eagerMaxQueries == 32768)
+    assert(GraftConf.distributedMinQueries == 131072)
     withProp("graft.join.minProbedRows", "0") {
       assert(GraftConf.fusedMinProbedRows == 0L)
     }
@@ -42,9 +38,9 @@ class GraftConfSpec extends AnyFunSuite {
       assert(e.getMessage.contains("graft.join.minProbedRows"))
       assert(e.getMessage.contains("28M"))
     }
-    withProp("graft.eager.maxQueries", "lots") {
-      val e = intercept[IllegalArgumentException](GraftConf.eagerMaxQueries)
-      assert(e.getMessage.contains("graft.eager.maxQueries"))
+    withProp("graft.distributed.minQueries", "lots") {
+      val e = intercept[IllegalArgumentException](GraftConf.distributedMinQueries)
+      assert(e.getMessage.contains("graft.distributed.minQueries"))
     }
   }
 
