@@ -10,9 +10,8 @@ package graft
   *
   * | property | default | governs |
   * |---|---|---|
-  * | `graft.distributed.minQueries` | 131072 | batch size beyond which queries stay in a DataFrame end-to-end (BoundedSearch / FlatSearch / BinaryHash large-batch twins) |
-  * | `graft.cogroup.maxProbes` | 8192 | per-task probe bound of the salted cogroup scan; hot lists beyond it are salted across sub-keys |
-  * | `graft.join.maxProbesPerBucket` | 8 × cogroupMaxProbes | per-LIST probe bound of the fused bucket-local scan (its tasks stream one list group at a time) |
+  * | `graft.distributed.minQueries` | 131072 | batch size beyond which queries stay in a DataFrame end-to-end (BoundedSearch's distributed rounds; FlatSearch / BinaryHash `crossTopK`); the one bounded collect is `FlatSearch.collectable` |
+  * | `graft.cogroup.maxProbes` | 8192 | per-task probe bound of the salted cogroup scan; hot lists beyond it are salted across sub-keys. The fused bucket-local scan's per-LIST bound is fixed at 8× this (its tasks stream one list group at a time) |
   * | `graft.join.minProbedRows` | 28000000 | probed data rows per round (the sum of the probed lists' sizes, from index metadata) below which the fused bucket-local arm is skipped in favor of the salted cogroup — the measured post-fix crossover (see [[fusedMinProbedRows]]); 0 forces the fused arm wherever the layout allows it |
   * | `graft.stream.statePartitions` | max(8, cores/4) | state-store partition count pinned into stateful streaming queries' checkpoints at stream start ([[streamStatePartitions]]) |
   * | `graft.components.driverMaxEdges` | 2²¹ | largest edge set [[graft.ops.Components.connectedComponents]] resolves with the one-collect driver union-find arm; 0 disables the driver arm ([[componentsDriverMaxEdges]]) |
@@ -55,10 +54,9 @@ object GraftConf {
 
   /** Per-list probe bound for the fused bucket-local scan: list groups
     * are consumed one at a time, so a task's peak state is ONE list's
-    * probe array — the default is 8× the cogroup's per-task bound
-    * (~40 MB peak at d=64, k=10). */
-  def joinMaxProbesPerBucket: Int =
-    intProp("graft.join.maxProbesPerBucket", 8 * cogroupMaxProbes)
+    * probe array — fixed at 8× the cogroup's per-task bound (~40 MB
+    * peak at d=64, k=10); not a property of its own. */
+  def joinMaxProbesPerBucket: Int = 8 * cogroupMaxProbes
 
   /** The measured crossover guard: the fused bucket-local arm only wins
     * once a round scans enough data rows to amortize its coarser task

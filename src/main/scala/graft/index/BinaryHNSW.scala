@@ -2,17 +2,18 @@ package graft.index
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.search.FlatSearch
 
-/** HNSW over binary codes (`Auncel/IndexBinaryHNSW.cpp`): the same
-  * partitioned graph machinery as [[HNSW]] — [[HNSW.LocalGraph]] is
-  * generic in the point type — instantiated at `Array[Long]` packed
-  * signatures with per-word popcount Hamming distance
-  * ([[BinaryHash.hammingWide]]). Build once per block, persist the
-  * adjacency (sig ARRAY<LONG> instead of vec ARRAY<FLOAT>), beam-search
-  * many times. Distances are integral, so ties are common: ranking is
+/** HNSW over binary codes (`Auncel/IndexBinaryHNSW.cpp`): the
+  * partitioned graph layer of [[HNSW]] — its block builder and block
+  * search are generic in the point type — instantiated at
+  * `Array[Long]` packed signatures with per-word popcount Hamming
+  * distance ([[BinaryHash.hammingWide]]). The adjacency carries
+  * sig ARRAY<LONG> instead of vec ARRAY<FLOAT> and persists through
+  * the float graph's own block-partitioned layout ([[HNSW]]).
+  * Distances are integral, so ties are common: ranking is
   * (hamming, id), same as the flat wide scan — with efSearch ≥ block
-  * size the beam is exhaustive and results equal [[BinaryHash.knnHammingWide]].
+  * size the beam is exhaustive and results equal
+  * [[BinaryHash.knnHammingWide]].
   */
 object BinaryHNSW {
 
@@ -23,61 +24,17 @@ object BinaryHNSW {
     * `id % nParts`, deterministic like the float variant. */
   def buildGraph(sigs: DataFrame, nParts: Int = 8, m: Int = 16,
                  efConstruction: Int = 64): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val (mm, efc, p) = (m, efConstruction, nParts)
-    sigs
-      .select(col("id").cast("long"), col("sig"))
-      .as[(Long, Array[Long])]
-      .groupByKey { case (id, _) => java.lang.Math.floorMod(id, p.toLong).toInt }
-      .flatMapGroups { (part, it) =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val g = new HNSW.LocalGraph[Array[Long]](dist, mm, efc)
-          rows.foreach { case (id, s) => g.insert(id, s) }
-          g.exportRows(part)
-        }
-      }.toDF("part", "node", "id", "sig", "level", "nbrs")
+    val p = nParts.toLong
+    HNSW.buildBlocks[Array[Long]](sigs, "sig", dist, m, efConstruction)(
+      (id, _) => java.lang.Math.floorMod(id, p).toInt)
   }
-
-  /** Persist / reload — partitioned by block like the float graph. */
-  def writeGraph(graph: DataFrame, path: String): Unit =
-    graph.repartition(col("part"))
-      .write.mode("overwrite").partitionBy("part").parquet(path)
-
-  def readGraph(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Beam-search a built/persisted binary graph with Hamming distance;
     * every block answers, global (dist, id) top-k merge. */
   def searchGraph(graph: DataFrame, querySigs: DataFrame, k: Int,
-                  efSearch: Int = 64): DataFrame = {
-    val spark = graph.sparkSession
-    import spark.implicits._
-    val q: Array[(Long, Array[Long])] = querySigs
-      .select(col("qid").cast("long"), col("sig"))
-      .as[(Long, Array[Long])].collect().sortBy(_._1)
-    val bq = spark.sparkContext.broadcast(q)
-    val efs = efSearch
-    val partials = graph
-      .select(col("part").cast("int"), col("node").cast("int"),
-        col("id").cast("long"), col("sig"), col("level").cast("int"),
-        col("nbrs"))
-      .as[(Int, Int, Long, Array[Long], Int, Array[Array[Int]])]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val rows = it.map { case (_, node, id, sig, level, nbrs) =>
-          (node, id, sig, level, nbrs)
-        }.toArray.sortBy(_._1)
-        val g = HNSW.LocalGraph.fromAdjacencyG[Array[Long]](dist,
-          rows.map { case (_, id, sig, level, nbrs) => (0, id, sig, level, nbrs) })
-        bq.value.iterator.flatMap { case (qid, qs) =>
-          g.search(qs, k, efs).iterator.map { case (d, id) => (qid, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    FlatSearch.mergeTopK(partials, k)
-  }
+                  efSearch: Int = 64): DataFrame =
+    HNSW.searchBlocks[Array[Long]](graph, "sig", dist,
+      HNSW.collectPoints[Array[Long]](querySigs, "sig"), k, efSearch, None)
 
   /** Convenience: encode floats with a wide LSH model, build, search —
     * the `IndexBinaryFromFloat`-over-HNSW composition. */

@@ -2,50 +2,72 @@ package graft.index
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions
 import graft.functions.Kernels
+import graft.search.FlatSearch
 
 /** LSH / binary-code index (`Auncel/IndexLSH.cpp`, `IndexBinaryFlat` +
   * Hamming kernels `hamming.cpp`): random-hyperplane signatures packed
   * into a LONG column; search is Hamming distance = `bit_count(xor)` —
   * a fully codegen'd integer pipeline, no floats touched at scan time.
   * 64 bits per vector is a 32× scan-size reduction over d=64 floats.
+  * The narrow and wide scans take the float brute force's shapes:
+  * [[FlatSearch.flatTopK]] over a driver-collected batch, and
+  * [[FlatSearch.crossTopK]] with a Hamming distance column past the
+  * driver contract.
   */
 object BinaryHash {
 
-  final case class LSHModel(planes: Array[Array[Float]]) extends Serializable {
-    val nbits: Int = planes.length
-    // flattened TRANSPOSED planes (planesT(i·nbits + b) = planes(b)(i)),
-    // built lazily once per JVM/executor after broadcast: signature()
-    // walks the vector ONCE with a sequential inner loop over bits —
-    // unit-stride loads the JIT can vectorize — instead of nbits
-    // separate plane-array walks (nbits pointer chases + d·nbits
-    // strided loads per row). Per-bit accumulation order (i ascending,
-    // both operands widened to double before the product) is exactly
-    // Kernels.dot's, so every dot — and every sign — is bit-identical.
+  /** Random-hyperplane projections, the signature core of [[LSHModel]]
+    * and [[WideLSHModel]] (which differ only in how the sign bits are
+    * packed: one LONG against an ARRAY<LONG> of 64-bit words).
+    *
+    * The planes are flattened TRANSPOSED (planesT(i·nbits + b) =
+    * planes(b)(i)), built lazily once per JVM/executor after broadcast:
+    * [[projections]] walks the vector ONCE with a sequential inner loop
+    * over bits — unit-stride loads the JIT can vectorize — instead of
+    * nbits separate plane-array walks (nbits pointer chases + d·nbits
+    * strided loads per row). Per-bit accumulation order (i ascending,
+    * both operands widened to double before the product) is exactly
+    * Kernels.dot's, so every dot — and every sign — is bit-identical. */
+  sealed trait Hyperplanes extends Serializable {
+    def planes: Array[Array[Float]]
     @transient private lazy val d0: Int =
-      if (nbits == 0) 0 else planes(0).length
+      if (planes.isEmpty) 0 else planes(0).length
     @transient private lazy val planesT: Array[Float] = {
-      val t = new Array[Float](d0 * nbits)
+      val nb = planes.length
+      val t = new Array[Float](d0 * nb)
       var b = 0
-      while (b < nbits) {
+      while (b < nb) {
         val p = planes(b)
         var i = 0
-        while (i < d0) { t(i * nbits + b) = p(i); i += 1 }
+        while (i < d0) { t(i * nb + b) = p(i); i += 1 }
         b += 1
       }
       t
     }
-    def signature(v: Array[Float]): Long = {
-      val acc = new Array[Double](nbits)
+    /** The nbits dot products planes(b) · v; bit b is `>= 0`. */
+    protected final def projections(v: Array[Float]): Array[Double] = {
+      val nb = planes.length
+      val acc = new Array[Double](nb)
       val t = planesT
+      val d = d0
       var i = 0
-      while (i < d0) {
+      while (i < d) {
         val vi = v(i).toDouble
-        val base = i * nbits
+        val base = i * nb
         var b = 0
-        while (b < nbits) { acc(b) += t(base + b).toDouble * vi; b += 1 }
+        while (b < nb) { acc(b) += t(base + b).toDouble * vi; b += 1 }
         i += 1
       }
+      acc
+    }
+  }
+
+  final case class LSHModel(planes: Array[Array[Float]]) extends Hyperplanes {
+    val nbits: Int = planes.length
+    def signature(v: Array[Float]): Long = {
+      val acc = projections(v)
       var sig = 0L
       var b = 0
       while (b < nbits) {
@@ -66,35 +88,11 @@ object BinaryHash {
   /** Arbitrary-width binary codes (`Auncel/IndexBinaryFlat.h:21`,
     * `hamming.cpp`): signatures packed 64 bits per LONG word in an
     * ARRAY<LONG> column; Hamming distance = per-word xor popcount sum. */
-  final case class WideLSHModel(planes: Array[Array[Float]]) extends Serializable {
+  final case class WideLSHModel(planes: Array[Array[Float]]) extends Hyperplanes {
     val nbits: Int = planes.length
     val nWords: Int = (nbits + 63) / 64
-    // same transposed-flat layout + loop interchange as [[LSHModel]];
-    // per-bit double sums bit-identical to the per-plane form
-    @transient private lazy val d0: Int =
-      if (nbits == 0) 0 else planes(0).length
-    @transient private lazy val planesT: Array[Float] = {
-      val t = new Array[Float](d0 * nbits)
-      var b = 0
-      while (b < nbits) {
-        val p = planes(b)
-        var i = 0
-        while (i < d0) { t(i * nbits + b) = p(i); i += 1 }
-        b += 1
-      }
-      t
-    }
     def signature(v: Array[Float]): Array[Long] = {
-      val acc = new Array[Double](nbits)
-      val t = planesT
-      var i = 0
-      while (i < d0) {
-        val vi = v(i).toDouble
-        val base = i * nbits
-        var b = 0
-        while (b < nbits) { acc(b) += t(base + b).toDouble * vi; b += 1 }
-        i += 1
-      }
+      val acc = projections(v)
       val sig = new Array[Long](nWords)
       var b = 0
       while (b < nbits) {
@@ -123,44 +121,33 @@ object BinaryHash {
     s
   }
 
-  /** Wide twin of [[knnHammingLarge]]: codegen'd per-word xor popcount
-    * ([[org.apache.spark.sql.graft.VectorExpressions.hammingWide]],
-    * bit-identical to [[hammingWide]]) over the block-cartesian, no
-    * driver-side query collect. */
-  def knnHammingWideLarge(sigs: DataFrame, querySigs: DataFrame,
-                          k: Int): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions
-    val scored = sigs.select(col("id").cast("long").as("id"), col("sig"))
-      .crossJoin(querySigs.select(col("qid").cast("long").as("qid"),
-        col("sig").as("qsig")))
-      .select(col("qid"), col("id"),
-        VectorExpressions.hammingWide(col("sig"), col("qsig"))
-          .cast("double").as("dist"))
-    graft.search.FlatSearch.mergeTopK(
-      graft.search.FlatSearch.partialTopK(scored, k), k)
-  }
-
   /** Hamming k-NN over multi-word signatures — same bounded partial-heap
-    * shape as [[knnHamming]]; >131k-query batches route to
-    * [[knnHammingWideLarge]] via the same LIMIT-bounded guard. */
+    * shape as [[knnHamming]]. Batches past the driver contract stay in
+    * a DataFrame ([[FlatSearch.crossTopK]]) scored by the
+    * codegen'd per-word xor popcount
+    * ([[org.apache.spark.sql.graft.VectorExpressions.hammingWide]],
+    * bit-identical to [[hammingWide]]). */
   def knnHammingWide(sigs: DataFrame, querySigs: DataFrame, k: Int): DataFrame = {
     val spark = sigs.sparkSession
     import spark.implicits._
-    val qRaw: Array[(Long, Array[Long])] = querySigs
-      .select(col("qid").cast("long"), col("sig"))
-      .limit(DistributedMinQueries + 1)
-      .as[(Long, Array[Long])].collect()
-    if (qRaw.length > DistributedMinQueries)
-      return knnHammingWideLarge(sigs, querySigs, k)
-    val q = qRaw.sortBy(_._1)
-    val bq = spark.sparkContext.broadcast(q.map(_._2))
-    graft.search.FlatSearch.flatTopK[Array[Long]](
-      sigs.select(col("id").cast("long"), col("sig")).as[(Long, Array[Long])],
-      q.map(_._1), k,
-      () => {
-        val qs = bq.value
-        (i, _, sig) => hammingWide(sig, qs(i)).toDouble
-      })
+    FlatSearch.collectable(querySigs.select(col("qid").cast("long"), col("sig"))
+        .as[(Long, Array[Long])]) match {
+      case None =>
+        FlatSearch.crossTopK(
+          sigs.select(col("id").cast("long").as("id"), col("sig")),
+          querySigs.select(col("qid").cast("long").as("qid"), col("sig").as("qsig")),
+          VectorExpressions.hammingWide(col("sig"), col("qsig")).cast("double"), k)
+      case Some(qRaw) =>
+        val q = qRaw.sortBy(_._1)
+        val bq = spark.sparkContext.broadcast(q.map(_._2))
+        FlatSearch.flatTopK[Array[Long]](
+          sigs.select(col("id").cast("long"), col("sig")).as[(Long, Array[Long])],
+          q.map(_._1), k,
+          () => {
+            val qs = bq.value
+            (i, _, sig) => hammingWide(sig, qs(i)).toDouble
+          })
+    }
   }
 
   /** `Auncel/IndexBinaryIVF.cpp` — IVF-bucketed binary codes: vectors
@@ -203,43 +190,26 @@ object BinaryHash {
     df.withColumn("sig", u(col(vecCol)))
   }
 
-  /** The reference's driver contract bound (`Auncel/dist/worker.cpp`
-    * holds query batches in RAM) — past it, [[knnHammingLarge]] keeps
-    * the query signatures in a DataFrame end-to-end
-    * ([[graft.GraftConf.distributedMinQueries]]). */
-  private def DistributedMinQueries = graft.GraftConf.distributedMinQueries
-
-  /** Query-DataFrame-resident Hamming k-NN for batches past the driver
-    * contract: block-cartesian of signatures × query signatures scored
-    * by the codegen'd `bit_count(xor)` integer pipeline, per-task
-    * bounded-heap combine ([[graft.search.FlatSearch.partialTopK]]).
-    * No driver-side query collect anywhere. */
-  def knnHammingLarge(sigs: DataFrame, querySigs: DataFrame, k: Int): DataFrame = {
-    val scored = sigs.select(col("id").cast("long").as("id"),
-        col("sig").cast("long").as("sig"))
-      .crossJoin(querySigs.select(col("qid").cast("long").as("qid"),
-        col("sig").cast("long").as("qsig")))
-      .select(col("qid"), col("id"),
-        bit_count(col("sig").bitwiseXOR(col("qsig"))).cast("double").as("dist"))
-    graft.search.FlatSearch.mergeTopK(
-      graft.search.FlatSearch.partialTopK(scored, k), k)
-  }
-
   /** Hamming k-NN over signatures — broadcast query signatures, integer
     * xor/popcount scan with per-partition bounded heaps: the shuffle
     * carries parts × nq × k candidate rows, never N × nq. Batches past
-    * the driver contract route to [[knnHammingLarge]] (the collect is
-    * LIMIT-bounded, so routing itself never materializes nq rows). */
+    * the driver contract keep the query signatures in a DataFrame
+    * ([[FlatSearch.crossTopK]] scored by the codegen'd
+    * `bit_count(xor)` integer pipeline); the collect is LIMIT-bounded,
+    * so routing itself never materializes nq rows. */
   def knnHamming(sigs: DataFrame, querySigs: DataFrame, k: Int): DataFrame = {
     val spark = sigs.sparkSession
     import spark.implicits._
-    val qRaw: Array[(Long, Long)] = querySigs
-      .select(col("qid").cast("long"), col("sig").cast("long"))
-      .limit(DistributedMinQueries + 1)
-      .as[(Long, Long)].collect()
-    if (qRaw.length > DistributedMinQueries)
-      return knnHammingLarge(sigs, querySigs, k)
-    knnHammingLocal(sigs, qRaw.sortBy(_._1), k)
+    FlatSearch.collectable(querySigs.select(col("qid").cast("long"),
+        col("sig").cast("long")).as[(Long, Long)]) match {
+      case None =>
+        FlatSearch.crossTopK(
+          sigs.select(col("id").cast("long").as("id"), col("sig").cast("long").as("sig")),
+          querySigs.select(col("qid").cast("long").as("qid"),
+            col("sig").cast("long").as("qsig")),
+          bit_count(col("sig").bitwiseXOR(col("qsig"))).cast("double"), k)
+      case Some(qRaw) => knnHammingLocal(sigs, qRaw.sortBy(_._1), k)
+    }
   }
 
   /** Broadcast-scan core over an already-collected query batch — shared
@@ -250,7 +220,7 @@ object BinaryHash {
     val spark = sigs.sparkSession
     import spark.implicits._
     val bq = spark.sparkContext.broadcast(q.map(_._2))
-    graft.search.FlatSearch.flatTopK[Long](
+    FlatSearch.flatTopK[Long](
       sigs.select(col("id").cast("long"), col("sig").cast("long")).as[(Long, Long)],
       q.map(_._1), k,
       () => {
@@ -283,6 +253,6 @@ object BinaryHash {
     val rescored = cand.join(base.select(col("id"), col("vec")), Seq("id"))
       .withColumn("dist", exactU(col("qid"), col("vec")))
       .select(col("qid"), col("id"), col("dist"))
-    graft.search.FlatSearch.mergeTopK(rescored, k)
+    FlatSearch.mergeTopK(rescored, k)
   }
 }

@@ -1,8 +1,9 @@
 package graft.index
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import graft.functions.Kernels
-import graft.operators.TopK
 import graft.search.FlatSearch
 
 /** HNSW, re-shaped for Spark (`Auncel/HNSW.cpp:409-747`,
@@ -24,6 +25,13 @@ import graft.search.FlatSearch
   * footprint. Level assignment is derived from a hash of the id (not
   * an RNG stream), so graphs are deterministic regardless of row
   * order or session.
+  *
+  * The Spark layer is generic in the point type, like [[LocalGraph]]:
+  * one block builder ([[buildBlocks]], keyed by id-mod or by coarse
+  * cell) and one block search ([[searchBlocks]], every block or the
+  * probed ones) serve the float graph here and the binary-code graph
+  * of [[BinaryHNSW]], which only supplies its Hamming distance and
+  * the `sig` point column.
   */
 object HNSW {
 
@@ -234,15 +242,10 @@ object HNSW {
   }
 
   object LocalGraph {
-    /** Rebuild a float graph from persisted adjacency rows
-      * (node-index order). */
-    def fromAdjacency(rows: Array[(Int, Long, Array[Float], Int, Array[Array[Int]])])
-        : LocalGraph[Array[Float]] =
-      fromAdjacencyG[Array[Float]](Kernels.l2Sqr, rows)
-
-    /** Generic rebuild — any point type + distance. */
-    def fromAdjacencyG[P](dist2: (P, P) => Double,
-                          rows: Array[(Int, Long, P, Int, Array[Array[Int]])])
+    /** Rebuild a graph from persisted adjacency rows (node-index
+      * order) — any point type + distance. */
+    def fromAdjacency[P](dist2: (P, P) => Double,
+                         rows: Array[(Int, Long, P, Int, Array[Array[Int]])])
         : LocalGraph[P] = {
       val g = new LocalGraph[P](dist2)
       rows.foreach { case (_, id, vec, level, nbrs) => g.loadRow(id, vec, level, nbrs) }
@@ -257,23 +260,9 @@ object HNSW {
     * task materializes one block — size that with `nParts`. */
   def buildGraph(base: DataFrame, nParts: Int = 8, m: Int = 16,
                  efConstruction: Int = 64): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val (mm, efc, p) = (m, efConstruction, nParts)
-    base
-      .select(org.apache.spark.sql.functions.col("id").cast("long"),
-        org.apache.spark.sql.functions.col("vec"))
-      .as[(Long, Array[Float])]
-      .groupByKey { case (id, _) => java.lang.Math.floorMod(id, p.toLong).toInt }
-      .flatMapGroups { (part, it) =>
-        val rows = it.toArray.sortBy(_._1) // one block; deterministic order
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val g = new LocalGraph[Array[Float]](Kernels.l2Sqr, mm, efc)
-          rows.foreach { case (id, v) => g.insert(id, v) }
-          g.exportRows(part)
-        }
-      }.toDF("part", "node", "id", "vec", "level", "nbrs")
+    val p = nParts.toLong
+    buildBlocks[Array[Float]](base, "vec", Kernels.l2Sqr, m, efConstruction)(
+      (id, _) => java.lang.Math.floorMod(id, p).toInt)
   }
 
   /** Graph blocks assigned by a COARSE QUANTIZER instead of id-mod:
@@ -284,30 +273,34 @@ object HNSW {
     * the model with [[IVFIndex.train]] at nlist = nParts. */
   def buildGraphClustered(base: DataFrame, model: IVFModel, m: Int = 16,
                           efConstruction: Int = 64): DataFrame = {
-    val spark = base.sparkSession
+    val bm = base.sparkSession.sparkContext.broadcast(model)
+    buildBlocks[Array[Float]](base, "vec", Kernels.l2Sqr, m, efConstruction)(
+      (_, v) => bm.value.assignListNo(v))
+  }
+
+  /** The one block builder, generic in the point type: (id, point) rows
+    * are grouped by `blockOf`, each block inserts its rows in id order
+    * into one [[LocalGraph]] and dumps its adjacency as
+    * (part, node, id, `pointCol`, level, nbrs). */
+  private[index] def buildBlocks[P: TypeTag](rows: DataFrame, pointCol: String,
+      dist2: (P, P) => Double, m: Int, efConstruction: Int)(
+      blockOf: (Long, P) => Int): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val (mm, efc) = (m, efConstruction)
-    val bm = spark.sparkContext.broadcast(model)
-    base
-      .select(org.apache.spark.sql.functions.col("id").cast("long"),
-        org.apache.spark.sql.functions.col("vec"))
-      .as[(Long, Array[Float])]
-      .groupByKey { case (_, v) => bm.value.assignListNo(v) }
+    rows.select(col("id").cast("long"), col(pointCol)).as[(Long, P)]
+      .groupByKey { case (id, v) => blockOf(id, v) }
       .flatMapGroups { (part, it) =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val g = new LocalGraph[Array[Float]](Kernels.l2Sqr, mm, efc)
-          rows.foreach { case (id, v) => g.insert(id, v) }
-          g.exportRows(part)
-        }
-      }.toDF("part", "node", "id", "vec", "level", "nbrs")
+        val g = new LocalGraph[P](dist2, m, efConstruction)
+        it.toArray.sortBy(_._1).foreach { case (id, v) => g.insert(id, v) }
+        g.exportRows(part)
+      }.toDF("part", "node", "id", pointCol, "level", "nbrs")
   }
 
   /** Persist adjacency partitioned by block: a search probing blocks is
-    * a partition-pruned scan, mirroring the IVF table layout. */
+    * a partition-pruned scan, mirroring the IVF table layout. Float and
+    * binary graphs share it (the point column is `vec` or `sig`). */
   def writeGraph(graph: DataFrame, path: String): Unit =
-    graph.repartition(org.apache.spark.sql.functions.col("part"))
+    graph.repartition(col("part"))
       .write.mode("overwrite").partitionBy("part").parquet(path)
 
   def readGraph(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
@@ -319,35 +312,9 @@ object HNSW {
     * partitioning — every block answers. `efSearch >= block size` makes
     * the search exhaustive over each block → exact results. */
   def searchGraph(graph: DataFrame, queries: DataFrame, k: Int,
-                  efSearch: Int = 64): DataFrame = {
-    val spark = graph.sparkSession
-    import spark.implicits._
-    val q: Array[(Long, Array[Float])] = queries
-      .select(org.apache.spark.sql.functions.col("qid").cast("long"),
-        org.apache.spark.sql.functions.col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bq = spark.sparkContext.broadcast(q)
-    val efs = efSearch
-    val partials = graph
-      .select(org.apache.spark.sql.functions.col("part").cast("int"),
-        org.apache.spark.sql.functions.col("node").cast("int"),
-        org.apache.spark.sql.functions.col("id").cast("long"),
-        org.apache.spark.sql.functions.col("vec"),
-        org.apache.spark.sql.functions.col("level").cast("int"),
-        org.apache.spark.sql.functions.col("nbrs"))
-      .as[(Int, Int, Long, Array[Float], Int, Array[Array[Int]])]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val rows = it.map { case (_, node, id, vec, level, nbrs) =>
-          (node, id, vec, level, nbrs)
-        }.toArray.sortBy(_._1)
-        val g = LocalGraph.fromAdjacency(rows)
-        bq.value.iterator.flatMap { case (qid, qv) =>
-          g.search(qv, k, efs).iterator.map { case (d, id) => (qid, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    FlatSearch.mergeTopK(partials, k)
-  }
+                  efSearch: Int = 64): DataFrame =
+    searchBlocks[Array[Float]](graph, "vec", Kernels.l2Sqr,
+      collectPoints[Array[Float]](queries, "vec"), k, efSearch, None)
 
   /** Probed-blocks beam search over a CLUSTERED graph
     * ([[buildGraphClustered]]): each query is routed to its
@@ -362,44 +329,56 @@ object HNSW {
   def searchGraphProbed(graph: DataFrame, model: IVFModel,
                         queries: DataFrame, k: Int, efSearch: Int = 64,
                         nProbeBlocks: Int = 2): DataFrame = {
-    val spark = graph.sparkSession
-    import spark.implicits._
-    val q: Array[(Long, Array[Float])] = queries
-      .select(org.apache.spark.sql.functions.col("qid").cast("long"),
-        org.apache.spark.sql.functions.col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val q = collectPoints[Array[Float]](queries, "vec")
     val probeMap: Map[Int, Array[Int]] = q.indices.flatMap { qi =>
       model.rankCentroids(q(qi)._2).take(nProbeBlocks)
         .map { case (block, _) => (block, qi) }
     }.groupBy(_._1).map { case (b, xs) => (b, xs.map(_._2).toArray) }
+    searchBlocks[Array[Float]](graph, "vec", Kernels.l2Sqr, q, k, efSearch,
+      Some(probeMap))
+  }
+
+  /** A query batch collected to the driver as (qid, point), qid order. */
+  private[index] def collectPoints[P: TypeTag](queries: DataFrame,
+      pointCol: String): Array[(Long, P)] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries.select(col("qid").cast("long"), col(pointCol))
+      .as[(Long, P)].collect().sortBy(_._1)
+  }
+
+  /** The one block search, generic in the point type: each block
+    * reloads its adjacency in node order and beam-searches the queries
+    * routed to it — every query when `probes` is None, else the query
+    * indices `probes` maps the block to (unlisted blocks are
+    * partition-pruned away) — then the global (dist, id) top-k merge. */
+  private[index] def searchBlocks[P: TypeTag](graph: DataFrame, pointCol: String,
+      dist2: (P, P) => Double, q: Array[(Long, P)], k: Int, efSearch: Int,
+      probes: Option[Map[Int, Array[Int]]]): DataFrame = {
+    val spark = graph.sparkSession
+    import spark.implicits._
     val bq = spark.sparkContext.broadcast(q)
-    val bp = spark.sparkContext.broadcast(probeMap)
-    val efs = efSearch
-    val kk = k
-    val partials = graph
-      .filter(org.apache.spark.sql.functions.col("part")
-        .isin(probeMap.keys.toSeq.sorted: _*))
-      .select(org.apache.spark.sql.functions.col("part").cast("int"),
-        org.apache.spark.sql.functions.col("node").cast("int"),
-        org.apache.spark.sql.functions.col("id").cast("long"),
-        org.apache.spark.sql.functions.col("vec"),
-        org.apache.spark.sql.functions.col("level").cast("int"),
-        org.apache.spark.sql.functions.col("nbrs"))
-      .as[(Int, Int, Long, Array[Float], Int, Array[Array[Int]])]
+    val bp = probes.map(spark.sparkContext.broadcast(_))
+    val blocks = probes.fold(graph)(p =>
+      graph.filter(col("part").isin(p.keys.toSeq.sorted: _*)))
+    val partials = blocks
+      .select(col("part").cast("int"), col("node").cast("int"),
+        col("id").cast("long"), col(pointCol), col("level").cast("int"),
+        col("nbrs"))
+      .as[(Int, Int, Long, P, Int, Array[Array[Int]])]
       .groupByKey(_._1)
       .flatMapGroups { (part, it) =>
-        bp.value.get(part) match {
-          case None => Iterator.empty
-          case Some(qis) =>
-            val rows = it.map { case (_, node, id, vec, level, nbrs) =>
-              (node, id, vec, level, nbrs)
-            }.toArray.sortBy(_._1)
-            val g = LocalGraph.fromAdjacency(rows)
-            val qs = bq.value
-            qis.iterator.flatMap { qi =>
-              g.search(qs(qi)._2, kk, efs).iterator
-                .map { case (d, id) => (qs(qi)._1, id, d) }
-            }
+        val qs = bq.value
+        val qis = bp.fold(qs.indices.toArray)(_.value.getOrElse(part, Array.empty))
+        if (qis.isEmpty) Iterator.empty
+        else {
+          val g = LocalGraph.fromAdjacency[P](dist2,
+            it.map { case (_, node, id, v, level, nbrs) => (node, id, v, level, nbrs) }
+              .toArray.sortBy(_._1))
+          qis.iterator.flatMap { qi =>
+            g.search(qs(qi)._2, k, efSearch).iterator
+              .map { case (d, id) => (qs(qi)._1, id, d) }
+          }
         }
       }.toDF("qid", "id", "dist")
     FlatSearch.mergeTopK(partials, k)

@@ -34,10 +34,11 @@ import graft.profile.ErrorProfile.Trace
   * driver.
   *
   * Two control paths, routed on one batch-size test in [[search]]:
-  * every batch of up to [[DistributedMinQueries]] queries takes the
-  * driver-decided rounds ([[searchStagedDriver]]), larger ones the
-  * fully-distributed rounds ([[searchDistributed]]). Both merge each
-  * stage through [[mergeKeep]] and decide through [[stageStep]].
+  * every batch within the driver contract ([[FlatSearch.collectable]])
+  * takes the driver-decided rounds ([[searchStagedDriver]]), larger
+  * ones the fully-distributed rounds ([[searchDistributed]]). Both
+  * merge each stage through [[mergeKeep]] and decide through
+  * [[stageStep]].
   */
 object BoundedSearch {
 
@@ -79,13 +80,6 @@ object BoundedSearch {
     else st.copy(stoped = stoped, preVal = maxVal)
   }
 
-  /** Above this batch size the driver-decided rounds' driver-held
-    * structures (query vectors, centroid rankings, per-round broadcast
-    * probe maps — all O(nq)) stop being "collectable"; the
-    * fully-distributed path keeps the queries themselves in a DataFrame
-    * ([[graft.GraftConf.distributedMinQueries]]). */
-  private def DistributedMinQueries = graft.GraftConf.distributedMinQueries
-
   /** Control row for the fully-distributed path: the query vector, its
     * full centroid ranking, boundary-distance window AND running top-k
     * (`topIds`/`topDists`, sorted ascending by (dist, id)) ride WITH
@@ -102,7 +96,7 @@ object BoundedSearch {
                          topIds: Array[Long], topDists: Array[Double])
 
   /** @param queries (qid, vec, required_recall); batches up to
-    *                [[DistributedMinQueries]] are collected to the
+    *                `graft.distributed.minQueries` are collected to the
     *                driver (the reference's own contract — its driver
     *                holds all queries in RAM), larger ones stay in a
     *                DataFrame end-to-end ([[searchDistributed]])
@@ -117,22 +111,21 @@ object BoundedSearch {
     if (forceDistributed) return searchDistributed(ivfData, model, traces,
       queries, k, multiplier, stdM)
     // one bounded collect both routes the batch and, when it fits, IS
-    // the batch (the FlatSearch.knn pattern): at most the driver
-    // contract + 1 rows ever reach the driver, and a batch past it
-    // bails to the DataFrame-resident path
-    val qRows: Array[(Long, Array[Float], Float)] = queries
+    // the batch: a batch past the driver contract bails to the
+    // DataFrame-resident path
+    FlatSearch.collectable(queries
       .select(col("qid").cast("long"), col("vec"),
         col("required_recall").cast("float"))
-      .limit(DistributedMinQueries + 1)
-      .as[(Long, Array[Float], Float)].collect()
-    if (qRows.length > DistributedMinQueries)
-      searchDistributed(ivfData, model, traces, queries, k, multiplier, stdM)
-    else
-      searchStagedDriver(ivfData, model, traces, qRows, k, multiplier, stdM)
+      .as[(Long, Array[Float], Float)]) match {
+      case Some(qRows) =>
+        searchStagedDriver(ivfData, model, traces, qRows, k, multiplier, stdM)
+      case None =>
+        searchDistributed(ivfData, model, traces, queries, k, multiplier, stdM)
+    }
   }
 
   /** Fully-distributed staged rounds for query batches past the
-    * driver-collectable contract (> [[DistributedMinQueries]]): the
+    * driver-collectable contract ([[FlatSearch.collectable]]): the
     * query vectors, centroid rankings, boundary windows and decision
     * state all live in one [[CtrlD]] Dataset; each round's probe set
     * is a flatMap over the active control rows, and the probed-list
@@ -348,10 +341,9 @@ object BoundedSearch {
 
   /** Per-list probe bound for the bucket-local path (see `scanRound`
     * in [[searchDistributed]]): list groups are consumed one at a time,
-    * so a task's peak state is one list's probe array — the default is
-    * 8× the cogroup's per-task bound (~40 MB peak at d=64, k=10).
-    * Override: `graft.join.maxProbesPerBucket`
-    * ([[graft.GraftConf.joinMaxProbesPerBucket]]). */
+    * so a task's peak state is one list's probe array — fixed at 8×
+    * the cogroup's per-task bound (~40 MB peak at d=64, k=10;
+    * [[graft.GraftConf.joinMaxProbesPerBucket]]). */
   private def maxProbesPerBucket: Int = graft.GraftConf.joinMaxProbesPerBucket
 
   /** Test hook: which scan route ("fused" | "cogroup") the last
@@ -645,7 +637,7 @@ object BoundedSearch {
   }
 
   /** Driver-decided rounds for every driver-collectable batch
-    * (nq ≤ [[DistributedMinQueries]]): round j scans centroid ranks
+    * ([[FlatSearch.collectable]]): round j scans centroid ranks
     * (2^(j−1), 2^j] for still-active queries only, and the per-query
     * decision state lives in the [[Decider]]'s O(nq) driver arrays. Each
     * round is exactly ONE Spark action: the probed-list partial scan

@@ -1,8 +1,9 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions
 import graft.functions.{Kernels, VectorFunctions}
 import graft.operators.TopK
 
@@ -22,6 +23,8 @@ object FlatSearch {
     *
     * @param base    (id LONG, vec ARRAY<FLOAT>) — arbitrarily large
     * @param queries (qid LONG, vec ARRAY<FLOAT>) — driver-collectable
+    *                up to the driver contract; larger batches (or
+    *                `forceDistributed`) stay in a DataFrame ([[crossTopK]])
     * @return (qid, id, dist, rank) with rank 1..k by (dist, id) asc;
     *         dist is squared-L2 for "l2", negated inner product for "ip"
     */
@@ -29,28 +32,30 @@ object FlatSearch {
           metric: String = "l2", forceDistributed: Boolean = false): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-
-    if (forceDistributed) return knnLarge(base, queries, k, metric)
-    // single-job guard: collect AT MOST the driver contract + 1 rows —
-    // small batches pay exactly the one collect they always did, and a
-    // >131k batch bails to the query-DataFrame-resident path after
-    // materializing only the bounded prefix (~36 MB at d=64), never nq
-    val qRaw: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("vec"))
-      .limit(DistributedMinQueries + 1)
-      .as[(Long, Array[Float])].collect()
-    if (qRaw.length > DistributedMinQueries)
-      return knnLarge(base, queries, k, metric)
-    val q = qRaw.sortBy(_._1)
-    val bq = spark.sparkContext.broadcast(q.map(_._2))
-    val m = metric
-    flatTopK[Array[Float]](
-      base.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])],
-      q.map(_._1), k,
-      () => {
-        val qs = bq.value
-        (i, _, vec) => Kernels.distance(m, qs(i), vec)
-      })
+    val collected =
+      if (forceDistributed) None
+      else collectable(queries.select(col("qid").cast("long"), col("vec"))
+        .as[(Long, Array[Float])])
+    collected match {
+      case None =>
+        val dist =
+          if (metric == "ip") negate(VectorExpressions.dot(col("qvec"), col("vec")))
+          else VectorExpressions.l2Sqr(col("qvec"), col("vec"))
+        crossTopK(base.select(col("id").cast("long").as("id"), col("vec")),
+          queries.select(col("qid").cast("long").as("qid"), col("vec").as("qvec")),
+          dist, k)
+      case Some(qRaw) =>
+        val q = qRaw.sortBy(_._1)
+        val bq = spark.sparkContext.broadcast(q.map(_._2))
+        val m = metric
+        flatTopK[Array[Float]](
+          base.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])],
+          q.map(_._1), k,
+          () => {
+            val qs = bq.value
+            (i, _, vec) => Kernels.distance(m, qs(i), vec)
+          })
+    }
   }
 
   /** The flat scan of every broadcast-query brute force (float, Hamming,
@@ -66,44 +71,36 @@ object FlatSearch {
   }
 
   /** The reference's own driver contract holds all queries in RAM
-    * (`Auncel/dist/worker.cpp` serves batches from memory); past this
-    * size we keep the query batch in a DataFrame instead
-    * ([[knnLarge]]) — same threshold as BoundedSearch's distributed
-    * routing ([[graft.GraftConf.distributedMinQueries]]). */
-  private def DistributedMinQueries = graft.GraftConf.distributedMinQueries
+    * (`Auncel/dist/worker.cpp` serves batches from memory): the one
+    * bounded collect of every driver-collected query batch (flat,
+    * Hamming and bounded search). At most the contract + 1 rows reach
+    * the driver — a small batch pays exactly its one collect, and a
+    * batch past the contract ([[graft.GraftConf.distributedMinQueries]])
+    * returns None after materializing only the bounded prefix, so the
+    * caller keeps the queries in a DataFrame instead. */
+  private[graft] def collectable[T](ds: Dataset[T]): Option[Array[T]] = {
+    val contract = graft.GraftConf.distributedMinQueries
+    val rows = ds.limit(contract + 1).collect()
+    if (rows.length > contract) None else Some(rows)
+  }
 
   /** Query-DataFrame-resident brute force for batches past the driver
     * contract — the flat twin of BoundedSearch's fully-distributed path
     * (reference parity: `Auncel/dist/worker.cpp:141-325` serves every
-    * search kind at any batch size). Shape: block-cartesian of base ×
-    * query partitions (the nq × N distance work is inherent to exact
-    * search), the codegen'd distance kernel scores pairs inside
+    * search kind at any batch size), shared by the float and Hamming
+    * scans. Shape: block-cartesian of `base` (id, …) × `queries`
+    * (qid, …) (the nq × N distance work is inherent to exact search),
+    * the caller's codegen'd `dist` expression scores pairs inside
     * WholeStageCodegen, and a per-task (qid → k-heap) combine bounds
-    * the shuffle to tasks × k rows per query. No per-query structure
-    * ever exists on the driver. */
-  def knnLarge(base: DataFrame, queries: DataFrame, k: Int,
-               metric: String = "l2"): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions
-    val q = queries.select(col("qid").cast("long").as("qid"),
-      col("vec").as("qvec"))
-    val b = base.select(col("id").cast("long").as("id"), col("vec"))
-    val dist =
-      if (metric == "ip") negate(VectorExpressions.dot(col("qvec"), col("vec")))
-      else VectorExpressions.l2Sqr(col("qvec"), col("vec"))
-    val scored = b.crossJoin(q)
-      .select(col("qid"), col("id"), dist.as("dist"))
-    mergeTopK(partialTopK(scored, k), k)
-  }
-
-  /** Per-task bounded-heap combine over scored (qid, id, dist) rows —
-    * the map-side-combine half of the partial-topk pattern, factored so
-    * the cartesian/join-shaped scans (knnLarge, Hamming large batches)
-    * share it. */
-  private[graft] def partialTopK(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
+    * the shuffle to tasks × k rows per query before the global merge.
+    * No per-query structure ever exists on the driver. */
+  private[graft] def crossTopK(base: DataFrame, queries: DataFrame,
+                               dist: Column, k: Int): DataFrame = {
+    val spark = base.sparkSession
     import spark.implicits._
-    scored.select(col("qid").cast("long"), col("id").cast("long"),
-        col("dist").cast("double"))
+    val partials = base.crossJoin(queries)
+      .select(col("qid").cast("long"), col("id").cast("long"),
+        dist.cast("double"))
       .as[(Long, Long, Double)]
       .mapPartitions { it =>
         val heaps = scala.collection.mutable.HashMap.empty[Long, TopK]
@@ -114,6 +111,7 @@ object FlatSearch {
           h.sorted.iterator.map { case (d, id) => (qid, id, d) }
         }
       }.toDF("qid", "id", "dist")
+    mergeTopK(partials, k)
   }
 
   /** Global top-k merge of per-partition (or per-shard) partial results —

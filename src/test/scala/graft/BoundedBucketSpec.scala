@@ -454,31 +454,30 @@ class BoundedBucketSpec extends SparkSpec {
 
   test("hot-list skew on a bucketed table falls back to the salted cogroup") {
     import spark.implicits._
-    // force tiny bounds: the join guard trips (per-bucket) and the
-    // cogroup fallback actually salts (per-task)
-    System.setProperty("graft.join.maxProbesPerBucket", "1")
-    System.setProperty("graft.cogroup.maxProbes", "4")
+    // a truly skewed batch: 32 jitters of one vector rank the same
+    // lists, so one list draws every round-0 probe. With the crossover
+    // guard zeroed, only the per-list bound (8 × cogroup.maxProbes = 8)
+    // can route the rounds away from the fused arm, and the tiny
+    // cogroup bound makes the fallback actually salt
+    val hot = pool(3150)
+    val rnd = new scala.util.Random(11)
+    val qdf = (0 until 32).map { i =>
+      (i.toLong, hot.map(x => x + 1e-3f * rnd.nextGaussian().toFloat), 0.85f)
+    }.toDF("qid", "vec", "required_recall")
+    def run() = BoundedSearch.search(spark.table(bucketedTable), model,
+      traces, qdf, k, multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
+      .results.as[(Long, Long, Double, Int)].collect().sortBy(x => (x._1, x._4))
+    System.setProperty("graft.join.minProbedRows", "0")
+    System.setProperty("graft.cogroup.maxProbes", "1")
     try {
-      val qdf = pool.slice(3150, 3182).zipWithIndex
-        .map { case (v, i) => (i.toLong, v, 0.85f) }
-        .toSeq.toDF("qid", "vec", "required_recall")
-      val r = BoundedSearch.search(spark.table(bucketedTable), model, traces,
-        qdf, k, multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-      val rSalted = r.results.as[(Long, Long, Double, Int)]
-        .collect().sortBy(x => (x._1, x._4))
+      val rSalted = run()
+      assert(BoundedSearch.lastScanRoute.get() == "cogroup")
       System.clearProperty("graft.cogroup.maxProbes")
-      System.clearProperty("graft.join.maxProbesPerBucket")
-      // zero the crossover guard so the comparison run takes the fused arm
-      System.setProperty("graft.join.minProbedRows", "0")
-      val r2 = BoundedSearch.search(spark.table(bucketedTable), model, traces,
-        qdf, k, multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
+      val rJoin = run()
       assert(BoundedSearch.lastScanRoute.get() == "fused")
-      val rJoin = r2.results.as[(Long, Long, Double, Int)]
-        .collect().sortBy(x => (x._1, x._4))
       assert(rSalted.sameElements(rJoin))
     } finally {
       System.clearProperty("graft.cogroup.maxProbes")
-      System.clearProperty("graft.join.maxProbesPerBucket")
       System.clearProperty("graft.join.minProbedRows")
     }
   }

@@ -37,6 +37,28 @@ class HNSWSpec extends SparkSpec {
 
   private def qsFor(vs: Array[Array[Float]]) = vs.take(20)
 
+  test("persisted graph schema: float and binary builds share one layout") {
+    import org.apache.spark.sql.types._
+    import graft.index.{BinaryHash, BinaryHNSW}
+    // the on-disk adjacency layout (IndexCache's hnsw2 dirs, IndexIO's
+    // saved graphs) must reload without re-keying: pin names and types
+    def shape(g: org.apache.spark.sql.DataFrame) =
+      g.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    def want(point: String, pointType: DataType) = Seq(
+      "part" -> IntegerType, "node" -> IntegerType, "id" -> LongType,
+      point -> pointType, "level" -> IntegerType,
+      "nbrs" -> ArrayType(ArrayType(IntegerType, false), true))
+    val small = vecDF(base.take(200))
+    val floatVec = ArrayType(FloatType, false)
+    assert(shape(HNSW.buildGraph(small, nParts = 2)) == want("vec", floatVec))
+    val model = graft.index.IVFIndex.train(small, 2, seed = 42L)
+    assert(shape(HNSW.buildGraphClustered(small, model)) == want("vec", floatVec))
+    val lsh = BinaryHash.trainWide(d = 24, nbits = 128, seed = 3L)
+    val sigs = BinaryHash.encodeWide(small, lsh).select(col("id"), col("sig"))
+    assert(shape(BinaryHNSW.buildGraph(sigs, nParts = 2)) ==
+      want("sig", ArrayType(LongType, false)))
+  }
+
   test("distributed partitioned HNSW: high recall, deterministic") {
     val res = HNSW.knn(baseDF, qDF, k = 10, efSearch = 96)
     val r = recallVs(res, 10)

@@ -43,7 +43,7 @@ class LargeBatchSpec extends SparkSpec {
     res.unpersist()
   }
 
-  test("forceDistributed knnLarge ≡ small path on a driver-size batch") {
+  test("forceDistributed crossTopK ≡ small path on a driver-size batch") {
     import spark.implicits._
     for (metric <- Seq("l2", "ip")) {
       val queries = spark.range(64).toDF("qid").withColumn("vec", genVec(col("qid")))

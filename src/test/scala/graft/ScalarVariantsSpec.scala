@@ -154,9 +154,9 @@ class ScalarVariantsSpec extends SparkSpec {
 
     // write -> read -> search is identical
     val path = java.nio.file.Files.createTempDirectory("bhnsw").toString + "/g"
-    BinaryHNSW.writeGraph(graph, path)
+    graft.index.HNSW.writeGraph(graph, path)
     val back = collect(BinaryHNSW.searchGraph(
-      BinaryHNSW.readGraph(spark, path), qsigs, k = 5, efSearch = 256))
+      graft.index.HNSW.readGraph(spark, path), qsigs, k = 5, efSearch = 256))
     assert(back.sameElements(exact), "persisted binary graph differs")
 
     // moderate beam: most of the exact Hamming top-k survives
