@@ -55,6 +55,23 @@ final class TopK(val k: Int) extends Serializable {
     }
   }
 
+  /** Adds every pair `o` keeps: the heap merge of two partial top-ks. */
+  def merge(o: TopK): TopK = {
+    var i = 0
+    while (i < o.n) { add(o.dists(i), o.ids(i)); i += 1 }
+    this
+  }
+
+  /** Ascending in the heap's own order: distance under IEEE `<`/`==`
+    * (so −0.0 ties 0.0), then the smaller id. That is the order of a SQL
+    * window `orderBy(dist, id)` (Spark's `compareDoubles`), so position
+    * i + 1 is the window's `row_number`; [[sorted]] instead puts −0.0
+    * before 0.0. */
+  def ranked: Array[(Double, Long)] =
+    Array.range(0, n)
+      .sortWith((a, b) => worse(dists(b), ids(b), dists(a), ids(a)))
+      .map(i => (dists(i), ids(i)))
+
   /** Sorted ascending by (dist, id). */
   def sorted: Array[(Double, Long)] = {
     val out = new Array[(Double, Long)](n)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
-import graft.index.IVFModel
+import graft.index.{IVFModel, IndexCache}
 import graft.search.IVFSearch
 import graft.profile.ErrorProfile.Trace
 
@@ -122,8 +122,9 @@ object ProfileTrainer {
     }.toArray
   }
 
-  /** One scan ([[stagedProbeMap]] slots through the shared
-    * probed-list kernel): per-partition, per (query, first-probed-stage)
+  /** One scan ([[stagedProbeMap]] slots through the resident-list scan
+    * [[IVFSearch.scanVectors]], which builds the table's resident lists on
+    * first use): per-partition, per (query, first-probed-stage)
     * bounded heaps; stage s top-k = window top-k over partials with
     * j0 ≤ s. Per-partition heap state is O(nq · levels · k), so training
     * batches beyond `chunkQueries` are processed in chunks (bounded
@@ -142,8 +143,9 @@ object ProfileTrainer {
     }
     val k = maxTopk
     val bqids = spark.sparkContext.broadcast(qVecs.map(_._1))
-    val partials = IVFSearch.scanVectors(ivfData, model.metric,
-      qVecs.map(_._2), stagedProbeMap(ranks, levels), k, levels)
+    val partials = IVFSearch.scanVectors(IndexCache.residentLists(ivfData),
+      model.metric, spark.sparkContext.broadcast(qVecs.map(_._2)),
+      stagedProbeMap(ranks, levels), k, levels)
       .mapPartitions { it =>
         val qids = bqids.value
         it.map { case (slot, id, d) => (qids(slot / levels), slot % levels, id, d) }

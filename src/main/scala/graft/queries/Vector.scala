@@ -904,7 +904,8 @@ object Vector {
   /** a01's 32 queries over the same embeddings on an nlist-128 index
     * (5 trace levels, the deep-schedule shape): like a01 (2 levels), the
     * batch routes to the DRIVER-DECIDED ROUNDS (`searchStagedDriver`) —
-    * one Spark action per adaptive round, decisions on the driver — the
+    * one RDD job per adaptive round over the table's resident lists,
+    * decisions on the driver — the
     * path every batch up to 131,072 queries takes; this row exercises
     * its deeper schedule. Same decision-replay oracle as a01 (both
     * control paths share `mergeKeep` and `decideStep`, and the replay is

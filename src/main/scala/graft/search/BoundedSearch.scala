@@ -1,9 +1,11 @@
 package graft.search
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
-import graft.index.IVFModel
+import graft.index.{IVFModel, IndexCache}
+import graft.operators.TopK
 import graft.profile.ErrorProfile
 import graft.profile.ErrorProfile.Trace
 
@@ -26,9 +28,13 @@ import graft.profile.ErrorProfile.Trace
   *    (`IndexIVF.cpp:570-598`) — staged form: a round with an unchanged
   *    worst distance counts as that round's probe count.
   *
-  * Scale shape: each round reads ONLY the newly probed lists (partition
-  * pruning) and per-partition bounded heaps shuffle `parts × nq_active × k`
-  * rows. The carried top-k (≤ k per query) lives in the [[Decider]]'s
+  * Scale shape: each round reads ONLY the newly probed lists and
+  * per-partition bounded heaps shuffle `parts × nq_active × k` rows. On
+  * the driver-decided rounds the lists are the table's resident lists
+  * ([[graft.index.IndexCache.residentLists]]), pruned to the partitions
+  * that hold a probed list; on the fully-distributed path they are the
+  * table's rows, pruned by `list_no IN (…)` (Parquet partitions or
+  * buckets). The carried top-k (≤ k per query) lives in the [[Decider]]'s
   * driver arrays on the driver-decided rounds and in the [[CtrlD]] rows on
   * the fully-distributed path — nothing per-vector ever sits on the
   * driver.
@@ -639,17 +645,21 @@ object BoundedSearch {
   /** Driver-decided rounds for every driver-collectable batch
     * ([[FlatSearch.collectable]]): round j scans centroid ranks
     * (2^(j−1), 2^j] for still-active queries only, and the per-query
-    * decision state lives in the [[Decider]]'s O(nq) driver arrays. Each
-    * round is exactly ONE Spark action: the probed-list partial scan
-    * merged to per-query round top-k (bounded collect of ≤ active × k
-    * rows); the [[Decider.advance]] stage step runs on the driver. The
-    * decided top-ks then become state rows, the finishing pass probes on
-    * from each query's decision stage to stage × multiplier, and the
-    * stats come straight out of the [[Decider]]. Decisions are
-    * bit-identical to the distributed path by construction: same
-    * rankings, same boundary windows, same [[mergeKeep]] and
-    * [[stageStep]] on the same cumulative top-k — pinned by
-    * BoundedSearchSpec's cross-path equivalence tests.
+    * decision state lives in the [[Decider]]'s O(nq) driver arrays. The
+    * table is scanned from its resident lists
+    * ([[graft.index.IndexCache.residentLists]], built once per table), and
+    * the batch's query vectors are broadcast once. Each round is exactly
+    * ONE RDD job ([[roundTopK]]: pruned scan, per-query merge, collect of
+    * ≤ active × k rows); the [[Decider.advance]] stage step runs on the
+    * driver. The finishing pass probes on from each query's decision
+    * stage to stage × multiplier in one more job of the same shape, and
+    * its top-k meets the [[Decider]]'s in one driver-side [[TopK]] per
+    * query, ranked in the SQL window's order: ≤ nq × k result rows, the
+    * rows the [[Decider]] already holds. The stats come straight out of
+    * the [[Decider]]. Decisions are bit-identical to the distributed path
+    * by construction: same rankings, same boundary windows, same
+    * [[mergeKeep]] and [[stageStep]] on the same cumulative top-k —
+    * pinned by BoundedSearchSpec's cross-path equivalence tests.
     * @param qRows (qid, vec, required_recall), collected */
   private def searchStagedDriver(ivfData: DataFrame, model: IVFModel,
       traces: Array[Trace], qRows: Array[(Long, Array[Float], Float)],
@@ -677,47 +687,72 @@ object BoundedSearch {
     }
     val decider = new Decider(qVecs.length, k, model.metric, traces, dBs,
       qVecs.map(_._3), multiplier, stdM, levels)
-    val qScan = qv.map(_._2)
+    val lists = IndexCache.residentLists(ivfData)
+    val bq = spark.sparkContext.broadcast(qv.map(_._2))
+    def scan(probeMap: Map[Int, Array[Int]]): Array[TopK] =
+      roundTopK(lists, model.metric, bq, probeMap, k, qv.length)
     var active: Seq[Int] = qVecs.indices
     var j = 0
     while (j < levels && active.nonEmpty) {
       val lo = if (j == 0) 0 else 1 << (j - 1)
       val hi = 1 << j
-      val probeMap = IVFSearch.byList(active.flatMap { qi =>
+      val heaps = scan(IVFSearch.byList(active.flatMap { qi =>
         ranks(qi).slice(lo, hi).map { case (l, _) => (l, qi) }
-      })
-      // merge partials to per-query top-k INSIDE the job so the collect
-      // is ≤ active × k rows whatever the round's fan-out; rows stay
-      // keyed by query index (the scan's slot)
-      val roundTopK = FlatSearch.mergeTopK(
-        IVFSearch.scanVectors(ivfData, model.metric, qScan, probeMap, k)
-          .toDF("qid", "id", "dist"), k)
-        .select(col("qid"), col("id"), col("dist"))
-        .as[(Int, Long, Double)].collect()
-      val byQi = roundTopK.groupBy(_._1)
+      }))
       active.foreach { qi =>
-        val rows = byQi.getOrElse(qi, Array.empty[(Int, Long, Double)])
-        decider.advance(qi, j, rows.map(_._2), rows.map(_._3))
+        val rows = Option(heaps(qi)).fold(Array.empty[(Double, Long)])(_.ranked)
+        decider.advance(qi, j, rows.map(_._2), rows.map(_._1))
       }
       active = active.filter(decider.myNprobe(_) == 0)
       j += 1
     }
 
-    var state = qv.indices.flatMap { qi =>
-      decider.topIds(qi).indices.map { x =>
-        (qv(qi)._1, decider.topIds(qi)(x), decider.topDists(qi)(x))
+    val finished = scan(finishingProbeMap(spark, model, qv, ranks,
+      shallowDepth,
+      qi => (decider.decidedStage(qi), math.min(decider.myNprobe(qi), nlist))))
+    val results = qv.indices.flatMap { qi =>
+      val h = Option(finished(qi)).getOrElse(new TopK(k))
+      decider.topIds(qi).indices.foreach { x =>
+        h.add(decider.topDists(qi)(x), decider.topIds(qi)(x))
       }
-    }.toDF("qid", "id", "dist")
-    val extraMap = finishingProbeMap(spark, model, qv, ranks, shallowDepth,
-      qi => (decider.decidedStage(qi), math.min(decider.myNprobe(qi), nlist)))
-    if (extraMap.nonEmpty)
-      state = state.unionByName(IVFSearch.keyByQid(IVFSearch.scanVectors(
-        ivfData, model.metric, qScan, extraMap, k), qv.map(_._1)))
+      h.ranked.iterator.zipWithIndex.map { case ((d, id), r) =>
+        (qv(qi)._1, id, d, r + 1)
+      }
+    }.toDF("qid", "id", "dist", "rank")
     val stats = qv.indices.map { qi =>
       QueryStats(qv(qi)._1, math.min(decider.myNprobe(qi), nlist),
         decider.predicted(qi), decider.decidedStage(qi))
     }
-    Result(FlatSearch.mergeTopK(state, k), stats)
+    Result(results, stats)
+  }
+
+  /** One driver-round job over the resident lists: the partition-pruned
+    * scan ([[IVFSearch.scanVectors]]), a per-slot merge of the partitions'
+    * heaps into one [[TopK]] per slot (a combineByKey; skipped when one
+    * partition was scanned, whose heaps are already whole), and a collect
+    * of ≤ slots × k rows, re-heaped per slot on the driver. The heaps keep
+    * the k smallest under IEEE distance, then id — the order of the SQL
+    * window ([[FlatSearch.mergeTopK]]) this merge replaces.
+    * @return slot → its heap, null where no probed list held a row */
+  private[graft] def roundTopK(lists: IndexCache.ResidentLists, metric: String,
+      qVecs: Broadcast[Array[Array[Float]]], probeMap: Map[Int, Array[Int]],
+      k: Int, nSlots: Int): Array[TopK] = {
+    val heaps = new Array[TopK](nSlots)
+    val partials = IVFSearch.scanVectors(lists, metric, qVecs, probeMap, k)
+    val n = partials.getNumPartitions
+    val merged =
+      if (n <= 1) partials
+      else partials.map { case (s, id, d) => (s, (id, d)) }
+        .combineByKey[TopK](
+          { case (id, d) => val h = new TopK(k); h.add(d, id); h },
+          { case (h, (id, d)) => h.add(d, id); h },
+          (a, b) => a.merge(b), n)
+        .flatMap { case (s, h) => h.ranked.iterator.map { case (d, id) => (s, id, d) } }
+    if (n > 0) merged.collect().foreach { case (s, id, d) =>
+      if (heaps(s) == null) heaps(s) = new TopK(k)
+      heaps(s).add(d, id)
+    }
+    heaps
   }
 
   /** Build the finishing-pass probe map from SHALLOW rankings: queries

@@ -1,5 +1,7 @@
 package graft.search
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
@@ -18,6 +20,13 @@ import graft.operators.TopK
   *  3. per-partition bounded top-k heaps per probing query (map-side
   *     combine), shuffling only `#parts × nq × k` rows;
   *  4. global merge = window rank (≡ `dist/reduce.cpp:98-119`).
+  *
+  * That DataFrame plan serves the one-shot searches ([[search]],
+  * [[searchNprobes]]) and the code-index scans ([[probedTopK]]). The
+  * repeated float scans of one table — the bounded search's driver rounds
+  * and the profile capture — go through [[scanVectors]] instead, which
+  * reads the table's resident lists from memory
+  * ([[graft.index.IndexCache.residentLists]]).
   */
 object IVFSearch {
 
@@ -87,8 +96,9 @@ object IVFSearch {
     // does for ip (scores are -dot of unit vectors there)
     val qScan = if (model.metric == "ip") q.map(v => Kernels.l2Normalize(v._2))
       else q.map(_._2)
+    val bq = ivfData.sparkSession.sparkContext.broadcast(qScan)
     probedTopK[Array[Float]](ivfData, vectorRows, model, q, k, nprobes,
-      vectorScore(ivfData.sparkSession, model.metric, qScan, 1))
+      vectorScore(model.metric, bq, 1))
   }
 
   /** Probed-list top-k search for every IVF payload — raw vectors
@@ -120,10 +130,7 @@ object IVFSearch {
     * ONE partition-pruned pass: only the probed lists are read
     * (`list_no IN (...)` → Parquet partition pruning), and each partition
     * runs [[slotTopK]] over them (map-side combine: ≤ k rows per slot per
-    * partition leave the task). A slot is whatever the caller keys a heap
-    * by: the query index for plain scans, one (query, first-probed stage)
-    * pair for the error-profile capture
-    * ([[graft.profile.ProfileTrainer]]). A NaN score rejects
+    * partition leave the task); a slot is the query index. A NaN score rejects
     * the row (the polysemous Hamming filter inside the IVFPQ scan),
     * matching the reference's filtered list scan.
     * @param probeMap list_no → the slots probing that list
@@ -194,23 +201,43 @@ object IVFSearch {
     slotTopK[R](rows.map { case (id, p) => (0, id, p) },
       Map(0 -> Array.range(0, nSlots)), nSlots, k, mkScore)
 
-  /** [[scanProbed]] over raw vectors scored by the metric distance: slot
-    * s scores `qVecs(s / slotsPerQuery)` (metric-normalized vectors). */
-  private[graft] def scanVectors(ivfData: DataFrame, metric: String,
-      qVecs: Array[Array[Float]], probeMap: Map[Int, Array[Int]], k: Int,
-      slotsPerQuery: Int = 1): Dataset[(Int, Long, Double)] =
-    scanProbed[Array[Float]](ivfData, vectorRows, probeMap, k,
-      vectorScore(ivfData.sparkSession, metric, qVecs, slotsPerQuery))
-
-  private def vectorScore(spark: org.apache.spark.sql.SparkSession,
-      metric: String, qVecs: Array[Array[Float]],
-      slotsPerQuery: Int): () => PairScore[Array[Float]] = {
-    val bq = spark.sparkContext.broadcast(qVecs)
-    () => {
-      val qs = bq.value
-      (slot, _, vec) => Kernels.distance(metric, qs(slot / slotsPerQuery), vec)
+  /** The float probed-list scan behind every driver-decided bounded-search
+    * round, its finishing pass and the error-profile capture
+    * ([[graft.profile.ProfileTrainer]]): [[slotTopK]] over the RESIDENT
+    * lists ([[graft.index.IndexCache.residentLists]]) read through a
+    * `PartitionPruningRDD`, so tasks run only for the store partitions
+    * that hold a probed list, and no Parquet is planned or decoded. Slot s
+    * scores `qVecs(s / slotsPerQuery)` (metric-normalized vectors),
+    * broadcast once by the caller.
+    * @param probeMap list_no → the slots probing that list
+    * @return (slot, id, dist) partial rows, ≤ k per slot per partition,
+    *         one partition per probed store partition */
+  private[graft] def scanVectors(lists: graft.index.IndexCache.ResidentLists,
+      metric: String, qVecs: Broadcast[Array[Array[Float]]],
+      probeMap: Map[Int, Array[Int]], k: Int,
+      slotsPerQuery: Int = 1): RDD[(Int, Long, Double)] = {
+    val sc = lists.sparkContext
+    if (probeMap.isEmpty) return sc.emptyRDD[(Int, Long, Double)]
+    val part = lists.partitioner.get
+    val probed = probeMap.keySet.map(part.getPartition)
+    val bp = sc.broadcast(probeMap)
+    val nSlots = probeMap.valuesIterator.map(_.max).max + 1
+    val score = vectorScore(metric, qVecs, slotsPerQuery)
+    PartitionPruningRDD.create(lists, probed.contains).mapPartitions { it =>
+      val pm = bp.value
+      val rows = it.filter(l => pm.contains(l._1)).flatMap {
+        case (l, (ids, vecs)) => Iterator.range(0, ids.length).map(i => (l, ids(i), vecs(i)))
+      }
+      slotTopK(rows, pm, nSlots, k, score)
     }
   }
+
+  private def vectorScore(metric: String, qVecs: Broadcast[Array[Array[Float]]],
+      slotsPerQuery: Int): () => PairScore[Array[Float]] =
+    () => {
+      val qs = qVecs.value
+      (slot, _, vec) => Kernels.distance(metric, qs(slot / slotsPerQuery), vec)
+    }
 
   /** Re-key a plain scan's partial rows (slot = index into `qids`) as
     * (qid, id, dist). */

@@ -1,6 +1,7 @@
 package graft.tools_dev
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 
 /** Dev measurement harness (guide §1): times a SUBSET of the Bench
@@ -33,16 +34,35 @@ object TimeQueries {
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
     val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long)]()
+    // a stage is named by the graft frames of its SQL execution's call
+    // site, else of its own (AQE submits query stages from its own
+    // threads, whose stage call sites carry no graft frame), else by the
+    // query whose lazy result this harness is collecting
+    @volatile var current = ""
+    val execSites = scala.collection.concurrent.TrieMap.empty[Long, String]
+    val stageExec = scala.collection.concurrent.TrieMap.empty[Int, Long]
+    def graftFrames(callSite: String): String = callSite.linesIterator
+      .filter(l => l.contains("graft.") && !l.contains("tools_dev"))
+      .take(3).mkString(" <- ")
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execSites.put(s.executionId, s.details)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => e.stageInfos.foreach(si => stageExec.put(si.stageId, id.toLong)))
+      }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = ()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         taskMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
         val m = e.stageInfo.taskMetrics
-        val site = e.stageInfo.details.linesIterator
-          .filter(l => l.contains("graft.") && !l.contains("tools_dev"))
-          .take(3).mkString(" <- ")
+        val site = stageExec.get(e.stageInfo.stageId).flatMap(execSites.get)
+          .map(graftFrames).filter(_.nonEmpty)
+          .orElse(Some(graftFrames(e.stageInfo.details)).filter(_.nonEmpty))
+          .getOrElse(s"result of $current")
         stageLog.add((f"gc=${m.jvmGCTime}%6d cpu=${m.executorCpuTime / 1000000}%6d " +
           e.stageInfo.name.takeWhile(_ != '\n').take(60) + " | " + site.take(180),
           e.stageInfo.numTasks, m.executorRunTime))
@@ -54,12 +74,14 @@ object TimeQueries {
 
     // build pass (untimed): warm artifacts exactly like Bench
     inv.foreach { case (n, fn) =>
+      current = n
       try fn(spark, sfDir).collect()
       catch { case e: Throwable => System.err.println(s"[build] $n failed: ${e.getMessage}") }
     }
 
     val topStages = sys.env.get("TQ_TOP_STAGES").map(_.toInt).getOrElse(0)
     val results = inv.map { case (n, fn) =>
+      current = n
       val secs = (1 to passes).map { p =>
         stageLog.clear()
         val j0 = jobs.get(); val s0 = stages.get(); val t0 = taskMs.get()
