@@ -321,24 +321,39 @@ object IndexCache {
     * or per-row decode. Built by one shuffle job per table per session and
     * memoized like [[listSizes]] (analyzed plan, sameResult-guarded), plus
     * the frame's `inputFiles`: a plan-equal frame over different files —
-    * the same path rewritten and read again — unpersists the old store
-    * and builds a new one, so a rewrite never serves old rows.
+    * the same path rewritten and read again — drops the old store and
+    * builds a new one, so a rewrite never serves old rows.
     *
-    * Memory: the vectors live deserialized, about n × (4d + 28) bytes —
-    * 50k × 64 is ~14 MB of heap, 10M × 128 ~5.4 GB, which spills to
-    * local disk past the storage pool. A frame that is itself cached
-    * (the `assigned` frame of [[ivf]]/[[imi]]) is held twice. [[invalidate]]
-    * and [[clear]] unpersist it. */
-  def residentLists(df: DataFrame): ResidentLists = {
+    * Memory: the vectors live deserialized, about n × (4·dim + 28) bytes
+    * (50k × 64 is ~14 MB of heap). A store is built only if that estimate
+    * fits the storage memory the block managers have free plus what the
+    * other stores hold; the least recently used stores are unpersisted to
+    * make room. A table too large for that gets None, and its scans read
+    * the table's rows, so no store is built that the pool cannot hold. A frame
+    * that is itself cached (the `assigned` frame of [[ivf]]/[[imi]]) is
+    * held twice. [[invalidate]] and [[clear]] unpersist stores.
+    * @param dim the vectors' dimension (the model's) */
+  def residentLists(df: DataFrame, dim: Int): Option[ResidentLists] = {
     val plan = df.queryExecution.analyzed
+    val h = Integer.valueOf(plan.semanticHash())
     val files = df.inputFiles.toSeq.sorted
-    residentMemo.compute(Integer.valueOf(plan.semanticHash()), { (_, old) =>
-      if (old != null && old._1.sameResult(plan) && old._2 == files) old
+    val old = residentMemo.get(h)
+    if (old != null && old.plan.sameResult(plan) && old.files == files) {
+      old.lastUse = residentClock.incrementAndGet()
+      Some(old.lists)
+    } else {
+      // a stale entry (or a colliding plan's) is dropped before the build,
+      // so the map never holds a store that is unpersisted or stale
+      if (old != null) dropResident(h, old)
+      val bytes = df.count() * (4L * dim + 28)
+      if (!makeRoom(df.sparkSession.sparkContext, bytes)) None
       else {
-        if (old != null) old._3.unpersist()
-        (plan, files, buildResident(df))
+        val store = new Resident(plan, files, buildResident(df), bytes)
+        val raced = residentMemo.put(h, store)
+        if (raced != null) raced.lists.unpersist()
+        Some(store.lists)
       }
-    })._3
+    }
   }
 
   /** (list_no, (ids ascending, vectors)) under a list_no partitioner. */
@@ -365,12 +380,56 @@ object IndexCache {
     lists
   }
 
+  /** Unpersists least-recently-used stores until `bytes` more fit the
+    * [[storePool]]; false, evicting nothing, when `bytes` alone exceeds
+    * it. Builds run outside this lock, so two concurrent builds can
+    * overshoot the pool by one store until the next call evicts. */
+  private def makeRoom(sc: org.apache.spark.SparkContext,
+                       bytes: Long): Boolean = residentMemo.synchronized {
+    import scala.jdk.CollectionConverters._
+    def held = residentMemo.values.asScala.map(_.bytes).sum
+    val pool = storePool(sc)
+    if (bytes > pool) false
+    else {
+      var over = held + bytes > pool
+      while (over) {
+        val lru = residentMemo.entrySet.asScala.toSeq
+        if (lru.isEmpty) over = false
+        else {
+          val e = lru.minBy(_.getValue.lastUse)
+          dropResident(e.getKey, e.getValue)
+          over = held + bytes > pool
+        }
+      }
+      true
+    }
+  }
+
+  /** Storage memory the stores may fill: what the block managers have
+    * free plus what the memoized stores hold. Specs pin a smaller pool
+    * to exercise eviction. */
+  private[graft] var storePool: org.apache.spark.SparkContext => Long = { sc =>
+    import scala.jdk.CollectionConverters._
+    sc.getExecutorMemoryStatus.valuesIterator.map(_._2).sum +
+      residentMemo.values.asScala.map(_.bytes).sum
+  }
+
+  /** Removes `store` if it is still the entry at `h`, then unpersists it. */
+  private def dropResident(h: Integer, store: Resident): Unit =
+    if (residentMemo.remove(h, store)) store.lists.unpersist(blocking = true)
+
   /** RDD name of every resident store (specs find them by it). */
   private[graft] val ResidentName = "graft.residentLists"
 
-  private val residentMemo = new ConcurrentHashMap[Integer,
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Seq[String],
-      ResidentLists)]()
+  private final class Resident(
+      val plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      val files: Seq[String], val lists: ResidentLists, val bytes: Long) {
+    @volatile var lastUse: Long = residentClock.incrementAndGet()
+  }
+
+  private val residentClock = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private val residentMemo = new ConcurrentHashMap[Integer, Resident]()
 
   /** Drop one memoized size map — the targeted form of [[clear]] for
     * when the corpus is rewritten under the same path mid-session
@@ -387,9 +446,7 @@ object IndexCache {
     val h = Integer.valueOf(plan.semanticHash())
     listSizeMemo.remove(h)
     val store = residentMemo.get(h)
-    if (store != null && store._1.sameResult(plan) &&
-        residentMemo.remove(h, store))
-      store._3.unpersist()
+    if (store != null && store.plan.sameResult(plan)) dropResident(h, store)
     // sameResult guard: on a hash collision the stored entry may belong
     // to a DIFFERENT plan — deleting that plan's sidecar would orphan its
     // persisted sizes while leaving this plan's stale ones alive. Only
@@ -416,7 +473,6 @@ object IndexCache {
     models.clear(); graphs.clear(); traces.clear(); frames.clear()
     pqModels.clear(); objects.clear(); sizeSidecars.clear()
     listSizeMemo.clear()
-    residentMemo.values.forEach(_._3.unpersist())
-    residentMemo.clear()
+    residentMemo.forEach((h, store) => dropResident(h, store))
   }
 }

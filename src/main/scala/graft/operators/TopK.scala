@@ -65,18 +65,9 @@ final class TopK(val k: Int) extends Serializable {
   /** Ascending in the heap's own order: distance under IEEE `<`/`==`
     * (so −0.0 ties 0.0), then the smaller id. That is the order of a SQL
     * window `orderBy(dist, id)` (Spark's `compareDoubles`), so position
-    * i + 1 is the window's `row_number`; [[sorted]] instead puts −0.0
-    * before 0.0. */
-  def ranked: Array[(Double, Long)] =
+    * i + 1 is the window's `row_number`. */
+  def sorted: Array[(Double, Long)] =
     Array.range(0, n)
       .sortWith((a, b) => worse(dists(b), ids(b), dists(a), ids(a)))
       .map(i => (dists(i), ids(i)))
-
-  /** Sorted ascending by (dist, id). */
-  def sorted: Array[(Double, Long)] = {
-    val out = new Array[(Double, Long)](n)
-    var i = 0
-    while (i < n) { out(i) = (dists(i), ids(i)); i += 1 }
-    out.sortBy { case (d, id) => (d, id) }
-  }
 }

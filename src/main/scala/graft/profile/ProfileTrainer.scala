@@ -122,10 +122,10 @@ object ProfileTrainer {
     }.toArray
   }
 
-  /** One scan ([[stagedProbeMap]] slots through the resident-list scan
-    * [[IVFSearch.scanVectors]], which builds the table's resident lists on
-    * first use): per-partition, per (query, first-probed-stage)
-    * bounded heaps; stage s top-k = window top-k over partials with
+  /** One scan ([[stagedProbeMap]] slots through [[IVFSearch.scanVectors]]
+    * over the table's resident lists, built on first use when they fit in
+    * storage memory, else over its rows): per-partition, per (query,
+    * first-probed-stage) bounded heaps; stage s top-k = window top-k over partials with
     * j0 ≤ s. Per-partition heap state is O(nq · levels · k), so training
     * batches beyond `chunkQueries` are processed in chunks (bounded
     * memory, one extra scan per chunk) and unioned. */
@@ -143,8 +143,9 @@ object ProfileTrainer {
     }
     val k = maxTopk
     val bqids = spark.sparkContext.broadcast(qVecs.map(_._1))
-    val partials = IVFSearch.scanVectors(IndexCache.residentLists(ivfData),
-      model.metric, spark.sparkContext.broadcast(qVecs.map(_._2)),
+    val partials = IVFSearch.scanVectors(ivfData,
+      IndexCache.residentLists(ivfData, model.dim), model.metric,
+      spark.sparkContext.broadcast(qVecs.map(_._2)),
       stagedProbeMap(ranks, levels), k, levels)
       .mapPartitions { it =>
         val qids = bqids.value

@@ -32,9 +32,10 @@ import graft.profile.ErrorProfile.Trace
   * per-partition bounded heaps shuffle `parts × nq_active × k` rows. On
   * the driver-decided rounds the lists are the table's resident lists
   * ([[graft.index.IndexCache.residentLists]]), pruned to the partitions
-  * that hold a probed list; on the fully-distributed path they are the
-  * table's rows, pruned by `list_no IN (…)` (Parquet partitions or
-  * buckets). The carried top-k (≤ k per query) lives in the [[Decider]]'s
+  * that hold a probed list, when they fit in storage memory; otherwise,
+  * and on the fully-distributed path, they are the table's rows, pruned
+  * by `list_no IN (…)` (Parquet partitions or buckets). The carried top-k
+  * (≤ k per query) lives in the [[Decider]]'s
   * driver arrays on the driver-decided rounds and in the [[CtrlD]] rows on
   * the fully-distributed path — nothing per-vector ever sits on the
   * driver.
@@ -647,8 +648,9 @@ object BoundedSearch {
     * (2^(j−1), 2^j] for still-active queries only, and the per-query
     * decision state lives in the [[Decider]]'s O(nq) driver arrays. The
     * table is scanned from its resident lists
-    * ([[graft.index.IndexCache.residentLists]], built once per table), and
-    * the batch's query vectors are broadcast once. Each round is exactly
+    * ([[graft.index.IndexCache.residentLists]], built once per table) when
+    * they fit in storage memory, else from its rows, and the batch's query
+    * vectors are broadcast once. Each round is exactly
     * ONE RDD job ([[roundTopK]]: pruned scan, per-query merge, collect of
     * ≤ active × k rows); the [[Decider.advance]] stage step runs on the
     * driver. The finishing pass probes on from each query's decision
@@ -687,10 +689,10 @@ object BoundedSearch {
     }
     val decider = new Decider(qVecs.length, k, model.metric, traces, dBs,
       qVecs.map(_._3), multiplier, stdM, levels)
-    val lists = IndexCache.residentLists(ivfData)
+    val lists = IndexCache.residentLists(ivfData, model.dim)
     val bq = spark.sparkContext.broadcast(qv.map(_._2))
     def scan(probeMap: Map[Int, Array[Int]]): Array[TopK] =
-      roundTopK(lists, model.metric, bq, probeMap, k, qv.length)
+      roundTopK(ivfData, lists, model.metric, bq, probeMap, k, qv.length)
     var active: Seq[Int] = qVecs.indices
     var j = 0
     while (j < levels && active.nonEmpty) {
@@ -700,7 +702,7 @@ object BoundedSearch {
         ranks(qi).slice(lo, hi).map { case (l, _) => (l, qi) }
       }))
       active.foreach { qi =>
-        val rows = Option(heaps(qi)).fold(Array.empty[(Double, Long)])(_.ranked)
+        val rows = Option(heaps(qi)).fold(Array.empty[(Double, Long)])(_.sorted)
         decider.advance(qi, j, rows.map(_._2), rows.map(_._1))
       }
       active = active.filter(decider.myNprobe(_) == 0)
@@ -715,7 +717,7 @@ object BoundedSearch {
       decider.topIds(qi).indices.foreach { x =>
         h.add(decider.topDists(qi)(x), decider.topIds(qi)(x))
       }
-      h.ranked.iterator.zipWithIndex.map { case ((d, id), r) =>
+      h.sorted.iterator.zipWithIndex.map { case ((d, id), r) =>
         (qv(qi)._1, id, d, r + 1)
       }
     }.toDF("qid", "id", "dist", "rank")
@@ -726,19 +728,22 @@ object BoundedSearch {
     Result(results, stats)
   }
 
-  /** One driver-round job over the resident lists: the partition-pruned
-    * scan ([[IVFSearch.scanVectors]]), a per-slot merge of the partitions'
+  /** One driver-round job: the probed-list scan ([[IVFSearch.scanVectors]],
+    * partition-pruned over the resident lists when the table has them,
+    * else over its rows), a per-slot merge of the partitions'
     * heaps into one [[TopK]] per slot (a combineByKey; skipped when one
     * partition was scanned, whose heaps are already whole), and a collect
     * of ≤ slots × k rows, re-heaped per slot on the driver. The heaps keep
     * the k smallest under IEEE distance, then id — the order of the SQL
     * window ([[FlatSearch.mergeTopK]]) this merge replaces.
     * @return slot → its heap, null where no probed list held a row */
-  private[graft] def roundTopK(lists: IndexCache.ResidentLists, metric: String,
+  private[graft] def roundTopK(ivfData: DataFrame,
+      lists: Option[IndexCache.ResidentLists], metric: String,
       qVecs: Broadcast[Array[Array[Float]]], probeMap: Map[Int, Array[Int]],
       k: Int, nSlots: Int): Array[TopK] = {
     val heaps = new Array[TopK](nSlots)
-    val partials = IVFSearch.scanVectors(lists, metric, qVecs, probeMap, k)
+    val partials = IVFSearch.scanVectors(ivfData, lists, metric, qVecs,
+      probeMap, k)
     val n = partials.getNumPartitions
     val merged =
       if (n <= 1) partials
@@ -747,7 +752,7 @@ object BoundedSearch {
           { case (id, d) => val h = new TopK(k); h.add(d, id); h },
           { case (h, (id, d)) => h.add(d, id); h },
           (a, b) => a.merge(b), n)
-        .flatMap { case (s, h) => h.ranked.iterator.map { case (d, id) => (s, id, d) } }
+        .flatMap { case (s, h) => h.sorted.iterator.map { case (d, id) => (s, id, d) } }
     if (n > 0) merged.collect().foreach { case (s, id, d) =>
       if (heaps(s) == null) heaps(s) = new TopK(k)
       heaps(s).add(d, id)

@@ -26,7 +26,8 @@ import graft.operators.TopK
   * repeated float scans of one table — the bounded search's driver rounds
   * and the profile capture — go through [[scanVectors]] instead, which
   * reads the table's resident lists from memory
-  * ([[graft.index.IndexCache.residentLists]]).
+  * ([[graft.index.IndexCache.residentLists]]) when they fit in storage
+  * memory.
   */
 object IVFSearch {
 
@@ -130,7 +131,10 @@ object IVFSearch {
     * ONE partition-pruned pass: only the probed lists are read
     * (`list_no IN (...)` → Parquet partition pruning), and each partition
     * runs [[slotTopK]] over them (map-side combine: ≤ k rows per slot per
-    * partition leave the task); a slot is the query index. A NaN score rejects
+    * partition leave the task). A slot is whatever the caller keys a heap
+    * by: the query index for plain scans, one (query, first-probed stage)
+    * pair for the error-profile capture
+    * ([[graft.profile.ProfileTrainer]]). A NaN score rejects
     * the row (the polysemous Hamming filter inside the IVFPQ scan),
     * matching the reference's filtered list scan.
     * @param probeMap list_no → the slots probing that list
@@ -203,32 +207,39 @@ object IVFSearch {
 
   /** The float probed-list scan behind every driver-decided bounded-search
     * round, its finishing pass and the error-profile capture
-    * ([[graft.profile.ProfileTrainer]]): [[slotTopK]] over the RESIDENT
-    * lists ([[graft.index.IndexCache.residentLists]]) read through a
-    * `PartitionPruningRDD`, so tasks run only for the store partitions
-    * that hold a probed list, and no Parquet is planned or decoded. Slot s
+    * ([[graft.profile.ProfileTrainer]]): [[slotTopK]] over the table's
+    * RESIDENT lists when it has them ([[graft.index.IndexCache.residentLists]]),
+    * read through a `PartitionPruningRDD`, so tasks run only for the store
+    * partitions that hold a probed list and no Parquet is planned or
+    * decoded; else over the table's rows ([[scanProbed]]'s `list_no IN (…)`
+    * pass). Both feed the same rows to the same scores and heaps. Slot s
     * scores `qVecs(s / slotsPerQuery)` (metric-normalized vectors),
     * broadcast once by the caller.
     * @param probeMap list_no → the slots probing that list
-    * @return (slot, id, dist) partial rows, ≤ k per slot per partition,
-    *         one partition per probed store partition */
-  private[graft] def scanVectors(lists: graft.index.IndexCache.ResidentLists,
-      metric: String, qVecs: Broadcast[Array[Array[Float]]],
-      probeMap: Map[Int, Array[Int]], k: Int,
-      slotsPerQuery: Int = 1): RDD[(Int, Long, Double)] = {
-    val sc = lists.sparkContext
-    if (probeMap.isEmpty) return sc.emptyRDD[(Int, Long, Double)]
-    val part = lists.partitioner.get
-    val probed = probeMap.keySet.map(part.getPartition)
-    val bp = sc.broadcast(probeMap)
-    val nSlots = probeMap.valuesIterator.map(_.max).max + 1
+    * @return (slot, id, dist) partial rows, ≤ k per slot per partition */
+  private[graft] def scanVectors(ivfData: DataFrame,
+      lists: Option[graft.index.IndexCache.ResidentLists], metric: String,
+      qVecs: Broadcast[Array[Array[Float]]], probeMap: Map[Int, Array[Int]],
+      k: Int, slotsPerQuery: Int = 1): RDD[(Int, Long, Double)] = {
     val score = vectorScore(metric, qVecs, slotsPerQuery)
-    PartitionPruningRDD.create(lists, probed.contains).mapPartitions { it =>
-      val pm = bp.value
-      val rows = it.filter(l => pm.contains(l._1)).flatMap {
-        case (l, (ids, vecs)) => Iterator.range(0, ids.length).map(i => (l, ids(i), vecs(i)))
-      }
-      slotTopK(rows, pm, nSlots, k, score)
+    lists match {
+      case None => scanProbed[Array[Float]](ivfData, vectorRows, probeMap, k,
+        score).rdd
+      case Some(store) =>
+        val sc = store.sparkContext
+        if (probeMap.isEmpty) return sc.emptyRDD[(Int, Long, Double)]
+        val part = store.partitioner.get
+        val probed = probeMap.keySet.map(part.getPartition)
+        val bp = sc.broadcast(probeMap)
+        val nSlots = probeMap.valuesIterator.map(_.max).max + 1
+        PartitionPruningRDD.create(store, probed.contains).mapPartitions { it =>
+          val pm = bp.value
+          val rows = it.filter(l => pm.contains(l._1)).flatMap {
+            case (l, (ids, vecs)) =>
+              Iterator.range(0, ids.length).map(i => (l, ids(i), vecs(i)))
+          }
+          slotTopK(rows, pm, nSlots, k, score)
+        }
     }
   }
 

@@ -195,6 +195,10 @@ object ScaleDemo {
     println(f"bounded search batch ($nBig queries): ${tBig}%.2fs = " +
       f"${tBig * 1000 / nBig}%.1f ms/query amortized, " +
       f"mean nprobe ${pBig.sum.toDouble / pBig.size}%.1f/$nlist")
+    // the store is built only when it fits the free storage memory
+    // (IndexCache.residentLists); 0 means every scan read the Parquet rows
+    println("resident-list stores held: " + spark.sparkContext
+      .getPersistentRDDs.values.count(_.name == graft.index.IndexCache.ResidentName))
 
     // SCALE_ONLY=bounded skips the codec/HNSW/dedup sections — for
     // focused reruns of the adaptive-batch ladder (e.g. the 1M-query

@@ -13,8 +13,9 @@ import graft.search.{BoundedSearch, FlatSearch}
 /** The resident inverted lists behind the driver-decided bounded-search
   * rounds ([[IndexCache.residentLists]]): a rewritten table is never
   * served from its old store, the per-slot merges keep the SQL window's
-  * order, and a round launches tasks only for the store partitions that
-  * hold its probed lists. */
+  * order, a round launches tasks only for the store partitions that
+  * hold its probed lists, the stores stay within their storage pool, and
+  * a table with no store is scanned from its rows to the same answer. */
 class ResidentListsSpec extends SparkSpec {
 
   val d = 16
@@ -87,7 +88,7 @@ class ResidentListsSpec extends SparkSpec {
         def heap(xs: Seq[(Long, Long, Double)]) = {
           val h = new TopK(kk); xs.foreach(x => h.add(x._3, x._2)); h
         }
-        heap(a).merge(heap(b)).ranked.zipWithIndex.map { case ((dist, id), r) =>
+        heap(a).merge(heap(b)).sorted.zipWithIndex.map { case ((dist, id), r) =>
           (q, r + 1, id, java.lang.Double.doubleToRawLongBits(dist))
         }
       }
@@ -166,7 +167,7 @@ class ResidentListsSpec extends SparkSpec {
     val base = clusteredVecs(1500, d, 12, seed = 13)
     val model = IVFIndex.train(vecDF(base), nlist, seed = 42L)
     val assigned = IVFIndex.assign(vecDF(base), model).cache()
-    val lists = IndexCache.residentLists(assigned)
+    val lists = IndexCache.residentLists(assigned, d).get
     val part = lists.partitioner.get
     assert(part.numPartitions == spark.sparkContext.defaultParallelism)
     val listOf = base.map(model.assignListNo)
@@ -177,12 +178,12 @@ class ResidentListsSpec extends SparkSpec {
       val h = new TopK(k)
       base.indices.filter(i => probed(listOf(i)))
         .foreach(i => h.add(Kernels.l2Sqr(q, base(i)), i.toLong))
-      h.ranked.toSeq
+      h.sorted.toSeq
     }
     def probeMap(probed: Set[Int]) =
       probed.map(l => l -> qVecs.indices.toArray).toMap
-    def heaps(probed: Set[Int]) = BoundedSearch.roundTopK(lists, "l2", bq,
-      probeMap(probed), k, qVecs.length).toSeq.map(h => h.ranked.toSeq)
+    def heaps(probed: Set[Int]) = BoundedSearch.roundTopK(assigned,
+      Some(lists), "l2", bq, probeMap(probed), k, qVecs.length).toSeq.map(h => h.sorted.toSeq)
 
     val onePart = (0 until nlist).filter(part.getPartition(_) == 0).toSet
     assert(onePart.size >= 2, "the case needs two lists in one partition")
@@ -196,5 +197,70 @@ class ResidentListsSpec extends SparkSpec {
     assert(jobs == 1 && tasks == 4,
       s"a two-partition round: $jobs jobs, $tasks tasks (2 scan + 2 merge)")
     assert(got == exact(twoParts))
+  }
+
+  /** Runs `body` with the stores' storage pool pinned to `bytes`. */
+  private def withPool[T](bytes: Long)(body: => T): T = {
+    val saved = IndexCache.storePool
+    IndexCache.storePool = _ => bytes
+    try body finally IndexCache.storePool = saved
+  }
+
+  test("stores stay within the storage pool, least recently used evicted first") {
+    IndexCache.clear()
+    val n = 1500
+    val bytes = n * (4L * d + 28)
+    val model = IVFIndex.train(vecDF(clusteredVecs(n, d, 12, seed = 3)),
+      nlist, seed = 42L)
+    val tables = (20 until 25).map { s =>
+      IVFIndex.assign(vecDF(clusteredVecs(n, d, 12, seed = s)), model) }
+    def store(t: Int) = IndexCache.residentLists(tables(t), d)
+    withPool(bytes * 5 / 2) {
+      tables.indices.foreach { t =>
+        assert(store(t).isDefined, s"table $t fits the pool")
+        assert(stores <= 2, s"after table $t: $stores stores in a two-store pool")
+      }
+      // tables 3 and 4 are held; touching 3 leaves 4 least recently used,
+      // so rebuilding table 0 must evict 4 and keep 3
+      val held3 = store(3).get.id
+      assert(store(0).isDefined && stores == 2)
+      assert(store(3).get.id == held3, "the recently used store was evicted")
+      assert(spark.sparkContext.getPersistentRDDs.contains(held3))
+    }
+    withPool(bytes / 2) {
+      assert(store(1).isEmpty, "a store larger than the pool must not be built")
+      assert(stores == 2, "a store that cannot fit must evict nothing")
+    }
+    IndexCache.clear()
+    assert(stores == 0)
+  }
+
+  test("a table with no store is scanned from its rows: same traces, rows and stats") {
+    import spark.implicits._
+    IndexCache.clear()
+    val base = clusteredVecs(2000, d, 12, seed = 15)
+    val model = IVFIndex.train(vecDF(base), nlist, seed = 42L)
+    val assigned = IVFIndex.assign(vecDF(base), model).cache()
+    val tq = vecDF(clusteredVecs(2100, d, 12, seed = 15).drop(2000), "qid")
+    val gt = FlatSearch.knn(vecDF(base), tq, k)
+    val qdf = clusteredVecs(40, d, 12, seed = 16).zipWithIndex
+      .map { case (v, i) => (i.toLong, v, 0.85f) }
+      .toSeq.toDF("qid", "vec", "required_recall")
+    def run() = {
+      val traces = ProfileTrainer.train(assigned, model, tq, gt, maxTopk = k,
+        bs = 50)
+      val r = BoundedSearch.search(assigned, model, traces, qdf, k,
+        multiplier = 2f, stdM = 1.0f)
+      (traces.map(t => (t.nprobe, t.phis.toSeq, t.us.toSeq, t.stds.toSeq)).toSeq,
+        rows(r.results), r.stats.sortBy(_.qid))
+    }
+    val fromRows = withPool(0L)(run())
+    assert(stores == 0, "a zero pool must build no store")
+    val fromStore = run()
+    assert(stores == 1)
+    assert(fromStore._1 == fromRows._1, "profile traces differ between the scans")
+    assert(fromStore._2 == fromRows._2, "rows differ between the scans")
+    assert(fromStore._3 == fromRows._3, "stats differ between the scans")
+    IndexCache.clear()
   }
 }
