@@ -11,8 +11,7 @@ package graft
   * | property | default | governs |
   * |---|---|---|
   * | `graft.distributed.minQueries` | 131072 | batch size beyond which queries stay in a DataFrame end-to-end (BoundedSearch's distributed rounds; FlatSearch / BinaryHash `crossTopK`); the one bounded collect is `FlatSearch.collectable` |
-  * | `graft.cogroup.maxProbes` | 8192 | per-task probe bound of the salted cogroup scan; hot lists beyond it are salted across sub-keys. The fused bucket-local scan's per-LIST bound is fixed at 8× this (its tasks stream one list group at a time) |
-  * | `graft.join.minProbedRows` | 28000000 | probed data rows per round (the sum of the probed lists' sizes, from index metadata) below which the fused bucket-local arm is skipped in favor of the salted cogroup — the measured post-fix crossover (see [[fusedMinProbedRows]]); 0 forces the fused arm wherever the layout allows it |
+  * | `graft.cogroup.maxProbes` | 8192 | per-task probe bound of the salted cogroup scan, the distributed rounds' one scan; hot lists beyond it are salted across sub-keys |
   * | `graft.stream.statePartitions` | max(8, cores/4) | state-store partition count pinned into stateful streaming queries' checkpoints at stream start ([[streamStatePartitions]]) |
   * | `graft.components.driverMaxEdges` | 2²¹ | largest edge set [[graft.ops.Components.connectedComponents]] resolves with the one-collect driver union-find arm; 0 disables the driver arm ([[componentsDriverMaxEdges]]) |
   * | `graft.prepare.materializeMaxBytes` | 4 GiB | largest corpus input (leaf parquet bytes) for which [[graft.ops.PreparePipeline]] materializes its dedup-chain intermediates once instead of re-scanning per consumer; 0 disables ([[prepareMaterializeMaxBytes]]) |
@@ -20,7 +19,7 @@ package graft
 object GraftConf {
 
   // Fail fast, naming the offending key: a malformed override (e.g.
-  // -Dgraft.join.minProbedRows=28M) should abort at startup-adjacent
+  // -Dgraft.prepare.materializeMaxBytes=4G) should abort at startup-adjacent
   // first use with a clear message, not surface as a bare
   // NumberFormatException deep inside a search round.
   private def parsed[T](key: String, raw: String, parse: String => T): T =
@@ -51,38 +50,6 @@ object GraftConf {
     * vector + one TopK heap per probe); this caps how many probes one
     * task may hold before the list is salted across sub-keys. */
   def cogroupMaxProbes: Int = intProp("graft.cogroup.maxProbes", 8192)
-
-  /** Per-list probe bound for the fused bucket-local scan: list groups
-    * are consumed one at a time, so a task's peak state is ONE list's
-    * probe array — fixed at 8× the cogroup's per-task bound (~40 MB
-    * peak at d=64, k=10); not a property of its own. */
-  def joinMaxProbesPerBucket: Int = 8 * cogroupMaxProbes
-
-  /** The measured crossover guard: the fused bucket-local arm only wins
-    * once a round scans enough data rows to amortize its coarser task
-    * granularity — below this estimate the salted cogroup's finer load
-    * balancing wins even on a fused-eligible layout.
-    *
-    * Measurement history, because the default moved once already: the
-    * r9 sweep put the crossover near 10M rows and this guard first
-    * shipped at 5M. The r10 task-time instrumentation then found a
-    * serialized control-build stage inflating BOTH arms of that sweep
-    * (fixed in `searchDistributed`); re-measured post-fix at the same
-    * configs, the cogroup wins 2.5M (1.49× fused), while the fused arm
-    * clearly wins the 40M point (2.60 vs 3.56 ms/q, 45% fewer shuffle
-    * bytes) — `tools/evidence/r10_scale_ab_{2m5,20m100k,20m_named,
-    * 40m100k}.log`. The 20M point is PARITY: three quiet-host readings
-    * of fused/cogroup wall-clock 1.29× / 1.02× / 0.99× (the third:
-    * `r11_scale_ab_20m_third.log`), geometric mean 1.09× — the
-    * crossover sits at-to-just-above 20M, and near it either route
-    * costs ≤5% of the other while fused saves ~61% of shuffle bytes,
-    * so a point threshold (no hysteresis) is the right shape: the
-    * penalty surface is flat where the decision is uncertain. Default
-    * = the geometric mean of the 20M/40M points. On a network-bound
-    * cluster the fused arm's 45–78% shuffle-byte reduction argues for
-    * LOWERING this; local wall-clock argues for nothing below ~20M. */
-  def fusedMinProbedRows: Long =
-    longProp("graft.join.minProbedRows", 28000000L)
 
   /** State-store partition count for the STATEFUL streaming queries —
     * the session's shuffle-partition setting at stream start, which

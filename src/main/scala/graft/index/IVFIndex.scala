@@ -129,59 +129,6 @@ object IVFIndex {
     assigned.repartition(col("list_no"))
       .write.mode("overwrite").partitionBy("list_no").parquet(path)
 
-  /** Write the inverted-file table BUCKETED by `list_no` (managed table,
-    * `bucketBy` is saveAsTable-only). On a bucketed table the
-    * fully-distributed bounded search scans lists via a bucket-local
-    * join — the per-round data-side shuffle drops out entirely
-    * ([[graft.search.BoundedSearch]] `scanListsJoin`). The repartition
-    * uses the same Murmur3 hash partitioning as the bucket layout, so
-    * each task holds exactly one bucket → ONE sorted file per bucket
-    * (which also lets the bucket-local cogroup skip the data-side
-    * sort when the scan can report its ordering).
-    *
-    * `nBuckets` sets the SCAN-TASK granularity of every future join —
-    * it is a layout knob, NOT nlist: the list→bucket mapping is
-    * many-to-one and harmless to the join. Size buckets ≥ ~100 MB;
-    * nBuckets = nlist on a 10M corpus produced 2.5 MB buckets and the
-    * per-round stages drowned in task overhead (measured 2.6× SLOWER
-    * than the cogroup despite 7 GiB less shuffle — NOTES_r7).
-    * Overwrite replaces a REGISTERED table; with the default in-memory
-    * catalog an orphaned warehouse directory from a previous session
-    * must be dropped first (LOCATION_ALREADY_EXISTS). */
-  def writeBucketed(assigned: DataFrame, table: String, nBuckets: Int): Unit =
-    assigned.repartition(nBuckets, col("list_no"))
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "list_no").sortBy("list_no")
-      .saveAsTable(table)
-
-  /** Memory-resident serving layout: the assigned corpus repartitioned
-    * on `list_no` and cached, so the distributed bounded search's
-    * per-round list scan is an Exchange-free bucket-local fused cogroup
-    * ([[graft.search.BoundedSearch]] detects the distribution via the
-    * cached plan's HashPartitioning) — the deployment where index
-    * shards live hot in executor memory, as the reference's distributed
-    * workers hold their inverted lists resident (`dist/worker.cpp`).
-    * The cache plan is built with AQE off: an adaptive cached plan
-    * reports UnknownPartitioning to consumers, which would silently
-    * re-add the per-round data-side shuffle this layout exists to
-    * remove. The caller must trigger materialization (any action) and
-    * owns `unpersist()`. */
-  def residentByList(assigned: DataFrame, nParts: Int): DataFrame = {
-    val spark = assigned.sparkSession
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // sortWithinPartitions gives each cached batch a tight
-      // [min,max] list_no stat, so small/skewed probe sets prune
-      // batches; SortExec forwards the child's HashPartitioning, so
-      // the Exchange-free join detection is unaffected
-      val mem = assigned.repartition(nParts, col("list_no"))
-        .sortWithinPartitions("list_no").cache()
-      mem.count() // materialize while the non-adaptive plan is pinned
-      mem
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
   def saveModel(model: IVFModel, path: String, spark: SparkSession): Unit = {
     import spark.implicits._
     model.centroids.zipWithIndex

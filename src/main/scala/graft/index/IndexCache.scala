@@ -80,11 +80,10 @@ object IndexCache {
       (model, assigned)
     })
 
-  /** The per-list sizes are LAYOUT metadata (they size the bounded
-    * search's fused/cogroup routing and the semantic-dedup oversized-list
-    * guard), so they persist beside the model. A reload whose
-    * `_list_sizes` sidecar passes trailer verification SEEDS the
-    * [[listSizes]] memo, so its first distributed search or
+  /** The per-list sizes are LAYOUT metadata (they arm the semantic-dedup
+    * oversized-list guard), so they persist beside the model. A reload
+    * whose `_list_sizes` sidecar passes trailer verification SEEDS the
+    * [[listSizes]] memo, so its first
     * [[graft.ops.EmbeddingDedup.ivfPairs]] call runs zero metadata jobs
     * before real work. Every other build or reload — a fresh build, a
     * directory without the sidecar, or one whose sidecar fails
@@ -267,12 +266,11 @@ object IndexCache {
     * value). One `groupBy(list_no).count()` job per distinct table per
     * session; frames assigned through [[ivf]]/[[imi]] pay it at most once
     * per model directory — the build writes a `_list_sizes` sidecar
-    * beside the model and reloads seed this memo from it. Consumers: the
+    * beside the model and reloads seed this memo from it. Consumer: the
     * semantic-dedup oversized-list guard
     * ([[graft.ops.EmbeddingDedup.ivfPairs]], which otherwise re-audited
-    * the corpus per call) and the bounded-search fused/cogroup
-    * crossover's probed-volume estimate. The map is nlist-sized
-    * (≤ ~10⁵ entries) — driver-trivial.
+    * the corpus per call). The map is nlist-sized (≤ ~10⁵ entries) —
+    * driver-trivial.
     *
     * Contract: sizes are LAYOUT metadata, like every artifact in this
     * cache — rewriting the data under the same path in a live session
@@ -329,7 +327,9 @@ object IndexCache {
     * fits the storage memory the block managers have free plus what the
     * other stores hold; the least recently used stores are unpersisted to
     * make room. A table too large for that gets None, and its scans read
-    * the table's rows, so no store is built that the pool cannot hold. A frame
+    * the table's rows, so no store is built that the pool cannot hold. The
+    * row count behind the estimate is memoized under the store's key, so
+    * such a table is counted once, not on every call. A frame
     * that is itself cached (the `assigned` frame of [[ivf]]/[[imi]]) is
     * held twice. [[invalidate]] and [[clear]] unpersist stores.
     * @param dim the vectors' dimension (the model's) */
@@ -345,7 +345,7 @@ object IndexCache {
       // a stale entry (or a colliding plan's) is dropped before the build,
       // so the map never holds a store that is unpersisted or stale
       if (old != null) dropResident(h, old)
-      val bytes = df.count() * (4L * dim + 28)
+      val bytes = rowCount(df, h, plan, files) * (4L * dim + 28)
       if (!makeRoom(df.sparkSession.sparkContext, bytes)) None
       else {
         val store = new Resident(plan, files, buildResident(df), bytes)
@@ -355,6 +355,26 @@ object IndexCache {
       }
     }
   }
+
+  /** `df.count()`, memoized by analyzed plan (sameResult-guarded) plus
+    * `inputFiles`, the [[residentLists]] key. Not [[listSizes]]: that memo
+    * is layout metadata with its own job counter, and a store's estimate
+    * must not charge it. */
+  private def rowCount(df: DataFrame, h: Integer,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      files: Seq[String]): Long = {
+    val c = rowCounts.get(h)
+    if (c != null && c._1.sameResult(plan) && c._2 == files) c._3
+    else {
+      val n = df.count()
+      rowCounts.put(h, (plan, files, n))
+      n
+    }
+  }
+
+  private val rowCounts = new ConcurrentHashMap[Integer,
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Seq[String],
+     Long)]()
 
   /** (list_no, (ids ascending, vectors)) under a list_no partitioner. */
   type ResidentLists =
@@ -440,11 +460,13 @@ object IndexCache {
     * in that directory is equally stale after a corpus rewrite — a
     * cross-session fix for the index itself still means deleting the
     * model directory (retrain), which also removes the sidecar. The
-    * frame's [[residentLists]] store is unpersisted and dropped too. */
+    * frame's [[residentLists]] store is unpersisted and dropped too, with
+    * its memoized row count. */
   def invalidate(df: DataFrame): Unit = {
     val plan = df.queryExecution.analyzed
     val h = Integer.valueOf(plan.semanticHash())
     listSizeMemo.remove(h)
+    rowCounts.remove(h)
     val store = residentMemo.get(h)
     if (store != null && store.plan.sameResult(plan)) dropResident(h, store)
     // sameResult guard: on a hash collision the stored entry may belong
@@ -472,7 +494,7 @@ object IndexCache {
   def clear(): Unit = {
     models.clear(); graphs.clear(); traces.clear(); frames.clear()
     pqModels.clear(); objects.clear(); sizeSidecars.clear()
-    listSizeMemo.clear()
+    listSizeMemo.clear(); rowCounts.clear()
     residentMemo.forEach((h, store) => dropResident(h, store))
   }
 }

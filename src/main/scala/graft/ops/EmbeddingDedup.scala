@@ -108,13 +108,11 @@ object EmbeddingDedup {
     // frames pay one groupBy job on first call per session (memoized
     // by plan). Staleness follows the standing IndexCache contract —
     // data rewritten in place under a live plan needs invalidate() —
-    // and HERE staleness is sharper than for the bounded search's
-    // fused/cogroup routing, which reads the same sizes: an
-    // under-reading doesn't just misroute, it can leave the guard
+    // and it matters here: an under-reading can leave the guard
     // inactive and send a skewed list into a quadratic task, so a
-    // rewrite-without-invalidate voids the blowup protection, not just
-    // the plan choice. (The sidecar itself is atomic-rename-written and
-    // trailer-verified, so a torn FILE falls back to a fresh count.)
+    // rewrite-without-invalidate voids the blowup protection. (The
+    // sidecar itself is atomic-rename-written and trailer-verified, so
+    // a torn FILE falls back to a fresh count.)
     val oversized: Array[(Long, Long)] =
       graft.index.IndexCache.listSizes(assigned)
         .iterator.filter(_._2 > maxList).toArray

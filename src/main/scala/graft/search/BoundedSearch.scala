@@ -34,17 +34,17 @@ import graft.profile.ErrorProfile.Trace
   * ([[graft.index.IndexCache.residentLists]]), pruned to the partitions
   * that hold a probed list, when they fit in storage memory; otherwise,
   * and on the fully-distributed path, they are the table's rows, pruned
-  * by `list_no IN (…)` (Parquet partitions or buckets). The carried top-k
-  * (≤ k per query) lives in the [[Decider]]'s
-  * driver arrays on the driver-decided rounds and in the [[CtrlD]] rows on
-  * the fully-distributed path — nothing per-vector ever sits on the
-  * driver.
+  * by `list_no IN (…)`. The carried top-k (≤ k per query) lives in the
+  * [[Decider]]'s driver arrays on the driver-decided rounds and in the
+  * [[CtrlD]] rows on the fully-distributed path — nothing per-vector
+  * ever sits on the driver.
   *
   * Two control paths, routed on one batch-size test in [[search]]:
   * every batch within the driver contract ([[FlatSearch.collectable]])
   * takes the driver-decided rounds ([[searchStagedDriver]]), larger
-  * ones the fully-distributed rounds ([[searchDistributed]]). Both
-  * merge each stage through [[mergeKeep]] and decide through
+  * ones the fully-distributed rounds ([[searchDistributed]]), whose
+  * one scan is the salted list-keyed cogroup ([[scanListsCogroup]]).
+  * Both merge each stage through [[mergeKeep]] and decide through
   * [[stageStep]].
   */
 object BoundedSearch {
@@ -147,17 +147,18 @@ object BoundedSearch {
     * [[ErrorProfile.boundaryDistances]] window, same [[mergeKeep]] and
     * [[stageStep]] on the same cumulative top-k.
     *
-    * Scale shape: per round the big side carries only the PROBED lists'
-    * rows (partition/bucket-pruned), and the probe side carries
-    * active × (hi−lo) rows of ~(d·4+16) bytes. On a list_no-BUCKETED
-    * table ([[graft.index.IVFIndex.writeBucketed]]) the scan is a
-    * bucket-local fused cogroup with NO data-side shuffle at all
-    * ([[scanListsJoin]], plan-asserted by BoundedBucketSpec);
-    * unbucketed, the cogroup shuffles nprobed/nlist of the corpus per
-    * round — the price of not holding nq-sized maps anywhere. Skewed
-    * query distributions (every query ranking the same lists) are
-    * bounded by per-list SALTING in [[scanListsCogroup]], which also
-    * serves as the bucketed path's skew fallback. */
+    * Scale shape: every round and the finishing pass are one
+    * [[scanListsCogroup]]. Its big side carries only the PROBED lists'
+    * rows (partition-pruned), and its probe side carries
+    * active × (hi−lo) rows of ~(d·4+16) bytes; the cogroup shuffles
+    * nprobed/nlist of the corpus per round — the price of not holding
+    * nq-sized maps anywhere. Skewed query distributions (every query
+    * ranking the same lists) are bounded by per-list SALTING in
+    * [[scanListsCogroup]].
+    *
+    * The result is materialized through a checkpoint so it no longer
+    * depends on the cached control rows: a reliable `checkpoint()` when
+    * the SparkContext has a checkpoint dir, else `localCheckpoint`. */
   private def searchDistributed(ivfData: DataFrame, model: IVFModel,
       traces: Array[Trace], queries: DataFrame, k: Int,
       multiplier: Float, stdM: Float): Result = {
@@ -167,51 +168,6 @@ object BoundedSearch {
     val levels = traces.length
     val met = model.metric
     val bm = spark.sparkContext.broadcast(model)
-
-    // bucketed fast path: on a list_no-bucketed table the per-round list
-    // scan is a bucket-local fused cogroup — the data-side shuffle drops out
-    // entirely (asserted by BoundedBucketSpec's plan inspection). The
-    // salted cogroup remains the fallback for unbucketed tables, for
-    // hot-list skew beyond the per-task probe bound, AND — per the
-    // measured crossover — for rounds too small to amortize the fused
-    // arm's coarser task granularity.
-    val nBuckets = listNoBuckets(ivfData)
-    // per-list sizes for the crossover guard — layout metadata
-    // (IndexCache.listSizes memo: sidecar-seeded for IndexCache-built
-    // frames, one groupBy job per table per session otherwise), so no
-    // job runs per search call; only fused-eligible layouts ask. The
-    // guard's probed-volume estimate is now EXACT (sum of the probed
-    // lists' actual sizes, not probed-count × mean) — same crossover
-    // constant, better estimate under list skew.
-    val listSizes: Map[Long, Long] =
-      if (nBuckets.isDefined) graft.index.IndexCache.listSizes(ivfData)
-      else Map.empty
-    def scanRound(p: org.apache.spark.sql.Dataset[(Int, Long, Array[Float])],
-                  counts: Map[Int, Long]): DataFrame = {
-      // the bucket-local kernel streams one list group at a time, so
-      // its per-task peak is the largest single list's probe array
-      // (qvec + heap per probe) — not the bucket's sum — which is why
-      // its per-list bound is 8× the cogroup's per-task bound; the
-      // avg-per-bucket check stays as a belt-and-braces guard. Beyond
-      // either bound, the salted cogroup is the right tool (it can
-      // split a hot list across tasks; a bucket-local scan cannot).
-      // The third clause is the engine obeying its own measurements
-      // (r9 scale sweep, encoded in GraftConf.fusedMinProbedRows): a
-      // round whose scan volume (sum of the probed lists' sizes, from
-      // index metadata) sits below the crossover routes to the salted cogroup
-      // even on a fused-eligible layout — small bucketed corpora
-      // otherwise paid ~60% on every bounded query for a layout choice
-      // that only helps at serving scale.
-      val joinOk = nBuckets.exists { nb =>
-        counts.values.max <= maxProbesPerBucket &&
-          counts.values.sum / nb <= maxProbesPerBucket &&
-          counts.keysIterator.map(l => listSizes.getOrElse(l.toLong, 0L))
-            .sum >= graft.GraftConf.fusedMinProbedRows
-      }
-      lastScanRoute.set(if (joinOk) "fused" else "cogroup")
-      if (joinOk) scanListsJoin(ivfData, met, p, counts.keys.toSeq.sorted, k)
-      else scanListsCogroup(ivfData, met, p, counts, k)
-    }
 
     var ctrl: org.apache.spark.sql.Dataset[CtrlD] = queries
       .select(col("qid").cast("long"), col("vec"),
@@ -264,7 +220,8 @@ object BoundedSearch {
         c.lists.slice(lo, hi).iterator.map(l => (l, c.qid, c.vec))
       }
       locally {
-        val newPartials = scanRound(probes, listCounts).as[(Long, Long, Double)]
+        val newPartials = scanListsCogroup(ivfData, met, probes, listCounts, k)
+          .as[(Long, Long, Double)]
         val bTrace = spark.sparkContext.broadcast(traces(j))
         val jj = j; val kk = k; val sm = stdM; val mult = multiplier
         val lv = levels
@@ -323,10 +280,14 @@ object BoundedSearch {
     }
     val finCounts = finProbes.groupByKey(_._1).count().collect().toMap
     if (finCounts.nonEmpty)
-      state = state.unionByName(scanRound(finProbes, finCounts))
+      state = state.unionByName(
+        scanListsCogroup(ivfData, met, finProbes, finCounts, k))
     // materialize through the checkpoint so the result no longer
     // depends on the cached control rows we are about to release
-    val results = FlatSearch.mergeTopK(state, k).localCheckpoint(eager = true)
+    val merged = FlatSearch.mergeTopK(state, k)
+    val results =
+      if (spark.sparkContext.getCheckpointDir.isDefined) merged.checkpoint()
+      else merged.localCheckpoint(eager = true)
 
     val stats = ctrl
       .map(c => (c.qid, math.min(c.myNprobe, nl), c.predicted, c.decidedStage))
@@ -346,19 +307,6 @@ object BoundedSearch {
     * ([[graft.GraftConf.cogroupMaxProbes]]). */
   private def maxProbesPerTask: Int = graft.GraftConf.cogroupMaxProbes
 
-  /** Per-list probe bound for the bucket-local path (see `scanRound`
-    * in [[searchDistributed]]): list groups are consumed one at a time,
-    * so a task's peak state is one list's probe array — fixed at 8×
-    * the cogroup's per-task bound (~40 MB peak at d=64, k=10;
-    * [[graft.GraftConf.joinMaxProbesPerBucket]]). */
-  private def maxProbesPerBucket: Int = graft.GraftConf.joinMaxProbesPerBucket
-
-  /** Test hook: which scan route ("fused" | "cogroup") the last
-    * distributed round on this thread took — the router's crossover
-    * guard is pinned by observing the decision at its real site
-    * (BoundedBucketSpec's router tests) rather than re-deriving it. */
-  private[graft] val lastScanRoute = new ThreadLocal[String]
-
   /** Salt sub-keys per list are capped so the key packing below stays
     * within the 24 bits reserved for the salt — at maxProbesPerTask's
     * default that is ~137 G probes on ONE list before the per-task
@@ -368,11 +316,12 @@ object BoundedSearch {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** List-keyed cogroup scan: for each probed list, stream its vectors
-    * against the (qid, qvec) probe rows for that list with per-query
-    * bounded heaps ([[listGroupTopK]]) — the probe rows travel as a
-    * shuffled DataFrame, never as a driver-built broadcast probe map.
-    * Emits ≤ k rows per (list, query).
+  /** The distributed rounds' one scan, a list-keyed cogroup: for each
+    * probed list, ONE streamed pass of its vectors against the
+    * (qid, qvec) probe rows for that list, which become the slots of
+    * [[IVFSearch.slotTopK]] — the probe rows travel as a shuffled
+    * DataFrame, never as a driver-built broadcast probe map. Emits ≤ k
+    * rows per (list, query).
     *
     * Skew guard: per-list probe counts (≤ nlist scalars) are collected
     * first; a list with more than [[maxProbesPerTask]] probes is SALTED
@@ -418,132 +367,11 @@ object BoundedSearch {
       }
     }.groupByKey(_._1)
     dataG.cogroup(probeG) { (_, dataIt, probeIt) =>
-      BoundedSearch.listGroupTopK(metric, k, dataIt, probeIt)
-    }.toDF("qid", "id", "dist")
-  }
-
-  /** The list-group kernel of both distributed scan routes
-    * ([[scanListsCogroup]], [[scanListsJoin]]): one (list, salt) group's
-    * probes (qid, query vector) become the slots of [[IVFSearch.slotTopK]]
-    * over ONE streamed pass of the list's rows; ≤ k (qid, id, dist) rows
-    * out per probe. */
-  private def listGroupTopK[K](metric: String, k: Int,
-      dataIt: Iterator[(K, Long, Array[Float])],
-      probeIt: Iterator[(K, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
-    val ps = probeIt.toArray
-    IVFSearch.allSlotsTopK[Array[Float]](dataIt.map(r => (r._2, r._3)),
-      ps.length, k,
-      () => (slot, _, vec) => Kernels.distance(metric, ps(slot)._3, vec))
-      .map { case (slot, id, d) => (ps(slot)._2, id, d) }
-  }
-
-  /** If `df`'s data will come out of its source already hash-partitioned
-    * on exactly `list_no` — a `bucketBy(list_no)` table scan, or a
-    * memory-resident relation cached under a `repartition(n, list_no)`
-    * distribution (the serving deployment: index shards held hot in
-    * executor memory) — the partition count: the signal that
-    * [[scanListsJoin]]'s data side needs no Exchange. A wrong answer
-    * here cannot corrupt results — Catalyst's EnsureRequirements
-    * re-inserts the Exchange if the distribution is not actually
-    * satisfied; this only selects join vs cogroup. */
-  private[graft] def listNoBuckets(df: DataFrame): Option[Int] =
-    df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.bucketSpec
-              .filter(_.bucketColumnNames
-                .map(_.toLowerCase(java.util.Locale.ROOT)) == Seq("list_no"))
-              .map(_.numBuckets)
-          case _ => None
-        }
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        m.cachedPlan.outputPartitioning match {
-          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-              if h.expressions.length == 1 && h.expressions.head.collectFirst {
-                case a: org.apache.spark.sql.catalyst.expressions.Attribute
-                    if a.name.toLowerCase(java.util.Locale.ROOT) == "list_no" => a
-              }.isDefined =>
-            Some(h.numPartitions)
-          case _ => None
-        }
-    }.flatten.headOption
-
-  /** Bucket-local twin of [[scanListsCogroup]] for list_no-bucketed
-    * tables: probed lists are BUCKET-PRUNED out of the scan, and the
-    * cogroup on the `list_no` COLUMN ([[RelationalGroupedDataset.as]]
-    * keys by the real attribute, not a lambda-synthesized key) reuses
-    * the scan's bucket partitioning — `HashPartitioning(list_no)`
-    * satisfies the cogroup's ClusteredDistribution, so the probe side
-    * (the small one) is the only Exchange, and both layouts' existing
-    * sort-by-list_no satisfies the required ordering without a
-    * per-round sort. Inside each list group runs the salted cogroup's
-    * kernel, [[listGroupTopK]], emitting ≤ k rows per (list, query).
-    *
-    * History: the first version of this path was a sort-merge JOIN on
-    * `list_no` feeding a codegen'd distance column into a per-partition
-    * (qid → heap) map. It removed the same Exchange but paid ~3× the
-    * cogroup's wall-clock at 10M/200k (r9 A/B,
-    * `tools/evidence/r9_scale_ab_10m.log`): per-PAIR join plumbing —
-    * SMJ iteration, projection, typed deserialization, per-pair hash
-    * lookups over ~25 B pairs — against the cogroup kernel's per-ROW
-    * deserialization and tight probes loop. This rewrite keeps the
-    * Exchange-free plan and the fused kernel's per-pair cost.
-    * Correctness does not ride on the partitioning being recognized:
-    * EnsureRequirements re-adds the Exchange if the distribution is
-    * not actually satisfied (plan-asserted by BoundedBucketSpec).
-    *
-    * Measured crossover (constant list size n/nlist = 9766, resident
-    * arms; r10 POST-fix numbers — the r9 sweep's 10M-crossover reading
-    * was distorted by the serialized control-build stage both arms
-    * carried, see the `searchDistributed` repartition comment): the
-    * salted cogroup wins up to and including the 20M point (fused
-    * 1.29× slower there), the fused arm wins from the 40M point (0.73×,
-    * 45% fewer shuffle bytes) — `tools/evidence/
-    * r10_scale_ab_{20m100k,40m100k}.log`. The router ENFORCES that
-    * crossover per round (`scanRound`'s
-    * [[graft.GraftConf.fusedMinProbedRows]] guard): a bucketed/resident
-    * layout is necessary but not sufficient — rounds whose estimated
-    * scan volume sits below the crossover still take the salted
-    * cogroup, so bucketing a small index costs nothing. Pre-bucket /
-    * resident-distribute at serving scale; on a real cluster the
-    * elided Exchange is network, which argues for lowering the
-    * threshold there. */
-  private[graft] def scanListsJoin(ivfData: DataFrame, metric: String,
-      probes: org.apache.spark.sql.Dataset[(Int, Long, Array[Float])],
-      probedLists: Seq[Int], k: Int): DataFrame = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val data = ivfData
-      .filter(col("list_no").isin(probedLists: _*))
-      .select(col("list_no").cast("int").as("list_no"),
-        col("id").cast("long").as("id"), col("vec"))
-    // CoGroup requires bit-identical key SCHEMAS (name, type,
-    // nullability) on both sides. The data side's key must stay a bare
-    // alias of the scanned column — wrapping it would break the
-    // alias-aware partitioning propagation this whole path exists for —
-    // so the probe side's key (tuple-encoded, non-nullable) adapts to
-    // whatever nullability the data layout reports. list_no is never
-    // actually null (it is an assigned cluster id), so both wrappers
-    // are semantic no-ops.
-    val probeKey =
-      if (data.schema("list_no").nullable)
-        // identity for non-null input, but analyzed as nullable
-        // (when(lit(true), c) is folded back to non-nullable c by the
-        // Spark 4 analyzer; the isNotNull guard is not)
-        when(col("list_no").isNotNull, col("list_no"))
-      else org.apache.spark.sql.graft.ColumnBridge.column(
-        org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("list_no"))))
-    val dataG = data
-      .groupBy(col("list_no"))
-      .as[Int, (Int, Long, Array[Float])]
-    val probeG = probes.toDF("list_no", "qid", "qvec")
-      .select(probeKey.as("list_no"), col("qid"), col("qvec"))
-      .groupBy(col("list_no"))
-      .as[Int, (Int, Long, Array[Float])]
-    dataG.cogroup(probeG) { (_, dataIt, probeIt) =>
-      BoundedSearch.listGroupTopK(metric, k, dataIt, probeIt)
+      val ps = probeIt.toArray
+      IVFSearch.allSlotsTopK[Array[Float]](dataIt.map(r => (r._2, r._3)),
+        ps.length, k,
+        () => (slot, _, vec) => Kernels.distance(metric, ps(slot)._3, vec))
+        .map { case (slot, id, d) => (ps(slot)._2, id, d) }
     }.toDF("qid", "id", "dist")
   }
 

@@ -22,9 +22,6 @@ object ScaleDemo {
       // ContextCleaner delete them before /tmp fills (the r5 10M run
       // died on disk at the last stage without this)
       .config("spark.cleaner.periodicGC.interval", "2min")
-      // managed-table warehouse for the bucketed A/B (fresh per run)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("scale_wh").toString)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -328,39 +325,19 @@ object ScaleDemo {
         f"ms/query amortized, mean nprobe ${pS.sum.toDouble / pS.size}%.1f/$nlist")
     }
 
-    // ---- bucketed vs partitioned A/B: the shuffle-free cogroup claim ----
-    // Same fully-distributed bounded search, same query batch; the only
-    // difference is the storage layout of the IVF table. Bucketed, the
-    // per-round list scan is a bucket-local join (no data-side
-    // shuffle); partitioned, it is the salted cogroup (re-shuffles
-    // nprobed/nlist of the corpus per round). A SparkListener sums
-    // shuffle-write bytes so the removed shuffle is measured, not
-    // asserted. SCALE_ONLY=bucket runs just this section.
-    if (n >= 1000000 && sys.env.get("SCALE_ONLY").forall(_ == "bucket")) {
+    // ---- the distributed rounds' cogroup, metered ----
+    // Same fully-distributed bounded search, same query batch, over the
+    // partitioned Parquet table and over a cached copy of it. The
+    // per-round list scan is the salted cogroup (re-shuffles
+    // nprobed/nlist of the corpus per round); a SparkListener sums
+    // shuffle-write bytes and task times so its cost is measured, not
+    // asserted. SCALE_ONLY=cogroup runs just this section.
+    if (n >= 1000000 && sys.env.get("SCALE_ONLY").forall(_ == "cogroup")) {
       val nAB = if (args.length > 2) args(2).toInt else 200000
       val abQ = qBase.filter(col("id") % (n / nAB) === 0).limit(nAB)
         .select(col("id").as("qid"), col("vec"))
         .withColumn("required_recall", lit(0.9f)).cache()
       val nQ = abQ.count()
-
-      // bucket count is a LAYOUT knob, not nlist: size buckets for
-      // ~100 MB scan tasks (nBuckets = nlist gave 2.5 MB buckets and
-      // the join arm drowned in per-task overhead — 2.6× slower than
-      // the cogroup it was meant to beat)
-      val nBuckets = 64
-      // above the crossover the router picks the fused arm on its own
-      // (the whole point of the guard); for sub-crossover sweep points
-      // SCALE_FORCE_FUSED=1 pins the arm so the A/B still measures it
-      if (sys.env.get("SCALE_FORCE_FUSED").contains("1"))
-        System.setProperty("graft.join.minProbedRows", "0")
-      val armSel = sys.env.getOrElse("SCALE_AB", "all")
-      if (armSel == "disk" || armSel == "all") {
-        spark.sql("DROP TABLE IF EXISTS ivf_bucketed_scale")
-        t = System.nanoTime()
-        IVFIndex.writeBucketed(IVFIndex.assign(baseDF, model),
-          "ivf_bucketed_scale", nBuckets)
-        println(f"bucketed write ($nBuckets buckets): ${(System.nanoTime() - t) / 1e9}%.1fs")
-      }
 
       // shuffle-write bytes + per-stage task times (VERDICT r9 #2: the
       // 40M margin narrowing blamed "stragglers from the 64-partition
@@ -437,13 +414,11 @@ object ScaleDemo {
           multiplier = 4.0f, stdM = 1.0f, forceDistributed = true)
         r.results.count()
         val sec = (System.nanoTime() - t0) / 1e9
-        val route = BoundedSearch.lastScanRoute.get()
         Thread.sleep(2000) // listener bus drain (demo-grade)
         println(f"bounded dist $label ($nQ queries): $sec%.1fs = " +
           f"${sec * 1000 / nQ}%.2f ms/q, shuffle-write " +
           f"${meter.bytes.get / 1048576.0}%.0f MiB, mean nprobe " +
-          f"${r.stats.map(_.nprobeUsed).sum.toDouble / r.stats.size}%.1f, " +
-          s"route=$route")
+          f"${r.stats.map(_.nprobeUsed).sum.toDouble / r.stats.size}%.1f")
         // task-time distribution: stragglers show as max >> p95 on the
         // big scan stages with idle-core wall time (low utilization);
         // uniform slowdown (e.g. storage-eviction re-reads) instead
@@ -464,32 +439,15 @@ object ScaleDemo {
               f"sum ${ds.sum / 1000.0}%.0fs [${meter.names.getOrDefault(sid, "?")}]")
           }
       }
-      // SCALE_AB=disk|cached|all (default all) selects arms. The
-      // cached arms model the serving deployment (index shards
-      // resident in executor memory, as the reference's workers hold
-      // their lists hot): both arms read from the block manager, so
-      // the remaining difference IS the per-round data-side Exchange
-      // the list_no distribution removes. Measured at 10M/200k
-      // (tools/evidence/r9_scale_ab_10m.log): with the original
-      // SMJ-based bucket arm the Exchange-free layouts LOST ~3×
-      // (per-pair join plumbing dwarfed the saved shuffle); after the
-      // fused bucket-local cogroup rewrite they win on both axes
-      // (resident 300 s vs 337 s cogroup, 64% fewer shuffle bytes).
-      val arms = armSel
-      if (arms == "disk" || arms == "all") {
+      // SCALE_AB=disk|cached|all (default all) selects arms; the cached
+      // arm reads the table from the block manager instead of Parquet
+      val arms = sys.env.getOrElse("SCALE_AB", "all")
+      if (arms == "disk" || arms == "all")
         measured("PARTITIONED disk (cogroup)", ivf)
-        measured("BUCKETED  disk (join)     ", spark.table("ivf_bucketed_scale"))
-      }
       if (arms == "cached" || arms == "all") {
         val memPlain = ivf.cache(); memPlain.count()
         measured("RESIDENT  mem  (cogroup)  ", memPlain)
         memPlain.unpersist()
-        val memDist = IVFIndex.residentByList(ivf, 64)
-        require(graft.search.BoundedSearch.listNoBuckets(memDist).isDefined,
-          "cached list_no distribution not detected — join arm would fall " +
-          "back to cogroup and the A/B would silently measure nothing")
-        measured("RESIDENT  mem  (join)     ", memDist)
-        memDist.unpersist()
       }
       abQ.unpersist()
       spark.sparkContext.removeSparkListener(meter)

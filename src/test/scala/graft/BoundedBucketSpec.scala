@@ -1,23 +1,22 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import graft.index.IVFIndex
+import graft.index.{IVFIndex, IndexCache}
 import graft.profile.ProfileTrainer
 import graft.search.{BoundedSearch, FlatSearch}
 
-/** The bucketed-IVF shuffle-free claim, proven rather than asserted in a
-  * comment: on a `list_no`-bucketed table the fully-distributed bounded
-  * search scans lists via a bucket-local join whose DATA side has no
-  * Exchange — only the small probe side shuffles. Results are identical
-  * to the salted-cogroup path on the plain partitioned table. */
+/** The layout metadata and materialization of bounded search over a
+  * `list_no`-partitioned IVF table: the per-list sizes are memoized and
+  * persisted beside the model, so repeat and reloaded searches run no
+  * size job; the row count behind a resident-list store's estimate is
+  * counted once per table, even when the store does not fit; and the
+  * distributed rounds take a reliable checkpoint when the SparkContext
+  * has a checkpoint dir, with the same rows and decisions as without. */
 class BoundedBucketSpec extends SparkSpec {
 
   val d = 24
   val k = 10
   val nlist = 32
-  val nBuckets = 32
 
   lazy val pool = clusteredVecs(3200, d, nClusters = 40, seed = 77)
   lazy val base = pool.take(3000)
@@ -31,151 +30,28 @@ class BoundedBucketSpec extends SparkSpec {
     ProfileTrainer.train(assigned, model, tq, gt, maxTopk = k, bs = 100)
   }
 
-  lazy val bucketedTable: String = {
-    // the in-memory catalog forgets tables across JVMs but the warehouse
-    // directory persists — clear both or the next run's CREATE fails
-    // with LOCATION_ALREADY_EXISTS
-    spark.sql("DROP TABLE IF EXISTS ivf_bucketed_spec")
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "ivf_bucketed_spec")
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(loc)
-    }
-    IVFIndex.writeBucketed(assigned, "ivf_bucketed_spec", nBuckets)
-    "ivf_bucketed_spec"
-  }
-
-  test("listNoBuckets detects the bucket spec (and its absence)") {
-    assert(BoundedSearch.listNoBuckets(spark.table(bucketedTable))
-      .contains(nBuckets))
+  /** The assigned table written partitioned by list_no, read back. */
+  lazy val partitioned: org.apache.spark.sql.DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("ivf_part").toString
     IVFIndex.write(assigned, dir)
-    assert(BoundedSearch.listNoBuckets(spark.read.parquet(dir)).isEmpty)
+    spark.read.parquet(dir)
   }
 
-  test("scanListsJoin: no Exchange anywhere above the bucketed scan") {
+  private def queries(from: Int, until: Int) = {
     import spark.implicits._
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // concrete (non-adaptive) plan, and no broadcast so the join is the
-      // shuffle-requiring kind the 100 TB batch would get
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val qs = pool.slice(3150, 3166)
-      val probes = qs.zipWithIndex.flatMap { case (v, i) =>
-        model.rankCentroids(v).take(4).map { case (l, _) => (l, i.toLong, v) }
-      }.toSeq.toDS()
-      val lists = probes.map(_._1).collect().distinct.toSeq.sorted
-      val out = BoundedSearch.scanListsJoin(
-        spark.table(bucketedTable), "l2", probes, lists, k)
-      val plan = out.queryExecution.executedPlan
-
-      val scans = plan.collect { case f: FileSourceScanExec => f }
-      assert(scans.nonEmpty && scans.forall(_.relation.bucketSpec.isDefined),
-        s"expected a bucketed file scan in:\n$plan")
-      // the bucketed scan must not sit below ANY shuffle: its bucket
-      // partitioning IS the join distribution
-      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
-      assert(exchanges.nonEmpty, s"expected the probe-side shuffle in:\n$plan")
-      val scanUnderShuffle = exchanges.exists(
-        _.child.collect { case f: FileSourceScanExec => f }.nonEmpty)
-      assert(!scanUnderShuffle,
-        s"data-side scan found under an Exchange:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
-  }
-
-  test("bucketed join path ≡ salted cogroup path (distributed search)") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ab").toString
-    IVFIndex.write(assigned, dir)
-    val qdf = pool.slice(3150, 3200).zipWithIndex
+    pool.slice(from, until).zipWithIndex
       .map { case (v, i) => (i.toLong, v, 0.85f) }
       .toSeq.toDF("qid", "vec", "required_recall")
-
-    def run(tbl: org.apache.spark.sql.DataFrame) = {
-      val r = BoundedSearch.search(tbl, model, traces, qdf, k,
-        multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-      (r.results.select(col("qid"), col("id"), col("dist"), col("rank"))
-        .as[(Long, Long, Double, Int)].collect().sortBy(x => (x._1, x._4)),
-        r.stats.sortBy(_.qid))
-    }
-    // zero the crossover guard so this 3000-row table actually exercises
-    // the fused arm (the router would otherwise — correctly — route a
-    // corpus this small to the cogroup; the guard itself is pinned by
-    // the router tests below)
-    System.setProperty("graft.join.minProbedRows", "0")
-    try {
-      val (rowsB, statsB) = run(spark.table(bucketedTable))
-      assert(BoundedSearch.lastScanRoute.get() == "fused")
-      val (rowsP, statsP) = run(spark.read.parquet(dir))
-      assert(BoundedSearch.lastScanRoute.get() == "cogroup")
-      assert(rowsB.sameElements(rowsP), "bucketed results differ from cogroup")
-      assert(statsB == statsP, "bucketed decisions differ from cogroup")
-    } finally System.clearProperty("graft.join.minProbedRows")
   }
 
-  test("router obeys the measured crossover: small bucketed corpora take the cogroup") {
-    import spark.implicits._
-    val qdf = pool.slice(3150, 3182).zipWithIndex
-      .map { case (v, i) => (i.toLong, v, 0.85f) }
-      .toSeq.toDF("qid", "vec", "required_recall")
-    def route(): String = {
-      BoundedSearch.lastScanRoute.remove()
-      BoundedSearch.search(spark.table(bucketedTable), model, traces, qdf,
-        k, multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-        .results.count()
-      BoundedSearch.lastScanRoute.get()
-    }
-    // default guard (28M estimated probed rows/round, the measured
-    // post-fix crossover): this 3000-row corpus never qualifies — the
-    // layout alone must NOT select the fused arm (measured slower than
-    // the cogroup at every sub-crossover scale,
-    // tools/evidence/r10_scale_ab_20m100k.log)
-    assert(route() == "cogroup",
-      "small bucketed corpus must route to the salted cogroup")
-    // a threshold at/below the corpus's per-round scan estimate flips
-    // the SAME layout to the fused arm: est = probedLists × meanListSize
-    // ≤ 3000 here, so 1 row qualifies every non-empty round
-    System.setProperty("graft.join.minProbedRows", "1")
-    try assert(route() == "fused",
-      "above-crossover estimate must route to the fused bucket-local arm")
-    finally System.clearProperty("graft.join.minProbedRows")
-    // and an unbucketed layout never routes fused, whatever the guard
-    System.setProperty("graft.join.minProbedRows", "0")
-    try {
-      BoundedSearch.lastScanRoute.remove()
-      BoundedSearch.search(assigned, model, traces, qdf, k,
-        multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-        .results.count()
-      assert(BoundedSearch.lastScanRoute.get() == "cogroup")
-    } finally System.clearProperty("graft.join.minProbedRows")
-  }
-
-  test("list sizes are layout metadata: repeat searches run no count job") {
-    import spark.implicits._
-    val qdf = pool.slice(3150, 3166).zipWithIndex
-      .map { case (v, i) => (i.toLong, v, 0.85f) }
-      .toSeq.toDF("qid", "vec", "required_recall")
-    val tbl = spark.table(bucketedTable)
-    def go(): Unit =
-      BoundedSearch.search(tbl, model, traces, qdf, k,
-        multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-        .results.count()
-    go() // may pay the memo's one size job
-    val before = graft.index.IndexCache.listSizeComputes.get()
-    // QueryExecutionListener-level proof on top of the memo counter: no
-    // Dataset.count ACTION on the corpus table during repeat searches.
-    // (The search itself counts its small ctrl dataset — we match on
-    // the action's plan touching the bucketed table's relation.)
+  /** Runs `body` and returns how many `count` actions it ran directly
+    * over `tbl`, seen by a QueryExecutionListener. Delivery is async but
+    * in order, so a sentinel `head` over `tbl` at the end proves that
+    * every earlier action has been seen. */
+  private def tableCounts(tbl: org.apache.spark.sql.DataFrame)(body: => Unit): Int = {
+    val target = tbl.queryExecution.analyzed
     val counted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
@@ -185,9 +61,11 @@ class BoundedBucketSpec extends SparkSpec {
         // must not match
         qe.analyzed match {
           case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-              if funcName == "count" &&
-                a.child.sameResult(tbl.queryExecution.analyzed) =>
+              if funcName == "count" && a.child.sameResult(target) =>
             counted.incrementAndGet(); ()
+          case p if funcName == "head" &&
+              p.find(_.sameResult(target)).isDefined =>
+            sentinel.countDown()
           case _ => ()
         }
       override def onFailure(funcName: String, qe:
@@ -196,23 +74,84 @@ class BoundedBucketSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      go(); go()
-      // listener delivery is async — a sentinel count at the END proves
-      // delivery happened before we read the counter: if the searches
-      // had counted the corpus, those events precede the sentinel's
-      tbl.count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (counted.get() == 0 && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      body
+      tbl.head(1)
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel action never observed by the listener")
     } finally spark.listenerManager.unregister(listener)
-    assert(graft.index.IndexCache.listSizeComputes.get() == before,
+    counted.get()
+  }
+
+  test("list sizes are layout metadata: repeat searches run no count job") {
+    val qdf = queries(3150, 3166)
+    val tbl = partitioned
+    def go(): Unit =
+      BoundedSearch.search(tbl, model, traces, qdf, k,
+        multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
+        .results.count()
+    go() // may pay the memo's one size job
+    val before = IndexCache.listSizeComputes.get()
+    // QueryExecutionListener-level proof on top of the memo counter: no
+    // count action over the corpus table during repeat searches
+    assert(tableCounts(tbl) { go(); go() } == 0,
+      "repeat searches must run no count over the table")
+    assert(IndexCache.listSizeComputes.get() == before,
       "repeat search must reuse the memoized list sizes")
-    // ≥ 1, not == 1: the sentinel must have arrived, but an unrelated
-    // future count over the same relation (or duplicated listener
-    // delivery) must make the MEMO assertion above pinpoint a
-    // regression, not turn this sentinel check into a flake
-    assert(counted.get() >= 1,
-      "sentinel count action never observed by the listener")
+  }
+
+  test("a table too large for a store is counted once, not on every search") {
+    val qdf = queries(3150, 3166)
+    val tbl = partitioned
+    def go(): Unit =
+      BoundedSearch.search(tbl, model, traces, qdf, k,
+        multiplier = 8.0f, stdM = 1.5f).results.count()
+    val prevPool = IndexCache.storePool
+    IndexCache.storePool = _ => 0L
+    try {
+      IndexCache.invalidate(tbl)
+      // the first search sizes the store it cannot build: one count
+      assert(tableCounts(tbl)(go()) == 1,
+        "the first search must count the table once for its store estimate")
+      assert(tableCounts(tbl)(go()) == 0,
+        "a repeat search must reuse the memoized row count")
+      // invalidate retires the memoized count with the table's other memos
+      IndexCache.invalidate(tbl)
+      assert(tableCounts(tbl)(go()) == 1,
+        "invalidate must force one fresh count")
+    } finally {
+      IndexCache.storePool = prevPool
+      IndexCache.invalidate(tbl)
+    }
+  }
+
+  test("distributed rounds take a reliable checkpoint when a checkpoint dir is set") {
+    val qdf = queries(3150, 3200)
+    def run() = {
+      val r = BoundedSearch.search(partitioned, model, traces, qdf, k,
+        multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
+      (r.results.select(col("qid").cast("long"), col("rank").cast("int"),
+          col("id").cast("long"), col("dist").cast("double"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+        .sortBy(x => (x._1, x._2)).toSeq,
+        r.stats.sortBy(_.qid))
+    }
+    def files(f: java.io.File): Int =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(files).sum
+      else 1
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("bounded_ckpt").toFile
+    sc.setCheckpointDir(null)
+    val (localRows, localStats) = run()
+    assert(files(dir) == 0)
+    sc.setCheckpointDir(dir.getPath)
+    try {
+      val (ckptRows, ckptStats) = run()
+      assert(ckptRows == localRows, "checkpointed rows differ")
+      assert(ckptStats == localStats, "checkpointed decisions differ")
+      assert(files(dir) > 0, "the checkpoint dir gained no files")
+    } finally sc.setCheckpointDir(prev.orNull)
   }
 
   test("persisted list sizes: metadata ≡ counted sizes, reload serves dedup/search with zero size jobs") {
@@ -242,7 +181,7 @@ class BoundedBucketSpec extends SparkSpec {
         .getOrElse(fail("no _list_sizes sidecar found under the model dir"))
       // session 2 (simulated): memos gone, disk intact — the sidecar
       // seeds the memo, so even the FIRST ivfPairs guard audit and the
-      // FIRST distributed search's crossover estimate run zero jobs
+      // FIRST distributed search run zero size jobs
       IndexCache.clear()
       val beforeSz = IndexCache.listSizeComputes.get()
       val (m2, a2) = IndexCache.ivf("lsizes_spec", corpus, nlist)
@@ -347,138 +286,6 @@ class BoundedBucketSpec extends SparkSpec {
     } finally {
       System.clearProperty("graft.model.dir")
       IndexCache.clear()
-    }
-  }
-
-  test("memory-resident list_no distribution serves the Exchange-free join") {
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import spark.implicits._
-    // the serving deployment: no table at all — any corpus repartitioned
-    // on list_no and cached (index shards resident in executor memory)
-    // must be detected and served by the join path with no data-side
-    // Exchange, identically to the bucketed-table scan
-    val mem = IVFIndex.residentByList(assigned, nBuckets)
-    try {
-      assert(BoundedSearch.listNoBuckets(mem).contains(nBuckets))
-      // a plain cache (no declared distribution) must NOT select the join
-      assert(BoundedSearch.listNoBuckets(assigned).isEmpty)
-
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val qs = pool.slice(3150, 3166)
-        val probes = qs.zipWithIndex.flatMap { case (v, i) =>
-          model.rankCentroids(v).take(4).map { case (l, _) => (l, i.toLong, v) }
-        }.toSeq.toDS()
-        val lists = probes.map(_._1).collect().distinct.toSeq.sorted
-        val plan = BoundedSearch.scanListsJoin(mem, "l2", probes, lists, k)
-          .queryExecution.executedPlan
-        val exchanges = plan.collect {
-          case e: ShuffleExchangeExec => e }
-        assert(exchanges.nonEmpty, s"expected the probe-side shuffle in:\n$plan")
-        val cacheUnderShuffle = exchanges.exists(
-          _.child.collect { case s: InMemoryTableScanExec => s }.nonEmpty)
-        assert(!cacheUnderShuffle,
-          s"cached data side found under an Exchange:\n$plan")
-        // the resident layout's sortWithinPartitions must also carry
-        // through the cache as outputOrdering — a data-side SortExec
-        // here would re-sort the whole resident corpus EVERY adaptive
-        // round (the per-pair-plumbing lesson of the r9 A/B, in sort
-        // form)
-        val sortOverCache = plan.collect {
-          case s: org.apache.spark.sql.execution.SortExec
-              if s.child.collect {
-                case c: InMemoryTableScanExec => c }.nonEmpty => s
-        }
-        assert(sortOverCache.isEmpty,
-          s"per-round sort over the resident data side:\n$plan")
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      }
-
-      val qdf = pool.slice(3150, 3200).zipWithIndex
-        .map { case (v, i) => (i.toLong, v, 0.85f) }
-        .toSeq.toDF("qid", "vec", "required_recall")
-      def run(tbl: org.apache.spark.sql.DataFrame) = {
-        val r = BoundedSearch.search(tbl, model, traces, qdf, k,
-          multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-        r.results.select(col("qid"), col("id"), col("dist"), col("rank"))
-          .as[(Long, Long, Double, Int)].collect().sortBy(x => (x._1, x._4))
-      }
-      val dir = java.nio.file.Files.createTempDirectory("ivf_mem").toString
-      IVFIndex.write(assigned, dir)
-      // zero the crossover guard so the resident arm actually runs fused
-      System.setProperty("graft.join.minProbedRows", "0")
-      try {
-        val rMem = run(mem)
-        assert(BoundedSearch.lastScanRoute.get() == "fused")
-        assert(rMem.sameElements(run(spark.read.parquet(dir))),
-          "cached-distribution results differ from cogroup")
-      } finally System.clearProperty("graft.join.minProbedRows")
-    } finally mem.unpersist()
-  }
-
-  test("scanListsJoin probe-key adapter: nullable ≡ non-nullable list_no") {
-    import spark.implicits._
-    // CoGroup demands bit-identical key schemas, so scanListsJoin adapts
-    // the probe-side key's nullability to the DATA layout: a bucketed
-    // table or resident cache reports list_no nullable (when-guard
-    // branch), but a typed source reports it non-nullable (AssertNotNull
-    // branch). Both branches must exist and agree — this pins the
-    // otherwise-unexercised non-nullable branch against analyzer drift.
-    val rows = base.take(400).zipWithIndex.map { case (v, i) =>
-      (model.assignListNo(v), i.toLong, v)
-    }
-    val nonNull = rows.toSeq.toDS().toDF("list_no", "id", "vec")
-      .repartition(col("list_no"))
-    val nullable = nonNull.select(
-      when(col("list_no").isNotNull, col("list_no")).as("list_no"),
-      col("id"), col("vec"))
-    // the test is only meaningful while the two presentations differ
-    assert(!nonNull.schema("list_no").nullable)
-    assert(nullable.schema("list_no").nullable)
-
-    val qs = pool.slice(3150, 3160)
-    val probes = qs.zipWithIndex.flatMap { case (v, i) =>
-      model.rankCentroids(v).take(4).map { case (l, _) => (l, i.toLong, v) }
-    }.toSeq.toDS()
-    val lists = probes.map(_._1).collect().distinct.toSeq.sorted
-    def run(df: org.apache.spark.sql.DataFrame) =
-      BoundedSearch.scanListsJoin(df, "l2", probes, lists, k)
-        .as[(Long, Long, Double)].collect().sortBy(x => (x._1, x._3, x._2))
-    assert(run(nonNull).sameElements(run(nullable)))
-  }
-
-  test("hot-list skew on a bucketed table falls back to the salted cogroup") {
-    import spark.implicits._
-    // a truly skewed batch: 32 jitters of one vector rank the same
-    // lists, so one list draws every round-0 probe. With the crossover
-    // guard zeroed, only the per-list bound (8 × cogroup.maxProbes = 8)
-    // can route the rounds away from the fused arm, and the tiny
-    // cogroup bound makes the fallback actually salt
-    val hot = pool(3150)
-    val rnd = new scala.util.Random(11)
-    val qdf = (0 until 32).map { i =>
-      (i.toLong, hot.map(x => x + 1e-3f * rnd.nextGaussian().toFloat), 0.85f)
-    }.toDF("qid", "vec", "required_recall")
-    def run() = BoundedSearch.search(spark.table(bucketedTable), model,
-      traces, qdf, k, multiplier = 8.0f, stdM = 1.5f, forceDistributed = true)
-      .results.as[(Long, Long, Double, Int)].collect().sortBy(x => (x._1, x._4))
-    System.setProperty("graft.join.minProbedRows", "0")
-    System.setProperty("graft.cogroup.maxProbes", "1")
-    try {
-      val rSalted = run()
-      assert(BoundedSearch.lastScanRoute.get() == "cogroup")
-      System.clearProperty("graft.cogroup.maxProbes")
-      val rJoin = run()
-      assert(BoundedSearch.lastScanRoute.get() == "fused")
-      assert(rSalted.sameElements(rJoin))
-    } finally {
-      System.clearProperty("graft.cogroup.maxProbes")
-      System.clearProperty("graft.join.minProbedRows")
     }
   }
 }

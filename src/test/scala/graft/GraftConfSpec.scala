@@ -4,9 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins GraftConf's operator contract: every routing threshold reads
   * its system property at USE time (a long-lived driver can re-tune
-  * between queries), falls back to its documented default, and the
-  * derived bound (joinMaxProbesPerBucket = 8× cogroup bound) follows
-  * an override of its base. */
+  * between queries), falls back to its documented default, and a
+  * malformed value fails fast. */
 class GraftConfSpec extends AnyFunSuite {
 
   private def withProp[A](key: String, v: String)(body: => A): A = {
@@ -17,8 +16,8 @@ class GraftConfSpec extends AnyFunSuite {
   test("documented defaults") {
     assert(GraftConf.distributedMinQueries == 131072)
     assert(GraftConf.cogroupMaxProbes == 8192)
-    assert(GraftConf.joinMaxProbesPerBucket == 8 * 8192)
-    assert(GraftConf.fusedMinProbedRows == 28000000L)
+    assert(GraftConf.componentsDriverMaxEdges == 1 << 21)
+    assert(GraftConf.prepareMaterializeMaxBytes == 4L << 30)
   }
 
   test("overrides are read at use time and revert on clear") {
@@ -26,27 +25,22 @@ class GraftConfSpec extends AnyFunSuite {
       assert(GraftConf.distributedMinQueries == 16)
     }
     assert(GraftConf.distributedMinQueries == 131072)
-    withProp("graft.join.minProbedRows", "0") {
-      assert(GraftConf.fusedMinProbedRows == 0L)
+    withProp("graft.prepare.materializeMaxBytes", "0") {
+      assert(GraftConf.prepareMaterializeMaxBytes == 0L)
     }
-    assert(GraftConf.fusedMinProbedRows == 28000000L)
+    assert(GraftConf.prepareMaterializeMaxBytes == 4L << 30)
   }
 
   test("malformed override fails fast, naming the key and value") {
-    withProp("graft.join.minProbedRows", "28M") {
-      val e = intercept[IllegalArgumentException](GraftConf.fusedMinProbedRows)
-      assert(e.getMessage.contains("graft.join.minProbedRows"))
-      assert(e.getMessage.contains("28M"))
+    withProp("graft.prepare.materializeMaxBytes", "4G") {
+      val e = intercept[IllegalArgumentException](
+        GraftConf.prepareMaterializeMaxBytes)
+      assert(e.getMessage.contains("graft.prepare.materializeMaxBytes"))
+      assert(e.getMessage.contains("4G"))
     }
     withProp("graft.distributed.minQueries", "lots") {
       val e = intercept[IllegalArgumentException](GraftConf.distributedMinQueries)
       assert(e.getMessage.contains("graft.distributed.minQueries"))
-    }
-  }
-
-  test("per-bucket bound follows an override of the cogroup bound") {
-    withProp("graft.cogroup.maxProbes", "100") {
-      assert(GraftConf.joinMaxProbesPerBucket == 800)
     }
   }
 
