@@ -48,9 +48,63 @@ object Kernels extends Serializable {
 
   /** Distance under metric; smaller is better ("ip" is negated). */
   def distance(metric: String, a: Array[Float], b: Array[Float]): Double =
-    metric match {
-      case "l2" => l2Sqr(a, b)
-      case "ip" => -dot(a, b)
-      case m    => throw new IllegalArgumentException(s"unknown metric $m")
+    if (isIp(metric)) -dot(a, b) else l2Sqr(a, b)
+
+  /** Whether `metric` is "ip" (false for "l2"): the metric resolved once,
+    * outside a scan loop. Throws on any other metric. */
+  def isIp(metric: String): Boolean = metric match {
+    case "l2" => false
+    case "ip" => true
+    case m    => throw new IllegalArgumentException(s"unknown metric $m")
+  }
+
+  /** `out(r) = distance(q, rows(r))` for every row, "ip" if `ip` else
+    * "l2": the list scan of `scan_one_list` (`Auncel/IndexIVF.cpp:439-475`)
+    * four rows at a time ([[distances4]]), the last `rows.length % 4`
+    * one at a time. Bit-identical to [[distance]] on every row.
+    * @param out at least `rows.length` long */
+  def distances(ip: Boolean, q: Array[Float], rows: Array[Array[Float]],
+                out: Array[Double]): Unit = {
+    val n = rows.length
+    var r = 0
+    while (r + 4 <= n) { distances4(ip, q, rows, r, out); r += 4 }
+    while (r < n) {
+      out(r) = if (ip) -dot(q, rows(r)) else l2Sqr(q, rows(r))
+      r += 1
     }
+  }
+
+  /** `out(r + j) = distance(q, rows(r + j))` for j in 0..3: the four
+    * pairs share each query load, and each keeps its own double
+    * accumulator summed left to right with [[l2Sqr]]'s and [[dot]]'s
+    * conversions, so every result is bit-identical to theirs. Only
+    * independent pairs interleave, which hides the latency of the
+    * serial add chain. */
+  def distances4(ip: Boolean, q: Array[Float], rows: Array[Array[Float]],
+                 r: Int, out: Array[Double]): Unit = {
+    val b0 = rows(r); val b1 = rows(r + 1); val b2 = rows(r + 2)
+    val b3 = rows(r + 3)
+    val n = q.length
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var i = 0
+    if (ip) {
+      while (i < n) {
+        val a = q(i).toDouble
+        s0 += a * b0(i).toDouble; s1 += a * b1(i).toDouble
+        s2 += a * b2(i).toDouble; s3 += a * b3(i).toDouble
+        i += 1
+      }
+      out(r) = -s0; out(r + 1) = -s1; out(r + 2) = -s2; out(r + 3) = -s3
+    } else {
+      while (i < n) {
+        val a = q(i).toDouble
+        val d0 = a - b0(i).toDouble; s0 += d0 * d0
+        val d1 = a - b1(i).toDouble; s1 += d1 * d1
+        val d2 = a - b2(i).toDouble; s2 += d2 * d2
+        val d3 = a - b3(i).toDouble; s3 += d3 * d3
+        i += 1
+      }
+      out(r) = s0; out(r + 1) = s1; out(r + 2) = s2; out(r + 3) = s3
+    }
+  }
 }

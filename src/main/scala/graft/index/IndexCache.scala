@@ -331,7 +331,10 @@ object IndexCache {
     * row count behind the estimate is memoized under the store's key, so
     * such a table is counted once, not on every call. A frame
     * that is itself cached (the `assigned` frame of [[ivf]]/[[imi]]) is
-    * held twice. [[invalidate]] and [[clear]] unpersist stores.
+    * held twice. [[invalidate]] and [[clear]] unpersist stores. Each
+    * decision logs one INFO line: a store reused, built (its bytes and the
+    * pool), evicted (which store, its bytes) or declined (the estimate
+    * against the pool, so the table's rows serve).
     * @param dim the vectors' dimension (the model's) */
   def residentLists(df: DataFrame, dim: Int): Option[ResidentLists] = {
     val plan = df.queryExecution.analyzed
@@ -340,18 +343,21 @@ object IndexCache {
     val old = residentMemo.get(h)
     if (old != null && old.plan.sameResult(plan) && old.files == files) {
       old.lastUse = residentClock.incrementAndGet()
+      log.info(s"residentLists: reused store rdd ${old.lists.id} " +
+        s"(${old.bytes} B)")
       Some(old.lists)
     } else {
       // a stale entry (or a colliding plan's) is dropped before the build,
       // so the map never holds a store that is unpersisted or stale
       if (old != null) dropResident(h, old)
       val bytes = rowCount(df, h, plan, files) * (4L * dim + 28)
-      if (!makeRoom(df.sparkSession.sparkContext, bytes)) None
-      else {
+      makeRoom(df.sparkSession.sparkContext, bytes).map { pool =>
         val store = new Resident(plan, files, buildResident(df), bytes)
         val raced = residentMemo.put(h, store)
         if (raced != null) raced.lists.unpersist()
-        Some(store.lists)
+        log.info(s"residentLists: built store rdd ${store.lists.id} " +
+          s"($bytes B of a $pool B pool)")
+        store.lists
       }
     }
   }
@@ -401,29 +407,38 @@ object IndexCache {
   }
 
   /** Unpersists least-recently-used stores until `bytes` more fit the
-    * [[storePool]]; false, evicting nothing, when `bytes` alone exceeds
-    * it. Builds run outside this lock, so two concurrent builds can
-    * overshoot the pool by one store until the next call evicts. */
+    * [[storePool]] and returns the pool; None, evicting nothing, when
+    * `bytes` alone exceeds it. Builds run outside this lock, so two
+    * concurrent builds can overshoot the pool by one store until the next
+    * call evicts. */
   private def makeRoom(sc: org.apache.spark.SparkContext,
-                       bytes: Long): Boolean = residentMemo.synchronized {
+                       bytes: Long): Option[Long] = residentMemo.synchronized {
     import scala.jdk.CollectionConverters._
     def held = residentMemo.values.asScala.map(_.bytes).sum
     val pool = storePool(sc)
-    if (bytes > pool) false
-    else {
+    if (bytes > pool) {
+      log.info(s"residentLists: declined a store of $bytes B, over the " +
+        s"$pool B pool; the table's rows serve its scans")
+      None
+    } else {
       var over = held + bytes > pool
       while (over) {
         val lru = residentMemo.entrySet.asScala.toSeq
         if (lru.isEmpty) over = false
         else {
           val e = lru.minBy(_.getValue.lastUse)
+          log.info(s"residentLists: evicted store rdd " +
+            s"${e.getValue.lists.id} (${e.getValue.bytes} B) to fit $bytes B " +
+            s"in a $pool B pool")
           dropResident(e.getKey, e.getValue)
           over = held + bytes > pool
         }
       }
-      true
+      Some(pool)
     }
   }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Storage memory the stores may fill: what the block managers have
     * free plus what the memoized stores hold. Specs pin a smaller pool

@@ -28,13 +28,15 @@ import graft.profile.ErrorProfile.Trace
   *    (`IndexIVF.cpp:570-598`) — staged form: a round with an unchanged
   *    worst distance counts as that round's probe count.
   *
-  * Scale shape: each round reads ONLY the newly probed lists and
-  * per-partition bounded heaps shuffle `parts × nq_active × k` rows. On
+  * Scale shape: each round reads ONLY the newly probed lists, and each
+  * partition's bounded heaps leave it as at most `nq_active × k` rows. On
   * the driver-decided rounds the lists are the table's resident lists
   * ([[graft.index.IndexCache.residentLists]]), pruned to the partitions
   * that hold a probed list, when they fit in storage memory; otherwise,
   * and on the fully-distributed path, they are the table's rows, pruned
-  * by `list_no IN (…)`. The carried top-k (≤ k per query) lives in the
+  * by `list_no IN (…)`. A driver-decided round is one stage with no
+  * shuffle: the partitions' heaps merge by `treeAggregate`
+  * ([[roundTopK]]). The carried top-k (≤ k per query) lives in the
   * [[Decider]]'s driver arrays on the driver-decided rounds and in the
   * [[CtrlD]] rows on the fully-distributed path — nothing per-vector
   * ever sits on the driver.
@@ -478,13 +480,13 @@ object BoundedSearch {
     * table is scanned from its resident lists
     * ([[graft.index.IndexCache.residentLists]], built once per table) when
     * they fit in storage memory, else from its rows, and the batch's query
-    * vectors are broadcast once. Each round is exactly
-    * ONE RDD job ([[roundTopK]]: pruned scan, per-query merge, collect of
-    * ≤ active × k rows); the [[Decider.advance]] stage step runs on the
-    * driver. The finishing pass probes on from each query's decision
-    * stage to stage × multiplier in one more job of the same shape, and
-    * its top-k meets the [[Decider]]'s in one driver-side [[TopK]] per
-    * query, ranked in the SQL window's order: ≤ nq × k result rows, the
+    * vectors are broadcast once. Each round is exactly ONE RDD job of one
+    * stage ([[roundTopK]]: the pruned scan, whose per-partition heaps
+    * merge per query on their way to the driver); the [[Decider.advance]]
+    * stage step runs on the driver. The finishing pass probes on from each
+    * query's decision stage to stage × multiplier in one more job of the
+    * same shape, and its top-k meets the [[Decider]]'s in one driver-side
+    * [[TopK]] per query, ranked in the SQL window's order: ≤ nq × k result rows, the
     * rows the [[Decider]] already holds. The stats come straight out of
     * the [[Decider]]. Decisions are bit-identical to the distributed path
     * by construction: same rankings, same boundary windows, same
@@ -556,37 +558,36 @@ object BoundedSearch {
     Result(results, stats)
   }
 
-  /** One driver-round job: the probed-list scan ([[IVFSearch.scanVectors]],
-    * partition-pruned over the resident lists when the table has them,
-    * else over its rows), a per-slot merge of the partitions'
-    * heaps into one [[TopK]] per slot (a combineByKey; skipped when one
-    * partition was scanned, whose heaps are already whole), and a collect
-    * of ≤ slots × k rows, re-heaped per slot on the driver. The heaps keep
-    * the k smallest under IEEE distance, then id — the order of the SQL
-    * window ([[FlatSearch.mergeTopK]]) this merge replaces.
+  /** One driver-round job of one stage: the probed-list scan
+    * ([[IVFSearch.scanVectors]], partition-pruned over the resident lists
+    * when the table has them, else over its rows) whose partitions' heaps
+    * are merged per slot by `treeAggregate`, with no shuffle: each
+    * partition folds its ≤ slots × k rows into one [[TopK]] per slot, and
+    * those arrays merge on the driver (Spark adds tree levels only when
+    * the partition count makes one pay). The heaps keep the k smallest
+    * under IEEE distance, then id — the order of the SQL window
+    * ([[FlatSearch.mergeTopK]]).
     * @return slot → its heap, null where no probed list held a row */
   private[graft] def roundTopK(ivfData: DataFrame,
       lists: Option[IndexCache.ResidentLists], metric: String,
       qVecs: Broadcast[Array[Array[Float]]], probeMap: Map[Int, Array[Int]],
-      k: Int, nSlots: Int): Array[TopK] = {
-    val heaps = new Array[TopK](nSlots)
-    val partials = IVFSearch.scanVectors(ivfData, lists, metric, qVecs,
-      probeMap, k)
-    val n = partials.getNumPartitions
-    val merged =
-      if (n <= 1) partials
-      else partials.map { case (s, id, d) => (s, (id, d)) }
-        .combineByKey[TopK](
-          { case (id, d) => val h = new TopK(k); h.add(d, id); h },
-          { case (h, (id, d)) => h.add(d, id); h },
-          (a, b) => a.merge(b), n)
-        .flatMap { case (s, h) => h.sorted.iterator.map { case (d, id) => (s, id, d) } }
-    if (n > 0) merged.collect().foreach { case (s, id, d) =>
-      if (heaps(s) == null) heaps(s) = new TopK(k)
-      heaps(s).add(d, id)
-    }
-    heaps
-  }
+      k: Int, nSlots: Int): Array[TopK] =
+    IVFSearch.scanVectors(ivfData, lists, metric, qVecs, probeMap, k)
+      .treeAggregate(new Array[TopK](nSlots))(
+        { case (heaps, (s, id, d)) =>
+          if (heaps(s) == null) heaps(s) = new TopK(k)
+          heaps(s).add(d, id)
+          heaps
+        },
+        { (a, b) =>
+          var s = 0
+          while (s < a.length) {
+            if (a(s) == null) a(s) = b(s)
+            else if (b(s) != null) a(s).merge(b(s))
+            s += 1
+          }
+          a
+        })
 
   /** Build the finishing-pass probe map from SHALLOW rankings: queries
     * whose probe target exceeds the shallow depth (the capped tail —

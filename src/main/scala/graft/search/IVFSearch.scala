@@ -27,7 +27,7 @@ import graft.operators.TopK
   * and the profile capture — go through [[scanVectors]] instead, which
   * reads the table's resident lists from memory
   * ([[graft.index.IndexCache.residentLists]]) when they fit in storage
-  * memory.
+  * memory, and scores them list-major, four rows per kernel call.
   */
 object IVFSearch {
 
@@ -153,9 +153,10 @@ object IVFSearch {
       .mapPartitions(it => slotTopK(it, bp.value, nSlots, k, mkScore))
   }
 
-  /** The one top-k scan loop every flat, probed-list and list-group scan
-    * feeds its heaps through (`scan_one_list`, `Auncel/IndexIVF.cpp:439-475`;
-    * flat `knn_L2sqr`, `utils.cpp:417-492`). Each (list_no, id, payload)
+  /** The row-at-a-time top-k scan loop of every flat, Parquet probed-list
+    * and list-group scan (`scan_one_list`, `Auncel/IndexIVF.cpp:439-475`;
+    * flat `knn_L2sqr`, `utils.cpp:417-492`); a resident store is scored by
+    * [[residentTopK]] instead. Each (list_no, id, payload)
     * row is scored against every slot probing its list; slot s keeps one
     * bounded [[TopK]], `heaps(s)`, allocated on first use. `mkScore` runs
     * once per call (per partition or list group): a scorer reads its
@@ -193,10 +194,14 @@ object IVFSearch {
         i += 1
       }
     }
-    Iterator.range(0, nSlots).filter(heaps(_) != null).flatMap { slot =>
+    heapRows(heaps)
+  }
+
+  /** The (slot, id, dist) rows of every non-null heap, ascending per slot. */
+  private def heapRows(heaps: Array[TopK]): Iterator[(Int, Long, Double)] =
+    Iterator.range(0, heaps.length).filter(heaps(_) != null).flatMap { slot =>
       heaps(slot).sorted.iterator.map { case (d, id) => (slot, id, d) }
     }
-  }
 
   /** [[slotTopK]]'s one-list case, the flat scan: every (id, payload) row
     * is scored against every one of `nSlots` slots. */
@@ -207,24 +212,25 @@ object IVFSearch {
 
   /** The float probed-list scan behind every driver-decided bounded-search
     * round, its finishing pass and the error-profile capture
-    * ([[graft.profile.ProfileTrainer]]): [[slotTopK]] over the table's
-    * RESIDENT lists when it has them ([[graft.index.IndexCache.residentLists]]),
-    * read through a `PartitionPruningRDD`, so tasks run only for the store
-    * partitions that hold a probed list and no Parquet is planned or
-    * decoded; else over the table's rows ([[scanProbed]]'s `list_no IN (…)`
-    * pass). Both feed the same rows to the same scores and heaps. Slot s
-    * scores `qVecs(s / slotsPerQuery)` (metric-normalized vectors),
-    * broadcast once by the caller.
+    * ([[graft.profile.ProfileTrainer]]). When the table has RESIDENT lists
+    * ([[graft.index.IndexCache.residentLists]]) it reads them through a
+    * `PartitionPruningRDD`, so tasks run only for the store partitions
+    * that hold a probed list and no Parquet is planned or decoded, and
+    * scores them list-major ([[residentTopK]]); else it scans the table's
+    * rows ([[scanProbed]]'s `list_no IN (…)` pass through [[slotTopK]]).
+    * Both keep the same k smallest (dist, id) per slot. Slot s scores
+    * `qVecs(s / slotsPerQuery)` (metric-normalized vectors), broadcast
+    * once by the caller.
     * @param probeMap list_no → the slots probing that list
     * @return (slot, id, dist) partial rows, ≤ k per slot per partition */
   private[graft] def scanVectors(ivfData: DataFrame,
       lists: Option[graft.index.IndexCache.ResidentLists], metric: String,
       qVecs: Broadcast[Array[Array[Float]]], probeMap: Map[Int, Array[Int]],
       k: Int, slotsPerQuery: Int = 1): RDD[(Int, Long, Double)] = {
-    val score = vectorScore(metric, qVecs, slotsPerQuery)
+    val ip = Kernels.isIp(metric)
     lists match {
       case None => scanProbed[Array[Float]](ivfData, vectorRows, probeMap, k,
-        score).rdd
+        vectorScore(metric, qVecs, slotsPerQuery)).rdd
       case Some(store) =>
         val sc = store.sparkContext
         if (probeMap.isEmpty) return sc.emptyRDD[(Int, Long, Double)]
@@ -233,14 +239,49 @@ object IVFSearch {
         val bp = sc.broadcast(probeMap)
         val nSlots = probeMap.valuesIterator.map(_.max).max + 1
         PartitionPruningRDD.create(store, probed.contains).mapPartitions { it =>
-          val pm = bp.value
-          val rows = it.filter(l => pm.contains(l._1)).flatMap {
-            case (l, (ids, vecs)) =>
-              Iterator.range(0, ids.length).map(i => (l, ids(i), vecs(i)))
-          }
-          slotTopK(rows, pm, nSlots, k, score)
+          residentTopK(it, bp.value, qVecs.value, slotsPerQuery, ip, nSlots, k)
         }
     }
+  }
+
+  /** The resident arm of [[scanVectors]], `scan_one_list`
+    * (`Auncel/IndexIVF.cpp:439-475`) per probing slot: each probed list is
+    * scored against one slot at a time, four rows per
+    * [[Kernels.distances4]] call, and the distances feed the slot's
+    * bounded [[TopK]] straight from the list's own arrays, with no
+    * per-row tuple or per-pair closure. A NaN distance rejects the row, as
+    * in [[slotTopK]]; the heaps keep the same k smallest (dist, id) in any
+    * scoring order, so both arms agree row for row.
+    * @param lists (list_no, (ids, vectors)) elements of one store partition
+    * @return ≤ k (slot, id, dist) rows per slot */
+  private def residentTopK(
+      lists: Iterator[(Int, (Array[Long], Array[Array[Float]]))],
+      slotsOf: Map[Int, Array[Int]], qs: Array[Array[Float]],
+      slotsPerQuery: Int, ip: Boolean, nSlots: Int,
+      k: Int): Iterator[(Int, Long, Double)] = {
+    val heaps = new Array[TopK](nSlots)
+    var dists = Array.emptyDoubleArray
+    lists.foreach { case (l, (ids, vecs)) =>
+      val slots = slotsOf.getOrElse(l, Array.emptyIntArray)
+      if (dists.length < ids.length) dists = new Array[Double](ids.length)
+      var i = 0
+      while (i < slots.length) {
+        val slot = slots(i)
+        Kernels.distances(ip, qs(slot / slotsPerQuery), vecs, dists)
+        var h = heaps(slot)
+        var r = 0
+        while (r < ids.length) {
+          val s = dists(r)
+          if (!java.lang.Double.isNaN(s)) {
+            if (h == null) { h = new TopK(k); heaps(slot) = h }
+            h.add(s, ids(r))
+          }
+          r += 1
+        }
+        i += 1
+      }
+    }
+    heapRows(heaps)
   }
 
   private def vectorScore(metric: String, qVecs: Broadcast[Array[Array[Float]]],

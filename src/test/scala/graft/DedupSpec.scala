@@ -196,6 +196,54 @@ class DedupSpec extends SparkSpec {
     assert(viaCollect.nonEmpty, "fixture must produce pairs")
   }
 
+  test("ivfPairs and lshPairs take a reliable checkpoint when a checkpoint dir is set") {
+    import spark.implicits._
+    // the refinement fixture, with the key collect cap at 0 so every
+    // materialization runs: the oversized-key aggregates of both guards,
+    // each refinement level's reassignment and the banded rerank
+    val rnd = new scala.util.Random(7)
+    val pts = randVecs(120, 16, seed = 35)
+    val scaled = (0 until 15).map(i => pts(i).map(_ * 2.0f)).toArray
+    val ident = (15 until 30).map(i => pts(i).clone()).toArray
+    val near = (30 until 40).map(i =>
+      pts(i).map(x => x + 0.01f * rnd.nextGaussian().toFloat)).toArray
+    val all = pts ++ scaled ++ ident ++ near
+    val df = all.indices.map(_.toLong).zip(all.map(_.toSeq)).toDF("id", "vec")
+      .select(col("id"), col("vec").cast("array<float>").as("vec"))
+    val assigned = df.withColumn("list_no", lit(0))
+    val model = BinaryHash.train(d = 16, nbits = 63, seed = 11L)
+    def pairs(out: org.apache.spark.sql.DataFrame) =
+      out.select(col("a").cast("long"), col("b").cast("long"),
+          col("cos").cast("double")).as[(Long, Long, Double)].collect()
+        .map { case (a, b, c) => (a, b, java.lang.Double.doubleToRawLongBits(c)) }
+        .sorted.toSeq
+    def run() = {
+      val savedCap = EmbeddingDedup.subSplitCollectCap
+      try {
+        EmbeddingDedup.subSplitCollectCap = 0
+        (pairs(EmbeddingDedup.ivfPairs(assigned, threshold = 0.99, maxList = 32)),
+          pairs(EmbeddingDedup.lshPairs(df, model, threshold = 0.99, maxBucket = 8)))
+      } finally EmbeddingDedup.subSplitCollectCap = savedCap
+    }
+    def files(f: java.io.File): Int =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(files).sum
+      else 1
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("dedup_ckpt").toFile
+    sc.setCheckpointDir(null)
+    val (localIvf, localLsh) = run()
+    assert(files(dir) == 0)
+    sc.setCheckpointDir(dir.getPath)
+    try {
+      val (ckptIvf, ckptLsh) = run()
+      assert(localIvf.nonEmpty && localLsh.nonEmpty, "fixture must produce pairs")
+      assert(ckptIvf == localIvf, "checkpointed ivfPairs rows differ")
+      assert(ckptLsh == localLsh, "checkpointed lshPairs rows differ")
+      assert(files(dir) > 0, "the checkpoint dir gained no files")
+    } finally sc.setCheckpointDir(prev.orNull)
+  }
+
   test("ivfPairs guard: dropped cells still pair bit-identical twins") {
     import spark.implicits._
     // maxLevels=0 forces the terminal drop arm immediately (the whole

@@ -26,6 +26,66 @@ class KernelsSpec extends SparkSpec {
     assert(gotDot.sameElements(vs.take(10).map(v => Kernels.dot(v, vs(0)))))
   }
 
+  test("the four-row batch kernel ≡ Kernels.distance by raw bits on adversarial inputs") {
+    val rnd = new scala.util.Random(41)
+    val specials = Array(0f, -0f, Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity, Float.MinPositiveValue, -Float.MinPositiveValue,
+      1.17549421e-38f, Float.MaxValue, -Float.MaxValue, 1f, -1f)
+    // coordinates from specials, subnormals, wide magnitudes or plain
+    // Gaussians; the plain draws make every sum order-sensitive
+    def coord(kind: Int): Float = kind match {
+      case 0 => specials(rnd.nextInt(specials.length))
+      case 1 => java.lang.Float.intBitsToFloat(rnd.nextInt(0x007fffff) + 1) *
+        (if (rnd.nextBoolean()) 1f else -1f)
+      case 2 => (rnd.nextGaussian() * math.pow(10, rnd.nextInt(16) - 8)).toFloat
+      case _ => rnd.nextGaussian().toFloat
+    }
+    def vec(d: Int, kind: Int): Array[Float] = Array.fill(d)(
+      if (kind == 4) coord(rnd.nextInt(4)) else coord(kind))
+    def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+    var checked = 0
+    for (d <- Seq(1, 3, 64, 65); n <- 0 to 9; kind <- 0 to 4; rep <- 0 until 3) {
+      val q = vec(d, kind)
+      val rows = Array.fill(n)(vec(d, if (rep == 0) kind else 3))
+      // a near-orthogonal row: q's 2-D rotation (x, y) → (−y, x), and an
+      // all-zero row, where a row slot is free
+      if (n > 1 && d > 1) rows(0) = Array.tabulate(d)(i =>
+        if (i == 0) -q(1) else if (i == 1) q(0) else 0f)
+      if (n > 2) rows(n - 1) = new Array[Float](d)
+      for (metric <- Seq("l2", "ip")) {
+        val out = Array.fill(n + 2)(Double.NaN)
+        Kernels.distances(Kernels.isIp(metric), q, rows, out)
+        rows.indices.foreach { r =>
+          val want = Kernels.distance(metric, q, rows(r))
+          assert(bits(out(r)) == bits(want),
+            s"$metric d=$d n=$n kind=$kind row $r: ${out(r)} vs $want")
+          checked += 1
+        }
+        assert(out.drop(n).forall(_.isNaN), "wrote past the rows")
+      }
+    }
+    assert(checked > 5000)
+    // near-orthogonal Gaussian pairs: rows nearly orthogonal to q, whose
+    // inner products cancel to a few ulps of the terms
+    for (d <- Seq(3, 64, 65)) {
+      val q = vec(d, 3)
+      val rows = Array.fill(9) {
+        val v = vec(d, 3)
+        val c = (Kernels.dot(q, v) / Kernels.dot(q, q)).toFloat
+        Array.tabulate(d)(i => v(i) - c * q(i))
+      }
+      for (metric <- Seq("l2", "ip")) {
+        val out = new Array[Double](9)
+        Kernels.distances(Kernels.isIp(metric), q, rows, out)
+        rows.indices.foreach { r =>
+          assert(bits(out(r)) == bits(Kernels.distance(metric, q, rows(r))),
+            s"near-orthogonal $metric d=$d row $r")
+        }
+      }
+    }
+    assertThrows[IllegalArgumentException](Kernels.isIp("cosine"))
+  }
+
   test("TopK keeps k smallest with id tie-break") {
     val rnd = new scala.util.Random(3)
     val items = Array.fill(500)((rnd.nextInt(40).toDouble, rnd.nextLong().abs))

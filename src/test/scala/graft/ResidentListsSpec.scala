@@ -15,7 +15,8 @@ import graft.search.{BoundedSearch, FlatSearch}
   * served from its old store, the per-slot merges keep the SQL window's
   * order, a round launches tasks only for the store partitions that
   * hold its probed lists, the stores stay within their storage pool, and
-  * a table with no store is scanned from its rows to the same answer. */
+  * a table with no store is scanned from its rows to the same answer, NaN
+  * and all-zero rows included. */
 class ResidentListsSpec extends SparkSpec {
 
   val d = 16
@@ -194,8 +195,8 @@ class ResidentListsSpec extends SparkSpec {
 
     val twoParts = (0 until nlist).filter(l => part.getPartition(l) <= 1).toSet
     val (jobs, tasks) = countTasks { got = heaps(twoParts) }
-    assert(jobs == 1 && tasks == 4,
-      s"a two-partition round: $jobs jobs, $tasks tasks (2 scan + 2 merge)")
+    assert(jobs == 1 && tasks == 2,
+      s"a two-partition round: $jobs jobs, $tasks tasks (2 scan)")
     assert(got == exact(twoParts))
   }
 
@@ -233,6 +234,51 @@ class ResidentListsSpec extends SparkSpec {
     }
     IndexCache.clear()
     assert(stores == 0)
+  }
+
+  test("a NaN-bearing and an all-zero row: store ≡ rows ≡ distributed, NaN never returned") {
+    import spark.implicits._
+    IndexCache.clear()
+    val clean = clusteredVecs(1500, d, 12, seed = 17)
+    val model = IVFIndex.train(vecDF(clean), nlist, seed = 42L)
+    val tq = vecDF(clusteredVecs(1600, d, 12, seed = 18).drop(1500), "qid")
+    val traces = ProfileTrainer.train(IVFIndex.assign(vecDF(clean), model),
+      model, tq, FlatSearch.knn(vecDF(clean), tq, k), maxTopk = k, bs = 50)
+    val nanId = 7
+    val zeroId = 3
+    val base = clean.map(_.clone())
+    base(nanId)(d / 2) = Float.NaN
+    base(zeroId) = new Array[Float](d)
+    val assigned = IVFIndex.assign(vecDF(base), model).cache()
+    // the zero vector as a query: its nearest row is the zero row at +0.0
+    val qs = new Array[Float](d) +: base(nanId).updated(d / 2, 0f) +:
+      clusteredVecs(30, d, 12, seed = 19)
+    val qdf = qs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0.85f) }
+      .toSeq.toDF("qid", "vec", "required_recall")
+    for (mult <- Seq(2f, nlist.toFloat)) {
+      IndexCache.clear() // the traces' capture built a store of `clean`
+      def run(forceDistributed: Boolean) = {
+        val r = BoundedSearch.search(assigned, model, traces, qdf, k,
+          multiplier = mult, stdM = 1.0f, forceDistributed = forceDistributed)
+        (rows(r.results), r.stats.sortBy(_.qid))
+      }
+      val fromRows = withPool(0L)(run(forceDistributed = false))
+      assert(stores == 0, "a zero pool must build no store")
+      val distributed = run(forceDistributed = true)
+      val fromStore = run(forceDistributed = false)
+      assert(stores == 1)
+      assert(fromStore._1 == fromRows._1, s"multiplier $mult: store rows differ from the rows arm")
+      assert(fromStore._2 == fromRows._2, s"multiplier $mult: store stats differ from the rows arm")
+      assert(fromStore._1 == distributed._1, s"multiplier $mult: store rows differ from distributed")
+      assert(fromStore._2 == distributed._2, s"multiplier $mult: store stats differ from distributed")
+      assert(!fromStore._1.exists(_._3 == nanId), "the NaN row was returned")
+      assert(fromStore._1.count(_._1 == 1L) == k)
+      if (mult == nlist.toFloat)
+        assert(fromStore._1.head == (0L, 1, zeroId.toLong,
+          java.lang.Double.doubleToRawLongBits(0.0)),
+          "the zero query must rank the zero row first at +0.0")
+    }
+    IndexCache.clear()
   }
 
   test("a table with no store is scanned from its rows: same traces, rows and stats") {
