@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
-import graft.index.IVFIndex
+import graft.index.{IVFIndex, IndexCache}
 import graft.profile.ProfileTrainer
 import graft.search.{BoundedSearch, FlatSearch, IVFSearch}
 
@@ -327,7 +327,7 @@ object Eval {
         }
         // the search_mode=2 flow with honest incremental cost: probe the
         // checkpoint lists (1 then 2), predict, search with the budget.
-        // (LAET.search's stagedTopK computes ALL stages for training
+        // (LAET.search's staged capture computes ALL stages for training
         // convenience — timing that would overcharge LAET, so the eval
         // flow probes exactly the checkpoints the features need; the
         // ≤3 re-scanned lists vs the reference's continue-from-
@@ -419,11 +419,10 @@ object Eval {
         // scan-work dispersion, not scheduler noise. (LAET's rows are
         // its predicted budget, the reference's continue-from-checkpoint
         // semantics — the ≤3 checkpoint lists are not double-billed.)
-        val listSizes: Map[Int, Long] = assigned.groupBy("list_no").count()
-          .as[(Int, Long)].collect().toMap
+        val listSizes = IndexCache.listSizes(assigned)
         def scanRows(v: Array[Float], np: Int): Long =
           model.rankCentroids(v).take(np)
-            .map { case (l, _) => listSizes.getOrElse(l, 0L) }.sum
+            .map { case (l, _) => listSizes.getOrElse(l.toLong, 0L) }.sum
         val fullBatch: Batch = evalQ.zipWithIndex
           .map { case (v, i) => (i.toLong, v) }.toSeq
         println(s"full batch (${fullBatch.size} queries, one batch) — " +

@@ -4,7 +4,6 @@ import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.Kernels
 import graft.index.IVFModel
 import graft.profile.ProfileTrainer
 import graft.search.IVFSearch
@@ -81,21 +80,17 @@ object LAET {
     val spark = ivfData.sparkSession
     import spark.implicits._
     val levels = ProfileTrainer.numLevels(model.nlist)
-
-    val staged = ProfileTrainer.stagedTopK(ivfData, model, trainQueries, k)
-      .as[(Long, Int, Array[Double])].collect()
-      .groupBy(_._1).view.mapValues(_.map(s => (s._2, s._3)).toMap).toMap
+    val q = IVFSearch.queryRows(trainQueries)
+    val staged = ProfileTrainer.capture(ivfData, model, q, k)._2.map(_.toMap)
     val gtKth: Map[Long, Double] = gt.filter(col("rank") === k)
       .select(col("qid").cast("long"), col("dist"))
       .as[(Long, Double)].collect().toMap
-    val q = trainQueries.select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect()
 
-    val rows = q.flatMap { case (qid, v) =>
-      for {
-        stages <- staged.get(qid)
-        kth <- gtKth.get(qid)
-      } yield {
+    val rows = q.indices.flatMap { qi =>
+      val (qid, v) = q(qi)
+      val stages = staged(qi)
+      // a query with no captured row at any stage gets no training row
+      gtKth.get(qid).filter(_ => stages.nonEmpty).map { kth =>
         val label = (0 until levels).find { j =>
           stages.get(j).exists { dists =>
             dists.count(_ <= kth * 1.0005) >= targetRecall * k
@@ -110,7 +105,7 @@ object LAET {
           }
         (Vectors.dense(f), label)
       }
-    }.toSeq.toDF("features", "label")
+    }.toDF("features", "label")
 
     val gbt = new GBTRegressor().setMaxIter(30).setMaxDepth(5).setSeed(seed)
       .setFeaturesCol("features").setLabelCol("label")
@@ -126,26 +121,15 @@ object LAET {
     * checkpoint it predicted at, `IndexIVF.cpp:655-690`). */
   def search(ivfData: DataFrame, model: IVFModel, laet: Model,
              queries: DataFrame, k: Int): (DataFrame, Map[Long, Int]) = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val q = queries.select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-
-    val stagesByQ: Map[Long, Map[Int, Array[Double]]] =
-      ProfileTrainer.stagedTopK(ivfData, model, queries, k)
-        .filter(col("stage") <= laet.cpStages)
-        .select(col("qid").cast("long"), col("stage"), col("dists"))
-        .as[(Long, Int, Array[Double])].collect()
-        .groupBy(_._1).view.mapValues(_.map(s => (s._2, s._3)).toMap).toMap
-
+    val q = IVFSearch.queryRows(queries)
+    val staged = ProfileTrainer.capture(ivfData, model, q, k)._2.map(_.toMap)
     val floor = if (laet.cpStages > 0) laet.cpStages else 0
-    val nprobes: Map[Long, Int] = q.map { case (qid, v) =>
-      val stages = stagesByQ.getOrElse(qid, Map.empty[Int, Array[Double]])
-      val lvl = math.max(floor, predictLevel(laet, model, v, stages, k))
-      (qid, math.min(model.nlist, 1 << lvl))
-    }.toMap
-
-    (searchPerQueryNprobe(ivfData, model, queries, k, nprobes), nprobes)
+    val budgets = q.indices.map { qi =>
+      val lvl = math.max(floor, predictLevel(laet, model, q(qi)._2, staged(qi), k))
+      math.min(model.nlist, 1 << lvl)
+    }.toArray
+    (IVFSearch.searchNprobes(ivfData, model, q, k, budgets),
+      q.map(_._1).zip(budgets).toMap)
   }
 
   /** The raw predicted stage (ceil of the GBT output, clamped to
@@ -179,14 +163,10 @@ object LAET {
     // collapse nprobe to 1 — refuse rather than silently degrade.
     require(model.metric == "l2",
       s"searchHeuristic supports metric=l2 only (got ${model.metric})")
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val q = queries.select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val q = IVFSearch.queryRows(queries)
     val cap = math.max(1, model.nlist / 5)
-    val nprobes: Map[Long, Int] = q.map { case (qid, v) =>
-      val qv = if (model.metric == "ip") Kernels.l2Normalize(v) else v
-      val ranked = model.rankCentroids(qv).take(cap)
+    val budgets = q.map { case (_, v) =>
+      val ranked = model.rankCentroids(v).take(cap)
       val thresh = ranked(0)._2 * multiplierPct / 100.0
       var np = 0
       var j = 0
@@ -195,9 +175,10 @@ object LAET {
         if (ranked(j)._2 <= thresh) np = j + 1 else stop = true
         j += 1
       }
-      (qid, math.max(1, np))
-    }.toMap
-    (searchPerQueryNprobe(ivfData, model, queries, k, nprobes), nprobes)
+      math.max(1, np)
+    }
+    (IVFSearch.searchNprobes(ivfData, model, q, k, budgets),
+      q.map(_._1).zip(budgets).toMap)
   }
 
   /** Fixed-plan IVF search where each query has its own nprobe (1 when
@@ -205,10 +186,7 @@ object LAET {
   def searchPerQueryNprobe(ivfData: DataFrame, model: IVFModel,
                            queries: DataFrame, k: Int,
                            nprobes: Map[Long, Int]): DataFrame = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val q = queries.select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val q = IVFSearch.queryRows(queries)
     IVFSearch.searchNprobes(ivfData, model, q, k,
       q.map { case (qid, _) => nprobes.getOrElse(qid, 1) })
   }

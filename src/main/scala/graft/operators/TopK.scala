@@ -6,8 +6,11 @@ package graft.operators
   * (dist, id) so the current worst element is O(1) to inspect.
   *
   * Spark-side replacement for the reference's CMin/CMax heaps
-  * (`Auncel/Heap.h:46-349`): used inside `mapPartitions` partial scans;
-  * the cross-partition merge is a plain shuffle + window/aggregate.
+  * (`Auncel/Heap.h:46-349`): used inside `mapPartitions` partial scans.
+  * Across partitions, the driver-decided bounded-search rounds and the
+  * error-profile capture merge the heaps themselves ([[merge]] under
+  * `treeAggregate`, `BoundedSearch.roundTopK`); the one-shot searches
+  * merge their rows with a window rank (`FlatSearch.mergeTopK`).
   */
 final class TopK(val k: Int) extends Serializable {
   private val dists = new Array[Double](k)

@@ -134,7 +134,11 @@ object ErrorProfile {
     /** Sort-and-batch (`Trace::SB`, `IVF_pro.cpp:109-149`): sort points
       * descending by φ, average buckets of `bs`, σ over U per bucket
       * (σ of the last partial bucket divides by bs, as the reference
-      * does), then reverse to ascending. */
+      * does), then reverse to ascending. Points of equal φ (φ = 0 for
+      * every point with no boundary closer than its distance) sort by
+      * ascending U, so the trace depends only on the point set, not on
+      * the order it arrives in; the reference's `std::sort` leaves that
+      * order unspecified. */
     def sortAndBatch(nprobe: Int, points: Seq[(Float, Float)], bs: Int = 250): Trace = {
       // a stage with NO training points (pathological GT — e.g. ground
       // truth computed under a different distance convention than the
@@ -146,7 +150,11 @@ object ErrorProfile {
       // probes deeper — never unsafe w.r.t. the error bound
       if (points.isEmpty)
         return Trace(nprobe, Array(1f), Array(Float.MaxValue), Array(0f))
-      val sorted = points.toArray.sortBy { case (phi, _) => -phi }
+      // φ descending as `-φ` ascending, NaN last
+      val sorted = points.toArray.sortWith { case ((p1, u1), (p2, u2)) =>
+        val c = java.lang.Float.compare(-p1, -p2)
+        c < 0 || (c == 0 && java.lang.Float.compare(u1, u2) < 0)
+      }
       val size = sorted.count { case (p, u) => !(p < 0 && u < 0) }
       val sz = (size + bs - 1) / bs
       val phis = new Array[Float](sz)

@@ -1,30 +1,31 @@
 package graft.profile
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
 import graft.index.{IVFModel, IndexCache}
-import graft.search.IVFSearch
+import graft.operators.TopK
+import graft.search.{BoundedSearch, IVFSearch}
 import graft.profile.ErrorProfile.Trace
 
 /** Offline error-profile training (`Error_sys::sys_train`
   * `Auncel/profile.cpp:88-171` + the capture block
-  * `Auncel/IndexIVF.cpp:640-673`) as a Spark batch pipeline:
+  * `Auncel/IndexIVF.cpp:640-673`), the training queries collected like
+  * a bounded-search batch:
   *
-  *  1. run the training queries over the IVF table, capturing the
-  *     partial top-k at every power-of-2 probe stage ≤ nlist/8 — done in
-  *     ONE scan: each base row enters the heap of the stage at which its
-  *     list is first probed, and stage s's top-k is the merged union of
-  *     partials from stages ≤ s;
+  *  1. capture each query's partial top-k at every power-of-2 probe stage
+  *     ≤ nlist/8 in ONE job per query chunk ([[capture]]): each base row
+  *     enters the heap of the stage at which its list is first probed,
+  *     those heaps merge across partitions by `treeAggregate`, and stage
+  *     s's top-k is the driver-side merge of a query's heaps of stages ≤ s;
   *  2. per (query, stage): compute (φ, U) points against the exact
   *     ground truth (`kscaling`), φ from the query's boundary distances;
   *  3. sort-and-batch each stage's points into a monotone Trace
   *     (bucket size bs=250, per-bucket σ — `Trace::SB`).
   *
+  * Steps 2 and 3 run on the driver over ≤ train_n · levels top-k lists.
   * The traces are tiny (≤ train_n·k/4 points pre-batching) and live
-  * broadcast afterwards. For very large training batches, chunk the
-  * query set — per-partition heap state is O(nq · k · levels).
+  * broadcast afterwards.
   */
 object ProfileTrainer {
 
@@ -36,26 +37,19 @@ object ProfileTrainer {
     j + 1
   }
 
-  /** The staged-capture scan shared by profile training and the LAET
-    * baseline: per (query, power-of-2 stage) the sorted partial top-k
-    * distance list, computed in ONE pass over the probed lists.
+  /** The staged capture ([[capture]]) of a query frame as a local frame,
+    * one row per (query, stage) that holds at least one row.
     * @return (qid LONG, stage INT, dists ARRAY<DOUBLE> ascending) */
   def stagedTopK(ivfData: DataFrame, model: IVFModel, trainQueries: DataFrame,
                  maxTopk: Int, chunkQueries: Int = 8192): DataFrame = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-    val nlist = model.nlist
-    val levels = numLevels(nlist)
-    val maxRank = 1 << (levels - 1)
-    val q: Array[(Long, Array[Float])] = trainQueries
-      .select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val qVecs = q.map { case (qid, v) =>
-      (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v)
-    }
-    val ranks = IVFSearch.rankTop(spark, model, qVecs, maxRank)
-    stagedTopKImpl(ivfData, model, qVecs, ranks, maxTopk, levels,
-      chunkQueries)
+    val q = IVFSearch.queryRows(trainQueries)
+    val (_, staged) = capture(ivfData, model, q, maxTopk,
+      chunkQueries = chunkQueries)
+    q.indices.flatMap { qi =>
+      staged(qi).map { case (j, dists) => (q(qi)._1, j, dists) }
+    }.toDF("qid", "stage", "dists")
   }
 
   /** @param ivfData      (id, vec, list_no)
@@ -69,99 +63,73 @@ object ProfileTrainer {
             gt: DataFrame, maxTopk: Int, bs: Int = 250): Array[Trace] = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-
     val nlist = model.nlist
-    val levels = numLevels(nlist)
-    val maxRank = 1 << (levels - 1) // nlist/8 lists probed at the deepest stage
-
-    val q: Array[(Long, Array[Float])] = trainQueries
-      .select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val qVecs = q.map { case (qid, v) =>
-      (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v)
-    }
-
-    // per-query centroid rank prefix (boundary geometry reads
-    // nlist/8 + 20, the staged scan nlist/8) → boundary distances;
-    // ranking fans out for large training batches (rankTop)
-    val ranks: Array[Array[(Int, Float)]] = IVFSearch.rankTop(
-      spark, model, qVecs, math.max(maxRank, nlist / 8 + 20))
-    val dBs: Array[Array[Float]] = ranks.map { r =>
-      ErrorProfile.boundaryDistances(r.map(_._2), r.map(_._1), model.interdisAt, nlist)
-    }
-
     val metric = model.metric
-    val k = maxTopk
-    val stageTopk = stagedTopKImpl(ivfData, model, qVecs, ranks, maxTopk,
-      levels)
-
-    // (φ, U) point generation against ground truth
+    val q = IVFSearch.queryRows(trainQueries)
+    // the boundary geometry reads nlist/8 + 20 ranked centroids
+    val (ranks, staged) = capture(ivfData, model, q, maxTopk,
+      rankDepth = nlist / 8 + 20)
     val gtByQid: Map[Long, Array[Float]] = gt
       .select(col("qid").cast("long"), col("dist"), col("rank"))
       .as[(Long, Double, Int)].collect()
       .groupBy(_._1).map { case (qid, xs) =>
         (qid, xs.sortBy(_._3).map(x => rawDist(metric, x._2)))
       }
-    val qidToIdx: Map[Long, Int] = qVecs.map(_._1).zipWithIndex.toMap
-    val bGt = spark.sparkContext.broadcast(gtByQid)
-    val bDb = spark.sparkContext.broadcast(dBs)
-    val bQidIdx = spark.sparkContext.broadcast(qidToIdx)
-
-    val points: Array[(Int, Float, Float)] = stageTopk
-      .select(col("qid").cast("long"), col("stage"), col("dists"))
-      .as[(Long, Int, Array[Double])]
-      .flatMap { case (qid, stage, dists) =>
-        val gtd = bGt.value(qid)
-        val dB = bDb.value(bQidIdx.value(qid))
-        genPoints(metric, stage, dists, gtd, dB, k)
-      }.collect()
-
-    (0 until levels).map { j =>
-      val pts = points.filter(_._1 == j).map { case (_, phi, u) => (phi, u) }.toSeq
-      Trace.sortAndBatch(1 << j, pts, bs)
-    }.toArray
+    // (φ, U) point generation against ground truth
+    val points = Array.fill(numLevels(nlist))(Seq.newBuilder[(Float, Float)])
+    q.indices.foreach { qi =>
+      val r = ranks(qi)
+      val dB = ErrorProfile.boundaryDistances(r.map(_._2), r.map(_._1),
+        model.interdisAt, nlist)
+      staged(qi).foreach { case (j, dists) =>
+        points(j) ++= genPoints(metric, j, dists, gtByQid(q(qi)._1), dB,
+          maxTopk)
+      }
+    }
+    points.indices.map(j => Trace.sortAndBatch(1 << j, points(j).result(), bs))
+      .toArray
   }
 
-  /** One scan ([[stagedProbeMap]] slots through [[IVFSearch.scanVectors]]
-    * over the table's resident lists, built on first use when they fit in
-    * storage memory, else over its rows): per-partition, per (query,
-    * first-probed-stage) bounded heaps; stage s top-k = window top-k over partials with
-    * j0 ≤ s. Per-partition heap state is O(nq · levels · k), so training
-    * batches beyond `chunkQueries` are processed in chunks (bounded
-    * memory, one extra scan per chunk) and unioned. */
-  private def stagedTopKImpl(ivfData: DataFrame, model: IVFModel,
-                             qVecs: Array[(Long, Array[Float])],
-                             ranks: Array[Array[(Int, Float)]], maxTopk: Int,
-                             levels: Int, chunkQueries: Int = 8192): DataFrame = {
+  /** The staged capture shared by profile training, the LAET baseline and
+    * [[stagedTopK]]: qid-sorted (qid, vec) rows are metric-normalized and
+    * ranked `max(2^(levels−1), rankDepth)` centroids deep, then each chunk
+    * of `chunkQueries` queries is ONE [[BoundedSearch.roundTopK]] job of
+    * one stage with no shuffle ([[stagedProbeMap]] slots over the table's
+    * resident lists when they fit in storage memory, else over its rows).
+    * Per query, one [[TopK]] merges the heaps of stages j0 = 0, 1, … in
+    * order on the driver and is read out after each stage, so stage s
+    * holds the k smallest (dist, id) over the query's first 2^s ranked
+    * lists.
+    * @return (the rankings, per query its (stage, ascending top-k
+    *         distances) in stage order, stages where no probed list held a
+    *         row left out) */
+  private[graft] def capture(ivfData: DataFrame, model: IVFModel,
+      q: Array[(Long, Array[Float])], maxTopk: Int, rankDepth: Int = 0,
+      chunkQueries: Int = 8192)
+      : (Array[Array[(Int, Float)]], Array[IndexedSeq[(Int, Array[Double])]]) = {
     val spark = ivfData.sparkSession
-    import spark.implicits._
-    if (qVecs.length > chunkQueries) {
-      return qVecs.indices.grouped(chunkQueries).map { idxs =>
-        stagedTopKImpl(ivfData, model, idxs.map(qVecs).toArray,
-          idxs.map(ranks).toArray, maxTopk, levels, chunkQueries)
-      }.reduce(_ unionByName _)
+    val levels = numLevels(model.nlist)
+    val qVecs = q.map { case (qid, v) =>
+      (qid, if (model.metric == "ip") Kernels.l2Normalize(v) else v)
     }
-    val k = maxTopk
-    val bqids = spark.sparkContext.broadcast(qVecs.map(_._1))
-    val partials = IVFSearch.scanVectors(ivfData,
-      IndexCache.residentLists(ivfData, model.dim), model.metric,
-      spark.sparkContext.broadcast(qVecs.map(_._2)),
-      stagedProbeMap(ranks, levels), k, levels)
-      .mapPartitions { it =>
-        val qids = bqids.value
-        it.map { case (slot, id, d) => (qids(slot / levels), slot % levels, id, d) }
+    val ranks = IVFSearch.rankTop(spark, model, qVecs,
+      math.max(1 << (levels - 1), rankDepth))
+    val lists = IndexCache.residentLists(ivfData, model.dim)
+    val staged = qVecs.indices.grouped(chunkQueries).flatMap { idxs =>
+      val heaps = BoundedSearch.roundTopK(ivfData, lists, model.metric,
+        spark.sparkContext.broadcast(idxs.map(qVecs(_)._2).toArray),
+        stagedProbeMap(idxs.map(ranks), levels), maxTopk,
+        idxs.length * levels, levels)
+      idxs.indices.iterator.map { qi =>
+        val acc = new TopK(maxTopk)
+        (0 until levels).flatMap { j0 =>
+          Option(heaps(qi * levels + j0)).foreach(acc.merge)
+          val top = acc.sorted
+          if (top.isEmpty) None else Some(j0 -> top.map(_._1))
+        }
       }
-      .toDF("qid", "j0", "id", "dist")
-
-    val stages = (0 until levels).toArray
-    val exploded = partials.withColumn("stage",
-      explode(filter(lit(stages), s => s >= col("j0"))))
-    val w = Window.partitionBy(col("qid"), col("stage"))
-      .orderBy(col("dist"), col("id"))
-    exploded
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .groupBy(col("qid"), col("stage"))
-      .agg(sort_array(collect_list(col("dist"))).as("dists"))
+    }.toArray
+    (ranks, staged)
   }
 
   /** The staged probe map of the capture: each query's first
@@ -169,7 +137,7 @@ object ProfileTrainer {
     * slot of the stage at which it is first probed, j0 = ⌈log2(ri + 1)⌉ —
     * slot `qi · levels + j0`. Stage s's top-k is then the merge of a
     * query's slots j0 ≤ s. */
-  private def stagedProbeMap(ranks: Array[Array[(Int, Float)]],
+  private def stagedProbeMap(ranks: Seq[Array[(Int, Float)]],
                              levels: Int): Map[Int, Array[Int]] = {
     val maxRank = 1 << (levels - 1)
     IVFSearch.byList(ranks.indices.flatMap { qi =>
@@ -229,9 +197,9 @@ object ProfileTrainer {
     * or after maxTopk/4 points. */
   private def genPoints(metric: String, stage: Int, sortedDists: Array[Double],
                         gtDists: Array[Float], dB: Array[Float],
-                        maxTopk: Int): Seq[(Int, Float, Float)] = {
+                        maxTopk: Int): Seq[(Float, Float)] = {
     val nprobe = 1 << stage
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Float, Float)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Float, Float)]
     val dists = // ascending for L2; descending raw IP for "ip"
       if (metric == "ip") sortedDists.map(d => (-d).toFloat) else sortedDists.map(_.toFloat)
     var ij = 0
@@ -242,7 +210,7 @@ object ProfileTrainer {
       else {
         val tval = if (metric == "ip") ErrorProfile.arcos(dists(ij)) else dists(ij)
         val sumA = ErrorProfile.sumAngle(tval, dB, 15, nprobe - 1)
-        out += ((stage, sumA, ks))
+        out += ((sumA, ks))
         if (out.length >= maxTopk / 4) stop = true
       }
       ij += 1

@@ -566,13 +566,16 @@ object BoundedSearch {
     * those arrays merge on the driver (Spark adds tree levels only when
     * the partition count makes one pay). The heaps keep the k smallest
     * under IEEE distance, then id — the order of the SQL window
-    * ([[FlatSearch.mergeTopK]]).
+    * ([[FlatSearch.mergeTopK]]). The error-profile capture
+    * ([[graft.profile.ProfileTrainer]]) runs the same job with
+    * `slotsPerQuery` slots per query vector.
     * @return slot → its heap, null where no probed list held a row */
   private[graft] def roundTopK(ivfData: DataFrame,
       lists: Option[IndexCache.ResidentLists], metric: String,
       qVecs: Broadcast[Array[Array[Float]]], probeMap: Map[Int, Array[Int]],
-      k: Int, nSlots: Int): Array[TopK] =
-    IVFSearch.scanVectors(ivfData, lists, metric, qVecs, probeMap, k)
+      k: Int, nSlots: Int, slotsPerQuery: Int = 1): Array[TopK] =
+    IVFSearch.scanVectors(ivfData, lists, metric, qVecs, probeMap, k,
+      slotsPerQuery)
       .treeAggregate(new Array[TopK](nSlots))(
         { case (heaps, (s, id, d)) =>
           if (heaps(s) == null) heaps(s) = new TopK(k)

@@ -62,6 +62,15 @@ object IVFSearch {
     * pair. */
   trait PairScore[-R] { def apply(slot: Int, listNo: Int, payload: R): Double }
 
+  /** The (qid, vec) rows of a query frame, collected and sorted by qid:
+    * the `q` every collected-batch search takes. */
+  private[graft] def queryRows(queries: DataFrame): Array[(Long, Array[Float])] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries.select(col("qid").cast("long"), col("vec"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+  }
+
   /** (list_no, id, vec) rows of a raw-vector IVF table. */
   private def vectorRows(df: DataFrame): Dataset[(Int, Long, Array[Float])] = {
     val spark = df.sparkSession
@@ -77,11 +86,7 @@ object IVFSearch {
     */
   def search(ivfData: DataFrame, model: IVFModel, queries: DataFrame,
              k: Int, nprobe: Int): DataFrame = {
-    val spark = ivfData.sparkSession
-    import spark.implicits._
-    val q: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val q = queryRows(queries)
     searchNprobes(ivfData, model, q, k, Array.fill(q.length)(nprobe))
   }
 
@@ -315,9 +320,7 @@ object IVFSearch {
             radius: Double, nprobe: Int): DataFrame = {
     val spark = ivfData.sparkSession
     import spark.implicits._
-    val q: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val q = queryRows(queries)
     val np = math.min(nprobe, model.nlist)
     val qNorm = if (model.metric == "ip")
       q.map { case (qid, v) => (qid, Kernels.l2Normalize(v)) } else q

@@ -54,6 +54,67 @@ class BoundedSearchSpec extends SparkSpec {
     assert(whole.sameElements(chunked))
   }
 
+  test("stagedTopK ≡ a brute-force per-stage top-k, l2 and ip, with and without the store") {
+    import spark.implicits._
+    import graft.functions.Kernels
+    import graft.index.{IVFModel, IndexCache}
+    // the reference: per (query, stage) the k smallest (dist, id) over the
+    // rows of the query's first 2^stage ranked lists, ±0 ordered by id as
+    // the heaps order them; distances compare by raw bits
+    def reference(a: org.apache.spark.sql.DataFrame, m: IVFModel,
+                  qs: Array[Array[Float]]): Seq[(Long, Int, Seq[Long])] = {
+      val rows = a.select(col("id").cast("long"), col("vec"),
+        col("list_no").cast("int")).as[(Long, Array[Float], Int)].collect()
+      qs.indices.flatMap { qi =>
+        val qv = if (m.metric == "ip") Kernels.l2Normalize(qs(qi)) else qs(qi)
+        val ranked = m.rankCentroids(qv).map(_._1)
+        (0 until ProfileTrainer.numLevels(m.nlist)).flatMap { s =>
+          val probed = ranked.take(1 << s).toSet
+          val top = rows.filter(r => probed(r._3))
+            .map(r => (Kernels.distance(m.metric, qv, r._2), r._1))
+            .sortWith { case ((d1, i1), (d2, i2)) => d1 < d2 || (d1 == d2 && i1 < i2) }
+            .take(k)
+          if (top.isEmpty) None
+          else Some((qi.toLong, s,
+            top.map(x => java.lang.Double.doubleToRawLongBits(x._1)).toSeq))
+        }
+      }
+    }
+    def captured(a: org.apache.spark.sql.DataFrame, m: IVFModel,
+                 qs: Array[Array[Float]]): Seq[(Long, Int, Seq[Long])] =
+      ProfileTrainer.stagedTopK(a, m, vecDF(qs, "qid"), maxTopk = k)
+        .select(col("qid").cast("long"), col("stage"), col("dists"))
+        .as[(Long, Int, Array[Double])].collect().toSeq
+        .map { case (q, s, ds) =>
+          (q, s, ds.map(java.lang.Double.doubleToRawLongBits).toSeq)
+        }.sortBy(x => (x._1, x._2))
+    val saved = IndexCache.storePool
+    for (metric <- Seq("l2", "ip")) {
+      def norm(vs: Array[Array[Float]]) =
+        if (metric == "ip") vs.map(Kernels.l2Normalize) else vs
+      val bDF = vecDF(norm(base.take(3000)))
+      val m = IVFIndex.train(bDF, nlist, metric = metric, seed = 42L)
+      val a = IVFIndex.assign(bDF, m).cache()
+      val qs = norm(trainQ.take(12))
+      val want = reference(a, m, qs)
+      assert(want.map(_._2).distinct.length == 4, "the reference must span 4 stages")
+      try {
+        for (store <- Seq(true, false)) {
+          IndexCache.invalidate(a)
+          if (!store) IndexCache.storePool = _ => 0L
+          assert(IndexCache.residentLists(a, d).isDefined == store,
+            s"$metric: the store arm did not take hold")
+          assert(captured(a, m, qs) == want,
+            s"$metric, store $store: capture differs from the reference")
+          IndexCache.storePool = saved
+        }
+      } finally {
+        IndexCache.storePool = saved
+        IndexCache.invalidate(a)
+      }
+    }
+  }
+
   test("traces are trained, monotone-indexed, and non-trivial") {
     assert(traces.length == 4)
     traces.zipWithIndex.foreach { case (t, j) =>

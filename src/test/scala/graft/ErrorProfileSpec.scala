@@ -56,6 +56,24 @@ class ErrorProfileSpec extends SparkSpec {
     assert(t2.search(0f, 1f) == t2.us(0) + t2.stds(0))
   }
 
+  test("Trace sortAndBatch depends only on the point set, not its order") {
+    // 23 points of distinct φ > 0 and a planted block of 17 at φ = 0 (no
+    // boundary closer than the distance) with distinct U: at bs 5 the
+    // block straddles three bucket boundaries, so the order of its points
+    // decides which U values share a bucket
+    val rnd = new scala.util.Random(7)
+    val spread = (1 to 23).map(i => (i * 0.37f, 1f + rnd.nextFloat()))
+    val tied = (1 to 17).map(i => (0f, 1f + i * 0.113f))
+    def bits(t: Trace) = Seq(t.phis, t.us, t.stds)
+      .map(_.map(java.lang.Float.floatToRawIntBits).toSeq)
+    val want = bits(Trace.sortAndBatch(1, spread ++ tied, bs = 5))
+    (1 to 6).foreach { seed =>
+      val shuffled = new scala.util.Random(seed).shuffle(spread ++ tied)
+      assert(bits(Trace.sortAndBatch(1, shuffled, bs = 5)) == want,
+        s"permutation $seed changed the trace")
+    }
+  }
+
   test("curNum predicts full recall when scaling is tight") {
     // trace that maps any φ to U=1 (no rank inflation)
     val t = Trace(1, Array(0f, 100f), Array(1f, 1f), Array(0f, 0f))
