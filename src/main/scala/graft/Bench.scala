@@ -1,10 +1,20 @@
 package graft
 
+import java.util.Locale
+import scala.collection.mutable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Benchmark main (driver contract): runs the query inventory on
-  * SPARK_GRAFT_SF_DIR at local[N] and prints ONE JSON line
-  * {"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}.
+  * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS]. Its LAST stdout line
+  * is the contract line, one compact JSON object keyed by short row
+  * name (the prefix before the first '_'):
+  * {"metric":"total","value":…,"unit":"sec","valid":…,"queries":{…},
+  * "sf":…,"failed":[…],"build_sec":…}
+  * — the consumer keeps only the tail of stdout, and the line stays
+  * under 2000 characters on the whole inventory, even when every row
+  * fails.
   *
   * Four passes. The first (untimed, reported as "build_sec") runs every
   * query once: it trains and persists the model artifacts — k-means
@@ -21,10 +31,28 @@ import org.apache.spark.sql.SparkSession
   * Each query is materialized with collect() (results are small by
   * construction) so column pruning can't hide work the way count()
   * would.
+  *
+  * The ledger: a [[Ledger]] listener attributes every job to the
+  * (row, pass) that started it, and after `spark.stop()` has drained the
+  * listener bus, Bench writes `target/bench_ledger.json` — per row and
+  * pass its wall time, jobs, stages, task counters, ratio to the
+  * BASELINE.md pin and top stages — before printing the contract line.
+  *
+  * Usage: sbt "runMain graft.Bench [row…]" — with row names, only those
+  * rows run (a dev subset); without, the full inventory.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** Local property naming the `pass:row` a job belongs to. Spark hands
+    * local properties to the threads that AQE and broadcast exchanges
+    * start, as it does `spark.sql.execution.id`. */
+  private[graft] val RowProp = "bench.row"
+  private val timedPasses = 3
+
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The benchmark session, shared with the dev inspection main. */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -34,66 +62,68 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    val inventory = SparkEntry.queries.toSeq.sortBy(_._1)
+  def main(args: Array[String]): Unit = {
+    val sf = sfDir
+    val spark = session()
+    val sc = spark.sparkContext
+    val ledger = new Ledger
+    sc.addSparkListener(ledger)
+    val names =
+      if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
+    val inventory = names.map(n => n -> SparkEntry.queries(n))
+    val walls = mutable.Map.empty[(String, Int), Double]
 
-    // pass 1 — build: train/persist model artifacts, warm caches
-    val b0 = System.nanoTime()
-    inventory.foreach { case (name, fn) =>
-      try { fn(spark, sfDir).collect() }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench-build] $name failed: ${e.getMessage}")
-      }
+    // one pass of one row: its jobs carry the pass:row tag; a pass that
+    // THROWS records -1
+    def run(pass: Int, name: String,
+            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+      sc.setLocalProperty(RowProp, s"$pass:$name")
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sf).collect(); true }
+        catch { case e: Throwable =>
+          System.err.println(
+            s"[${if (pass == 0) "bench-build" else "bench"}] $name failed: ${e.getMessage}")
+          false
+        }
+        finally sc.setLocalProperty(RowProp, null)
+      walls((name, pass)) = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
+
+    // pass 0 — build: train/persist model artifacts, warm caches
+    val b0 = System.nanoTime()
+    inventory.foreach { case (name, fn) => run(0, name, fn) }
     val buildSec = (System.nanoTime() - b0) / 1e9
 
-    // passes 2-4 — timed: steady-state query cost, median of 3 sweeps.
+    // passes 1-3 — timed: steady-state query cost, median of 3 sweeps.
     // A single timed measurement let one noisy host interval become the
     // round's official number (r4: t02 read 4.32 s against a 0.62 s rerun);
     // the per-query median across three full sweeps kills that class.
     // A pass that THROWS is excluded from the median — a fast failure
     // must not masquerade as a fast steady-state time; a query with no
     // successful pass reports -1 and lands in "failed".
-    val timedPasses = 3
-    val samples = Array.fill(timedPasses) {
-      inventory.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).collect(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        name -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
-      }.toMap
-    }
-    val results = inventory.map { case (name, _) =>
-      val xs = samples.flatMap(_(name)).sorted
+    for (p <- 1 to timedPasses; (name, fn) <- inventory) run(p, name, fn)
+    val results = names.map { name =>
+      val xs = (1 to timedPasses).map(p => walls((name, p))).filter(_ >= 0).sorted
       name -> (if (xs.isEmpty) -1.0 else xs(xs.length / 2))
     }
-    println(renderLine(results, buildSec, sfDir))
-    // second line AFTER the main one: the 10 worst rows, so the
-    // harvester's 2000-char tail capture keeps per-query evidence for
-    // exactly the rows a reviewer asks about (a01–a03's times fell off
-    // the r9 tail). Ratios vs the per-query pins when BASELINE.md is
-    // readable, absolute medians otherwise.
     val pins =
       try parsePins(java.nio.file.Files.readString(java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE.md"))))
       catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
-    println(renderWorstLine(results, pins))
-    // third line: every row's ratio (or median sec) keyed by SHORT
-    // name. The full `queries` map above runs ~2.3k chars with long
-    // names and the capture keeps ~2k, so rows a01–mm01 were invisible
-    // in BENCH_r11; short keys fit the whole inventory in under 1k chars.
-    println(renderAllRowsLine(results, pins))
-    // fourth line, LAST: every row's ABSOLUTE median seconds, short
-    // keys. r13's harvest cut the head-of-line `queries` map mid-row,
-    // so the artifact had complete ratios but incomplete absolute
-    // times; with seconds emitted last, the ~4 KB tail capture holds
-    // the ratio line AND the seconds line — fully self-contained.
-    println(renderSecondsLine(results))
-    spark.stop()
+    spark.stop() // drains the listener bus: the ledger is complete
+    try {
+      val path = java.nio.file.Paths.get("target", "bench_ledger.json")
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.writeString(path,
+        ledger.render(names, walls.toMap, pins, sf, timedPasses))
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] ledger not written: ${e.getMessage}")
+    }
+    println(renderLine(results, buildSec, sf))
   }
 
   /** Per-query pins from BASELINE.md's "Per-query reference" block:
@@ -119,93 +149,142 @@ object Bench {
     }
   }
 
-  /** One compact JSON line with the 10 worst rows — by measured/pin
-    * ratio when pins are available ("basis":"ratio_vs_pin"), by median
-    * seconds otherwise ("basis":"sec"). Failed rows (−1) always lead. */
-  private[graft] def renderWorstLine(
-      results: Seq[(String, Double)], pins: Map[String, Double]): String = {
-    def pinOf(name: String): Option[Double] =
-      pins.get(name.takeWhile(_ != '_')).filter(_ > 0)
-    val usable = results.filter(_._2 >= 0)
-    val (basis, scored) =
-      if (usable.nonEmpty && usable.forall(r => pinOf(r._1).isDefined))
-        ("ratio_vs_pin",
-          usable.map { case (n, v) => (n, v / pinOf(n).get) })
-      else ("sec", usable)
-    val worst = results.filter(_._2 < 0).map(_._1 -> -1.0) ++
-      scored.sortBy(-_._2)
-    val rows = worst.take(10)
-      .map { case (n, v) => "\"" + n + f"\":$v%.3f" }.mkString("{", ",", "}")
-    s"""{"worst":$rows,"basis":"$basis"}"""
+  private def short(name: String): String = name.takeWhile(_ != '_')
+
+  /** Row name → JSON key: the short name, unless two rows share one —
+    * duplicate keys would shadow each other in most parsers — in which
+    * case every row keeps its full name. */
+  private def keyOf(names: Seq[String]): String => String = {
+    val shorts = names.map(short)
+    if (shorts.distinct.size == shorts.size) short else identity
   }
 
-  /** One compact JSON line with EVERY row, keyed by short name (the
-    * prefix before the first '_'), so the harvester's ~2k-char tail
-    * capture holds the complete per-query picture — ratio vs pin when
-    * every pin resolves ("basis":"ratio_vs_pin"), median seconds
-    * otherwise. Failed rows report -1 under either basis. */
-  private[graft] def renderAllRowsLine(
-      results: Seq[(String, Double)], pins: Map[String, Double]): String = {
-    def short(name: String): String = name.takeWhile(_ != '_')
-    def pinOf(name: String): Option[Double] =
-      pins.get(short(name)).filter(_ > 0)
-    // two result names sharing a short prefix would emit duplicate JSON
-    // keys (later silently shadows earlier in most parsers) and "n"
-    // would overcount the visible rows — fall back to full names then
-    val shorts = results.map(r => short(r._1))
-    val key: String => String =
-      if (shorts.distinct.size == shorts.size) short else identity
-    val usable = results.filter(_._2 >= 0)
-    val basis =
-      if (usable.nonEmpty && usable.forall(r => pinOf(r._1).isDefined))
-        "ratio_vs_pin"
-      else "sec"
-    val rows = results.map { case (n, v) =>
-      val x =
-        if (v < 0) -1.0
-        else if (basis == "ratio_vs_pin") v / pinOf(n).get
-        else v
-      "\"" + key(n) + f"\":$x%.3f"
-    }.mkString("{", ",", "}")
-    s"""{"rows":$rows,"basis":"$basis","n":${results.size}}"""
-  }
+  /** Three decimals under `Locale.ROOT`: a comma-decimal default locale
+    * must not turn the line into invalid JSON. */
+  private def num(v: Double): String = "%.3f".formatLocal(Locale.ROOT, v)
 
-  /** One compact JSON line with EVERY row's absolute median seconds,
-    * short-keyed like [[renderAllRowsLine]] (same duplicate-prefix
-    * fallback to full names). Failed rows report -1. Emitted LAST so
-    * the harvester's tail capture always holds complete absolute
-    * times next to the complete ratio line. */
-  private[graft] def renderSecondsLine(results: Seq[(String, Double)]): String = {
-    def short(name: String): String = name.takeWhile(_ != '_')
-    val shorts = results.map(r => short(r._1))
-    val key: String => String =
-      if (shorts.distinct.size == shorts.size) short else identity
-    val rows = results.map { case (n, v) =>
-      "\"" + key(n) + f"\":${if (v < 0) -1.0 else v}%.3f"
-    }.mkString("{", ",", "}")
-    s"""{"secs":$rows,"n":${results.size}}"""
-  }
+  /** The wall time of a pass over its row's pin, when the row has a
+    * positive pin and the pass succeeded. */
+  private def ratioToPin(name: String, wall: Double,
+                         pins: Map[String, Double]): Option[Double] =
+    pins.get(short(name)).filter(_ > 0).filter(_ => wall >= 0).map(wall / _)
 
-  /** Renders the one-line JSON artifact. The verdict fields (`value`,
-    * `valid`, `failed`) lead the line for human readers but ALSO repeat
-    * in a compact trailer (`total2`/`valid2`/`failed2`) after the large
-    * `queries` map, because the round harvester keeps only the last
-    * 2000 characters of stdout — BENCH_r08 lost its head to that
-    * truncation and the official artifact could not prove the gate
-    * passed. With the trailer, any tail capture ≥ ~120 chars contains
-    * the verdict regardless of inventory size. BenchLineSpec pins this. */
+  /** The contract line. A run with ANY failed query must not report a
+    * (smaller) total that reads as a speedup to a consumer comparing
+    * value alone: the total goes to -1 and valid:false, per-query
+    * medians stay inspectable. BenchLineSpec pins its size and shape. */
   private[graft] def renderLine(
       results: Seq[(String, Double)], buildSec: Double, sfDir: String): String = {
-    val failed = results.collect { case (name, v) if v < 0 => name }
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+    val key = keyOf(results.map(_._1))
+    val failed = results.collect { case (name, v) if v < 0 => key(name) }
+    val qs = results.map { case (n, v) => "\"" + key(n) + "\":" + num(v) }
       .mkString("{", ",", "}")
-    // a run with ANY failed query must not report a (smaller) total that
-    // reads as a speedup to a consumer comparing value alone: the total
-    // goes to -1 and valid:false, per-query medians stay inspectable
-    val okTotal = results.map(_._2).filter(_ >= 0).sum
-    val total = if (failed.isEmpty) okTotal else -1.0
-    val valid = failed.isEmpty
+    val total = if (failed.isEmpty) results.map(_._2).sum else -1.0
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec","valid":$valid,"queries":$qs,"sf":"$sfDir","failed":$failedJson,"build_sec":$buildSec%.3f,"failed2":$failedJson,"total2":$total%.3f,"valid2":$valid}"""
+    s"""{"metric":"total","value":${num(total)},"unit":"sec","valid":${failed.isEmpty},"queries":$qs,"sf":"$sfDir","failed":$failedJson,"build_sec":${num(buildSec)}}"""
+  }
+
+  /** Listener behind the ledger: sums each `pass:row` tag's jobs and
+    * completed stages' task counters ([[RowProp]]); jobs without a tag
+    * count as unattributed. A stage is named by the graft frames of its
+    * SQL execution's call site, else of its own (AQE submits query
+    * stages from its own threads, whose stage call sites carry no graft
+    * frame), else by the row whose lazy result Bench collects. Read it
+    * only after `spark.stop()` has drained the listener bus. */
+  private[graft] final class Ledger extends SparkListener {
+    private final class Acc {
+      var jobs = 0
+      var stages = 0
+      var runMs = 0L
+      var cpuMs = 0L
+      var gcMs = 0L
+      var shuffleRead = 0L
+      var shuffleWrite = 0L
+      var spill = 0L
+      val stageLog = mutable.ArrayBuffer.empty[(String, Int, Long)]
+    }
+    private val accs = mutable.Map.empty[String, Acc]
+    private val unattributed = new Acc
+    private val execSites = mutable.Map.empty[Long, String]
+    private val stageOf = mutable.Map.empty[Int, (Acc, String)]
+
+    private def graftFrames(callSite: String): String =
+      Option(callSite).fold("")(_.linesIterator
+        .filter(l => l.contains("graft.") && !l.contains("graft.Bench"))
+        .map(_.trim).take(3).mkString(" <- "))
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized(execSites(s.executionId) = s.details)
+      case _ => ()
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val props = Option(e.properties)
+      val tag = props.flatMap(p => Option(p.getProperty(RowProp)))
+      val acc = tag.fold(unattributed)(accs.getOrElseUpdate(_, new Acc))
+      acc.jobs += 1
+      val execSite = props
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => execSites.get(id.toLong)).map(graftFrames)
+        .filter(_.nonEmpty)
+      e.stageInfos.foreach { si =>
+        val site = execSite
+          .orElse(Some(graftFrames(si.details)).filter(_.nonEmpty))
+          .getOrElse(s"result of ${tag.fold("?")(_.dropWhile(_ != ':').drop(1))}")
+        stageOf(si.stageId) = (acc, site)
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        val si = e.stageInfo
+        val (acc, site) = stageOf.getOrElse(si.stageId, (unattributed, "?"))
+        acc.stages += 1
+        Option(si.taskMetrics).foreach { m =>
+          acc.runMs += m.executorRunTime
+          acc.cpuMs += m.executorCpuTime / 1000000
+          acc.gcMs += m.jvmGCTime
+          acc.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          acc.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          acc.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+          acc.stageLog += ((site, si.numTasks, m.executorRunTime))
+        }
+      }
+
+    private def counters(a: Acc): Seq[(String, Any)] = Seq(
+      "jobs" -> a.jobs, "stages" -> a.stages, "run_ms" -> a.runMs,
+      "cpu_ms" -> a.cpuMs, "gc_ms" -> a.gcMs,
+      "shuffle_read_bytes" -> a.shuffleRead,
+      "shuffle_write_bytes" -> a.shuffleWrite, "spill_bytes" -> a.spill)
+
+    /** The ledger JSON: per row its pin, its build pass (pass 0) and
+      * each timed pass — wall seconds (-1 when the pass threw), ratio to
+      * the pin, counters and the top 3 stages by task time — plus the
+      * unattributed jobs' counters. */
+    def render(names: Seq[String], walls: Map[(String, Int), Double],
+               pins: Map[String, Double], sfDir: String,
+               passes: Int): String = synchronized {
+      import scala.collection.immutable.ListMap
+      def pass(name: String, p: Int): ListMap[String, Any] = {
+        val a = accs.getOrElse(s"$p:$name", new Acc)
+        val wall = walls.getOrElse((name, p), -1.0)
+        ListMap[String, Any]("wall_sec" -> wall,
+          "ratio_to_pin" -> ratioToPin(name, wall, pins)) ++
+          counters(a) + ("top_stages" -> a.stageLog.sortBy(-_._3).take(3)
+            .map { case (site, tasks, ms) =>
+              ListMap("site" -> site, "tasks" -> tasks, "run_ms" -> ms)
+            }.toSeq)
+      }
+      val rows = ListMap(names.map { n =>
+        n -> ListMap[String, Any]("pin" -> pins.get(short(n)),
+          "build" -> pass(n, 0), "passes" -> (1 to passes).map(pass(n, _)))
+      }: _*)
+      val doc = ListMap[String, Any]("sf" -> sfDir,
+        "unattributed" -> ListMap(counters(unattributed): _*), "rows" -> rows)
+      com.fasterxml.jackson.databind.json.JsonMapper.builder()
+        .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule).build()
+        .writerWithDefaultPrettyPrinter().writeValueAsString(doc)
+    }
   }
 }

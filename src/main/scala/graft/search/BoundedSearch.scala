@@ -58,13 +58,19 @@ object BoundedSearch {
 
   final case class Result(results: DataFrame, stats: Seq[QueryStats])
 
-  /** Per-query decision state of the staged rounds: the [[Decider]]'s
-    * O(nq) driver arrays hold it on the driver-decided rounds, and each
-    * [[CtrlD]] row carries it on the fully-distributed path; both
-    * advance it through [[decideStep]]. */
+  /** Per-query decision state of the staged rounds: the [[Decider]]
+    * holds one per query on the driver-decided rounds, and each
+    * [[CtrlD]] row carries one on the fully-distributed path; both
+    * advance it through [[stageStep]]. */
   final case class Ctrl(qid: Long, require: Float, myNprobe: Int,
                         stoped: Int, preVal: Double, predicted: Float,
                         decidedStage: Int)
+
+  object Ctrl {
+    /** An undecided query's state before its first round. */
+    def start(qid: Long, require: Float): Ctrl =
+      Ctrl(qid, require, 0, 0, Double.NaN, 0f, 0)
+  }
 
   /** The pure one-round termination transition (`IndexIVF.cpp:504-637`
     * tune block: stagnation bookkeeping + stop decision), shared
@@ -92,16 +98,14 @@ object BoundedSearch {
   /** Control row for the fully-distributed path: the query vector, its
     * full centroid ranking, boundary-distance window AND running top-k
     * (`topIds`/`topDists`, sorted ascending by (dist, id)) ride WITH
-    * the per-query decision state, so no per-query structure ever
+    * the per-query decision state `ctrl`, so no per-query structure ever
     * exists on the driver — and each round's merge + recall prediction
     * + decision is ONE cogroup against the round's scan output instead
     * of a window shuffle, a summaries aggregation and a join (r18:
     * a07's per-round stage stack measured mostly scheduling on 32-task
     * near-empty stages). */
-  final case class CtrlD(qid: Long, vec: Array[Float], require: Float,
-                         lists: Array[Int], dB: Array[Float], myNprobe: Int,
-                         stoped: Int, preVal: Double, predicted: Float,
-                         decidedStage: Int,
+  final case class CtrlD(ctrl: Ctrl, vec: Array[Float], lists: Array[Int],
+                         dB: Array[Float],
                          topIds: Array[Long], topDists: Array[Double])
 
   /** @param queries (qid, vec, required_recall); batches up to
@@ -191,7 +195,7 @@ object BoundedSearch {
         val r = m.rankCentroids(v)
         val dB = ErrorProfile.boundaryDistances(
           r.map(_._2), r.map(_._1), m.interdisAt, m.nlist)
-        CtrlD(qid, v, req, r.map(_._1), dB, 0, 0, Double.NaN, 0f, 0,
+        CtrlD(Ctrl.start(qid, req), v, r.map(_._1), dB,
           Array.emptyLongArray, Array.emptyDoubleArray)
       }.cache()
 
@@ -206,7 +210,7 @@ object BoundedSearch {
                         round: Int): Map[Int, Long] = {
       val lo = if (round == 0) 0 else 1 << (round - 1)
       val hi = 1 << round
-      c.filter(_.myNprobe == 0)
+      c.filter(_.ctrl.myNprobe == 0)
         .flatMap(_.lists.slice(lo, hi).iterator)
         .groupByKey(identity).count().collect().toMap
     }
@@ -218,8 +222,8 @@ object BoundedSearch {
     while (j < levels && listCounts.nonEmpty) {
       val lo = if (j == 0) 0 else 1 << (j - 1)
       val hi = 1 << j
-      val probes = ctrl.filter(_.myNprobe == 0).flatMap { c =>
-        c.lists.slice(lo, hi).iterator.map(l => (l, c.qid, c.vec))
+      val probes = ctrl.filter(_.ctrl.myNprobe == 0).flatMap { c =>
+        c.lists.slice(lo, hi).iterator.map(l => (l, c.ctrl.qid, c.vec))
       }
       locally {
         val newPartials = scanListsCogroup(ivfData, met, probes, listCounts, k)
@@ -237,23 +241,17 @@ object BoundedSearch {
         // the Decider's own [[mergeKeep]], so both paths keep the same
         // top-k by construction; ids are unique per query across rounds
         // (each list is probed at most once — rank ranges are disjoint).
-        ctrl = ctrl.groupByKey(_.qid)
+        ctrl = ctrl.groupByKey(_.ctrl.qid)
           .cogroup(newPartials.groupByKey(_._1)) { (_, cIt, pIt) =>
             cIt.map { c =>
               val cand = pIt.toArray
               val (ids, dists) = BoundedSearch.mergeKeep(c.topIds, c.topDists,
                 cand.map(_._2), cand.map(_._3), kk)
-              if (c.myNprobe != 0) c.copy(topIds = ids, topDists = dists)
-              else {
-                val next = BoundedSearch.stageStep(
-                  Ctrl(c.qid, c.require, c.myNprobe, c.stoped, c.preVal,
-                    c.predicted, c.decidedStage),
-                  dists, c.dB, bTrace.value, jj, lv, kk, mult, sm, met)
-                c.copy(myNprobe = next.myNprobe, stoped = next.stoped,
-                  preVal = next.preVal, predicted = next.predicted,
-                  decidedStage = next.decidedStage,
-                  topIds = ids, topDists = dists)
-              }
+              val st =
+                if (c.ctrl.myNprobe != 0) c.ctrl
+                else BoundedSearch.stageStep(c.ctrl, dists, c.dB, bTrace.value,
+                  jj, lv, kk, mult, sm, met)
+              c.copy(ctrl = st, topIds = ids, topDists = dists)
             }
           }.cache()
         // ONE action: materializes the new control cache AND yields the
@@ -268,16 +266,17 @@ object BoundedSearch {
     // per-query top-k rows for the finishing merge, exploded once from
     // the control rows (during the rounds they never leave them)
     var state: DataFrame = ctrl.flatMap { c =>
-      c.topIds.indices.iterator.map(i => (c.qid, c.topIds(i), c.topDists(i)))
+      c.topIds.indices.iterator.map(i => (c.ctrl.qid, c.topIds(i), c.topDists(i)))
     }.toDF("qid", "id", "dist")
 
     // finishing pass: decisionStage → stage × multiplier, probe lists
     // straight out of each control row's own ranking
     val nl = nlist
     val finProbes = ctrl.flatMap { c =>
-      val upto = math.min(c.myNprobe, nl)
-      if (upto > c.decidedStage)
-        c.lists.slice(c.decidedStage, upto).iterator.map(l => (l, c.qid, c.vec))
+      val upto = math.min(c.ctrl.myNprobe, nl)
+      if (upto > c.ctrl.decidedStage)
+        c.lists.slice(c.ctrl.decidedStage, upto).iterator
+          .map(l => (l, c.ctrl.qid, c.vec))
       else Iterator.empty
     }
     val finCounts = finProbes.groupByKey(_._1).count().collect().toMap
@@ -291,10 +290,9 @@ object BoundedSearch {
       if (spark.sparkContext.getCheckpointDir.isDefined) merged.checkpoint()
       else merged.localCheckpoint(eager = true)
 
-    val stats = ctrl
-      .map(c => (c.qid, math.min(c.myNprobe, nl), c.predicted, c.decidedStage))
-      .collect().sortBy(_._1)
-      .map { case (qid, np, pred, ds0) => QueryStats(qid, np, pred, ds0) }
+    val stats = ctrl.map(_.ctrl).collect().sortBy(_.qid)
+      .map(c => QueryStats(c.qid, math.min(c.myNprobe, nl), c.predicted,
+        c.decidedStage))
       .toSeq
     ctrl.unpersist()
     Result(results, stats)
@@ -378,23 +376,18 @@ object BoundedSearch {
   }
 
   /** The per-stage termination decision (`IndexIVF.cpp:504-637`) of
-    * the driver-decided rounds: holds the O(nq) control state and each
-    * query's cumulative top-k, and advances them through [[decideStep]],
-    * the transition the distributed path runs on executors. */
-  private final class Decider(nq: Int, k: Int, metric: String,
-      traces: Array[Trace], dBs: Array[Array[Float]], requires: Array[Float],
+    * the driver-decided rounds: holds each query's [[Ctrl]] and
+    * cumulative top-k, and advances them through [[stageStep]], the
+    * step the distributed path runs on executors. */
+  private final class Decider(val ctrl: Array[Ctrl], k: Int, metric: String,
+      traces: Array[Trace], dBs: Array[Array[Float]],
       multiplier: Float, stdM: Float, levels: Int) {
-    val myNprobe = new Array[Int](nq)
-    val stoped = new Array[Int](nq)
-    val preVal = Array.fill(nq)(Double.NaN)
-    val predicted = new Array[Float](nq)
-    val decidedStage = new Array[Int](nq)
     /** Cumulative top-k per query, ascending by (dist, id). It stops
       * growing once the query leaves the active set — exactly the
       * `topIds`/`topDists` a [[CtrlD]] row carries for it on the
       * distributed path. */
-    val topIds: Array[Array[Long]] = Array.fill(nq)(Array.emptyLongArray)
-    val topDists: Array[Array[Double]] = Array.fill(nq)(Array.emptyDoubleArray)
+    val topIds: Array[Array[Long]] = Array.fill(ctrl.length)(Array.emptyLongArray)
+    val topDists: Array[Array[Double]] = Array.fill(ctrl.length)(Array.emptyDoubleArray)
 
     /** One stage step for query qi at stage 2^j: [[mergeKeep]] the
       * stage's new (id, dist) scan rows into its top-k, then
@@ -402,20 +395,13 @@ object BoundedSearch {
       * the query has decided. */
     def advance(qi: Int, j: Int, candIds: Array[Long],
                 candDists: Array[Double]): Unit =
-      if (myNprobe(qi) == 0) {
+      if (ctrl(qi).myNprobe == 0) {
         val (ids, dists) = mergeKeep(topIds(qi), topDists(qi), candIds,
           candDists, k)
         topIds(qi) = ids
         topDists(qi) = dists
-        val next = BoundedSearch.stageStep(
-          Ctrl(0L, requires(qi), myNprobe(qi), stoped(qi), preVal(qi),
-            predicted(qi), decidedStage(qi)),
-          dists, dBs(qi), traces(j), j, levels, k, multiplier, stdM, metric)
-        myNprobe(qi) = next.myNprobe
-        stoped(qi) = next.stoped
-        preVal(qi) = next.preVal
-        predicted(qi) = next.predicted
-        decidedStage(qi) = next.decidedStage
+        ctrl(qi) = stageStep(ctrl(qi), dists, dBs(qi), traces(j), j, levels,
+          k, multiplier, stdM, metric)
       }
   }
 
@@ -476,7 +462,7 @@ object BoundedSearch {
   /** Driver-decided rounds for every driver-collectable batch
     * ([[FlatSearch.collectable]]): round j scans centroid ranks
     * (2^(j−1), 2^j] for still-active queries only, and the per-query
-    * decision state lives in the [[Decider]]'s O(nq) driver arrays. The
+    * decision state lives in the [[Decider]]'s O(nq) driver array. The
     * table is scanned from its resident lists
     * ([[graft.index.IndexCache.residentLists]], built once per table) when
     * they fit in storage memory, else from its rows, and the batch's query
@@ -517,8 +503,8 @@ object BoundedSearch {
     val dBs = ranks.map { r =>
       ErrorProfile.boundaryDistances(r.map(_._2), r.map(_._1), model.interdisAt, nlist)
     }
-    val decider = new Decider(qVecs.length, k, model.metric, traces, dBs,
-      qVecs.map(_._3), multiplier, stdM, levels)
+    val decider = new Decider(qVecs.map { case (qid, _, r) => Ctrl.start(qid, r) },
+      k, model.metric, traces, dBs, multiplier, stdM, levels)
     val lists = IndexCache.residentLists(ivfData, model.dim)
     val bq = spark.sparkContext.broadcast(qv.map(_._2))
     def scan(probeMap: Map[Int, Array[Int]]): Array[TopK] =
@@ -535,13 +521,14 @@ object BoundedSearch {
         val rows = Option(heaps(qi)).fold(Array.empty[(Double, Long)])(_.sorted)
         decider.advance(qi, j, rows.map(_._2), rows.map(_._1))
       }
-      active = active.filter(decider.myNprobe(_) == 0)
+      active = active.filter(decider.ctrl(_).myNprobe == 0)
       j += 1
     }
 
     val finished = scan(finishingProbeMap(spark, model, qv, ranks,
       shallowDepth,
-      qi => (decider.decidedStage(qi), math.min(decider.myNprobe(qi), nlist))))
+      qi => (decider.ctrl(qi).decidedStage,
+        math.min(decider.ctrl(qi).myNprobe, nlist))))
     val results = qv.indices.flatMap { qi =>
       val h = Option(finished(qi)).getOrElse(new TopK(k))
       decider.topIds(qi).indices.foreach { x =>
@@ -551,9 +538,9 @@ object BoundedSearch {
         (qv(qi)._1, id, d, r + 1)
       }
     }.toDF("qid", "id", "dist", "rank")
-    val stats = qv.indices.map { qi =>
-      QueryStats(qv(qi)._1, math.min(decider.myNprobe(qi), nlist),
-        decider.predicted(qi), decider.decidedStage(qi))
+    val stats = decider.ctrl.toSeq.map { c =>
+      QueryStats(c.qid, math.min(c.myNprobe, nlist), c.predicted,
+        c.decidedStage)
     }
     Result(results, stats)
   }

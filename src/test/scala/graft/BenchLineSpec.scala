@@ -1,43 +1,76 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench artifact's truncation contract: the round harvester
-  * keeps only the LAST 2000 characters of stdout, and BENCH_r08 lost
-  * its `value`/`valid` head (plus two query rows) to that — the
-  * official artifact could not prove the gate passed. `renderLine`
-  * therefore repeats the verdict in a compact trailer after the big
-  * `queries` map; these tests fail if anyone reorders the line so the
-  * verdict can be truncated away again.
+/** Pins the bench artifact's contract line: the consumer keeps only the
+  * tail of Bench's stdout, so the line is printed LAST and must fit in
+  * 2000 characters on the real inventory — including the run where
+  * every row fails and `failed` lists them all — and must parse as JSON
+  * whatever the default locale. Also pins the BASELINE.md pin parser and
+  * the ledger's per-row ratio to the pin.
   */
 class BenchLineSpec extends AnyFunSuite {
 
-  private val many = (1 to 77).map(i => f"q$i%02d_name_of_query" -> i * 0.01)
+  private val inventory = SparkEntry.queries.keys.toSeq.sorted
+  private def parse(s: String): JsonNode = new ObjectMapper().readTree(s)
+
+  test("contract line on the real inventory with every row failed: under 2000 chars, parses") {
+    val line = Bench.renderLine(inventory.map(_ -> -1.0), buildSec = 171.751,
+      sfDir = "/data/testdata/sf0.1")
+    assert(line.length < 2000, s"contract line too long: ${line.length}")
+    val j = parse(line)
+    assert(j.get("metric").asText == "total")
+    assert(j.get("value").asDouble == -1.0,
+      "a run with failures must not report a partial total as the value")
+    assert(!j.get("valid").asBoolean)
+    assert(j.get("failed").size == 88)
+    assert(j.get("queries").size == 88)
+    assert(j.get("queries").get("a01").asDouble == -1.0)
+  }
 
   test("verdict fields survive a 2000-char tail capture on a passing run") {
-    val line = Bench.renderLine(many, buildSec = 85.0, sfDir = "/x/sf0.1")
-    val tail = line.takeRight(2000)
-    assert(tail.contains("\"total2\":"), "total2 missing from tail")
-    assert(tail.contains("\"valid2\":true"), "valid2 missing from tail")
-    assert(tail.contains("\"failed2\":[]"), "failed2 missing from tail")
-    assert(line.endsWith("}") && line.startsWith("{"))
-    // head still leads with the human-readable verdict
-    assert(line.take(120).contains("\"value\":"))
-    assert(line.take(120).contains("\"valid\":true"))
+    val line = Bench.renderLine(inventory.map(_ -> 12.345), buildSec = 85.0,
+      sfDir = "/data/testdata/sf0.1")
+    assert(line.length < 2000, s"contract line too long: ${line.length}")
+    val j = parse(line.takeRight(2000))
+    assert(j.get("valid").asBoolean)
+    assert(math.abs(j.get("value").asDouble - 88 * 12.345) < 1e-6)
+    assert(j.get("failed").size == 0)
+    assert(j.get("build_sec").asDouble == 85.0)
+    assert(j.get("queries").get("q01").asDouble == 12.345)
   }
 
-  test("scalar verdict fields are the LAST fields, after any failed list") {
-    // worst case: every query fails — the failed2 array is long, but
-    // total2/valid2 sit after it so even a tiny tail capture has them
-    val allFail = many.map { case (k, _) => k -> -1.0 }
-    val line = Bench.renderLine(allFail, buildSec = 85.0, sfDir = "/x/sf0.1")
-    assert(line.takeRight(60).contains("\"total2\":-1.000"))
-    assert(line.takeRight(60).contains("\"valid2\":false"))
-    assert(line.contains("\"value\":-1.000"),
-      "a run with failures must not report a partial total as the value")
+  test("contract line falls back to full names on short-name collision") {
+    // "q01_warm" and "q01_cold" share the short key "q01" — short keys
+    // would emit duplicate JSON keys (later shadows earlier in most
+    // parsers)
+    val line = Bench.renderLine(
+      Seq("q01_warm" -> 0.25, "q01_cold" -> -1.0), buildSec = 1.0, sfDir = "/x")
+    assert(line.contains("\"q01_warm\":0.250") &&
+      line.contains("\"q01_cold\":-1.000"), line)
+    assert(line.contains("\"failed\":[\"q01_cold\"]"), line)
+    assert(!line.contains("\"q01\":"), line)
+    // collision-free inventories keep the compact short keys
+    val ok = Bench.renderLine(
+      Seq("q01_warm" -> 0.25, "q02_cold" -> 0.75), buildSec = 1.0, sfDir = "/x")
+    assert(ok.contains("\"q01\":0.250") && ok.contains("\"q02\":0.750"), ok)
   }
 
-  test("worst-rows line ranks by ratio against parsed pins") {
+  test("contract line is JSON under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.GERMANY)
+      val line = Bench.renderLine(Seq("a01_x" -> 1.114, "a02_y" -> 0.5),
+        buildSec = 2.25, sfDir = "/x")
+      assert(line.contains("\"a01\":1.114"), line)
+      val j = parse(line)
+      assert(j.get("value").asDouble == 1.614)
+      assert(j.get("build_sec").asDouble == 2.25)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("parsePins reads the anchored per-query reference block") {
     // pin block in BASELINE.md's shape, including a historical mention
     // AFTER the canonical value (first occurrence must win) and prose
     // numbers that must not parse as pins
@@ -71,83 +104,23 @@ class BenchLineSpec extends AnyFunSuite {
         |q01 0.50, q02 1.00
         |""".stripMargin)
     assert(heading == Map("q01" -> 0.50, "q02" -> 1.00))
-    val results = Seq("q01_a" -> 0.25, "q02_b" -> 3.0, "q03_c" -> 2.0,
-      "s03_d" -> 1.7)
-    val line = Bench.renderWorstLine(results, pins)
-    // q02 at 3.0× leads; q01 at 0.5× trails
-    assert(line.startsWith("""{"worst":{"q02_b":3.000"""), line)
-    assert(line.contains(""""basis":"ratio_vs_pin""""), line)
-    assert(line.indexOf("q01_a") > line.indexOf("s03_d"), line)
   }
 
-  test("worst-rows line falls back to seconds without pins, failures lead") {
-    val results = Seq("q01_a" -> 0.25, "q02_b" -> -1.0, "q03_c" -> 5.0)
-    val line = Bench.renderWorstLine(results, Map.empty)
-    assert(line.startsWith("""{"worst":{"q02_b":-1.000,"q03_c":5.000"""), line)
-    assert(line.contains(""""basis":"sec""""), line)
-  }
-
-  test("all-rows line fits a 77-row inventory in the tail capture") {
-    val pins = (1 to 77).map(i => f"q$i%02d" -> 0.5).toMap
-    val line = Bench.renderAllRowsLine(many, pins)
-    assert(line.length < 1100, s"all-rows line too long: ${line.length}")
-    assert(line.contains("\"q01\":"), line.take(60))
-    assert(line.contains("\"q77\":"))
-    assert(line.contains(""""basis":"ratio_vs_pin""""))
-    assert(line.contains(""""n":77"""))
-    // ratio math: q02 median 0.02 / pin 0.5 = 0.04
-    assert(line.contains("\"q02\":0.040"), line)
-    // without pins: seconds basis, failures as -1
-    val noPins = Bench.renderAllRowsLine(
-      Seq("q01_a" -> 0.25, "q02_b" -> -1.0), Map.empty)
-    assert(noPins.contains("\"q01\":0.250") && noPins.contains("\"q02\":-1.000"))
-    assert(noPins.contains(""""basis":"sec""""))
-  }
-
-  test("all-rows line falls back to full names on short-name collision") {
-    // "q01_warm" and "q01_cold" share the short key "q01" — short keys
-    // would emit duplicate JSON keys (later shadows earlier in most
-    // parsers) while "n" still said 2
-    val line = Bench.renderAllRowsLine(
-      Seq("q01_warm" -> 0.25, "q01_cold" -> 0.75), Map.empty)
-    assert(line.contains("\"q01_warm\":0.250") &&
-      line.contains("\"q01_cold\":0.750"), line)
-    assert(!line.contains("\"q01\":"), line)
-    assert(line.contains(""""n":2"""))
-    // collision-free inventories keep the compact short keys
-    val ok = Bench.renderAllRowsLine(
-      Seq("q01_warm" -> 0.25, "q02_cold" -> 0.75), Map.empty)
-    assert(ok.contains("\"q01\":0.250") && ok.contains("\"q02\":0.750"), ok)
-  }
-
-  test("seconds line: short keys, absolute medians, -1 for failures, fits tail capture") {
-    val line = Bench.renderSecondsLine(
-      Seq("q01_pricing" -> 0.251, "a01_bounded" -> 1.5, "v02_knn" -> -1.0))
-    assert(line.contains("\"secs\":{"), line)
-    assert(line.contains("\"q01\":0.251") && line.contains("\"a01\":1.500"), line)
-    assert(line.contains("\"v02\":-1.000"), line)
-    assert(line.contains(""""n":3"""), line)
-    // a full 87-row inventory stays within the ~2k tail capture budget
-    val big = (1 to 87).map(i => f"q$i%02d_long_query_name" -> i * 0.123)
-    assert(Bench.renderSecondsLine(big).length < 1600)
-    // short-name collision falls back to full names (no shadowed keys)
-    val coll = Bench.renderSecondsLine(
-      Seq("q01_warm" -> 0.25, "q01_cold" -> 0.75))
-    assert(coll.contains("\"q01_warm\":0.250") &&
-      coll.contains("\"q01_cold\":0.750") && !coll.contains("\"q01\":"), coll)
-  }
-
-  test("trailer agrees with the head fields") {
-    val mixed = many.updated(3, "q04_name_of_query" -> -1.0)
-    val line = Bench.renderLine(mixed, buildSec = 1.0, sfDir = "/x")
-    def field(name: String): String = {
-      val i = line.indexOf("\"" + name + "\":")
-      assert(i >= 0, s"$name not in line")
-      line.drop(i + name.length + 3).takeWhile(c => c != ',' && c != '}')
-    }
-    assert(field("value") == field("total2"))
-    assert(field("valid") == field("valid2"))
-    assert(line.contains("\"failed\":[\"q04_name_of_query\"]"))
-    assert(line.contains("\"failed2\":[\"q04_name_of_query\"]"))
+  test("ledger: each pass's ratio to its row's pin, null without a pin or on failure") {
+    val walls = Map(("a01_x", 0) -> 3.0, ("a01_x", 1) -> 0.4,
+      ("a01_x", 2) -> -1.0, ("q02_y", 0) -> 1.0, ("q02_y", 1) -> 0.3,
+      ("q02_y", 2) -> 0.2)
+    val j = parse(new Bench.Ledger().render(Seq("a01_x", "q02_y"), walls,
+      Map("a01" -> 0.8), sfDir = "/x", passes = 2))
+    val a01 = j.get("rows").get("a01_x")
+    assert(a01.get("pin").asDouble == 0.8)
+    assert(a01.get("passes").size == 2)
+    assert(a01.get("passes").get(0).get("wall_sec").asDouble == 0.4)
+    assert(a01.get("passes").get(0).get("ratio_to_pin").asDouble == 0.5)
+    assert(a01.get("passes").get(1).get("ratio_to_pin").isNull)
+    assert(a01.get("build").get("wall_sec").asDouble == 3.0)
+    assert(j.get("rows").get("q02_y").get("passes").get(0)
+      .get("ratio_to_pin").isNull)
+    assert(j.get("unattributed").get("jobs").asInt == 0)
   }
 }

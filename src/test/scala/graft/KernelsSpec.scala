@@ -215,18 +215,38 @@ class KernelsSpec extends SparkSpec {
     assert(dot < 0 && dot > -1e-7)
     assert(BinaryHash.LSHModel(Array(plane)).signature(v) == 0L)
     assert(BinaryHash.WideLSHModel(Array(plane)).signature(v).toSeq == Seq(0L))
-    // and on generic inputs every bit of both widths is dot's sign
-    val planes = randVecs(100, 16, seed = 5, normalize = false)
-    val narrow = BinaryHash.LSHModel(planes.take(63))
-    val wide = BinaryHash.WideLSHModel(planes)
-    randVecs(20, 16, seed = 6, normalize = false).foreach { x =>
-      def bit(p: Array[Float]) = if (Kernels.dot(p, x) >= 0) 1L else 0L
-      val n = narrow.signature(x)
-      val w = wide.signature(x)
-      planes.indices.foreach { b =>
-        if (b < 63) assert(((n >>> b) & 1L) == bit(planes(b)))
-        assert(((w(b >> 6) >>> (b & 63)) & 1L) == bit(planes(b)))
+    // every bit of both widths is dot's sign
+    def checkBits(planes: Array[Array[Float]], xs: Seq[Array[Float]]): Unit = {
+      val narrow = BinaryHash.LSHModel(planes.take(63))
+      val wide = BinaryHash.WideLSHModel(planes)
+      xs.foreach { x =>
+        def bit(p: Array[Float]) = if (Kernels.dot(p, x) >= 0) 1L else 0L
+        val n = narrow.signature(x)
+        val w = wide.signature(x)
+        planes.indices.foreach { b =>
+          if (b < 63) assert(((n >>> b) & 1L) == bit(planes(b)),
+            s"narrow bit $b of ${x.toSeq}")
+          assert(((w(b >> 6) >>> (b & 63)) & 1L) == bit(planes(b)),
+            s"wide bit $b of ${x.toSeq}")
+        }
       }
+    }
+    // on generic inputs
+    checkBits(randVecs(100, 16, seed = 5, normalize = false),
+      randVecs(20, 16, seed = 6, normalize = false).toSeq)
+    // on ±0, NaN, ±Inf and subnormal coordinates, in the vectors and in
+    // the 128 planes, at d = 1 and d = 16
+    val specials = Array(0f, -0f, Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity, Float.MinPositiveValue, -Float.MinPositiveValue,
+      1.17549421e-38f, -1.0e-40f)
+    val rnd = new scala.util.Random(13)
+    def sprinkle(v: Array[Float]): Array[Float] = v.map(x =>
+      if (rnd.nextInt(3) == 0) specials(rnd.nextInt(specials.length)) else x)
+    for (d <- Seq(1, 16)) {
+      val planes = randVecs(128, d, seed = 17, normalize = false).map(sprinkle)
+      val xs = specials.toSeq.map(s => Array.fill(d)(s)) ++
+        randVecs(40, d, seed = 19, normalize = false).map(sprinkle)
+      checkBits(planes, xs)
     }
   }
 
