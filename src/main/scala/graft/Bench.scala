@@ -10,11 +10,12 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS]. Its LAST stdout line
   * is the contract line, one compact JSON object keyed by short row
   * name (the prefix before the first '_'):
-  * {"metric":"total","value":…,"unit":"sec","valid":…,"queries":{…},
-  * "sf":…,"failed":[…],"build_sec":…}
+  * {"metric":"total","unit":"sec","queries":{…},"sf":…,"failed":[…],
+  * "build_sec":…,"value":…,"valid":…}
   * — the consumer keeps only the tail of stdout, and the line stays
   * under 2000 characters on the whole inventory, even when every row
-  * fails.
+  * fails. The scalar verdict (`value`, `valid`) comes last, after the
+  * failed list, so even a shorter tail capture keeps it.
   *
   * Four passes. The first (untimed, reported as "build_sec") runs every
   * query once: it trains and persists the model artifacts — k-means
@@ -181,7 +182,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (failed.isEmpty) results.map(_._2).sum else -1.0
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${num(total)},"unit":"sec","valid":${failed.isEmpty},"queries":$qs,"sf":"$sfDir","failed":$failedJson,"build_sec":${num(buildSec)}}"""
+    s"""{"metric":"total","unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failedJson,"build_sec":${num(buildSec)},"value":${num(total)},"valid":${failed.isEmpty}}"""
   }
 
   /** Listener behind the ledger: sums each `pass:row` tag's jobs and

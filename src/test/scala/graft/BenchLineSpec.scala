@@ -41,6 +41,17 @@ class BenchLineSpec extends AnyFunSuite {
     assert(j.get("queries").get("q01").asDouble == 12.345)
   }
 
+  test("scalar verdict fields are the LAST fields, after any failed list") {
+    // worst case: every row fails — the failed array is long, but
+    // value/valid sit after it so even a tiny tail capture has them
+    val line = Bench.renderLine(inventory.map(_ -> -1.0), buildSec = 85.0,
+      sfDir = "/x/sf0.1")
+    assert(line.indexOf("\"failed\":") < line.indexOf("\"value\":"), line)
+    assert(line.takeRight(60).contains("\"value\":-1.000"), line)
+    assert(line.takeRight(60).contains("\"valid\":false"), line)
+    assert(line.endsWith("\"valid\":false}"), line)
+  }
+
   test("contract line falls back to full names on short-name collision") {
     // "q01_warm" and "q01_cold" share the short key "q01" — short keys
     // would emit duplicate JSON keys (later shadows earlier in most
